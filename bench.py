@@ -20,22 +20,37 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def _feed(years=(), months=(), header: str = "# synthetic feed") -> str:
+    """Synthetic daily CO2 feed text: ``header``, then a 365-day backlog
+    per year in ``years`` (31-day pseudo-months, rising 0.01 ppm a day
+    from 400 across the whole backlog), then each ``(year, month, days,
+    base)`` in ``months`` as days 1..days valued ``base + day * 0.01``."""
+    lines = [header]
+    day = 0
+    for y in years:
+        for d in range(1, 366):
+            day += 1
+            lines.append(f"{y} {(d - 1) // 31 + 1} {(d - 1) % 31 + 1} {y}.{d:03d} {400 + day * 0.01:.2f}")
+    for y, m, days, base in months:
+        lines += [
+            f"{y} {m} {d} {y}.{(m - 1) * 100 + d:03d} {base + d * 0.01:.2f}"
+            for d in range(1, days + 1)
+        ]
+    return "\n".join(lines)
+
+
+_BACKLOG = range(2022, 2025)
+_JAN_2025 = (2025, 1, 28, 415)
+
+
 def run_pipeline_bench(spark) -> float:
     """Full incremental pipeline wall-clock (load -> harmonize -> analytics)
     on a synthetic 3-year daily feed + one incremental batch."""
     from incremental_datapipeline_using_snowflake_spark.operators import TableStore
     from incremental_datapipeline_using_snowflake_spark.plans import Orchestrator, bootstrap
 
-    lines = ["# synthetic feed"]
-    day = 0
-    for y in range(2022, 2025):
-        for d in range(1, 366):
-            day += 1
-            lines.append(f"{y} {(d - 1) // 31 + 1} {(d - 1) % 31 + 1} {y}.{d:03d} {400 + day * 0.01:.2f}")
-    feed_v1 = "\n".join(lines)
-    feed_v2 = feed_v1 + "\n" + "\n".join(
-        f"2025 1 {d} 2025.{d:03d} {415 + d * 0.01:.2f}" for d in range(1, 29)
-    )
+    feed_v1 = _feed(_BACKLOG)
+    feed_v2 = _feed(_BACKLOG, [_JAN_2025])
 
     t0 = time.time()
     with tempfile.TemporaryDirectory(prefix="bench_wh_") as wh:
@@ -70,20 +85,10 @@ def run_pipeline_incremental_bench(spark) -> float:
     from incremental_datapipeline_using_snowflake_spark.operators import TableStore
     from incremental_datapipeline_using_snowflake_spark.plans import Orchestrator, bootstrap
 
-    lines = ["# synthetic feed"]
-    day = 0
-    for y in range(2022, 2025):
-        for d in range(1, 366):
-            day += 1
-            lines.append(f"{y} {(d - 1) // 31 + 1} {(d - 1) % 31 + 1} {y}.{d:03d} {400 + day * 0.01:.2f}")
-    feed_v1 = "\n".join(lines)
-    feed_v2 = feed_v1 + "\n" + "\n".join(
-        f"2025 1 {d} 2025.{d:03d} {415 + d * 0.01:.2f}" for d in range(1, 29)
-    )
+    feed_v1 = _feed(_BACKLOG)
+    feed_v2 = _feed(_BACKLOG, [_JAN_2025])
     # in-bounds values -> the analytics stage takes the incremental path
-    feed_v3 = feed_v2 + "\n" + "\n".join(
-        f"2025 2 {d} 2025.1{d:02d} {405 + d * 0.01:.2f}" for d in range(1, 29)
-    )
+    feed_v3 = _feed(_BACKLOG, [_JAN_2025, (2025, 2, 28, 405)])
 
     global _INC_BACKLOG_TPL
     if _INC_BACKLOG_TPL is None:
@@ -114,16 +119,8 @@ def run_pipeline_streaming_bench(spark) -> float:
     from incremental_datapipeline_using_snowflake_spark.operators import TableStore
     from incremental_datapipeline_using_snowflake_spark.plans import Orchestrator, bootstrap
 
-    lines = ["# synthetic feed"]
-    day = 0
-    for y in range(2022, 2024):
-        for d in range(1, 366):
-            day += 1
-            lines.append(f"{y} {(d - 1) // 31 + 1} {(d - 1) % 31 + 1} {y}.{d:03d} {400 + day * 0.01:.2f}")
-    feed_v1 = "\n".join(lines)
-    feed_v2 = feed_v1 + "\n" + "\n".join(
-        f"2024 1 {d} 2024.{d:03d} {410 + d * 0.01:.2f}" for d in range(1, 15)
-    )
+    feed_v1 = _feed(range(2022, 2024))
+    feed_v2 = _feed(range(2022, 2024), [(2024, 1, 14, 410)])
 
     t0 = time.time()
     with tempfile.TemporaryDirectory(prefix="bench_swh_") as wh:
@@ -256,16 +253,15 @@ def main() -> None:
             bootstrap,
         )
 
-        lines = ["# warm feed"] + [
-            f"2024 1 {d} 2024.{d:03d} {400 + d * 0.01:.2f}" for d in range(1, 32)
-        ]
         with tempfile.TemporaryDirectory(prefix="bench_warm_wh_") as wh:
             store = TableStore(root=wh)
             bootstrap(store)
             Orchestrator(
                 spark, store, streaming_harmonize=True,
                 checkpoint_dir=f"{wh}/_ckpt",
-            ).run(feed_text="\n".join(lines))
+            ).run(
+                feed_text=_feed(months=[(2024, 1, 31, 400)], header="# warm feed")
+            )
     except Exception as exc:  # noqa: BLE001 — warmup must never fail the bench
         print(f"  pipeline warmup failed (ignored): {exc}", file=sys.stderr)
     spark.catalog.clearCache()
@@ -370,7 +366,7 @@ def main() -> None:
 
     for i, (name, (fn, _sql)) in enumerate(sorted(qs.items())):
         try:
-            # snapshot the Python-level memo caches BEFORE rep 1: a second
+            # snapshot the session artifact cache BEFORE rep 1: a second
             # rep must re-do whatever store-build/apply work rep 1 memoized
             # (ADVICE r09 high: cache-hit second reps recorded 8-13x
             # artificial drops on cdc/dml/clone/pruned-merge — the >2x
@@ -398,13 +394,11 @@ def main() -> None:
         # caches an operator materialized (shingle sets, IVF assignments)
         # must not leak into the next query's timing or heap
         spark.catalog.clearCache()
-        # ...and neither may the module-cache localCheckpoint blocks that
-        # family queries pin for the session: accumulated over ~160
-        # entries they inflated late-session timings ~1.2-1.3x uniformly
-        # (the r07 "drift"). Released every 25 queries; family queries
-        # that run later rebuild their caches deterministically, and the
-        # rebuild cost lands inside that family's own timing where it
-        # belongs.
+        # ...and neither may the localCheckpoint blocks queries leave in
+        # executor storage: accumulated over ~160 entries they inflated
+        # late-session timings ~1.2-1.3x uniformly (the r07 "drift").
+        # Released every 25 queries; the session artifact cache is on
+        # disk and survives the release.
         if (i + 1) % 25 == 0:
             release_session_frames(spark)
 

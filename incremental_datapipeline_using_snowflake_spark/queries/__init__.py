@@ -15,6 +15,8 @@ Determinism discipline (SURVEY.md §7.3 + FIXTURES.md §3):
 
 from __future__ import annotations
 
+from . import artifacts
+
 # Driver-coverage ordering (round 8). The per-round driver oracle run covers
 # a time-budgeted prefix of this dict (~50 entries/round), so emission order
 # decides which queries get a hard CORRECTNESS row. Union coverage r01-r07 is
@@ -39,135 +41,20 @@ _LATEST_DRIVER_ROUND = { "q1_pricing_summary": 8, "q3_top_revenue": 8, "region_r
 _SF001_COST = { "stream_sample": 4.6, "pandas_udf_normalize": 3.4, "weekly_stats": 2.0, "stats_moments": 1.7, "grouped_scale_pandas": 1.0, "text_profile": 2.8, "ngram_logprob": 2.1, "zorder_layout": 5.2, "passage_dedup": 2.2, "daily_stats": 1.0, "date_construction": 0.7, "event_window_agg": 0.6, "event_sliding_window": 0.6, "event_sessions": 1.0, "event_json_props": 0.6, "daily_stats_sql_udfs": 1.0, "dataset_split": 0.5, "array_functions": 0.5, "date_functions": 0.4, "doc_quality_signals": 1.5, "corpus_curation": 2.6, "corpus_mixture": 0.8, "bpe_pair_counts": 0.6, "snowflake_dialect_datetime": 0.4, "doc_classifier_margin": 0.6, "snowflake_dialect_qualify_nested": 0.5, "q12_ship_priority": 0.8, "embedding_gram": 0.7, "q13_customer_distribution": 0.8, "q11_important_parts": 1.0, "q20_promo_suppliers": 0.7, "weighted_sample_docs": 0.5, "q9_product_profit": 1.2, "q8_market_share": 1.5, "q21_waiting_suppliers": 1.3, "event_cohort_retention": 1.2, "q2_min_cost_supplier": 1.5, "doc_nb_quality": 1.3, "table_clone_changes": 3.2, "hll_audience_overlap": 1.2, "knn_graph_ivf2": 3.5, "doc_text_knn": 1.5, "event_funnel": 1.6, "semdedup_keep_lsh": 3.8, "ann_index_lifecycle": 4.5, "dedup_embedding_incremental": 4.0, "dedup_embedding_incremental_auto": 3.3, "neardup_clustering_coeff": 4.2, "ann_index_append": 5.8, "variant_extract": 0.5, "stratified_sample_n": 0.4, "rolling_user_stats": 0.6, "sequence_packing": 0.5, "multimodal_frames": 0.8, "multimodal_meta": 1.0, "pii_redaction": 0.4, "pandas_udaf_quartiles": 0.9, "hll_distinct_users": 0.6, "udtf_chunk": 0.7, "range_join_windows": 1.0, "quantile_sketch_value": 0.7, "hll_mergeable_rollup": 0.7, "lateral_join": 0.8, "q10_returned_items": 1.0, "tfidf_terms": 1.4, "recursive_cte": 2.1, "q5_local_supplier_volume": 1.6, "table_changes_cdf": 1.8, "multimodal_embed_ann": 2.5, "kmeans_clusters": 2.4, "pagerank_centrality": 3.9, "dedup_exact": 0.6, "dedup_minhash_lsh": 0.1, "dedup_simhash": 1.2, "ann_bruteforce_topk": 0.8, "ann_lsh_bucketed": 1.8, "ann_ivf_topk": 1.9, "dedup_embedding_cosine": 1.9, "contamination_check": 1.1, "cdc_apply_changes": 1.8, "ann_recall_eval": 2.0, "asof_cogrouped": 1.6, "asof_view_purchase": 0.6, "calendar_gapfill": 0.8, "doc_chunking": 0.4, "bm25_search": 0.7, "cms_heavy_hitters": 1.2, "collation_ops": 0.5, "ann_pq_topk": 2.5, "ann_ivfpq_topk": 2.0, "dedup_incremental": 2.3, "dedup_clusters": 0.3, "dedup_keep_summary": 0.7, "dedup_keep_best": 0.6, "watermark_filter": 0.4, "order_limit": 0.2, "q6_forecast_revenue": 0.3, "sql_session_variables": 0.4, "window_family2": 0.6, "join_anti": 0.4, "join_semi": 0.7, "neardup_triangles": 0.5, "q14_promo_revenue": 0.5, "percentile_stats": 0.4, "pivot_agg": 0.5, "set_ops": 0.7, "q15_top_supplier": 0.6, "subquery_family": 0.7, "join_right_outer": 0.5, "q22_sales_opportunity": 0.6, "snowflake_dialect_qualify": 0.4, "join_left_outer": 0.5, "q19_disjunctive": 0.6, "q17_small_quantity": 0.7, "window_family": 0.6, "merge_upsert_rewrite": 0.8, "skew_two_phase_agg": 0.7, "q18_large_orders": 0.7, "join_full_outer": 0.7, "q4_order_priority": 0.6, "q7_volume_shipping": 1.2, "skew_salted_join": 0.8, "q1_pricing_summary": 0.6, "unpivot_agg": 0.6, "rollup_agg": 0.6, "grouping_sets_agg": 0.5, "q16_supplier_variety": 0.8, "q3_top_revenue": 0.7, "merge_pruned_partitions": 2.5, "semdedup_keep": 2.3, "knn_graph": 1.7, "region_revenue": 0.9, "knn_graph_lsh": 2.4, "fuzzy_name_match": 0.6, "agg_global_minmax": 0.4, "case_string_funcs": 0.3, "cast_coercion": 0.3, "cube_agg": 0.6, "distinct_agg": 1.0, "dedup_ngram_jaccard": 1.3, "decimal_typed_stats": 0.4, "cms_grouped_hitters": 1.0, "data_quality_report": 1.0, "dml_update_delete": 1.2, "dedup_bloom_membership": 1.5, "passage_dedup_maximal": 2.5, "snowflake_dialect_misc": 0.5, "bpe_train_merges": 3.0, "corpus_curate_append": 22.0, "decontaminate_passages": 4.0, "url_dedup": 1.0, "bpe_encode_docs": 6.0, "epoch_shuffle_order": 0.8, "hard_negative_mining": 6.0, "text_normalization": 1.0, "snowflake_dialect_flatten": 0.5, "hard_negative_mining_ivf": 2.5, "leakage_safe_split": 0.5, "hybrid_search_rrf": 1.0, "html_text_extraction": 0.6, "lang_id_trained": 2.0, "main_content_extraction": 1.0, "corpus_delete_apply": 20.0, "ccnet_quality_buckets": 1.6, "lang_id_margin": 2.5, "crawl_curate_pipeline": 12.0, "dsir_selection": 3.0, "boilerplate_scrub": 2.5, "mixture_temperature_weights": 0.5, "tokenizer_fertility": 7.0, "jsonl_ingest": 0.8, "dedup_minhash_recall": 1.5, "intra_doc_scrub": 2.5, "data_schedule": 0.5, "dedup_winnowing": 4.0, "dedup_simhash_hamming": 2.5, "bm25_index_lifecycle": 5.0, "curriculum_order": 2.0, "span_corruption_pairs": 1.5, "packing_efficiency": 0.6, "cjk_segmentation": 2.5, "cjk_quality_gates": 3.2, "cjk_boilerplate_scrub": 4.0, "fertility_by_script": 5.7, "dedup_winnow_recall": 3.5, "dedup_simhash_recall": 3.4, "ann_index_reindex": 20.0, "length_bucket_report": 1.0, "gopher_char_gates": 10.0, "dedup_emblsh_recall": 3.0, "sea_segmentation": 2.6, "ivf_routed_assign": 2.5, "dedup_ngram_recall": 1.5, "corpus_chain_rebase": 12.0, "dedup_impact_report": 1.0, "classifier_pr_curve": 1.5, "ivf_routed_agreement": 2.0, "ann_sq8_topk": 2.0, "ann_ivf_sq8_topk": 2.5, "sq8_recall": 2.2, "ann_sq8_rerank": 2.3, "corpus_shard_export": 5.0, "corpus_shard_tokens": 5.0, "ann_index_sq8": 4.0, "corpus_shard_append": 6.0 }
 
 
-def _memo_caches() -> list[dict]:
-    """Every module-level Python memo cache in this inventory — the
-    dicts that let a family's later queries reuse a sibling's scratch
-    TableStore / pinned frame instead of rebuilding it. Central registry
-    so harnesses (bench.py min-of-2 reps, the driver-sim) can reason
-    about Python-side memoization that ``spark.catalog.clearCache()``
-    cannot see (ADVICE r09 high: a second bench rep that hits one of
-    these skips the store-build work it claims to measure)."""
-    from . import (
-        curation_q,
-        pipeline_queries,
-        relational,
-        similarity,
-        temporal_prep,
-        textops,
-    )
-
-    return [
-        pipeline_queries._CDC_STORE_CACHE,
-        pipeline_queries._CDF_STORE_CACHE,
-        pipeline_queries._DML_STORE_CACHE,
-        pipeline_queries._CLONE_STORE_CACHE,
-        relational._PRUNED_MERGE_CACHE,
-        similarity._ANN_INDEX_CACHE,
-        textops._PAIR_CACHE,
-        textops._JSONL_CACHE,
-        curation_q._CURATE_CACHE,
-        temporal_prep._BM25_INDEX_CACHE,
-    ]
-
-
-@__import__("atexit").register
-def _sweep_memo_tempdirs() -> None:
-    """Process-exit sweep: rmtree every scratch tempdir still referenced
-    by a memo cache (the stores/dirs deliberately kept warm for the
-    session would otherwise persist on disk for the machine's tempdir
-    lifetime — ADVICE r10 low)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.gettempdir()
-    try:
-        caches = _memo_caches()
-    except Exception:
-        return
-    for cache in caches:
-        for obj in cache.values():
-            root = getattr(obj, "root", None)
-            if isinstance(root, str) and root.startswith(tmp):
-                shutil.rmtree(root, ignore_errors=True)
-
-
-def memo_snapshot() -> list[set]:
-    """Key-sets of every memo cache, for :func:`memo_evict_new`."""
-    return [set(c.keys()) for c in _memo_caches()]
-
-
-def memo_evict_new(snapshot: list[set]) -> None:
-    """Evict exactly the memo-cache entries added since ``snapshot`` was
-    taken. bench.py calls this between min-of-2 reps so rep 2 re-does the
-    same Python-side work rep 1 did (a store built during rep 1 would
-    otherwise make rep 2 a cache-hit read — 8-13x artificial drops on the
-    CDC/DML/clone/pruned-merge entries, ADVICE r09). Entries that were
-    ALREADY cached before rep 1 stay cached — both reps then see identical
-    warm/cold conditions. Evicted scratch TableStore roots under the
-    system tempdir are removed from disk (a rep rebuilds into a fresh
-    tempdir, so the old one is garbage)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.gettempdir()
-    for cache, keys in zip(_memo_caches(), snapshot):
-        for k in [k for k in cache.keys() if k not in keys]:
-            obj = cache.pop(k)
-            _unpersist_cached_frame(obj)  # ADVICE r13: don't strand blocks
-            root = getattr(obj, "root", None)
-            if isinstance(root, str) and root.startswith(tmp):
-                shutil.rmtree(root, ignore_errors=True)
-
-
-def _unpersist_cached_frame(obj) -> None:
-    """Best-effort release of executor storage behind an evicted memo
-    entry (ADVICE r13 low: eviction popped localCheckpointed frames
-    without unpersisting, stranding one more pinned block per bench rep
-    until the next release_session_frames). Frames checkpointed via
-    ``localCheckpoint`` surface as ``LogicalRDD`` leaves in the analyzed
-    plan — unpersist each leaf's RDD directly; ``df.unpersist()`` covers
-    the plain-``persist`` case. Disk-backed entries (parquet-scan
-    ``_DiskFrame``) hold no executor storage and fall through untouched."""
-    try:
-        from pyspark.sql import DataFrame
-
-        df = obj if isinstance(obj, DataFrame) else getattr(obj, "df", None)
-        if not isinstance(df, DataFrame):
-            return
-        df.unpersist()
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — cleanup must never fail an eviction
-        pass
+# bench reps snapshot the session artifact cache and evict what a rep
+# added, so the next rep re-does the same build work
+memo_snapshot = artifacts.snapshot
+memo_evict_new = artifacts.evict_new
 
 
 def release_session_frames(spark) -> None:
-    """Free every frame this inventory pins on the session's executors —
-    the module-level caches holding localCheckpointed DataFrames (the
-    family-shared pair/component tables, prior curate verdicts), the SQL
-    cache, and ALL persistent RDD blocks (localCheckpoint storage lives
-    there). A harness that runs the whole inventory in ONE default-1g
-    session (the per-round driver, the driver-sim) accumulates these
-    until the heaviest query OOMs; after release, any family query that
-    runs later simply rebuilds its cache (every cached frame here is
-    deterministic). Callers: the heavyweight declared queries, before
-    building their plans."""
-    from . import curation_q, textops
-
-    # r14 (VERDICT r13 #1): the pair-family artifacts are parquet-backed
-    # `_DiskFrame`s now — plain file scans pinning ZERO executor storage —
-    # so this memory-release boundary has nothing to free for them and
-    # must NOT destroy them: bench.py's every-25-query call previously
-    # wiped the family cache mid-inventory, making far-from-the-block
-    # consumers (leakage_safe_split, neardup_*) rebuild shingles+pairs+CC
-    # alone. Any legacy in-memory entry (no .root) is still dropped.
-    for k in [k for k, v in textops._PAIR_CACHE.items()
-              if getattr(v, "root", None) is None]:
-        _unpersist_cached_frame(textops._PAIR_CACHE.pop(k))
-    curation_q._CURATE_CACHE.clear()
+    """Free the executor storage the inventory's queries leave behind —
+    the SQL cache and ALL persistent RDD blocks (``localCheckpoint``
+    storage lives there). A harness that runs the whole inventory in ONE
+    default-1g session accumulates these until the heaviest query OOMs.
+    The session artifact cache holds no executor storage and stays
+    usable. Callers: the heavyweight declared queries, before building
+    their plans, and bench.py between query blocks."""
     spark.catalog.clearCache()
     sc = spark.sparkContext
     jrdds = sc._jsc.sc().getPersistentRDDs()

@@ -25,18 +25,28 @@ table (the round-trip proof); the oracle derives it as ``verdict =
 
 from __future__ import annotations
 
-import tempfile
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import artifact, spill
 from .similarity import EMB_DIM, INC_EMB_PLANES, INC_EMB_TABLES, _KNN_LSH_KEY
 from .textops import _incr_side_sql
 from .util import ORACLE_MD5_LONG, load
 
 _H = ORACLE_MD5_LONG
 
-_CURATE_CACHE: dict = {}
+
+def _with_in_corpus(verdicts: DataFrame, store, table: str) -> DataFrame:
+    """``(doc_id, verdict, in_corpus)``: ``in_corpus`` is read back from
+    the post-merge store table (the round-trip proof)."""
+    merged = store.read(verdicts.sparkSession, table).select("doc_id")
+    return verdicts.join(
+        merged.withColumn("_in", F.lit(True)), "doc_id", "left"
+    ).select(
+        "doc_id", "verdict", F.coalesce("_in", F.lit(False)).alias("in_corpus")
+    )
 
 
 def _planted_batch(spark: SparkSession, sf_dir: str):
@@ -93,21 +103,16 @@ def corpus_curate_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.table_store import TableStore
     from ..ops import curation as C
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _CURATE_CACHE.get(key)
-    if got is None:
+    def build(root: str) -> DataFrame:
         # session hygiene before the heaviest declared query: a harness
         # running the whole inventory in ONE default-1g session (the
         # driver shape) reaches this point with dozens of queries' pinned
-        # frames on the heap — SQL cache alone was not enough (the r07
-        # driver-sim still OOMed on the localCheckpoint blocks held by
-        # module caches), so release every session frame the inventory
-        # pins; later family queries rebuild their caches deterministically
+        # frames on the heap, so release every session frame first
         from . import release_session_frames
 
         release_session_frames(spark)
         corpus, corpus_emb, batch, batch_emb = _planted_batch(spark, sf_dir)
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_curate_"))
+        store = TableStore(root=f"{root}/store")
         C.bootstrap_corpus(
             spark, store, corpus, "cur.docs",
             emb=corpus_emb, dim=EMB_DIM,
@@ -121,20 +126,9 @@ def corpus_curate_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, store, batch, "cur.docs", "r07", batch_emb=batch_emb,
             auto_reindex=False,
         )
-        merged_ids = store.read(spark, "cur.docs").select("doc_id")
-        got = (
-            verdicts.join(
-                merged_ids.withColumn("_in", F.lit(True)), "doc_id", "left"
-            )
-            .select(
-                "doc_id",
-                "verdict",
-                F.coalesce("_in", F.lit(False)).alias("in_corpus"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        _CURATE_CACHE[key] = got
-    return got.orderBy("doc_id")
+        return spill(_with_in_corpus(verdicts, store, "cur.docs"), root)
+
+    return artifact(spark, sf_dir, "curate", build).orderBy("doc_id")
 
 
 def _gate_sql(src: str) -> str:
@@ -387,12 +381,10 @@ def corpus_delete_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.table_store import TableStore
     from ..ops import curation as C
 
-    key = (spark.sparkContext.applicationId, sf_dir, "delete")
-    got = _CURATE_CACHE.get(key)
-    if got is None:
+    def build(root: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
         corpus0 = docs.filter("doc_id % 3 != 0")
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_delete_"))
+        store = TableStore(root=f"{root}/store")
         C.bootstrap_corpus(spark, store, corpus0, "del.docs")
         C.delete_docs(
             spark, store, "del.docs",
@@ -411,25 +403,17 @@ def corpus_delete_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(docs.filter("doc_id % 3 = 0"))
         )
         verdicts = C.curate_append(spark, store, batch, "del.docs", "r09-del")
-        merged = store.read(spark, "del.docs").select("doc_id").withColumn(
-            "_in", F.lit(True)
+        deleted = corpus0.filter("doc_id % 5 = 1").select(
+            "doc_id", F.lit("deleted").alias("verdict")
         )
-        out_batch = verdicts.join(merged, "doc_id", "left").select(
-            "doc_id", "verdict", F.coalesce("_in", F.lit(False)).alias("in_corpus")
+        return spill(
+            _with_in_corpus(verdicts, store, "del.docs").unionByName(
+                _with_in_corpus(deleted, store, "del.docs")
+            ),
+            root,
         )
-        out_deleted = (
-            corpus0.filter("doc_id % 5 = 1")
-            .select("doc_id")
-            .join(merged, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.lit("deleted").alias("verdict"),
-                F.coalesce("_in", F.lit(False)).alias("in_corpus"),
-            )
-        )
-        got = out_batch.unionByName(out_deleted).localCheckpoint(eager=True)
-        _CURATE_CACHE[key] = got
-    return got.orderBy("doc_id")
+
+    return artifact(spark, sf_dir, "delete", build).orderBy("doc_id")
 
 
 def _delete_sql() -> str:
@@ -553,9 +537,7 @@ def crawl_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ops import curation as C
     from ..ops.html import extract_main_content
 
-    key = (spark.sparkContext.applicationId, sf_dir, "crawl")
-    got = _CURATE_CACHE.get(key)
-    if got is None:
+    def build(root: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 900)
 
         def page(text_col):
@@ -604,23 +586,12 @@ def crawl_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         batch = to_docs(bpages)
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_crawlq_"))
+        store = TableStore(root=f"{root}/store")
         C.bootstrap_corpus(spark, store, corpus, "crawl.docs")
         verdicts = C.curate_append(spark, store, batch, "crawl.docs", "r10-crawl")
-        merged = store.read(spark, "crawl.docs").select("doc_id").withColumn(
-            "_in", F.lit(True)
-        )
-        got = (
-            verdicts.join(merged, "doc_id", "left")
-            .select(
-                "doc_id",
-                "verdict",
-                F.coalesce("_in", F.lit(False)).alias("in_corpus"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        _CURATE_CACHE[key] = got
-    return got.orderBy("doc_id")
+        return spill(_with_in_corpus(verdicts, store, "crawl.docs"), root)
+
+    return artifact(spark, sf_dir, "crawl", build).orderBy("doc_id")
 
 
 def _crawl_sql() -> str:
@@ -749,20 +720,14 @@ ORDER BY doc_id
 # is the lifecycle case that MUST NOT re-ship text (ids-only links).
 # ---------------------------------------------------------------------------
 def corpus_chain_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..operators.table_store import TableStore
     from ..ops import curation as C
 
-    key = (spark.sparkContext.applicationId, sf_dir, "rebase")
-    got = _CURATE_CACHE.get(key)
-    if got is None:
+    def build(root: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-        store = TableStore(
-            root=tempfile.mkdtemp(prefix="spark_rebase_"), keep_versions=8
-        )
+        store = TableStore(root=f"{root}/store", keep_versions=8)
         C.bootstrap_corpus(spark, store, docs, "reb.docs")
-        pub = tempfile.mkdtemp(prefix="spark_rebase_pub_")
+        pub = f"{root}/pub"
         C.publish_corpus_delta(spark, store, "reb.docs", pub, compression=None)
         for i, cond in enumerate(
             ("doc_id % 7 = 2", "doc_id % 11 = 5"), start=1
@@ -794,17 +759,16 @@ def corpus_chain_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         base, link = os.path.join(pub, "base"), os.path.join(pub, "link-000001")
         C.verify_corpus_chain(spark, base, [link])
-        got = (
-            C.materialize_corpus_chain(spark, base, [link])
-            .select(
+        return spill(
+            C.materialize_corpus_chain(spark, base, [link]).select(
                 F.col("doc_id").cast("long").alias("doc_id"),
                 F.length("text").cast("long").alias("n_chars_live"),
                 F.md5("text").alias("text_fp"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            root,
         )
-        _CURATE_CACHE[key] = got
-    return got.orderBy("doc_id")
+
+    return artifact(spark, sf_dir, "rebase", build).orderBy("doc_id")
 
 
 CHAIN_REBASE_SQL = """
@@ -838,32 +802,27 @@ SHARD_TARGET_BYTES = 16384
 SHARD_TARGET_TOKENS = 2048
 
 
+def _shard_index(spark: SparkSession, root: str) -> DataFrame:
+    """The verified shard index under ``root/shards``, spilled to parquet
+    under ``root``."""
+    cols = ("shard", "n_docs", "n_bytes", "n_tokens", "min_id", "max_id",
+            "content_checksum")
+    index = spark.read.json(f"{root}/shards/_shard_index.jsonl")
+    return spill(index.select(*(F.col(c).cast("long").alias(c) for c in cols)), root)
+
+
 def _shard_export_query(spark: SparkSession, sf_dir: str, cache_tag: str,
                         **targets) -> DataFrame:
     from ..ops import curation as C
 
-    key = (spark.sparkContext.applicationId, sf_dir, cache_tag)
-    got = _CURATE_CACHE.get(key)
-    if got is None:
+    def build(root: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        out = tempfile.mkdtemp(prefix="spark_shards_")
+        out = f"{root}/shards"
         C.export_training_shards(spark, docs, out, compression=None, **targets)
         C.verify_training_shards(spark, out)  # one-file-per-shard + stats
-        got = (
-            spark.read.json(f"{out}/_shard_index.jsonl")
-            .select(
-                F.col("shard").cast("long").alias("shard"),
-                F.col("n_docs").cast("long").alias("n_docs"),
-                F.col("n_bytes").cast("long").alias("n_bytes"),
-                F.col("n_tokens").cast("long").alias("n_tokens"),
-                F.col("min_id").cast("long").alias("min_id"),
-                F.col("max_id").cast("long").alias("max_id"),
-                F.col("content_checksum").cast("long").alias("content_checksum"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        _CURATE_CACHE[key] = got
-    return got.orderBy("shard")
+        return _shard_index(spark, root)
+
+    return artifact(spark, sf_dir, cache_tag, build).orderBy("shard")
 
 
 def corpus_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -890,11 +849,9 @@ def corpus_shard_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard + 1)."""
     from ..ops import curation as C
 
-    key = (spark.sparkContext.applicationId, sf_dir, "shard_append")
-    got = _CURATE_CACHE.get(key)
-    if got is None:
+    def build(root: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        out = tempfile.mkdtemp(prefix="spark_shards_")
+        out = f"{root}/shards"
         C.export_training_shards(
             spark, docs.filter(F.col("doc_id") < 400), out,
             target_bytes=SHARD_TARGET_BYTES, compression=None,
@@ -903,21 +860,9 @@ def corpus_shard_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, docs.filter(F.col("doc_id") >= 400), out, compression=None
         )
         C.verify_training_shards(spark, out)
-        got = (
-            spark.read.json(f"{out}/_shard_index.jsonl")
-            .select(
-                F.col("shard").cast("long").alias("shard"),
-                F.col("n_docs").cast("long").alias("n_docs"),
-                F.col("n_bytes").cast("long").alias("n_bytes"),
-                F.col("n_tokens").cast("long").alias("n_tokens"),
-                F.col("min_id").cast("long").alias("min_id"),
-                F.col("max_id").cast("long").alias("max_id"),
-                F.col("content_checksum").cast("long").alias("content_checksum"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        _CURATE_CACHE[key] = got
-    return got.orderBy("shard")
+        return _shard_index(spark, root)
+
+    return artifact(spark, sf_dir, "shard_append", build).orderBy("shard")
 
 
 def _shard_append_sql() -> str:

@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.kernels import normalize_value, pct_change, volatility
+from .artifacts import artifact
 from .util import davg, load
 
 
@@ -252,19 +253,12 @@ ORDER BY event_id LIMIT 50
 # Reference stream semantics: 02_create_rawco2data_stream.py:50-56. Oracle =
 # the same last-action resolution written as a window + anti-join in SQL.
 # ---------------------------------------------------------------------------
-_CDC_STORE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.merge import apply_changes
     from ..operators.table_store import TableStore
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _CDC_STORE_CACHE.get(key)
-    if store is None:
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_cdc_"))
+    def build(root: str) -> TableStore:
+        store = TableStore(root=root)
         orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
         target = orders.filter(F.col("o_orderkey") % 2 == 0)
         inserts = orders.filter(F.col("o_orderkey") % 3 == 0).select(
@@ -287,7 +281,9 @@ def cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             inserts.unionByName(deletes),
             keys=["o_orderkey"],
         )
-        _CDC_STORE_CACHE[key] = store
+        return store
+
+    store = artifact(spark, sf_dir, "cdc", build)
     return store.read(spark, "cdc.orders_state").orderBy("o_orderkey")
 
 
@@ -396,20 +392,13 @@ ORDER BY event_type
 # Delta's table_changes analogue). Oracle = the same full-outer diff
 # computed directly over orders.
 # ---------------------------------------------------------------------------
-_CDF_STORE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _cdf_versions(spark: SparkSession, sf_dir: str):
     """Two committed versions of the orders-derived table in a scratch
     store, built once per (session, sf_dir)."""
-    import tempfile
-
     from ..operators.table_store import TableStore
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _CDF_STORE_CACHE.get(key)
-    if store is None:
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_cdf_"))
+    def build(root: str) -> TableStore:
+        store = TableStore(root=root)
         # odd-key half-slice: the CDF cost is two staged writes + one
         # full-outer diff, which scales linearly — half the base keeps the
         # bench entry lean without changing what the operator proves
@@ -428,8 +417,9 @@ def _cdf_versions(spark: SparkSession, sf_dir: str):
         )
         store.overwrite(v1, "cdf.orders_slice")
         store.overwrite(v2, "cdf.orders_slice")
-        _CDF_STORE_CACHE[key] = store
-    return store
+        return store
+
+    return artifact(spark, sf_dir, "cdf", build)
 
 
 def table_changes_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,19 +471,12 @@ ORDER BY o_orderkey, _action
 # as set algebra over the base data. Privacy purge (purge_versions) is
 # exercised in tests (side-effecting, not hashable).
 # ---------------------------------------------------------------------------
-_DML_STORE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.merge import delete_where, update_where
     from ..operators.table_store import TableStore
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _DML_STORE_CACHE.get(key)
-    if store is None:
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_dml_"))
+    def build(root: str) -> TableStore:
+        store = TableStore(root=root)
         base = load(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
         )
@@ -512,7 +495,9 @@ def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(round(CAST(o_totalprice AS DECIMAL(30,8)) * 1.05, 2) AS DOUBLE)"
             )},
         )
-        _DML_STORE_CACHE[key] = store
+        return store
+
+    store = artifact(spark, sf_dir, "dml", build)
     return (
         store.read(spark, "dml.orders_slice")
         .select("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
@@ -539,19 +524,12 @@ ORDER BY o_orderkey
 # clone's v1 (the shared-inode snapshot of the source) against its final
 # version. Oracle = the same divergence as set algebra over orders.
 # ---------------------------------------------------------------------------
-_CLONE_STORE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def table_clone_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.merge import delete_where, update_where
     from ..operators.table_store import TableStore
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _CLONE_STORE_CACHE.get(key)
-    if store is None:
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_clone_"), keep_versions=4)
+    def build(root: str) -> TableStore:
+        store = TableStore(root=root, keep_versions=4)
         base = load(spark, sf_dir, "orders").filter(
             F.col("o_orderkey") % 2 == 0
         ).select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -569,7 +547,9 @@ def table_clone_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderkey") % 2 == 1) & (F.col("o_orderkey") % 997 == 0)
         ).select("o_orderkey", "o_orderstatus", "o_totalprice")
         store.append(inserts, "cl.dup")
-        _CLONE_STORE_CACHE[key] = store
+        return store
+
+    store = artifact(spark, sf_dir, "clone", build)
     return store.table_changes(
         spark, "cl.dup", 1, 3, key_cols=["o_orderkey"]
     ).orderBy("o_orderkey", "_action")

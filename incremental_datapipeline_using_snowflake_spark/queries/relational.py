@@ -16,6 +16,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.merge import upsert_dataframe
+from .artifacts import artifact
 from .util import davg, dsum, load
 
 
@@ -689,19 +690,12 @@ ORDER BY o_orderkey
 # Oracle = the same upsert as set algebra. tests pin the inode sharing; this
 # query pins the RESULT through the driver's hash gate.
 # ---------------------------------------------------------------------------
-_PRUNED_MERGE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def merge_pruned_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.merge import merge_upsert
     from ..operators.table_store import TableStore
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _PRUNED_MERGE_CACHE.get(key)
-    if store is None:
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_pmerge_"))
+    def build(root: str) -> TableStore:
+        store = TableStore(root=root)
         orders = load(spark, sf_dir, "orders")
         target = orders.filter(F.col("o_orderkey") % 2 == 0).select(
             F.year("o_orderdate").cast("int").alias("o_year"),
@@ -726,7 +720,9 @@ def merge_pruned_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=["o_orderkey"], update_cols=["o_totalprice", "o_orderstatus"],
             partition_by=["o_year"], prune_partitions=True, count_rows=False,
         )
-        _PRUNED_MERGE_CACHE[key] = store
+        return store
+
+    store = artifact(spark, sf_dir, "pmerge", build)
     return (
         store.read(spark, "pm.orders_part")
         .select(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..ops import multimodal as M
 from ..ops import similarity as S
 from ..ops.dedup import embedding_near_pairs_lsh
+from .artifacts import artifact
 from .util import ORACLE_MD5_LONG, load
 
 _H = ORACLE_MD5_LONG
@@ -854,21 +855,17 @@ ORDER BY vec_id
 # The seed-IVF structure is deterministic, so the oracle is the SAME SQL as
 # ann_ivf_topk — the lifecycle query must reproduce the direct computation
 # exactly, proving the persisted index is lossless.
-_ANN_INDEX_CACHE: dict[tuple[str, str], object] = {}
-
-
 def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.table_store import TableStore
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _ANN_INDEX_CACHE.get(key)
     emb = load(spark, sf_dir, "embeddings")
-    if store is None:
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_annidx_"))
+
+    def build(root: str) -> TableStore:
+        store = TableStore(root=root)
         S.build_ivf_index(spark, store, emb, "idx.emb", n_cells=S.N_IVF_CELLS)
-        _ANN_INDEX_CACHE[key] = store
+        return store
+
+    store = artifact(spark, sf_dir, "annidx", build)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return S.query_ivf_index(
         spark, store, "idx.emb", queries, k=TOP_K, n_probe=S.N_PROBE
@@ -884,15 +881,12 @@ def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly as a from-scratch computation over the union would (with frozen
 # seeds), proving append cost ∝ batch loses nothing.
 def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.table_store import TableStore
 
-    key = (spark.sparkContext.applicationId, sf_dir, "append")
-    store = _ANN_INDEX_CACHE.get(key)
     emb = load(spark, sf_dir, "embeddings")
-    if store is None:
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_annidx_"))
+
+    def build(root: str) -> TableStore:
+        store = TableStore(root=root)
         S.build_ivf_index(spark, store, emb, "idx.emb", n_cells=S.N_IVF_CELLS)
         batch = emb.filter(F.col("vec_id") % 7 == 0).select(
             (F.col("vec_id") + 200000).alias("vec_id"),
@@ -901,7 +895,9 @@ def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("embedding"),
         )
         S.append_to_ivf_index(spark, store, batch, "idx.emb")
-        _ANN_INDEX_CACHE[key] = store
+        return store
+
+    store = artifact(spark, sf_dir, "annidx_append", build)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return S.query_ivf_index(
         spark, store, "idx.emb", queries, k=TOP_K, n_probe=S.N_PROBE
@@ -976,14 +972,11 @@ _REINDEX_FACTORS = ["1.001", "1.002", "1.003"]
 
 
 def ann_index_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.table_store import TableStore
 
-    key = (spark.sparkContext.applicationId, sf_dir, "reindex")
-    store = _ANN_INDEX_CACHE.get(key)
     emb = load(spark, sf_dir, "embeddings")
-    if store is None:
+
+    def build(root: str) -> TableStore:
         # FIXTURE PRECONDITION (ADVICE r11): the volume probe fires when
         # auto_n_cells(4n) >= 2 * auto_n_cells(n); below 256 base vectors
         # the N_IVF_CELLS floor absorbs the planted 4x growth (target
@@ -996,7 +989,7 @@ def ann_index_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"vectors (sqrt(4n) >= 2 * {S.N_IVF_CELLS}) for the planted "
                 f"4x growth to outgrow the cell floor; fixture has {n_base}"
             )
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_annidx_"))
+        store = TableStore(root=root)
         # routed=True throughout the growth phase (r12): the planted
         # batches are corpus-SIZED (they must be, to fire the volume
         # probe), so the flat kernel's batch x n_cells pass here is the
@@ -1022,7 +1015,9 @@ def ann_index_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ann_index_reindex: volume-drift trigger did not fire on a "
                 "4x-grown corpus — policy arithmetic regressed"
             )
-        _ANN_INDEX_CACHE[key] = store
+        return store
+
+    store = artifact(spark, sf_dir, "annidx_reindex", build)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return S.query_ivf_index(
         spark, store, "idx.emb", queries, k=TOP_K, n_probe=S.N_PROBE
@@ -2067,15 +2062,12 @@ ORDER BY e.query_id
 # corpus ∪ batch, the int8 shortlist inside the probed cells, and the
 # exact-cosine rerank — the grown sq8 index must reproduce it all.
 def ann_index_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.table_store import TableStore
 
-    key = (spark.sparkContext.applicationId, sf_dir, "sq8")
-    store = _ANN_INDEX_CACHE.get(key)
     emb = load(spark, sf_dir, "embeddings")
-    if store is None:
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_annidx_"))
+
+    def build(root: str) -> TableStore:
+        store = TableStore(root=root)
         S.build_ivf_index(
             spark, store, emb, "idx.emb", n_cells=S.N_IVF_CELLS, sq8=True
         )
@@ -2086,7 +2078,9 @@ def ann_index_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("embedding"),
         )
         S.append_to_ivf_index(spark, store, batch, "idx.emb")
-        _ANN_INDEX_CACHE[key] = store
+        return store
+
+    store = artifact(spark, sf_dir, "annidx_sq8", build)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return S.query_ivf_index(
         spark, store, "idx.emb", queries, k=TOP_K, n_probe=S.N_PROBE,

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..ops import temporal as T
 from ..ops import textprep as TP
+from .artifacts import artifact
 from .util import load, seg_words_sql
 
 # script-aware token split for the oracles (ADVICE r11): the Spark side
@@ -562,12 +563,7 @@ ORDER BY rank
 # SQL VERBATIM — the grown index must reproduce the direct computation
 # exactly, proving the persisted index (and its append path) is lossless.
 # ---------------------------------------------------------------------------
-_BM25_INDEX_CACHE: dict = {}
-
-
 def bm25_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.table_store import TableStore
     from ..ops.textprep import (
         append_to_bm25_index,
@@ -575,16 +571,16 @@ def bm25_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_bm25_index,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _BM25_INDEX_CACHE.get(key)
-    if store is None:
+    def build(root: str) -> TableStore:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        store = TableStore(root=tempfile.mkdtemp(prefix="spark_bm25idx_"))
+        store = TableStore(root=root)
         build_bm25_index(spark, store, docs.filter("doc_id % 5 != 0"), "idx.docs")
         append_to_bm25_index(
             spark, store, docs.filter("doc_id % 5 = 0"), "idx.docs"
         )
-        _BM25_INDEX_CACHE[key] = store
+        return store
+
+    store = artifact(spark, sf_dir, "bm25idx", build)
     return query_bm25_index(spark, store, "idx.docs", BM25_TERMS, k=15)
 
 

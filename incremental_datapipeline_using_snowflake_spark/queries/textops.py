@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..ops import dedup as D
 from ..ops import text as X
 from ..ops.text import LANG_PRIORITY, STOPWORDS
+from .artifacts import artifact, spill
 from .util import ORACLE_MD5_LONG, load, md5_long, seg_words_sql
 
 
@@ -319,7 +320,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union form (r05): anchor-verified pairs ∪ the FAMILY-SHARED MinHash
     # pair table. Verification is deterministic, so verify-each-then-union
     # ≡ union-candidates-then-verify (ops ngram_jaccard_pairs
-    # candidates="union"), but this shape reuses the localCheckpoint-pinned
+    # candidates="union"), but this shape reuses the session-cached
     # pair table the cluster family already computes — the band/signature
     # pass costs zero when any dedup_* query ran first. The anchor path
     # reuses the family's one shingle pass too (r13 — previously a second
@@ -405,72 +406,18 @@ ORDER BY id_a, id_b
 # Shared MinHash pair / component subplan for the cluster-resolution family.
 # dedup_minhash_lsh, dedup_clusters, dedup_keep_summary, and dedup_keep_best
 # all consume the SAME banding pairs (and the latter three the same connected
-# components); computing them once per (session, sf_dir) and pinning with an
-# eager localCheckpoint collapses four shingle-explode + band-join (+ three
-# CC) runs into one. At 100 TB this is the difference between one dedup pass
-# and four — the materialized pair table is the normal production artifact.
-# Cache keyed on applicationId so a restarted session (dead checkpoint RDDs)
-# never serves stale handles; size is bounded (three entries per sf_dir).
-#
-# r13: granular — shingles / pairs / components are SEPARATE keys, built on
-# first demand. The anchor generator (dedup_ngram_jaccard) shares the one
-# shingle pass with the MinHash build (previously two full word-split +
-# md5-per-shingle passes over the corpus), and the four pairs-only consumers
-# no longer pay the eager connected-components build (the first comp
-# consumer does — honest attribution, same artifacts). Granular keys keep
-# bench.py's memo_evict_new rep discipline exact: each artifact added
-# during a rep is evicted for the next rep independently.
-#
-# r14: PARQUET-backed (VERDICT r13 #1). The artifacts were pinned as
-# localCheckpoint blocks in executor storage, so bench.py's every-25-query
-# release_session_frames boundary destroyed them mid-family — the driver
-# measured leakage_safe_split (sorted index 120, far from the dedup block
-# at 56-75) rebuilding shingles+pairs+CC alone at 7.9 s (was 3.7), and the
-# same mechanism had hit neardup_clustering_coeff before. Each artifact now
-# lives as parquet in its own session tempdir (the _shingle_docs
-# checkpoint_dir discipline — at 100 TB the pair/shingle tables exceed
-# executor storage anyway, so disk IS the production posture): a cache hit
-# is a plain parquet scan holding ZERO executor storage, so
-# release_session_frames keeps the entries alive (nothing to free) and
-# late family consumers re-read instead of rebuilding. Honesty properties
-# preserved: artifacts are computed from the parquet INPUTS fresh per
-# session, memo_evict_new still evicts per bench rep (the wrapper exposes
-# .root, so eviction rmtrees the files and rep 2 rebuilds from scratch),
-# and _sweep_memo_tempdirs removes the dirs at process exit. This also
-# closes ADVICE r13 (low) — evicting a localCheckpointed frame stranded
-# its pinned RDD blocks; a parquet scan strands nothing.
+# components); computing them once per (session, sf_dir) collapses four
+# shingle-explode + band-join (+ three CC) runs into one. At 100 TB this is
+# the difference between one dedup pass and four — the materialized pair
+# table is the normal production artifact. Shingles / pairs / components
+# are separate session artifacts (queries.artifacts), each built on first
+# demand: the anchor generator (dedup_ngram_jaccard) shares the one shingle
+# pass with the MinHash build, and pairs-only consumers never pay the
+# connected-components build.
 # ---------------------------------------------------------------------------
-_PAIR_CACHE: dict[tuple[str, str, str], "_DiskFrame"] = {}
-
-
-class _DiskFrame:
-    """A family artifact materialized to session-scratch parquet. ``df``
-    is the live handle (plain parquet scan), ``root`` the tempdir — the
-    attribute memo_evict_new / _sweep_memo_tempdirs key their cleanup on."""
-
-    __slots__ = ("df", "root")
-
-    def __init__(self, df: DataFrame, root: str):
-        self.df = df
-        self.root = root
-
-
-def _disk_artifact(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
-    import tempfile as _tf
-
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    hit = _PAIR_CACHE.get(key)
-    if hit is None:
-        root = _tf.mkdtemp(prefix=f"spark_pairfam_{tag}_")
-        df = build(root)
-        hit = _DiskFrame(df, root)
-        _PAIR_CACHE[key] = hit
-    return hit.df
-
-
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The family's one shingle pass over the augmented corpus."""
-    return _disk_artifact(
+    return artifact(
         spark, sf_dir, "shingles",
         lambda root: D._shingle_docs(
             corpus_df(spark, sf_dir), "text", "doc_id",
@@ -480,14 +427,15 @@ def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shared_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build(root: str) -> DataFrame:
-        out = D.minhash_dedup_pairs(
-            corpus_df(spark, sf_dir), shingled=_shared_shingles(spark, sf_dir)
-        )
-        out.write.mode("overwrite").parquet(f"{root}/data")
-        return spark.read.parquet(f"{root}/data")
-
-    return _disk_artifact(spark, sf_dir, "pairs", build)
+    return artifact(
+        spark, sf_dir, "pairs",
+        lambda root: spill(
+            D.minhash_dedup_pairs(
+                corpus_df(spark, sf_dir), shingled=_shared_shingles(spark, sf_dir)
+            ),
+            root,
+        ),
+    )
 
 
 def _shared_pairs_components(
@@ -496,13 +444,9 @@ def _shared_pairs_components(
     from ..ops.graph import connected_components
 
     pairs = _shared_pairs(spark, sf_dir)
-
-    def build(root: str) -> DataFrame:
-        comp = connected_components(pairs)  # returns checkpointed labels
-        comp.write.mode("overwrite").parquet(f"{root}/data")
-        return spark.read.parquet(f"{root}/data")
-
-    return pairs, _disk_artifact(spark, sf_dir, "comp", build)
+    return pairs, artifact(
+        spark, sf_dir, "comp", lambda root: spill(connected_components(pairs), root)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2710,49 +2654,28 @@ ORDER BY lang
 # The oracle is the identity projection: a lossless roundtrip must
 # hash-match the source table exactly.
 # ---------------------------------------------------------------------------
-_JSONL_CACHE: dict = {}
-
-
 def jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    from types import SimpleNamespace
-
-    # memoized per (application, sf): repeat calls in one session re-read
-    # the already-written JSONL instead of leaking a fresh corpus-sized
-    # tempdir per invocation; registered in the queries memo registry so
-    # bench reps evict it (and rmtree the dir) for honest measurement
-    key = (spark.sparkContext.applicationId, sf_dir)
-    holder = _JSONL_CACHE.get(key)
-    if holder is None:
-        docs = load(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source", "n_chars"
-        )
-        path = tempfile.mkdtemp(prefix="jsonl_ingest_")
-        docs.select(
+    def build(root: str) -> DataFrame:
+        path = f"{root}/data"
+        load(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("string").alias("id"),
             "text",
             "source",
             F.struct("lang", "n_chars").alias("metadata"),
-        ).write.mode("overwrite").json(path)
+        ).write.json(path)
         schema = (
             "id string, text string, source string, "
             "metadata struct<lang:string, n_chars:long>"
         )
-        back = spark.read.schema(schema).json(path).select(
+        return spark.read.schema(schema).json(path).select(
             F.col("id").cast("long").alias("doc_id"),
             "text",
             F.col("metadata.lang").alias("lang"),
             "source",
             F.col("metadata.n_chars").alias("n_chars"),
         )
-        # pin the read-back EAGERLY: memo eviction (memo_evict_new /
-        # _sweep_memo_tempdirs) rmtrees `root`, so a lazy frame handed out
-        # before eviction would fail on its first action with a
-        # missing-path error (ADVICE r11). The checkpointed blocks live in
-        # the block manager, independent of the evictable tempdir.
-        holder = SimpleNamespace(root=path, df=back.localCheckpoint(eager=True))
-        _JSONL_CACHE[key] = holder
-    return holder.df.orderBy("doc_id")
+
+    return artifact(spark, sf_dir, "jsonl", build).orderBy("doc_id")
 
 
 JSONL_INGEST_SQL = """

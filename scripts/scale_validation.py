@@ -406,9 +406,10 @@ def main() -> int:
                     else:
                         qs[n](spark, w).collect()
             # explicit family warm (r13, VERDICT r12 ask #5): the shared
-            # MinHash pair table + CC labels (_PAIR_CACHE) otherwise land
-            # on whichever dedup sibling runs FIRST at each size, so that
-            # query's alpha measures the family build, not its own work
+            # MinHash pair table + CC labels (the "pairs" / "comp" session
+            # artifacts) otherwise land on whichever dedup sibling runs
+            # FIRST at each size, so that query's alpha measures the
+            # family build, not its own work
             # (dedup_impact_report read alpha_t 1.36 in r12 for exactly
             # this reason). Build it untimed here and report its wall as
             # its own row — the per-query rows then measure per-query work.

@@ -79,38 +79,48 @@ def test_shingled_reuse_matches_fresh_pass(spark, docs):
         assert fresh == shared
 
 
-def test_pair_cache_disk_backed_survives_release(spark):
-    """r14 (VERDICT r13 #1): the family artifacts are parquet-backed, so
-    release_session_frames — bench.py's every-25-query memory boundary —
-    must keep them usable: a late consumer (leakage_safe_split at sorted
-    index 120) re-reads files instead of rebuilding shingles+pairs+CC."""
+def test_pair_cache_disk_backed_survives_release(spark, tmp_path, monkeypatch):
+    """The session artifact cache is disk-backed, so release_session_frames
+    — bench.py's every-25-query memory boundary — keeps its entries
+    usable: a late pair-family consumer (leakage_safe_split at sorted index
+    120) re-reads files instead of rebuilding shingles+pairs+CC, and a
+    curation entry keeps its verdict frame. Everything an entry writes
+    lives under its root, so eviction leaves the tempdir as it found it."""
     import os
+    import tempfile
 
     from incremental_datapipeline_using_snowflake_spark.queries import (
-        memo_snapshot,
+        artifacts as A,
+        curation_q as CQ,
         memo_evict_new,
+        memo_snapshot,
         release_session_frames,
     )
     from incremental_datapipeline_using_snowflake_spark.queries import textops as T
 
     sf = "/root/testdata/sf0.001"
     app = spark.sparkContext.applicationId
-    T._PAIR_CACHE.clear()
+    memo_evict_new(set())
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     snap = memo_snapshot()
     pairs, comp = T._shared_pairs_components(spark, sf)
     before = sorted(map(tuple, comp.collect()))
+    shards_before = sorted(map(tuple, CQ.corpus_shard_export(spark, sf).collect()))
     release_session_frames(spark)
     # entries survive the release (disk-backed, zero executor storage)...
-    assert (app, sf, "pairs") in T._PAIR_CACHE
-    assert (app, sf, "comp") in T._PAIR_CACHE
+    keys = [(app, sf, t) for t in ("shingles", "pairs", "comp", "shard_export")]
+    assert all(k in A._ENTRIES for k in keys)
     # ...and the handles still serve identical rows after the RDD sweep
     _p2, comp2 = T._shared_pairs_components(spark, sf)
     assert sorted(map(tuple, comp2.collect())) == before
+    shards = CQ.corpus_shard_export(spark, sf)
+    assert sorted(map(tuple, shards.collect())) == shards_before
     # eviction still removes both the entry and its files (rep discipline)
-    roots = [T._PAIR_CACHE[(app, sf, t)].root for t in ("shingles", "pairs", "comp")]
+    roots = [A._ENTRIES[k][0] for k in keys]
     memo_evict_new(snap)
-    assert not any(k[0] == app and k[1] == sf for k in T._PAIR_CACHE)
+    assert not any(k[0] == app and k[1] == sf for k in A._ENTRIES)
     assert not any(os.path.exists(r) for r in roots)
+    assert os.listdir(tmp_path) == []
 
 
 def test_passage_ops_checkpoint_dir_parity(spark, docs, tmp_path):
@@ -175,10 +185,11 @@ def test_connected_components_small_graph_partitioning(spark):
 
 
 def test_pair_cache_granular_eviction(spark):
-    """r13: the family cache builds shingles/pairs/comp on first demand as
-    separate memo keys, so a pairs-only consumer never pays the CC build
-    and memo_evict_new evicts exactly what a rep added."""
+    """The family artifacts build shingles/pairs/comp on first demand as
+    separate cache entries, so a pairs-only consumer never pays the CC
+    build and memo_evict_new evicts exactly what a rep added."""
     from incremental_datapipeline_using_snowflake_spark.queries import (
+        artifacts as A,
         memo_evict_new,
         memo_snapshot,
     )
@@ -186,16 +197,16 @@ def test_pair_cache_granular_eviction(spark):
 
     sf = "/root/testdata/sf0.001"
     app = spark.sparkContext.applicationId
-    T._PAIR_CACHE.clear()
+    memo_evict_new(set())
     snap = memo_snapshot()
     T._shared_pairs(spark, sf)
-    assert (app, sf, "pairs") in T._PAIR_CACHE
-    assert (app, sf, "shingles") in T._PAIR_CACHE
-    assert (app, sf, "comp") not in T._PAIR_CACHE  # CC deferred
+    assert (app, sf, "pairs") in A._ENTRIES
+    assert (app, sf, "shingles") in A._ENTRIES
+    assert (app, sf, "comp") not in A._ENTRIES  # CC deferred
     T._shared_pairs_components(spark, sf)
-    assert (app, sf, "comp") in T._PAIR_CACHE
+    assert (app, sf, "comp") in A._ENTRIES
     memo_evict_new(snap)
-    assert not any(k[0] == app and k[1] == sf for k in T._PAIR_CACHE)
+    assert not any(k[0] == app and k[1] == sf for k in A._ENTRIES)
 
 
 def test_minhash_lsh_pairs(spark, docs):
