@@ -152,18 +152,6 @@ def _sig_snapshot(spark: SparkSession, store, corpus_table: str):
     )
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint of a narrow (ids-only) stage-boundary frame.
-    Two jobs it does: (1) each pipeline stage becomes its own bounded job
-    instead of one 8-branch mega-plan — the r07 driver-sim OOMed a
-    default-1g session EXECUTING the verdict union over full-depth
-    lineages (50+ stages each shipping a ~14 MB serialized task binary);
-    shallow downstream plans keep task binaries small and let finished
-    stages' broadcasts be reclaimed. (2) At scale, a retried stage re-reads
-    a few KB of ids instead of re-running MinHash/LSH joins."""
-    return df.localCheckpoint(eager=True)
-
-
 def _fingerprint(text_col: str) -> F.Column:
     return F.md5(F.col(text_col))
 
@@ -235,7 +223,7 @@ def bootstrap_corpus(
         spark.createDataFrame([(int(m_bits),)], "m_bits long"),
         corpus_table + "__bloom_meta",
     )
-    sh = _shingle_docs(docs, text_col, id_col)
+    sh = _shingle_docs(docs, text_col, id_col).localCheckpoint(eager=True)
     store.overwrite(
         _band_rows(_signatures_from_shingles(sh)), corpus_table + "__bands"
     )
@@ -280,7 +268,7 @@ def repair_aux(spark: SparkSession, store, corpus_table: str,
     missing = corpus.join(have, id_col, "left_anti")
     n = missing.count()
     if n:
-        sh = _shingle_docs(missing, text_col, id_col)
+        sh = _shingle_docs(missing, text_col, id_col).localCheckpoint(eager=True)
         store.append(
             _band_rows(_signatures_from_shingles(sh)), corpus_table + "__bands"
         )
@@ -779,7 +767,6 @@ def curate_append(
     emb_id_col: str = "vec_id",
     jaccard_threshold: float = 0.5,
     cosine_threshold: float = 0.999,
-    work_dir: str | None = None,
     auto_reindex: bool = True,
     reindex_plane_drift: int = 2,
 ) -> DataFrame:
@@ -850,11 +837,12 @@ def curate_append(
     # gate_fail and p1 separately executed the Gopher-signal lineage twice
     # (r07 profile: 1.46s + 0.82s for the same computation); branches over
     # the pinned frame are free filters
-    gate = _pin(
+    gate = (
         repetition_signals(b, text_col=text_col, id_col=id_col).select(
             F.col(id_col).alias("id"),
             F.coalesce(F.col("quality_pass"), F.lit(False)).alias("ok"),
         )
+        .localCheckpoint(eager=True)
     )
     gate_fail = gate.filter(~F.col("ok")).select("id")
     p1 = gate.filter(F.col("ok")).select("id")
@@ -895,10 +883,11 @@ def curate_append(
             corpus_fp = store.read(spark, corpus_table).select(
                 F.col("_fingerprint").alias("fp")
             ).distinct()
-            marked = _pin(
+            marked = (
                 maybe.join(
                     corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left"
                 )
+                .localCheckpoint(eager=True)
             )
             exact_corpus = marked.filter(F.col("_hit")).select("id")
             p2a = (
@@ -913,14 +902,15 @@ def curate_append(
         corpus_fp = store.read(spark, corpus_table).select(
             F.col("_fingerprint").alias("fp")
         ).distinct()
-        marked = _pin(
+        marked = (
             bfp.join(corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left")
+            .localCheckpoint(eager=True)
         )
         exact_corpus = marked.filter(F.col("_hit")).select("id")
         p2a = marked.filter(F.col("_hit").isNull()).select("id", "fp")
     # pin the RANKED frame once; its two branches are free filters
     wfp = W.partitionBy("fp").orderBy(F.asc("id"))
-    ranked = _pin(p2a.withColumn("_rk", F.row_number().over(wfp)))
+    ranked = p2a.withColumn("_rk", F.row_number().over(wfp)).localCheckpoint(eager=True)
     exact_batch = ranked.filter(F.col("_rk") > 1).select("id")
     p2 = ranked.filter(F.col("_rk") == 1).select("id")
 
@@ -931,27 +921,12 @@ def curate_append(
     # append) — and, as important at scale, give AQE MEASURED size stats
     # for it: the 16x scale run OOMed when a static under-estimate of this
     # shingle-array relation picked the broadcast side of the verify join.
-    # persist(MEMORY_AND_DISK) + count, NOT eager localCheckpoint: the
-    # driver-sim's default-1g session OOMed pinning checkpoint blocks on
-    # the heap — a persisted relation spills under pressure and releases
-    # deterministically at the end of the run. ``work_dir`` (the 100 TB
-    # path, _shingle_docs' checkpoint_dir discipline) routes it through a
-    # parquet round-trip instead: right when the batch's shingle table
-    # exceeds what executor storage should carry alongside the joins.
     from pyspark import StorageLevel
 
-    _bsh_persisted = work_dir is None
-    if _bsh_persisted:
-        bsh = _shingle_docs(bdocs, text_col, id_col).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        bsh.count()
-    else:
-        bsh = _shingle_docs(
-            bdocs, text_col, id_col,
-            checkpoint_dir=work_dir,
-            checkpoint_name=f"curate_{run_id}_batch_shingles",
-        )
+    bsh = _shingle_docs(bdocs, text_col, id_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    bsh.count()
     bbands = _band_rows(_signatures_from_shingles(bsh))
     cbands = store.read(spark, corpus_table + "__bands")
     cand_c = (
@@ -965,18 +940,19 @@ def curate_append(
     cdocs = store.read(spark, corpus_table).join(
         cand_c.select(F.col("id_b").alias(id_col)).distinct(), id_col, "left_semi"
     )
-    csh = _shingle_docs(cdocs, text_col, id_col, checkpoint_name="cand_shingles")
+    csh = _shingle_docs(cdocs, text_col, id_col).localCheckpoint(eager=True)
     # pin the verified corpus-hit id list ONCE — the old pinned semi/anti
     # pair re-ran the shingle-verify join twice
-    near_c = _pin(
+    near_c = (
         cand_c.join(bsh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
         .join(csh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
         .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= jaccard_threshold)
         .select(F.col("id_a").alias("id"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     near_corpus = p2.join(near_c, "id", "left_semi")
-    p3a = _pin(p2.join(near_c, "id", "left_anti"))
+    p3a = p2.join(near_c, "id", "left_anti").localCheckpoint(eager=True)
     # batch-internal pairs among stage-3 survivors → CC → min-id keep
     a = bbands.withColumnRenamed("id", "id_a")
     c = bbands.withColumnRenamed("id", "id_b")
@@ -997,10 +973,14 @@ def curate_append(
     keep3 = dedup_keep_decisions(
         p3a.withColumnRenamed("id", id_col), pairs_b, id_col=id_col
     )
-    near_batch = _pin(
+    near_batch = (
         keep3.filter(~F.col("keep")).select(F.col(id_col).alias("id"))
+        .localCheckpoint(eager=True)
     )
-    p3 = _pin(keep3.filter(F.col("keep")).select(F.col(id_col).alias("id")))
+    p3 = (
+        keep3.filter(F.col("keep")).select(F.col(id_col).alias("id"))
+        .localCheckpoint(eager=True)
+    )
 
     # -- stage 4: semantic near-dup (LSH vs stored signatures) -----------
     emb_corpus = spark.createDataFrame([], "id long").select(F.col("id"))
@@ -1018,8 +998,9 @@ def curate_append(
         # pin the batch signature relation: it feeds FOUR consumers (both
         # sides of pairs_e, hit_c's bflat, and the plans' size stats) —
         # unpinned, each consumer re-ran the n_tables LSH self-joins
-        bsig = _pin(
+        bsig = (
             _emb_signatures(mvec, dim, n_tables, n_planes, vec_col, emb_id_col)
+            .localCheckpoint(eager=True)
         )
         bflat = bsig.select(
             F.col("id").alias("id_a"), F.col("v").alias("va"),
@@ -1032,15 +1013,16 @@ def curate_append(
         # pin the cosine-verified corpus-hit id list ONCE (the pinned
         # semi/anti pair re-ran the LSH bucket join + cosine verify twice
         # — the two heaviest jobs of the r07 profile at 2.2s + 1.9s)
-        hit_c = _pin(
+        hit_c = (
             bflat.join(cflat, ["t", "bucket"])
             .filter(F.col("id_a") != F.col("id_b"))
             .filter(F.round(_cosine(F.col("va"), F.col("vb")), 6) >= cosine_threshold)
             .select(F.col("id_a").alias("id"))
             .distinct()
+            .localCheckpoint(eager=True)
         )
         emb_corpus = p3.join(hit_c, "id", "left_semi")
-        p4a = _pin(p3.join(hit_c, "id", "left_anti"))
+        p4a = p3.join(hit_c, "id", "left_anti").localCheckpoint(eager=True)
         pairs_e = (
             bflat.join(
                 bsig.select(
@@ -1059,10 +1041,14 @@ def curate_append(
         keep4 = dedup_keep_decisions(
             p4a.withColumnRenamed("id", id_col), pairs_e, id_col=id_col
         )
-        emb_batch = _pin(
+        emb_batch = (
             keep4.filter(~F.col("keep")).select(F.col(id_col).alias("id"))
+            .localCheckpoint(eager=True)
         )
-        p4 = _pin(keep4.filter(F.col("keep")).select(F.col(id_col).alias("id")))
+        p4 = (
+            keep4.filter(F.col("keep")).select(F.col(id_col).alias("id"))
+            .localCheckpoint(eager=True)
+        )
 
     # -- verdicts (materialized BEFORE the merge mutates the store) ------
     verdicts = (
@@ -1141,8 +1127,7 @@ def curate_append(
     # batch cache per run until executor storage starves real work — the
     # 16x scale session hit exactly that before this unpersist
     b.unpersist()
-    if _bsh_persisted:
-        bsh.unpersist()
+    bsh.unpersist()
     if have_bloom:
         probed.unpersist()
     # -- maintenance: automatic LSH re-index when the corpus outgrew the
@@ -1646,7 +1631,6 @@ def export_corpus_delta(
     ).orderBy("split")
     # manifest LAST — same completion-marker discipline as the full export
     manifest.coalesce(1).write.mode("overwrite").json(f"{out_dir}/_manifest.jsonl")
-    changes.unpersist()
     return manifest
 
 

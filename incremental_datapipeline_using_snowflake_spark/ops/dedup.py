@@ -87,70 +87,25 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.round(inter / (F.size(a) + F.size(b) - inter), 4)
 
 
-def _shingle_docs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    checkpoint_dir: str | None = None,
-    checkpoint_name: str = "shingles",
-) -> DataFrame:
-    """(id, sh) with the shingle pass materialized ONCE.
-
-    The downstream plan references this subtree several times (anchor/band
-    extraction, and both pair sides of the verify join), so it must be
-    computed exactly once regardless of how many consumers race to build
-    their exchanges:
-
-    - default: in-memory cache with an eager fill (right for a corpus
-      slice that fits executor storage);
-    - ``checkpoint_dir``: persist to parquet and re-read — the 100 TB
-      path, where the shingle table exceeds cluster memory and a cache
-      would thrash; the parquet round-trip also truncates the lineage so
-      retried stages re-read files instead of re-shingling.
-    """
-    docs = df.select(
+def _shingle_docs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, sh): the shingle relation, unmaterialized. A caller that reads
+    it several times (anchor/band extraction, both pair sides of the
+    verify join) materializes it once, in the form the ``ops`` package
+    docstring prescribes."""
+    return df.select(
         F.col(id_col).alias("id"), hashed_shingles_col(F.col(text_col)).alias("sh")
     ).filter(F.size("sh") > 0)
-    if checkpoint_dir is not None:
-        # Namespaced per operator call: two dedup calls sharing one
-        # checkpoint_dir (ngram + minhash in the same job, or two corpora)
-        # must not overwrite each other's files — the first call's lazy
-        # result re-reads its path on every action/stage retry, so a
-        # clobber would silently swap in the wrong corpus's shingles.
-        path = f"{checkpoint_dir}/{checkpoint_name}"
-        docs.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-    # eager fill — one shingle pass total; localCheckpoint (not cache) so
-    # the materialized shingles don't sit in executor storage for the
-    # rest of the session after the caller is done
-    return docs.localCheckpoint(eager=True)
 
 
 def _words_docs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    id_alias: str | None = None,
-    checkpoint_dir: str | None = None,
-    checkpoint_name: str = "words",
+    df: DataFrame, text_col: str, id_col: str, id_alias: str | None = None
 ) -> DataFrame:
-    """``(id, _w)`` with the word split materialized ONCE — the passage
-    family's shared base relation (r13 opt), given the `_shingle_docs`
-    escape hatch (r14, ADVICE r13 medium): the default eager
-    ``localCheckpoint`` pins a corpus-sized words table in executor
-    storage and truncates lineage into something an executor loss cannot
-    recompute; ``checkpoint_dir`` routes it through a parquet round-trip
-    instead — the 100 TB posture, where the table exceeds cluster memory
-    and retried stages must re-read files."""
-    docs = df.select(
+    """``(id, _w)`` with the word split pinned ONCE — the passage family's
+    shared base relation (r13 opt)."""
+    return df.select(
         F.col(id_col).alias(id_alias or id_col),
         words_col(F.col(text_col)).alias("_w"),
-    )
-    if checkpoint_dir is not None:
-        path = f"{checkpoint_dir}/{checkpoint_name}"
-        docs.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-    return docs.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
 
 
 def _verified_pairs(cand: DataFrame, docs: DataFrame, threshold: float) -> DataFrame:
@@ -225,7 +180,6 @@ def ngram_jaccard_pairs(
     anchor_mod: int = 20,
     max_anchor_df: int = MAX_ANCHOR_DF,
     candidates: str = "union",
-    checkpoint_dir: str | None = None,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs by shingle-set Jaccard, candidates via anchor shingles.
@@ -257,22 +211,13 @@ def ngram_jaccard_pairs(
 
     All strategies feed the same exact-Jaccard verification, so they differ
     only in recall of TRUE pairs, never in precision.
-
-    ``checkpoint_dir`` (the 100 TB path) EAGERLY runs the full shingle pass
-    at call time and writes it under ``<checkpoint_dir>/ngram_shingles``
-    (without it, the call is lazy plan construction plus an eager cache
-    fill on first action). The caller owns the checkpoint files' lifecycle:
-    nothing here deletes them, and the dir must outlive every action on the
-    returned DataFrame, which re-reads it.
     """
     if candidates not in ("anchor", "bands", "union"):
         raise ValueError(f"candidates must be anchor|bands|union, got {candidates!r}")
     docs = (
         shingled
         if shingled is not None
-        else _shingle_docs(
-            df, text_col, id_col, checkpoint_dir=checkpoint_dir, checkpoint_name="ngram_shingles"
-        )
+        else _shingle_docs(df, text_col, id_col).localCheckpoint(eager=True)
     )
     anchor_cand = ngram_anchor_candidates(docs, anchor_mod, max_anchor_df)
     if candidates == "anchor":
@@ -349,17 +294,11 @@ def minhash_dedup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    checkpoint_dir: str | None = None,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidates verified with true shingle Jaccard (shingle
     pass computed once and shared between signatures and verification).
 
-    ``checkpoint_dir`` (the 100 TB path) EAGERLY runs the shingle pass at
-    call time, writing ``<checkpoint_dir>/minhash_shingles``; the caller
-    owns cleanup, and the dir must outlive every action on the returned
-    DataFrame (which re-reads it). Safe to share a ``checkpoint_dir`` with
-    :func:`ngram_jaccard_pairs` — the subpaths are namespaced per operator.
     ``shingled`` (r13): an already-materialized ``_shingle_docs`` relation
     — lets a caller running several shingle-based generators over the same
     corpus pay the shingle pass once.
@@ -367,9 +306,7 @@ def minhash_dedup_pairs(
     docs = (
         shingled
         if shingled is not None
-        else _shingle_docs(
-            df, text_col, id_col, checkpoint_dir=checkpoint_dir, checkpoint_name="minhash_shingles"
-        )
+        else _shingle_docs(df, text_col, id_col).localCheckpoint(eager=True)
     )
     cand = minhash_band_pairs(_signatures_from_shingles(docs))
     return _verified_pairs(cand, docs, threshold)
@@ -429,7 +366,6 @@ def repeated_passages(
     min_docs: int = 2,
     top: int = 50,
     strategy: str = "narrow",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact-substring duplication finder: k-token passages appearing in at
     least ``min_docs`` distinct documents, ranked by total occurrences —
@@ -486,13 +422,8 @@ def repeated_passages(
     # A/B at sf0.1 in SHUFFLE.md.
     # split words materialized once (r13 opt): the counting pass and the
     # string-recovery pass both re-derived split + window keys from text
-    # (2 full tokenizations); one materialized (id, words) relation feeds
-    # both — parquet when checkpoint_dir is given (r14, ADVICE r13), else
-    # localCheckpoint; same discipline as scrub_repeated_spans below.
-    base0 = _words_docs(
-        df, text_col, id_col, id_alias="_id",
-        checkpoint_dir=checkpoint_dir, checkpoint_name="repeated_passages_words",
-    )
+    # (2 full tokenizations); one pinned (id, words) relation feeds both.
+    base0 = _words_docs(df, text_col, id_col, id_alias="_id")
     keys = passage_keys_from_words(F.col("_w"), k)
     hashed = base0.select(
         "_id", F.explode(keys).alias("_pkey")
@@ -538,7 +469,6 @@ def maximal_repeated_passages(
     id_col: str = "doc_id",
     k: int = 8,
     min_docs: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """VARIABLE-LENGTH passage dedup (r07): merge adjacent surviving
     fixed-k windows into MAXIMAL repeated passages — the per-document
@@ -571,10 +501,7 @@ def maximal_repeated_passages(
     # split words materialized once (r13 opt) — three consumers (counting
     # pass, survival join-back, string recovery) each re-tokenized the
     # text; see repeated_passages/scrub_repeated_spans.
-    base0 = _words_docs(
-        df, text_col, id_col, id_alias="_id",
-        checkpoint_dir=checkpoint_dir, checkpoint_name="maximal_passages_words",
-    )
+    base0 = _words_docs(df, text_col, id_col, id_alias="_id")
     keys = passage_keys_from_words(F.col("_w"), k)
     hashed = base0.select(
         "_id", F.posexplode(keys).alias("_pos", "_pkey")
@@ -887,8 +814,8 @@ def incremental_minhash_pairs(
     Output: (id_a, id_b, jaccard, is_corpus_pair) where ``is_corpus_pair``
     marks batch-vs-corpus pairs (vs batch-internal).
     """
-    nd = _shingle_docs(new_docs, text_col, id_col)
-    cd = _shingle_docs(corpus, text_col, id_col)
+    nd = _shingle_docs(new_docs, text_col, id_col).localCheckpoint(eager=True)
+    cd = _shingle_docs(corpus, text_col, id_col).localCheckpoint(eager=True)
     nb = _band_rows(_signatures_from_shingles(nd)).withColumn("_new", F.lit(True))
     cb = _band_rows(_signatures_from_shingles(cd)).withColumn("_new", F.lit(False))
     allb = nb.unionByName(cb)
@@ -1275,7 +1202,6 @@ def scrub_repeated_spans(
     id_col: str = "doc_id",
     k: int = 8,
     min_docs: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Remove cross-document repeated spans from the text, keeping ONE
     canonical copy — the *removal* half of Lee et al. 2022 (ExactSubstr:
@@ -1316,12 +1242,8 @@ def scrub_repeated_spans(
     # join-back, rebuild), and for segmented-script / rendered inputs the
     # split is preceded by expensive per-word transforms — unpinned, the
     # whole render ran 3x (cjk_boilerplate_scrub measured 10.4s noop; the
-    # pinned form halves it). checkpoint_dir routes it through parquet
-    # (r14, ADVICE r13 — the 100 TB path); default is localCheckpoint.
-    base0 = _words_docs(
-        df, text_col, id_col,
-        checkpoint_dir=checkpoint_dir, checkpoint_name="scrub_spans_words",
-    )
+    # pinned form halves it).
+    base0 = _words_docs(df, text_col, id_col)
     keys = passage_keys_from_words(F.col("_w"), k)
     hashed = base0.select(
         F.col(id_col).alias("_id"), F.posexplode(keys).alias("_pos", "_pkey")
@@ -1434,7 +1356,6 @@ def scrub_intra_doc_repeats(
     id_col: str = "doc_id",
     k: int = 8,
     min_repeats: int = 2,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Remove WITHIN-document repeated spans, keeping each document's first
     occurrence — the intra-doc half of repetition cleanup (RefinedWeb's
@@ -1460,10 +1381,7 @@ def scrub_intra_doc_repeats(
     """
     # split words materialized once (r13 opt): counting pass + rebuild
     # each re-tokenized the text — see scrub_repeated_spans.
-    base0 = _words_docs(
-        df, text_col, id_col,
-        checkpoint_dir=checkpoint_dir, checkpoint_name="intra_doc_words",
-    )
+    base0 = _words_docs(df, text_col, id_col)
     keys = passage_keys_from_words(F.col("_w"), k)
     hashed = base0.select(
         F.col(id_col).alias("_id"), F.posexplode(keys).alias("_pos", "_pkey")
@@ -1585,7 +1503,7 @@ def winnow_dedup_pairs(
     to surviving pairs only (AQE broadcasts the candidate side).
     """
     cand = winnow_candidate_pairs(df, text_col, id_col, k, w)
-    docs = _shingle_docs(df, text_col, id_col)
+    docs = _shingle_docs(df, text_col, id_col).localCheckpoint(eager=True)
     return _verified_pairs(cand, docs, threshold)
 
 

@@ -149,28 +149,6 @@ N_IVF_CELLS = 16
 N_PROBE = 4
 
 
-def _materialize(
-    df: DataFrame, checkpoint_dir: str | None, name: str
-) -> DataFrame:
-    """Materialize a plan subtree referenced by multiple consumers ONCE.
-
-    Default: in-memory cache with an eager fill — right when the relation
-    fits executor storage. ``checkpoint_dir``: persist to parquet and
-    re-read — the 100 TB path (an IVF assignment table over a corpus
-    exceeds cluster memory; the parquet round-trip also truncates lineage
-    so stage retries re-read files instead of recomputing assignments).
-    Subpaths are namespaced per call site; the caller owns the files'
-    lifecycle, and the dir must outlive every action on the result.
-    """
-    if checkpoint_dir is not None:
-        path = f"{checkpoint_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-    df = df.cache()
-    df.count()
-    return df
-
-
 def auto_n_cells(corpus: DataFrame) -> int:
     """sqrt-scaled IVF cell count: ``max(N_IVF_CELLS, floor(sqrt(n)))``.
 
@@ -397,14 +375,13 @@ def ivf_topk(
     n_probe: int = N_PROBE,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: score only vectors in the query's ``n_probe``
     nearest cells. Probe-list join is keyed on the cell id, so the pair
     space is (corpus / n_cells) × n_probe per query instead of |corpus|."""
     cents, assigned = ivf_assignments(corpus, n_cells, vec_col, id_col)
-    # referenced twice (probe list + candidate side): materialize once
-    assigned = _materialize(assigned, checkpoint_dir, "ivf_assigned")
+    # referenced twice (probe list + candidate side): pin once
+    assigned = assigned.localCheckpoint(eager=True)
 
     q = assigned.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv")
@@ -481,7 +458,6 @@ def semantic_dedup_keep(
     n_cells: int | None = N_IVF_CELLS,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) re-expressed Spark-first: semantic
     near-duplicate pruning over an embedding column.
@@ -507,7 +483,7 @@ def semantic_dedup_keep(
     """
     _, assigned = ivf_assignments(corpus, n_cells, vec_col, id_col)
     # one assignment pass shared by both pair sides
-    assigned = _materialize(assigned, checkpoint_dir, "semdedup_assigned")
+    assigned = assigned.localCheckpoint(eager=True)
 
     a = assigned.withColumnsRenamed({"id": "id_a", "v": "va"})
     b = assigned.withColumnsRenamed({"id": "id_b", "v": "vb"})
@@ -537,7 +513,6 @@ def semantic_dedup_keep_lsh(
     n_planes: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """LINEAR-scale SemDeDup — the production default for semantic
     near-duplicate pruning (r06, closing the last Θ(n^1.5) default in the
@@ -591,7 +566,7 @@ def semantic_dedup_keep_lsh(
             for t in range(n_tables)
         ],
     ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    sigs = _materialize(sigs, checkpoint_dir, "semdedup_lsh_sigs")
+    sigs = sigs.localCheckpoint(eager=True)
     pair_parts = [
         _bucket_pair_scores(sigs, f"b{t}", directed=False)
         .filter(F.round(F.col("cosine_raw"), 6) >= threshold)
@@ -623,7 +598,6 @@ def knn_graph(
     n_cells: int | None = N_IVF_CELLS,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Approximate k-NN graph: every vector's top-k cosine neighbors within
     its IVF cell — the standard primitive under graph-based semantic dedup,
@@ -645,7 +619,7 @@ def knn_graph(
     # norms precomputed per vector (one fold per pair at scoring instead
     # of three — same doubles, the division tree is unchanged)
     assigned = assigned.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    assigned = _materialize(assigned, checkpoint_dir, "knn_assigned")
+    assigned = assigned.localCheckpoint(eager=True)
 
     a = assigned.withColumnsRenamed({"id": "src_id", "v": "va", "nrm": "na"})
     b = assigned.withColumnsRenamed({"id": "nbr_id", "v": "vb", "nrm": "nb"})
@@ -676,7 +650,6 @@ def knn_graph_ivf2(
     n_cells2: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """TWO-LEVEL IVF k-NN graph — Θ(n^{4/3}) (r06), between the one-level
     form's Θ(n^1.5) and the LSH twin's Θ(n).
@@ -709,7 +682,7 @@ def knn_graph_ivf2(
         n_cells2 = n_cells2 or side
     _, a1 = ivf_assignments(corpus, n_cells1, vec_col, id_col)
     a1 = a1.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    a1 = _materialize(a1, checkpoint_dir, "knn2_level1")
+    a1 = a1.localCheckpoint(eager=True)
 
     # level-2 seeds: the n_cells2 lowest-id members of EACH coarse cell
     wseed = W.partitionBy("cell").orderBy("id")
@@ -739,7 +712,7 @@ def knn_graph_ivf2(
         .select("id", "subcell")
     )
     assigned = best.join(a1, "id").select("id", "v", "nrm", "cell", "subcell")
-    assigned = _materialize(assigned, checkpoint_dir, "knn2_level2")
+    assigned = assigned.localCheckpoint(eager=True)
 
     a = assigned.withColumnsRenamed({"id": "src_id", "v": "va", "nrm": "na"})
     b = assigned.withColumnsRenamed({"id": "nbr_id", "v": "vb", "nrm": "nb"})
@@ -880,7 +853,6 @@ def knn_graph_lsh(
     n_planes: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """LINEAR-scale approximate k-NN graph via multi-table hyperplane LSH.
 
@@ -918,7 +890,7 @@ def knn_graph_lsh(
             for t in range(n_tables)
         ],
     ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    sigs = _materialize(sigs, checkpoint_dir, "knn_lsh_sigs")
+    sigs = sigs.localCheckpoint(eager=True)
     # per-bucket Arrow kernel (guide §4.2) replaces the in-bucket self-join
     # + interpreted per-pair HOF fold: same bucket-keyed exchange, vectors
     # cross it ONCE (the join shipped both sides), scoring vectorized;
@@ -1019,7 +991,6 @@ def pq_topk(
     n_codes: int = N_PQ_CODES,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k over PQ codes.
 
@@ -1033,7 +1004,7 @@ def pq_topk(
     """
     sub = dim // n_sub
     cb, enc = pq_encode(corpus, dim, n_sub, n_codes, vec_col, id_col)
-    enc = _materialize(enc, checkpoint_dir, "pq_encoded")
+    enc = enc.localCheckpoint(eager=True)
 
     xq = F.transform(
         F.col(vec_col), lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long")
@@ -1072,7 +1043,6 @@ def ivfpq_topk(
     n_codes: int = N_PQ_CODES,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """IVF + PQ — the composed index structure production ANN systems
     (FAISS IVFPQ) use at billion-vector scale: the coarse quantizer prunes
@@ -1087,11 +1057,9 @@ def ivfpq_topk(
     replays the full composition.
     """
     cents, assigned = ivf_assignments(corpus, n_cells, vec_col, id_col)
-    assigned = _materialize(
-        assigned.select("id", "v", "cell"), checkpoint_dir, "ivfpq_assigned"
-    )
+    assigned = assigned.select("id", "v", "cell").localCheckpoint(eager=True)
     cb, enc = pq_encode(corpus, dim, n_sub, n_codes, vec_col, id_col)
-    enc = _materialize(enc, checkpoint_dir, "ivfpq_encoded")
+    enc = enc.localCheckpoint(eager=True)
 
     # n_probe nearest cells per query (same ranking as ivf_topk)
     q = assigned.filter(F.col("id").isin(query_ids)).select(
@@ -1310,7 +1278,6 @@ def ivf_sq8_topk(
     n_probe: int = N_PROBE,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """IVF coarse pruning + SQ8 fine scoring (FAISS IVF,SQ8 shape): the
     probe list comes from :func:`ivf_assignments` centroids on floats
@@ -1321,7 +1288,7 @@ def ivf_sq8_topk(
     :func:`sq8_topk` within the probed cells."""
     stats = sq8_stats(corpus, vec_col)
     cents, assigned = ivf_assignments(corpus, n_cells, vec_col, id_col)
-    assigned = _materialize(assigned, checkpoint_dir, "ivf_sq8_assigned")
+    assigned = assigned.localCheckpoint(eager=True)
 
     q = assigned.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv")
@@ -1369,7 +1336,7 @@ def ivf_sq8_topk(
 # ANN index lifecycle (r06): build the IVF structure ONCE into the versioned
 # store, query it many times with partition-pruned scans — the production
 # shape (FAISS-style train/add/search) the per-query functions above
-# amortize only within one plan via checkpoint_dir.
+# amortize only within one call.
 # ---------------------------------------------------------------------------
 
 
@@ -2019,7 +1986,6 @@ def mine_hard_negatives_ivf(
     n_probe: int = N_PROBE,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """ANN-indexed hard-negative mining (r08 — the scale path the exact
     form's docstring planned): anchors probe their ``n_probe`` nearest IVF
@@ -2038,8 +2004,8 @@ def mine_hard_negatives_ivf(
     """
     split = _positives_splitter(positive_ids, id_col)
     cents, assigned = ivf_assignments(emb, n_cells, vec_col, id_col)
-    # two consumers (anchor probe side + candidate side): materialize once
-    assigned = _materialize(assigned, checkpoint_dir, "hn_ivf_assigned")
+    # two consumers (anchor probe side + candidate side): pin once
+    assigned = assigned.localCheckpoint(eager=True)
     anchors, cand_src = split(assigned, "id")
     q = anchors.select(
         F.col("id").alias("query_id"), F.col("v").alias("qv")

@@ -419,9 +419,8 @@ def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The family's one shingle pass over the augmented corpus."""
     return artifact(
         spark, sf_dir, "shingles",
-        lambda root: D._shingle_docs(
-            corpus_df(spark, sf_dir), "text", "doc_id",
-            checkpoint_dir=root, checkpoint_name="data",
+        lambda root: spill(
+            D._shingle_docs(corpus_df(spark, sf_dir), "text", "doc_id"), root
         ),
     )
 

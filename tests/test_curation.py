@@ -421,34 +421,6 @@ def test_repair_aux_backfills_missing_embsig(spark, store):
     assert C.repair_aux(spark, store, "cur.docs", emb=emb) == 0  # converged
 
 
-def test_curate_append_work_dir_spill_path_same_verdicts(spark, store, tmp_path):
-    """The 100 TB spill path (work_dir -> parquet shingle checkpoint)
-    produces identical verdicts to the in-memory default."""
-    from incremental_datapipeline_using_snowflake_spark.ops import curation as C
-
-    rows, base = _corpus_rows()
-    corpus = spark.createDataFrame(rows, DOC_SCHEMA)
-    C.bootstrap_corpus(spark, store, corpus, "cur.a")
-    C.bootstrap_corpus(spark, store, corpus, "cur.b")
-    batch = spark.createDataFrame(
-        [
-            _mk_doc(100, "one two three four five six seven eight nine ten eleven twelve".split()),
-            _mk_doc(101, base[0]),
-            _mk_doc(102, base[1][2:]),
-        ],
-        DOC_SCHEMA,
-    )
-    va = {r["doc_id"]: r["verdict"]
-          for r in C.curate_append(spark, store, batch, "cur.a", "r1").collect()}
-    wd = str(tmp_path / "work")
-    vb = {r["doc_id"]: r["verdict"]
-          for r in C.curate_append(spark, store, batch, "cur.b", "r1",
-                                   work_dir=wd).collect()}
-    assert va == vb == {100: "kept", 101: "exact_dup_corpus", 102: "near_dup_corpus"}
-    import os
-    assert any("curate_r1_batch_shingles" in d for d in os.listdir(wd))
-
-
 def test_stream_curate_with_inline_embeddings(spark, store, tmp_path):
     """r08: a stream whose rows CARRY their embedding column runs the
     semantic near-dup stage per micro-batch — the one-stream multimodal

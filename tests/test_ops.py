@@ -69,7 +69,7 @@ def test_shingled_reuse_matches_fresh_pass(spark, docs):
     """r13: passing a pre-materialized shingle relation into the two
     generators must give bit-identical pairs to the internal pass (the
     family-shared shingle path used by dedup_ngram_jaccard)."""
-    sh = D._shingle_docs(docs, "text", "doc_id")
+    sh = D._shingle_docs(docs, "text", "doc_id").localCheckpoint(eager=True)
     for fn, kw in (
         (D.ngram_jaccard_pairs, dict(candidates="anchor", anchor_mod=2)),
         (D.minhash_dedup_pairs, {}),
@@ -121,26 +121,6 @@ def test_pair_cache_disk_backed_survives_release(spark, tmp_path, monkeypatch):
     assert not any(k[0] == app and k[1] == sf for k in A._ENTRIES)
     assert not any(os.path.exists(r) for r in roots)
     assert os.listdir(tmp_path) == []
-
-
-def test_passage_ops_checkpoint_dir_parity(spark, docs, tmp_path):
-    """r14 (ADVICE r13 medium): the four passage/scrub ops accept the
-    _shingle_docs checkpoint_dir escape — parquet round-trip instead of a
-    pinned localCheckpoint — with bit-identical output."""
-    for fn, kw in (
-        (D.repeated_passages, dict(k=4, min_docs=2)),
-        (D.maximal_repeated_passages, dict(k=4, min_docs=2)),
-        (D.scrub_repeated_spans, dict(k=4, min_docs=2)),
-        (D.scrub_intra_doc_repeats, dict(k=3, min_repeats=2)),
-    ):
-        mem = sorted(map(tuple, fn(docs, **kw).collect()))
-        disk = sorted(
-            map(
-                tuple,
-                fn(docs, checkpoint_dir=str(tmp_path / fn.__name__), **kw).collect(),
-            )
-        )
-        assert mem == disk, fn.__name__
 
 
 def test_pair_score_kernel_masks_duplicate_ids():
@@ -391,26 +371,6 @@ def test_kmeans_arrow_and_expr_paths_bit_identical(spark):
     assert got_a == got_e
 
 
-def test_dedup_checkpoint_dir_matches_cache(spark, tmp_path):
-    """The persist-to-parquet shingle path (100 TB variant) must produce
-    the same pairs as the in-memory cache path."""
-    rows = [
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2, "alpha beta gamma delta epsilon zeta eta theta"),
-        (3, "totally different words that share nothing here at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cached = sorted(
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in D.minhash_dedup_pairs(df).collect()
-    )
-    ckpt = sorted(
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in D.minhash_dedup_pairs(df, checkpoint_dir=str(tmp_path)).collect()
-    )
-    assert cached == ckpt and len(cached) == 1 and cached[0][:2] == (1, 2)
-
-
 # ---------------------------------------------------------------------------
 # connected components (ops.graph)
 # ---------------------------------------------------------------------------
@@ -640,9 +600,10 @@ def test_ivfpq_prunes_and_still_finds_twins(spark):
     assert all((r["query_id"], r["nbr_id"]) in pq_pairs for r in out.collect())
 
 
-def test_knn_graph_checkpoint_matches_cache(spark, tmp_path):
-    """The parquet-checkpoint materialization path (100 TB variant) must
-    produce the same graph as the in-memory cache path."""
+def test_knn_graph_leaves_no_cached_table(spark):
+    """A similarity op pins its multi-consumer frame inside the call and
+    registers nothing in the session's CacheManager: a cached vector table
+    would otherwise stay resident until the session's memory release."""
     import random
 
     from incremental_datapipeline_using_snowflake_spark.ops.similarity import knn_graph
@@ -652,14 +613,10 @@ def test_knn_graph_checkpoint_matches_cache(spark, tmp_path):
         [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(30)],
         "vec_id long, embedding array<double>",
     )
-    cached = sorted(
-        (r["src_id"], r["rank"], r["nbr_id"]) for r in knn_graph(df, k=2, n_cells=4).collect()
-    )
-    ckpt = sorted(
-        (r["src_id"], r["rank"], r["nbr_id"])
-        for r in knn_graph(df, k=2, n_cells=4, checkpoint_dir=str(tmp_path)).collect()
-    )
-    assert cached == ckpt and len(cached) == 60
+    spark.catalog.clearCache()
+    rows = knn_graph(df, k=2, n_cells=4).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert len(rows) == 60
 
 
 def test_dedup_keep_best_prefers_high_score(spark):
