@@ -153,12 +153,36 @@ class Changelog:
         """
         if not self.store.exists(self.log_table):
             return None  # no changes ever recorded
-        off = int(self._read_meta()["offsets"].get(consumer, -1))
+        off = self.offset(consumer)
         return self.store.read(spark, self.log_table).filter(F.col("_row_id") > off)
+
+    def offset(self, consumer: str) -> int:
+        """The consumer's committed high-water ``_row_id`` (-1 before its
+        first commit)."""
+        return int(self._read_meta()["offsets"].get(consumer, -1))
+
+    def high_water(self) -> int | None:
+        """The highest ``_row_id`` any append landed (-1 before the first),
+        from metadata alone — ``next_base`` advances from the max id each
+        append observed on its own write job. ``None`` when metadata cannot
+        vouch for it: an append is in flight (a crashed one may have landed
+        rows past ``next_base``) or no append ever wrote metadata; callers
+        then scan."""
+        if not os.path.exists(self._meta_path()):
+            return None
+        meta = self._read_meta()
+        if meta.get("in_flight") is not None:
+            return None
+        return int(meta["next_base"]) - 1
 
     def has_data(self, spark: SparkSession, consumer: str = "default") -> bool:
         """``SYSTEM$STREAM_HAS_DATA`` equivalent (reference
-        ``orchestrate_tasks.sql.j2:38``) — gate for downstream stages."""
+        ``orchestrate_tasks.sql.j2:38``) — gate for downstream stages.
+        A metadata check, like the reference's; it probes the log only
+        when :meth:`high_water` cannot vouch for the mark."""
+        hi = self.high_water()
+        if hi is not None:
+            return hi > self.offset(consumer)
         p = self.pending(spark, consumer)
         return p is not None and bool(p.limit(1).count())
 
@@ -172,6 +196,5 @@ class Changelog:
     def commit(self, consumer: str, up_to_row_id: int) -> None:
         """Advance the consumer offset (call after the downstream merge)."""
         meta = self._read_meta()
-        cur = int(meta["offsets"].get(consumer, -1))
-        meta["offsets"][consumer] = max(cur, int(up_to_row_id))
+        meta["offsets"][consumer] = max(self.offset(consumer), int(up_to_row_id))
         self._write_meta(meta)

@@ -5,6 +5,7 @@ Replaces the reference's Snowflake database/schema/table catalog
 path-per-layer parquet warehouse:
 
     <root>/<namespace>/<table>/v=<NNNNNN>/part-*.parquet
+    <root>/<namespace>/<table>/v=<NNNNNN>/_schema.json  (the version's schema)
     <root>/<namespace>/<table>/_VERSION        (text file: current version)
 
 **Atomic overwrite protocol** (stage-and-swap): a new version directory is
@@ -28,11 +29,29 @@ import json
 import os
 import shutil
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+# per-version schema record; Spark's readers skip ``_``-prefixed files
+SCHEMA_RECORD = "_schema.json"
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable — the form a
+    parquet read reports whatever the written frame declared."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 @dataclass
@@ -43,12 +62,6 @@ class TableStore:
     # raise it for time-travel depth — every retained version stays
     # readable via read_version / restorable via restore.
     keep_versions: int = 2
-    # (table -> (version, schema)): parquet footer schema memoized per
-    # version. Without it every spark.read.parquet launches a footer-
-    # inference job — ~10 extra jobs per pipeline run, and at warehouse
-    # scale a listing+footer fetch per read. Appends keep the version, and
-    # the table schema is fixed, so version-keyed is exactly right.
-    _schema_cache: dict = field(default_factory=dict, repr=False)
 
     # -- paths ------------------------------------------------------------
     def table_dir(self, name: str) -> str:
@@ -87,43 +100,59 @@ class TableStore:
         )
 
     # -- reads ------------------------------------------------------------
-    def _schema_file(self, name: str) -> str:
-        return os.path.join(self.table_dir(name), "_SCHEMA")
-
-    def _persisted_schema(self, name: str) -> StructType | None:
-        """Evolved-table schema pinned by a past ``append(merge_schema=True)``.
-
-        Once files with different footer schemas coexist in one version,
-        a bare ``spark.read.parquet`` takes whichever footer it samples
-        first — nondeterministic column sets. Persisting the merged schema
-        makes every reader (including a fresh TableStore instance) plan
-        against the full column set; parquet fills columns absent from
-        older files with NULLs.
-        """
-        sf = self._schema_file(name)
-        if not os.path.exists(sf):
+    # Every version dir carries the schema it was written with
+    # (``_schema.json``: partition columns last, every field nullable —
+    # exactly what inference over its Spark-written footers reports), so a
+    # read plans from one small file instead of a footer-inference job.
+    # That holds for any reader: a fresh process, ``restore()``, time
+    # travel. A drifting ``append(merge_schema=True)`` rewrites the record
+    # before its rows land, so files with older footers read the added
+    # columns as NULL. Only versions written before records existed infer,
+    # merging every footer (a bare read samples one and could drop an
+    # evolved column).
+    def _schema_record(self, version_dir: str) -> StructType | None:
+        rec = os.path.join(version_dir, SCHEMA_RECORD)
+        if not os.path.exists(rec):
             return None
-        with open(sf) as f:
+        with open(rec) as f:
             return StructType.fromJson(json.load(f))
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        v = self.current_version(name)
-        path = self.data_path(name)
-        cached = self._schema_cache.get(name)
-        if cached is not None and cached[0] == v:
-            return spark.read.schema(cached[1]).parquet(path)
-        schema = self._persisted_schema(name)
+    def _write_schema_record(self, version_dir: str, schema: StructType) -> None:
+        rec = os.path.join(version_dir, SCHEMA_RECORD)
+        tmp = rec + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(_as_nullable(schema).jsonValue(), f)
+        os.replace(tmp, rec)
+
+    def _record_written_schema(
+        self, df: DataFrame, version_dir: str, partition_by: list[str] | None
+    ) -> None:
+        """Record the schema of a version dir ``df`` was just written to.
+        Partition columns take the type partition discovery gives their
+        directory names (a driver-side listing; no job), so the record
+        matches inference even where it differs from ``df``'s type; a
+        partition column with no directory keeps ``df``'s type."""
+        part = list(partition_by or [])
+        data = StructType([f for f in df.schema.fields if f.name not in part])
+        schema = df.sparkSession.read.schema(data).parquet(version_dir).schema
+        for f in df.schema.fields:
+            if f.name in part and f.name not in schema.fieldNames():
+                schema = schema.add(f)
+        self._write_schema_record(version_dir, schema)
+
+    def _read_dir(self, spark: SparkSession, version_dir: str) -> DataFrame:
+        schema = self._schema_record(version_dir)
         if schema is not None:
-            self._schema_cache[name] = (v, schema)
-            return spark.read.schema(schema).parquet(path)
-        df = spark.read.parquet(path)
-        self._schema_cache[name] = (v, df.schema)
-        return df
+            return spark.read.schema(schema).parquet(version_dir)
+        return spark.read.option("mergeSchema", "true").parquet(version_dir)
+
+    def read(self, spark: SparkSession, name: str) -> DataFrame:
+        return self._read_dir(spark, self.data_path(name))
 
     def describe(self, spark: SparkSession, name: str) -> DataFrame:
         """``DESC TABLE`` parity (reference ``loading_data_sp/function.py:30``):
         one row per column — (col_name, data_type, nullable). Schema comes
-        from parquet footer metadata only; no data scan."""
+        from the version's schema record; no data scan."""
         fields = self.read(spark, name).schema.fields
         return spark.createDataFrame(
             [(f.name, f.dataType.simpleString(), f.nullable) for f in fields],
@@ -295,6 +324,7 @@ class TableStore:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(target)
         self._mark_partitioning(target, partition_by)
+        self._record_written_schema(df, target, partition_by)
         return new, prev
 
     def _gc_versions(self, name: str, new: int, prev: int | None) -> None:
@@ -325,17 +355,6 @@ class TableStore:
         """Full-table replace via stage-and-swap; keeps one previous version."""
         new, prev = self._stage_version(df, name, partition_by)
         self._commit_version(name, new)
-        # a full rewrite has one uniform footer schema again — drop any
-        # schema pinned by a past evolving append so it can't go stale.
-        # Removal comes AFTER the pointer flip: a stale _SCHEMA against the
-        # new version is harmless for one read (supersets NULL-fill), but a
-        # crash that removed it BEFORE the flip would leave the still-
-        # current mixed-footer version reading nondeterministic column sets
-        # — the exact hazard the file exists to prevent.
-        sf = self._schema_file(name)
-        if os.path.exists(sf):
-            os.remove(sf)
-        self._schema_cache.pop(name, None)
         self._gc_versions(name, new, prev)
 
     def overwrite_partitions(
@@ -419,8 +438,8 @@ class TableStore:
                     os.link(src, dst)  # zero-copy share across versions
                 except OSError:
                     shutil.copy2(src, dst)  # cross-device fallback
+        self._record_written_schema(df, target, partition_by)
         self._commit_version(name, new)
-        self._schema_cache.pop(name, None)
         self._gc_versions(name, new, prev)
 
     # -- time travel -------------------------------------------------------
@@ -450,25 +469,15 @@ class TableStore:
     def read_version(self, spark: SparkSession, name: str, version: int) -> DataFrame:
         """Time-travel read of a retained committed version (Delta
         `VERSION AS OF` analogue). Raises ``FileNotFoundError`` for GC'd or
-        never-committed versions.
-
-        Reads with ``mergeSchema`` so a version holding mixed footers from
-        an evolving ``append(merge_schema=True)`` plans against the full
-        merged column set deterministically — a bare read samples ONE
-        footer and could silently drop the evolved column (the hazard
-        ``_persisted_schema`` documents; the pinned file covers only the
-        current version, so time travel merges footers instead)."""
+        never-committed versions. Plans from the version's schema record,
+        like :meth:`read`."""
         path = os.path.join(self.table_dir(name), f"v={version:06d}")
         if version not in self.versions(name) or not os.path.isdir(path):
             raise FileNotFoundError(
                 f"{name} v{version} not retained (have {self.versions(name)}; "
                 f"raise keep_versions for deeper history)"
             )
-        return (
-            spark.read.option("recursiveFileLookup", "false")
-            .option("mergeSchema", "true")
-            .parquet(path)
-        )
+        return self._read_dir(spark, path)
 
     def version_at_timestamp(self, name: str, ts: float) -> int:
         """The version that was CURRENT (pointer-served) at wall time
@@ -505,8 +514,8 @@ class TableStore:
         after the other GC's or drops its version. The tables then diverge
         independently (every later write goes through normal stage-and-swap
         on immutable files — a clone can never see the other's edits).
-        Metadata (partition layout marker, pinned evolved schema, comment)
-        is copied so the clone reads identically to the source."""
+        Metadata (partition layout marker, schema record, comment) is
+        copied so the clone reads identically to the source."""
         if not self.exists(src):
             raise FileNotFoundError(f"clone: source table {src!r} does not exist")
         if self.exists(dst):
@@ -525,10 +534,7 @@ class TableStore:
                     except OSError:
                         shutil.copy2(s, d)  # cross-device fallback
                 else:
-                    shutil.copy2(s, d)  # tiny markers (_PARTITIONING.json, _SUCCESS)
-        sf = self._schema_file(src)
-        if os.path.exists(sf):
-            shutil.copy2(sf, self._schema_file(dst))
+                    shutil.copy2(s, d)  # tiny markers (_PARTITIONING.json, _schema.json)
         cf = self._comment_file(src)
         if os.path.exists(cf):
             shutil.copy2(cf, self._comment_file(dst))
@@ -658,14 +664,7 @@ class TableStore:
             with open(jp) as f:
                 flips: dict[str, int] = json.load(f)
             for table, version in flips.items():
-                # flip first, THEN drop the pinned schema (mirrors
-                # overwrite(): a stale _SCHEMA is harmless, a missing one
-                # against a still-current mixed-footer version is not)
                 self._commit_version(table, version)
-                sf = self._schema_file(table)
-                if os.path.exists(sf):
-                    os.remove(sf)
-                self._schema_cache.pop(table, None)
             os.remove(jp)
 
     @contextmanager
@@ -710,10 +709,6 @@ class TableStore:
         # staged version must be committed before the first one's gc runs
         for table, version in txn.staged:
             self._commit_version(table, version)
-            sf = self._schema_file(table)
-            if os.path.exists(sf):
-                os.remove(sf)
-            self._schema_cache.pop(table, None)
         for table, _version in txn.staged:
             txn.finish_gc(table)
         os.remove(jp)
@@ -739,14 +734,8 @@ class TableStore:
         if not self.exists(name):
             self.overwrite(df, name, partition_by=partition_by)
             return
-        current = self._schema_cache.get(name)
-        stored = (
-            current[1]
-            if current is not None and current[0] == self.current_version(name)
-            else self._persisted_schema(name)
-        )
-        if stored is None:
-            stored = df.sparkSession.read.parquet(self.data_path(name)).schema
+        path = self.data_path(name)
+        stored = self._read_dir(df.sparkSession, path).schema
         by_name = {f.name: f for f in stored.fields}
         drift = [f for f in df.schema.fields if f.name not in by_name]
         for f in df.schema.fields:
@@ -777,15 +766,19 @@ class TableStore:
                 ]
             )
             if drift:
-                tmp = self._schema_file(name) + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(merged.jsonValue(), fh)
-                os.replace(tmp, self._schema_file(name))
-                self._schema_cache.pop(name, None)
+                # the record takes the added columns BEFORE rows carrying
+                # them land: a crash in between reads them as NULL, the
+                # reverse order would hide landed values. Partition columns
+                # stay last, where inference puts them.
+                part = set(self.partitioning(name) or [])
+                self._write_schema_record(path, StructType(
+                    [f for f in merged.fields if f.name not in part]
+                    + [f for f in merged.fields if f.name in part]
+                ))
         writer = df.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.data_path(name))
+        writer.parquet(path)
 
     def compact(
         self,

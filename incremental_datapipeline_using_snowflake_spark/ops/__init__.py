@@ -19,6 +19,11 @@ One materialization rule holds across the package:
 - State that outlives one call goes to parquet through
   ``queries.artifacts.spill``: the session's memory release destroys
   pinned blocks, files survive it.
+
+Counting follows from it: a count that a pin or a write already computes
+rides that job as an ``Observation`` (``df.observe(obs, ...)`` before
+``localCheckpoint`` or the write); there is no ``.count()`` after a pin,
+which would spend a job re-reading what the pin just wrote.
 """
 from . import (
     clustering,

@@ -82,7 +82,7 @@ re-ingested later is judged fresh, not remembered as a duplicate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -210,8 +210,11 @@ def bootstrap_corpus(
     fixtures. Growth past the frozen structure is then handled by
     :func:`curate_append`'s automatic re-index trigger (r09)."""
     spark_docs = docs.withColumn("_fingerprint", _fingerprint(text_col))
-    store.overwrite(spark_docs, corpus_table)
-    n_corpus = spark_docs.count()
+    n_docs = Observation()
+    store.overwrite(
+        spark_docs.observe(n_docs, F.count(F.lit(1)).alias("n")), corpus_table
+    )
+    n_corpus = n_docs.get["n"]
     m_bits = bloom_m_bits(max(n_corpus, 1) * max(bloom_headroom, 1))
     store.overwrite(
         fingerprint_bloom(
@@ -376,10 +379,15 @@ def delete_docs(
         n_keys = len(set(vals))
         matched = corpus.filter(F.col(kc).isin(vals))
     # pin the doomed id list BEFORE any overwrite: every purge below
-    # anti-joins this same small relation (ids only, broadcastable)
-    doomed = matched.select(F.col(id_col).alias("_del_id")).distinct()
-    doomed = doomed.localCheckpoint(eager=True)
-    n_deleted = doomed.count()
+    # anti-joins this same small relation (ids only, broadcastable); its
+    # size rides the pin's job
+    n_doomed = Observation()
+    doomed = (
+        matched.select(F.col(id_col).alias("_del_id")).distinct()
+        .observe(n_doomed, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    n_deleted = n_doomed.get["n"]
 
     runs_t = corpus_table + "__deletes"
     old_log = (
@@ -404,8 +412,11 @@ def delete_docs(
         )
 
     new_corpus = _purge(corpus, id_col)
+    n_after = Observation()
     with store.transaction(f"delete-{run_id}") as txn:
-        txn.overwrite(new_corpus, corpus_table)
+        txn.overwrite(
+            new_corpus.observe(n_after, F.count(F.lit(1)).alias("n")), corpus_table
+        )
         if store.exists(corpus_table + "__bands"):
             txn.overwrite(
                 _purge(store.read(spark, corpus_table + "__bands"), "id"),
@@ -429,9 +440,8 @@ def delete_docs(
                 corpus_table + "__bloom",
             )
         txn.overwrite(log, runs_t)
-    n_after = store.read(spark, corpus_table).count()
     return {"n_keys": int(n_keys), "n_deleted": int(n_deleted),
-            "n_corpus_after": int(n_after)}
+            "n_corpus_after": int(n_after.get["n"])}
 
 
 def auto_n_planes(n_vectors: int, target_bucket: int = 64) -> int:
@@ -871,11 +881,16 @@ def curate_append(
             .groupBy("word")
             .agg(F.bit_or("bits").alias("bits"))
         )
-        probed = bfp.join(bloom_maybe_member(bfp, bloom, m_bits), "id").cache()
+        n_maybe = Observation()
+        probed = (
+            bfp.join(bloom_maybe_member(bfp, bloom, m_bits), "id")
+            .observe(n_maybe, F.sum(F.col("maybe_member").cast("long")).alias("n"))
+            .localCheckpoint(eager=True)
+        )
         maybe = probed.filter(F.col("maybe_member")).select("id", "fp")
-        if maybe.isEmpty():
+        if not n_maybe.get["n"]:
             exact_corpus = maybe.select("id")
-            p2a = bfp
+            p2a = probed.select("id", "fp")
         else:
             # ONE corpus touchpoint: a single left join against the
             # (distinct) fingerprint projection serves both branches —
@@ -941,18 +956,21 @@ def curate_append(
         cand_c.select(F.col("id_b").alias(id_col)).distinct(), id_col, "left_semi"
     )
     csh = _shingle_docs(cdocs, text_col, id_col).localCheckpoint(eager=True)
-    # pin the verified corpus-hit id list ONCE — the old pinned semi/anti
-    # pair re-ran the shingle-verify join twice
     near_c = (
         cand_c.join(bsh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
         .join(csh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
         .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= jaccard_threshold)
         .select(F.col("id_a").alias("id"))
         .distinct()
+    )
+    # ONE pinned left join marks the verified corpus hits; both branches
+    # are free filters (stage 2's shape)
+    marked3 = (
+        p2.join(near_c.withColumn("_hit", F.lit(True)), "id", "left")
         .localCheckpoint(eager=True)
     )
-    near_corpus = p2.join(near_c, "id", "left_semi")
-    p3a = p2.join(near_c, "id", "left_anti").localCheckpoint(eager=True)
+    near_corpus = marked3.filter(F.col("_hit")).select("id")
+    p3a = marked3.filter(F.col("_hit").isNull()).select("id")
     # batch-internal pairs among stage-3 survivors → CC → min-id keep
     a = bbands.withColumnRenamed("id", "id_a")
     c = bbands.withColumnRenamed("id", "id_b")
@@ -1010,7 +1028,7 @@ def curate_append(
             F.col("id").alias("id_b"), F.col("v").alias("vb"),
             F.posexplode("buckets").alias("t", "bucket"),
         )
-        # pin the cosine-verified corpus-hit id list ONCE (the pinned
+        # ONE pinned left join marks the cosine-verified corpus hits (a
         # semi/anti pair re-ran the LSH bucket join + cosine verify twice
         # — the two heaviest jobs of the r07 profile at 2.2s + 1.9s)
         hit_c = (
@@ -1019,10 +1037,13 @@ def curate_append(
             .filter(F.round(_cosine(F.col("va"), F.col("vb")), 6) >= cosine_threshold)
             .select(F.col("id_a").alias("id"))
             .distinct()
+        )
+        marked4 = (
+            p3.join(hit_c.withColumn("_hit", F.lit(True)), "id", "left")
             .localCheckpoint(eager=True)
         )
-        emb_corpus = p3.join(hit_c, "id", "left_semi")
-        p4a = p3.join(hit_c, "id", "left_anti").localCheckpoint(eager=True)
+        emb_corpus = marked4.filter(F.col("_hit")).select("id")
+        p4a = marked4.filter(F.col("_hit").isNull()).select("id")
         pairs_e = (
             bflat.join(
                 bsig.select(
@@ -1050,7 +1071,9 @@ def curate_append(
             .localCheckpoint(eager=True)
         )
 
-    # -- verdicts (materialized BEFORE the merge mutates the store) ------
+    # -- verdicts (materialized BEFORE the merge mutates the store; the
+    # per-verdict counts ride the pin's job) -----------------------------
+    n_verdict = Observation()
     verdicts = (
         gate_fail.select("id", F.lit("gate_fail").alias("verdict"))
         .unionByName(exact_corpus.select("id", F.lit("exact_dup_corpus").alias("verdict")))
@@ -1061,13 +1084,13 @@ def curate_append(
         .unionByName(emb_batch.select("id", F.lit("embedding_dup_batch").alias("verdict")))
         .unionByName(p4.select("id", F.lit("kept").alias("verdict")))
         .withColumnRenamed("id", id_col)
+        .observe(
+            n_verdict,
+            *[F.sum((F.col("verdict") == v).cast("long")).alias(v) for v in VERDICTS],
+        )
         .localCheckpoint(eager=True)
     )
-
-    counts = {
-        r["verdict"]: r["n"]
-        for r in verdicts.groupBy("verdict").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    counts = {v: n or 0 for v, n in n_verdict.get.items()}
     kept_ids = verdicts.filter(F.col("verdict") == "kept").select(id_col)
     kept_docs = b.join(kept_ids, id_col).withColumn(
         "_fingerprint", _fingerprint(text_col)
@@ -1128,8 +1151,6 @@ def curate_append(
     # 16x scale session hit exactly that before this unpersist
     b.unpersist()
     bsh.unpersist()
-    if have_bloom:
-        probed.unpersist()
     # -- maintenance: automatic LSH re-index when the corpus outgrew the
     # frozen plane count (docstring; probe = one narrow count) -----------
     if auto_reindex:
@@ -1383,16 +1404,17 @@ def verify_corpus_snapshot(spark: SparkSession, out_dir: str,
     every split matches; raises with the failing splits otherwise."""
     from ..queries.util import md5_long
 
-    man_rows = spark.read.json(f"{out_dir}/_manifest.jsonl").collect()
+    man_rows = _read_manifest(out_dir)
     # str() on the manifest key: pre-r08 manifests from numeric split
     # columns carry JSON numbers, the recomputed side is always a string
-    man = {str(r["split"]): (r["n_rows"], r["content_checksum"]) for r in man_rows}
+    man = {str(r["split"]): (r.get("n_rows"), r.get("content_checksum"))
+           for r in man_rows}
     # the export records WHICH column it partitioned by ('' = none) — group
     # verification by that same column; pre-r08 manifests lack the field,
     # so fall back to the old single-'all' heuristic
     split_col = (
-        man_rows[0]["split_col"]
-        if man_rows and "split_col" in man_rows[0].__fields__
+        man_rows[0].get("split_col")
+        if any("split_col" in r for r in man_rows)
         else ("" if set(man) == {"all"} else "split")
     )
     # plain read: partition discovery recovers the <split_col>=<v> dirs when
@@ -1480,30 +1502,51 @@ def _delta_stats(df: DataFrame, split_col: str | None, id_col: str,
     return {r["split"]: (r["n"], r["ch"] or 0, r["cs"] or 0) for r in rows}
 
 
-def _manifest_stats(spark: SparkSession, out_dir: str):
+def _read_manifest(out_dir: str) -> list[dict]:
+    """The rows of ``<out_dir>/_manifest.jsonl``, parsed on the driver.
+
+    The manifest is a Spark JSON write of a few lines — one object per
+    line in its ``part-*`` files, with null fields omitted (so a row lacks
+    a key where a Spark read would give NULL). Reading it with ``json``
+    spares the job ``spark.read.json`` spends inferring a schema; the
+    chain already requires a local publish dir (sidecars are read with
+    ``open()``, rebase hard-links shards). A missing manifest raises
+    ``FileNotFoundError``."""
+    import glob
+    import json
+    import os
+
+    mdir = os.path.join(out_dir, "_manifest.jsonl")
+    if not os.path.isdir(mdir):
+        raise FileNotFoundError(f"no manifest in {out_dir}")
+    rows = []
+    for part in sorted(glob.glob(os.path.join(mdir, "part-*"))):
+        with open(part) as f:
+            rows += [json.loads(line) for line in f if line.strip()]
+    return rows
+
+
+def _manifest_stats(out_dir: str):
     """Read a snapshot OR delta manifest into the common chain shape:
     (per-split {split: (n_rows, n_chars, checksum)}, store_version, table,
     split_col). A delta manifest contributes its result_* columns — the
     corpus state it proves — so chains verify link-by-link with one code
     path."""
-    rows = spark.read.json(f"{out_dir}/_manifest.jsonl").collect()
+    rows = _read_manifest(out_dir)
     if not rows:
         raise ValueError(f"empty manifest in {out_dir}")
-    fields = rows[0].__fields__
-    is_delta = "result_checksum" in fields
-    stats = {
-        str(r["split"]): (
-            (r["result_n_rows"], r["result_n_chars"], r["result_checksum"])
-            if is_delta
-            else (r["n_rows"], r["n_chars"], r["content_checksum"])
-        )
-        for r in rows
-    }
+    is_delta = any("result_checksum" in r for r in rows)
+    keys = (
+        ("result_n_rows", "result_n_chars", "result_checksum")
+        if is_delta
+        else ("n_rows", "n_chars", "content_checksum")
+    )
+    stats = {str(r["split"]): tuple(r.get(k) for k in keys) for r in rows}
     return (
         stats,
         int(rows[0]["store_version"]),
-        rows[0]["table"],
-        rows[0]["split_col"] if "split_col" in fields else "",
+        rows[0].get("table"),
+        rows[0].get("split_col", ""),
     )
 
 
@@ -1534,7 +1577,7 @@ def export_corpus_delta(
     export cadence."""
     from ..sources.jsonl_source import write_jsonl
 
-    base_stats, v_base, base_table, split_col = _manifest_stats(spark, base_dir)
+    base_stats, v_base, base_table, split_col = _manifest_stats(base_dir)
     split_col = split_col or None
     if base_table != corpus_table:
         raise ValueError(
@@ -1644,18 +1687,18 @@ def verify_corpus_delta(spark: SparkSession, base_dir: str, delta_dir: str,
     of base ⊕ added − removed. (removed_* checksums come from store-side
     before-images a consumer no longer has — materialize the chain and
     run :func:`verify_corpus_chain` for the end-to-end proof.)"""
-    base_stats, v_base, base_table, _sc = _manifest_stats(spark, base_dir)
-    rows = spark.read.json(f"{delta_dir}/_manifest.jsonl").collect()
+    base_stats, v_base, base_table, _sc = _manifest_stats(base_dir)
+    rows = _read_manifest(delta_dir)
     if not rows:
         raise ValueError(f"empty manifest in {delta_dir}")
-    if rows[0]["table"] != base_table:
+    if rows[0].get("table") != base_table:
         raise ValueError("delta/base manifests pin different tables")
     if int(rows[0]["base_version"]) != v_base:
         raise ValueError(
             f"chain break: delta bases on v{rows[0]['base_version']}, "
             f"base manifest pins v{v_base}"
         )
-    split_col = rows[0]["split_col"] or None
+    split_col = rows[0].get("split_col") or None
     try:
         data = spark.read.json(f"{delta_dir}/data")
         got_added = (
@@ -1791,7 +1834,7 @@ def publish_corpus_delta(
         and os.path.exists(os.path.join(publish_dir, d, "_manifest.jsonl"))
     )
     head = os.path.join(publish_dir, links[-1]) if links else base
-    _stats, v_head, head_table, _sc = _manifest_stats(spark, head)
+    _stats, v_head, head_table, _sc = _manifest_stats(head)
     if head_table != corpus_table:
         raise ValueError(
             f"publish dir {publish_dir!r} pins table {head_table!r}, "
@@ -2203,10 +2246,10 @@ def rebase_corpus_chain(
         and os.path.exists(os.path.join(publish_dir, d, "_manifest.jsonl"))
     )
     if not links:
-        _stats, v_base, _t, _sc = _manifest_stats(spark, base)
+        _stats, v_base, _t, _sc = _manifest_stats(base)
         return {"rebased": False, "links_folded": 0, "store_version": v_base}
     link_dirs = [os.path.join(publish_dir, d) for d in links]
-    head_stats, v_head, table, split_col = _manifest_stats(spark, link_dirs[-1])
+    head_stats, v_head, table, split_col = _manifest_stats(link_dirs[-1])
     if os.path.exists(tmp):
         # no intent marker (checked above), so the prior rebase died
         # BEFORE its commit point — the old chain is intact; discard
@@ -2316,7 +2359,7 @@ def verify_corpus_chain(
     for d in delta_dirs:
         verify_corpus_delta(spark, prev, d, id_col=id_col, text_col=text_col)
         prev = d
-    final_stats, _v, _t, split_col = _manifest_stats(spark, prev)
+    final_stats, _v, _t, split_col = _manifest_stats(prev)
     got = _delta_stats(
         materialize_corpus_chain(spark, base_dir, delta_dirs, id_col=id_col),
         split_col or None, id_col, text_col,

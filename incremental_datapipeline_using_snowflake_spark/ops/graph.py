@@ -58,9 +58,17 @@ def connected_components(
     effective diameter — unreachable for any real dedup graph; the guard
     exists so a logic regression fails loudly instead of looping).
     """
+    from pyspark.sql import Observation
+
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
-    sym = sym.localCheckpoint(eager=True)
+    # the edge count rides the pin's own job
+    obs = Observation()
+    sym = sym.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    n_edges = obs.get["n"]
+    if n_edges == 0:
+        # no edges, no nodes: skip the labels pin and the loop
+        return sym.select(F.col("src").alias("id"), F.col("dst").alias("comp"))
 
     # Scale-adaptive loop partitioning (r14, guide §2.1/§2.2): every
     # iteration runs 3 tiny shuffles over the SAME frames, and the
@@ -69,12 +77,10 @@ def connected_components(
     # 3 x 32-task stages per round, pure scheduling overhead (the r13
     # driver measured leakage_safe_split FASTER on 8 cores than 32, ratio
     # 0.58). Size the loop's shuffles from the measured edge count
-    # (~100k edges/partition; the count is a cheap action on the
-    # just-checkpointed sym) and CAP at the session default, so at
+    # (~100k edges/partition) and CAP at the session default, so at
     # warehouse scale the behavior is unchanged — this only coalesces
     # when the graph is small relative to the configured parallelism.
     spark = edges.sparkSession
-    n_edges = sym.count()
     default_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     loop_p = max(1, min(default_p, n_edges // 100_000 + 1))
     sym = sym.coalesce(loop_p)

@@ -118,8 +118,8 @@ class Orchestrator:
             )
         else:
             # Batch mode: the WHEN SYSTEM$STREAM_HAS_DATA(...) gate lives
-            # inside harmonize's single pending-count action — probing it
-            # here too would double the gate's job cost for no information.
+            # inside harmonize, a changelog-metadata check — probing it
+            # here too would read the same metadata twice.
             ok, msg = self._run_stage(
                 "co2_harmonized_task", lambda: P.harmonize(self.spark, self.store)
             )

@@ -111,6 +111,7 @@ def load_raw(
         F.count(F.lit(1)), F.max(F.make_date("YEAR", "MONTH", "DAY"))
     ).first()
     if n == 0:
+        parsed.unpersist()
         return "No new data to load"
 
     # ONE physical append lands both RAW and its change record: the
@@ -141,22 +142,33 @@ def load_raw(
 # the min/max scalar cache.
 # reference: udfs_and_spoc/co2_harmonized_sp/co2_harmonized_sp/function.py
 # ---------------------------------------------------------------------------
+def _stream_high_water(log: Changelog, pending: DataFrame) -> int:
+    """The ``_row_id`` a consumer of ``pending`` commits up to.
+
+    ``SYSTEM$STREAM_HAS_DATA`` is a metadata check in the reference
+    (``orchestrate_tasks.sql.j2:38``), and so is this: the changelog
+    metadata records the high-water id of every landed append, so the gate
+    costs no Spark job. Only while an append is in flight — a crash may
+    have landed rows past the recorded mark — does it scan ``pending``
+    (-1 when that finds nothing)."""
+    hi = log.high_water()
+    if hi is None:
+        hi = pending.agg(F.max("_row_id")).first()[0]
+    return -1 if hi is None else int(hi)
+
+
 def harmonize(spark: SparkSession, store: TableStore, consumer: str = "harmonize") -> str:
     log = Changelog(store, RAW_TABLE, embedded=True)
     pending = log.pending(spark, consumer)
     if pending is None:
         return "No data in stream to process"  # empty-stream short-circuit (:119-124)
-
-    # one action covers both the SYSTEM$STREAM_HAS_DATA gate and the offset
-    # high-water mark (round 1 paid two: a limit(1).count probe + a max agg)
-    pending = pending.cache()
-    n_pending, hi = pending.agg(F.count(F.lit(1)), F.max("_row_id")).first()
-    if not n_pending:
-        pending.unpersist()
+    hi = _stream_high_water(log, pending)
+    if hi <= log.offset(consumer):
         return "No data in stream to process"
 
     src = (
-        pending.filter(F.col("_action") == "INSERT")  # P8 metadata filter
+        pending.filter(F.col("_row_id") <= hi)  # later appends wait for the next run
+        .filter(F.col("_action") == "INSERT")  # P8 metadata filter
         .withColumn("DATE", F.make_date("YEAR", "MONTH", "DAY"))  # P2/P3
         .select(
             "DATE",
@@ -200,8 +212,7 @@ def harmonize(spark: SparkSession, store: TableStore, consumer: str = "harmonize
         )
         txn.overwrite(minmax, MINMAX_TABLE)
 
-    log.commit(consumer, int(hi))  # offset advances with the consuming merge
-    pending.unpersist()
+    log.commit(consumer, hi)  # offset advances with the consuming merge
     return "CO2 data harmonization complete"
 
 
@@ -343,9 +354,13 @@ def analytics_incremental(
     if pending is None:
         return "No data in stream to process"
     # never run ahead of harmonize: rows it has not merged yet are not in
-    # HARMONIZED, and advancing past them would lose their dates forever
-    h_off = int(log._read_meta()["offsets"].get("harmonize", -1))
-    pending = pending.filter(F.col("_row_id") <= h_off).cache()
+    # HARMONIZED, and advancing past them would lose their dates forever.
+    # harmonize's offset is a landed row id, so the gate needs no scan.
+    h_off = log.offset("harmonize")
+    pending = pending.filter(F.col("_row_id") <= h_off)
+    hi = min(_stream_high_water(log, pending), h_off)
+    if hi <= log.offset(consumer):
+        return "No data in stream to process"
 
     bounds_file = os.path.join(store.table_dir(DAILY_TABLE), "_BOUNDS")
 
@@ -355,88 +370,82 @@ def analytics_incremental(
             _json.dump([mn, mx], f)
         os.replace(tmp, bounds_file)
 
-    try:
-        n_pending, hi = pending.agg(F.count(F.lit(1)), F.max("_row_id")).first()
-        if not n_pending:
-            return "No data in stream to process"
-        mn, mx = _minmax_lits(spark, store)
-        if not (store.exists(DAILY_TABLE) and store.exists(WEEKLY_TABLE)):
-            out = analytics(spark, store)
-            _commit_bounds(mn, mx)
-            log.commit(consumer, int(hi))
-            return f"{out} (full: first run)"
-
-        # NORMALIZED_* columns depend on the GLOBAL bounds: if this batch
-        # moved them since the last analytics pass, every stored row's
-        # normalized value is stale — only a full recompute is correct
-        # (the reference recomputes fully every run for this reason).
-        prev = None
-        if os.path.exists(bounds_file):
-            with open(bounds_file) as f:
-                prev = tuple(_json.load(f))
-        if prev != (mn, mx):
-            out = analytics(spark, store)
-            _commit_bounds(mn, mx)
-            log.commit(consumer, int(hi))
-            return f"{out} (full: bounds moved)"
-
-        batch = pending.filter(F.col("_action") == "INSERT").select(
-            F.make_date("YEAR", "MONTH", "DAY").alias("DATE")
-        )
-        harmonized = store.read(spark, HARMONIZED_TABLE)
-        affected = batch.select("DATE").distinct()
-        # DATE-only neighbor pass: global order over the daily series (one
-        # narrow column; the series is one row per date by construction).
-        # Recompute a date if IT changed or its PREDECESSOR changed (its
-        # lag inputs moved); each recompute date's predecessor row is
-        # pulled as lag input. One job collects the (churn-sized) date
-        # lists to the driver so every downstream filter is an IN-list
-        # literal — pushed into the parquet scans, with no broadcast
-        # exchanges to materialize. A giant backfill (>5000 dates) would
-        # belong on the full path anyway and bounds-moves already route it
-        # there in practice.
-        dates = harmonized.select("DATE")
-        w = W.orderBy("DATE")
-        ndf = dates.select("DATE", F.lag("DATE", 1).over(w).alias("_prev"))
-        aset = F.broadcast(affected.withColumnRenamed("DATE", "_a"))
-        pairs = ndf.join(
-            aset,
-            (F.col("DATE") == F.col("_a")) | (F.col("_prev") == F.col("_a")),
-            "left_semi",
-        ).collect()
-        recompute_dates = [r["DATE"] for r in pairs]
-        need_dates = sorted(
-            {r["DATE"] for r in pairs} | {r["_prev"] for r in pairs if r["_prev"]}
-        )
-        rows = harmonized.filter(F.col("DATE").isin(need_dates))
-        stats = daily_stats_df(rows, mn, mx).filter(
-            F.col("DATE").isin(recompute_dates)
-        )
-        merge_upsert(
-            spark, store, DAILY_TABLE, stats, keys=["DATE"], count_rows=False
-        )
-
-        # weekly: recompute only the touched ISO weeks (no cross-week lag).
-        # Week set derives driver-side from the already-collected recompute
-        # dates (ISO Monday = d - weekday); recompute ⊇ affected, and
-        # re-deriving an untouched week is an idempotent no-op.
-        import datetime as _dt
-
-        weeks = sorted(
-            {d - _dt.timedelta(days=d.weekday()) for d in recompute_dates}
-        )
-        wrows = harmonized.filter(
-            F.date_trunc("week", F.col("DATE")).cast("date").isin(weeks)
-        )
-        wstats = weekly_stats_df(wrows, mn, mx)
-        merge_upsert(
-            spark, store, WEEKLY_TABLE, wstats, keys=["WEEK_START"], count_rows=False
-        )
+    mn, mx = _minmax_lits(spark, store)
+    if not (store.exists(DAILY_TABLE) and store.exists(WEEKLY_TABLE)):
+        out = analytics(spark, store)
         _commit_bounds(mn, mx)
-        log.commit(consumer, int(hi))
-        return "Daily analytics complete; Weekly analytics complete (incremental)"
-    finally:
-        pending.unpersist()
+        log.commit(consumer, hi)
+        return f"{out} (full: first run)"
+
+    # NORMALIZED_* columns depend on the GLOBAL bounds: if this batch
+    # moved them since the last analytics pass, every stored row's
+    # normalized value is stale — only a full recompute is correct
+    # (the reference recomputes fully every run for this reason).
+    prev = None
+    if os.path.exists(bounds_file):
+        with open(bounds_file) as f:
+            prev = tuple(_json.load(f))
+    if prev != (mn, mx):
+        out = analytics(spark, store)
+        _commit_bounds(mn, mx)
+        log.commit(consumer, hi)
+        return f"{out} (full: bounds moved)"
+
+    batch = pending.filter(F.col("_action") == "INSERT").select(
+        F.make_date("YEAR", "MONTH", "DAY").alias("DATE")
+    )
+    harmonized = store.read(spark, HARMONIZED_TABLE)
+    affected = batch.select("DATE").distinct()
+    # DATE-only neighbor pass: global order over the daily series (one
+    # narrow column; the series is one row per date by construction).
+    # Recompute a date if IT changed or its PREDECESSOR changed (its
+    # lag inputs moved); each recompute date's predecessor row is
+    # pulled as lag input. One job collects the (churn-sized) date
+    # lists to the driver so every downstream filter is an IN-list
+    # literal — pushed into the parquet scans, with no broadcast
+    # exchanges to materialize. A giant backfill (>5000 dates) would
+    # belong on the full path anyway and bounds-moves already route it
+    # there in practice.
+    dates = harmonized.select("DATE")
+    w = W.orderBy("DATE")
+    ndf = dates.select("DATE", F.lag("DATE", 1).over(w).alias("_prev"))
+    aset = F.broadcast(affected.withColumnRenamed("DATE", "_a"))
+    pairs = ndf.join(
+        aset,
+        (F.col("DATE") == F.col("_a")) | (F.col("_prev") == F.col("_a")),
+        "left_semi",
+    ).collect()
+    recompute_dates = [r["DATE"] for r in pairs]
+    need_dates = sorted(
+        {r["DATE"] for r in pairs} | {r["_prev"] for r in pairs if r["_prev"]}
+    )
+    rows = harmonized.filter(F.col("DATE").isin(need_dates))
+    stats = daily_stats_df(rows, mn, mx).filter(
+        F.col("DATE").isin(recompute_dates)
+    )
+    merge_upsert(
+        spark, store, DAILY_TABLE, stats, keys=["DATE"], count_rows=False
+    )
+
+    # weekly: recompute only the touched ISO weeks (no cross-week lag).
+    # Week set derives driver-side from the already-collected recompute
+    # dates (ISO Monday = d - weekday); recompute ⊇ affected, and
+    # re-deriving an untouched week is an idempotent no-op.
+    import datetime as _dt
+
+    weeks = sorted(
+        {d - _dt.timedelta(days=d.weekday()) for d in recompute_dates}
+    )
+    wrows = harmonized.filter(
+        F.date_trunc("week", F.col("DATE")).cast("date").isin(weeks)
+    )
+    wstats = weekly_stats_df(wrows, mn, mx)
+    merge_upsert(
+        spark, store, WEEKLY_TABLE, wstats, keys=["WEEK_START"], count_rows=False
+    )
+    _commit_bounds(mn, mx)
+    log.commit(consumer, hi)
+    return "Daily analytics complete; Weekly analytics complete (incremental)"
 
 
 def analytics(spark: SparkSession, store: TableStore) -> str:

@@ -125,7 +125,7 @@ def stream_harmonize(
     # let an early high-water commit permanently drop a later batch's
     # unconsumed rows. (Crash before the final commit only delays the
     # mirror; replay through the keyed merge is idempotent.)
-    committed = int(log._read_meta()["offsets"].get("harmonize", -1))
+    committed = log.offset("harmonize")
     running_hi = committed
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -12,6 +12,15 @@ def spark():
 
 
 @pytest.fixture()
+def next_job_id(spark):
+    """Reader of the DAG scheduler's next job id: its difference across a
+    block is the number of Spark jobs the block started, from any thread
+    and in any job group."""
+    sc = spark.sparkContext._jsc.sc()
+    return lambda: sc.dagScheduler().nextJobId()
+
+
+@pytest.fixture()
 def store(tmp_path):
     from incremental_datapipeline_using_snowflake_spark.operators import TableStore
 

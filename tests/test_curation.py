@@ -1646,3 +1646,62 @@ def test_training_shard_append_lifecycle(spark, tmp_path):
         C.append_training_shards(
             spark, spark.createDataFrame([(900, "more " * 40)], "doc_id long, text string"), out
         )
+
+
+# Spark jobs of one small release (measured on pyspark 4.1.2; the previous
+# engine started 170). The check allows 1 more: asynchronous broadcast
+# jobs vary by one.
+RELEASE_JOB_BUDGET = 127
+
+
+def test_release_job_budget(spark, tmp_path, next_job_id):
+    """One release — curate_append with embeddings, delete_docs, then
+    publish_corpus_delta onto a published base — stays within its pinned
+    job budget, with the verdicts and the chain intact."""
+    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
+    from incremental_datapipeline_using_snowflake_spark.ops import curation as C
+
+    # deep enough history for the delta to diff against the base version
+    store = TableStore(root=str(tmp_path / "store"), keep_versions=8)
+
+    rows, base = _corpus_rows()
+    dim = 8
+    vec = {i: [float((i * 7 + d * 3) % 11 - 5) for d in range(dim)] for i in range(3)}
+    emb = spark.createDataFrame(list(vec.items()), "vec_id long, embedding array<double>")
+    C.bootstrap_corpus(
+        spark, store, spark.createDataFrame(rows, DOC_SCHEMA), "cur.docs",
+        emb=emb, dim=dim, n_tables=2, n_planes=3,
+    )
+    pub = str(tmp_path / "pub")
+    assert C.publish_corpus_delta(spark, store, "cur.docs", pub)["published"] == "base"
+    fresh = "one two three four five six seven eight nine ten eleven twelve".split()
+    batch = spark.createDataFrame(
+        [
+            _mk_doc(100, fresh),
+            _mk_doc(101, base[0]),                  # exact corpus dup
+            _mk_doc(102, base[1][2:]),              # near corpus dup
+            _mk_doc(103, list(reversed(base[2]))),  # semantic corpus dup
+            (104, "spam " * 40, "en", "src", 200),  # gate fail
+        ],
+        DOC_SCHEMA,
+    )
+    batch_emb = spark.createDataFrame(
+        [(100, [float(-((d * 5 + 1) % 9) + 4.5) for d in range(dim)]),
+         (103, [x * 1.001 for x in vec[2]])],
+        "vec_id long, embedding array<double>",
+    )
+
+    j0 = next_job_id()
+    v = C.curate_append(spark, store, batch, "cur.docs", "r1", batch_emb=batch_emb)
+    deleted = C.delete_docs(spark, store, "cur.docs", [0, 7])
+    link = C.publish_corpus_delta(spark, store, "cur.docs", pub)
+    jobs = next_job_id() - j0
+
+    assert {r["doc_id"]: r["verdict"] for r in v.collect()} == {
+        100: "kept", 101: "exact_dup_corpus", 102: "near_dup_corpus",
+        103: "embedding_dup_corpus", 104: "gate_fail",
+    }
+    assert deleted == {"n_keys": 2, "n_deleted": 1, "n_corpus_after": 3}
+    assert link["published"] == "link-000001"
+    assert C.verify_corpus_chain(spark, f"{pub}/base", [f"{pub}/link-000001"])
+    assert jobs <= RELEASE_JOB_BUDGET + 1, jobs

@@ -609,15 +609,19 @@ def test_orphan_staged_versions_not_served(spark, tmp_path):
 
 
 def test_overwrite_crash_keeps_schema_pin(spark, tmp_path, monkeypatch):
-    """Crash injection between staging and the pointer flip: the pinned
-    _SCHEMA must survive (it is removed only AFTER the flip), so the
-    still-current mixed-footer version keeps reading its full evolved
-    column set (r04 ADVICE, table_store.py:201)."""
+    """Crash injection between staging and the pointer flip: the current
+    version's schema record lives inside its own version dir, which a
+    staged overwrite never touches, so the still-current mixed-footer
+    version keeps reading its full evolved column set."""
+    import json
     import os
 
     import pytest as _pytest
 
     from incremental_datapipeline_using_snowflake_spark.operators import TableStore
+    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
+        SCHEMA_RECORD,
+    )
 
     store = TableStore(root=str(tmp_path))
     name = "ns.pinned"
@@ -627,7 +631,8 @@ def test_overwrite_crash_keeps_schema_pin(spark, tmp_path, monkeypatch):
         name,
         merge_schema=True,
     )
-    assert os.path.exists(store._schema_file(name))
+    with open(os.path.join(store.data_path(name), SCHEMA_RECORD)) as f:
+        assert "extra" in [fld["name"] for fld in json.load(f)["fields"]]
 
     def crash(self, n, v):
         raise RuntimeError("died before flip")
@@ -636,12 +641,12 @@ def test_overwrite_crash_keeps_schema_pin(spark, tmp_path, monkeypatch):
     with _pytest.raises(RuntimeError, match="died before flip"):
         store.overwrite(spark.createDataFrame([(3, "c")], "k long, v string"), name)
     monkeypatch.undo()
-    # pin intact -> a FRESH store still reads the evolved column
+    # record intact -> a FRESH store still reads the evolved column
     fresh = TableStore(root=str(tmp_path))
     assert "extra" in fresh.read(spark, name).columns
-    # clean overwrite afterwards drops the now-stale pin
+    # a clean overwrite's version carries its own record, without it
     store.overwrite(spark.createDataFrame([(4, "d")], "k long, v string"), name)
-    assert not os.path.exists(store._schema_file(name))
+    assert fresh.read(spark, name).columns == ["k", "v"]
 
 
 def test_transaction_same_table_twice_keeps_last(spark, tmp_path):
@@ -1088,3 +1093,69 @@ def test_timestamp_time_travel(spark, tmp_path):
         store.version_at_timestamp(name, t_before)
     with _pytest.raises(FileNotFoundError, match="no pointer history"):
         store.version_at_timestamp("ns.ghost", t1)
+
+
+def _inferred_schema(spark, version_dir):
+    """What Spark infers from a version dir's own footers."""
+    return spark.read.option("mergeSchema", "true").parquet(version_dir).schema
+
+
+def test_schema_record_matches_footer_inference(spark, tmp_path, next_job_id):
+    """Every version's schema record equals what inference over its
+    footers reports: partition columns last, every field, array element
+    and struct member nullable. Reads then plan from the record, so a
+    fresh store, time travel and restore() start no Spark job."""
+    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
+        SCHEMA_RECORD,
+    )
+
+    store = TableStore(root=str(tmp_path), keep_versions=4)
+    part = spark.createDataFrame(
+        [(1, 2020, 1.5), (2, 2021, None)], "id long, YEAR int, v double"
+    )
+    store.overwrite(part, "ns.part", partition_by=["YEAR"])
+    # the __embsig shape: non-nullable id, arrays with non-null elements
+    arrays = spark.range(3).select(
+        "id",
+        F.array(F.col("id").cast("float"), F.lit(0.5).cast("float")).alias("v"),
+        F.array("id", F.col("id") + 1).alias("buckets"),
+        F.struct(F.col("id").alias("n")).alias("s"),
+    )
+    store.overwrite(arrays, "ns.arrays")
+    for name in ("ns.part", "ns.arrays"):
+        assert store.read(spark, name).schema == _inferred_schema(
+            spark, store.data_path(name)
+        )
+    assert store.read(spark, "ns.part").columns == ["id", "v", "YEAR"]
+
+    # an evolving append rewrites the record (partition columns stay last)
+    store.append(
+        spark.createDataFrame([(3, 2021, 2.5, "x")], "id long, YEAR int, v double, tag string"),
+        "ns.part",
+        partition_by=["YEAR"],
+        merge_schema=True,
+    )
+    v_evolved = store.current_version("ns.part")
+    want = _inferred_schema(spark, store.data_path("ns.part"))
+    assert want.fieldNames() == ["id", "v", "tag", "YEAR"]
+    assert store.read(spark, "ns.part").schema == want
+    assert store.read_version(spark, "ns.part", v_evolved).schema == want
+
+    # restore() an older version: its own record serves it
+    store.overwrite(spark.createDataFrame([(9, "z")], "k long, w string"), "ns.part")
+    store.restore("ns.part", v_evolved)
+    assert store.read(spark, "ns.part").schema == want
+    assert sorted(r["id"] for r in store.read(spark, "ns.part").collect()) == [1, 2, 3]
+
+    fresh = TableStore(root=str(tmp_path))
+    j0 = next_job_id()
+    fresh.read(spark, "ns.part")
+    fresh.read(spark, "ns.arrays")
+    fresh.read_version(spark, "ns.part", v_evolved)
+    assert next_job_id() == j0
+
+    # a version written before records existed still reads, by inference
+    os.remove(os.path.join(store.data_path("ns.arrays"), SCHEMA_RECORD))
+    legacy = fresh.read(spark, "ns.arrays")
+    assert legacy.schema == _inferred_schema(spark, store.data_path("ns.arrays"))
+    assert sorted(r["id"] for r in legacy.collect()) == [0, 1, 2]

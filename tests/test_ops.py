@@ -164,6 +164,22 @@ def test_connected_components_small_graph_partitioning(spark):
     assert comp.rdd.getNumPartitions() <= max(1, 5 // 100_000 + 1)
 
 
+def test_connected_components_empty_edges_one_job(spark, next_job_id):
+    """No edges: the edge count rides the ``sym`` pin, and the empty
+    ``(id, comp)`` frame returns before the labels pin and the loop — one
+    Spark job in all."""
+    from incremental_datapipeline_using_snowflake_spark.ops.graph import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame([], "id_a long, id_b long")
+    j0 = next_job_id()
+    comp = connected_components(edges)
+    assert next_job_id() - j0 == 1
+    assert comp.schema.simpleString() == "struct<id:bigint,comp:bigint>"
+    assert comp.collect() == []
+
+
 def test_pair_cache_granular_eviction(spark):
     """The family artifacts build shingles/pairs/comp on first demand as
     separate cache entries, so a pairs-only consumer never pays the CC

@@ -255,3 +255,99 @@ def test_incremental_analytics_never_outruns_harmonize(spark, store):
     assert "complete" in msg
     # 12 dates: the bad_value row keeps its DATE with NULL CO2
     assert store.read(spark, P.DAILY_TABLE).count() == 12
+
+
+def test_harmonize_failed_merge_leaves_no_cache(spark, store, monkeypatch):
+    """A merge that raises must not leak a cached copy of the pending
+    window into the session (the gate is a metadata check; nothing is
+    cached on any path)."""
+    bootstrap(store)
+    load_raw(spark, store, feed_text=FEED_V1)
+    spark.catalog.clearCache()
+
+    def broken_merge(*args, **kwargs):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(P, "merge_upsert", broken_merge)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        harmonize(spark, store)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_harmonize_gate_scans_while_append_in_flight(spark, store, monkeypatch, next_job_id):
+    """Fault injection: an append lands its rows and dies before its
+    metadata commit, leaving ``in_flight`` set and ``next_base`` stale.
+    The metadata gate cannot vouch for the high-water mark then, so
+    harmonize scans and still merges the landed rows. Once an append
+    commits clean metadata, a no-op run's harmonize starts no job."""
+    bootstrap(store)
+    orch = Orchestrator(spark, store)
+    orch.run(feed_text=FEED_V1)
+    log = Changelog(store, P.RAW_TABLE, embedded=True)
+    stale = log._read_meta()
+
+    real_write = Changelog._write_meta
+    calls = []
+
+    def crash_after_rows_land(self, meta):
+        calls.append(meta)
+        if len(calls) == 2:  # the post-write commit of next_base
+            raise RuntimeError("died after rows landed")
+        real_write(self, meta)
+
+    monkeypatch.setattr(Changelog, "_write_meta", crash_after_rows_land)
+    with pytest.raises(RuntimeError, match="died after rows landed"):
+        load_raw(spark, store, feed_text=FEED_V2)
+    monkeypatch.undo()
+    meta = log._read_meta()
+    assert meta["next_base"] == stale["next_base"] and meta["in_flight"] is not None
+    assert log.high_water() is None
+
+    assert harmonize(spark, store) == "CO2 data harmonization complete"
+    assert store.read(spark, P.HARMONIZED_TABLE).count() == 14
+
+    # the next append recovers the mark and commits clean metadata (the
+    # stale watermark re-ingests the two days; the DATE merge absorbs them)
+    orch.run(feed_text=FEED_V2)
+    assert log.high_water() is not None
+    assert store.read(spark, P.HARMONIZED_TABLE).count() == 14
+
+    jobs = []
+    real_harmonize = P.harmonize
+
+    def counted(*args, **kwargs):
+        j0 = next_job_id()
+        try:
+            return real_harmonize(*args, **kwargs)
+        finally:
+            jobs.append(next_job_id() - j0)
+
+    monkeypatch.setattr(P, "harmonize", counted)
+    res = orch.run(feed_text=FEED_V2)
+    assert res["harmonized"] == "No data in stream to process"
+    assert jobs == [0]
+
+
+# Spark jobs one orchestrator run may start, by new days in the feed
+# (measured on pyspark 4.1.2; the previous engine started 42 and 8). The
+# check allows 1 more: asynchronous broadcast jobs vary by one.
+NIGHT_JOB_BUDGET = {1: 31, 0: 4}
+
+
+def test_orchestrator_run_job_budget(spark, store, next_job_id):
+    """A 1-day night (in-bounds: the incremental analytics path) and a
+    0-day night stay within their pinned job budgets."""
+    bootstrap(store)
+    orch = Orchestrator(spark, store)
+    orch.run(feed_text=FEED_V1)
+    got = {}
+    for days, feed in ((1, FEED_V1 + "2025 1 14 2025.036 418.60\n"),
+                       (0, FEED_V1 + "2025 1 14 2025.036 418.60\n")):
+        j0 = next_job_id()
+        res = orch.run(feed_text=feed)
+        got[days] = next_job_id() - j0
+        assert (res["analytics"] == "skipped (stream empty)") == (days == 0)
+        if days:
+            assert res["analytics"].endswith("(incremental)")
+    for days, budget in NIGHT_JOB_BUDGET.items():
+        assert got[days] <= budget + 1, (days, got[days])
