@@ -1310,7 +1310,6 @@ def _write_snapshot_files(
     cost ∝ staged bytes. The manifest itself stays INTENT-derived (from
     the in-memory frame): consumer-side ``verify_corpus_snapshot`` keeps
     comparing publisher intent against bytes on disk."""
-    from ..queries.util import md5_long
     from ..sources.jsonl_source import write_jsonl
 
     if "_fingerprint" in corpus.columns:
@@ -1334,57 +1333,34 @@ def _write_snapshot_files(
         corpus, f"{out_dir}/data", compression=compression,
         partition_by=[split_col] if split_col else None,
     )
-    # split key pinned to STRING in the manifest: a numeric split column
-    # would otherwise round-trip as a JSON number while the verifier's
-    # recomputed key is a string cast — every comparison would mismatch
-    grp = F.col(split_col).cast("string") if split_col else F.lit("all")
-    rec = md5_long(
-        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.md5(F.col(text_col)))
-    )
-    manifest = (
-        corpus.groupBy(grp.alias("split"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.length(text_col).cast("decimal(38,0)")).cast("long").alias("n_chars"),
-            (F.sum(rec.cast("decimal(38,0)")) % F.lit(2 ** 61).cast("decimal(38,0)"))
-            .cast("long")
-            .alias("content_checksum"),
-        )
-        .withColumn("store_version", F.lit(version).cast("long"))
-        .withColumn("table", F.lit(corpus_table))
-        .withColumn("split_col", F.lit(split_col or ""))
-        .orderBy("split")
-    )
     # ONE execution of the intent aggregation: collect, verify, then write
     # the manifest from the collected rows (the old shape executed the
     # corpus-scan aggregation twice — once for the write, and every
-    # caller-side consumption of the returned frame re-ran it again)
+    # caller-side consumption of the returned frame re-ran it again). The
+    # split key is a STRING: a numeric split column would otherwise
+    # round-trip as a JSON number while the verifier's recomputed key is a
+    # string cast — every comparison would mismatch
     from ..session import local_rows_df
 
-    man_rows = manifest.collect()
-    intent = {
-        str(r["split"]): (r["n_rows"], r["n_chars"] or 0, r["content_checksum"] or 0)
-        for r in man_rows
-    }
+    intent = _delta_stats(corpus, split_col, id_col, text_col)
     file_rows = _per_file_stats(
         spark, f"{out_dir}/data", corpus.schema,
         split_col=split_col, id_col=id_col, text_col=text_col,
     )
-    got = _split_totals(file_rows)
-    bad = [
-        s for s in set(intent) | set(got)
-        if intent.get(s, (0, 0, 0)) != got.get(s, (0, 0, 0))
-    ]
+    bad = _stats_mismatch(intent, _split_totals(file_rows))
     if bad:
         raise ValueError(
-            f"snapshot write verification failed for splits {sorted(bad)}: "
+            f"snapshot write verification failed for splits {bad}: "
             "the shards on disk do not reproduce the corpus stats — lossy "
             "write caught at publish time; the store still holds the data"
         )
     _write_base_sidecars(out_dir, corpus.schema, file_rows)
     manifest_local = local_rows_df(
         spark,
-        [tuple(r) for r in man_rows],
+        [
+            (s, n, ch, cs, int(version), corpus_table, split_col or "")
+            for s, (n, ch, cs) in sorted(intent.items())
+        ],
         schema=(
             "split string, n_rows long, n_chars long, content_checksum long, "
             "store_version long, table string, split_col string"
@@ -1402,8 +1378,6 @@ def verify_corpus_snapshot(spark: SparkSession, out_dir: str,
     """Consumer-side verification: re-derive the manifest's counts and
     checksums from the shipped JSONL shards and compare. Returns True when
     every split matches; raises with the failing splits otherwise."""
-    from ..queries.util import md5_long
-
     man_rows = _read_manifest(out_dir)
     # str() on the manifest key: pre-r08 manifests from numeric split
     # columns carry JSON numbers, the recomputed side is always a string
@@ -1423,18 +1397,11 @@ def verify_corpus_snapshot(spark: SparkSession, out_dir: str,
     # the MANIFEST decides the grouping: a data column coincidentally named
     # like the split column in an unpartitioned export must not shadow the
     # single 'all' row
-    grp = F.lit("all") if not split_col else F.col(split_col).cast("string")
-    rec = md5_long(
-        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.md5(F.col(text_col)))
-    )
     got = {
-        r["split"]: (r["n_rows"], r["content_checksum"])
-        for r in data.groupBy(grp.alias("split")).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.sum(rec.cast("decimal(38,0)")) % F.lit(2 ** 61).cast("decimal(38,0)"))
-            .cast("long")
-            .alias("content_checksum"),
-        ).collect()
+        s: (n, cs)
+        for s, (n, _ch, cs) in _delta_stats(
+            data, split_col or None, id_col, text_col
+        ).items()
     }
     bad = [s for s in man if man[s] != got.get(s)]
     if bad:
@@ -1455,6 +1422,10 @@ def verify_corpus_snapshot(spark: SparkSession, out_dir: str,
 # Layout: <out>/data/...      full row images of INSERT + UPDATE_AFTER
 #         <out>/_deletes/...  (id) rows for DELETE actions — ids only: a
 #                             takedown delta must not re-ship removed text
+#         Every link has both data/ and _deletes/, possibly with no part-*
+#         file in them (an empty side; a partitioned export of no upserts
+#         leaves only _SUCCESS in data/). A manifest-bearing link missing
+#         either dir is broken and every reader raises FileNotFoundError.
 #         <out>/_manifest.jsonl  LAST (completion marker), per split:
 #           added_*   stats over the upsert images (consumer-recomputable
 #                     from the shipped data files)
@@ -1483,8 +1454,9 @@ def _snapshot_rec(id_col: str, text_col: str):
 
 def _delta_stats(df: DataFrame, split_col: str | None, id_col: str,
                  text_col: str) -> dict[str, tuple[int, int, int]]:
-    """split -> (n_rows, n_chars, checksum mod 2^61) for a (small,
-    churn-bounded) change-image frame. One narrow aggregation."""
+    """split -> (n_rows, n_chars, checksum mod 2^61) of a frame, in one
+    aggregation: the stats a snapshot manifest records and every verifier
+    recomputes (a split whose texts are all null sums to 0)."""
     grp = F.col(split_col).cast("string") if split_col else F.lit("all")
     rec = _snapshot_rec(id_col, text_col)
     rows = (
@@ -1511,7 +1483,7 @@ def _read_manifest(out_dir: str) -> list[dict]:
     spares the job ``spark.read.json`` spends inferring a schema; the
     chain already requires a local publish dir (sidecars are read with
     ``open()``, rebase hard-links shards). A missing manifest raises
-    ``FileNotFoundError``."""
+    ``FileNotFoundError``, one with no rows ``ValueError``."""
     import glob
     import json
     import os
@@ -1523,7 +1495,88 @@ def _read_manifest(out_dir: str) -> list[dict]:
     for part in sorted(glob.glob(os.path.join(mdir, "part-*"))):
         with open(part) as f:
             rows += [json.loads(line) for line in f if line.strip()]
+    if not rows:
+        raise ValueError(f"empty manifest in {out_dir}")
     return rows
+
+
+def _stats_mismatch(want: dict, got: dict) -> list[str]:
+    """The sorted splits whose stats tuples differ between two
+    ``{split: (n_rows, n_chars, checksum)}`` maps; a split missing on
+    one side counts as all zeros."""
+    return sorted(
+        s for s in set(want) | set(got)
+        if want.get(s, (0, 0, 0)) != got.get(s, (0, 0, 0))
+    )
+
+
+def _chain_links(publish_dir: str) -> tuple[list[str], int]:
+    """``(links, top)`` for a publish dir: the names of the complete
+    ``link-NNNNNN`` dirs (manifest present) in chain order, and the
+    highest link number in use by ANY link dir. A crashed export leaves a
+    manifest-less dir that is not part of the chain but must still
+    advance the numbering: deriving the next name from ``len(links)``
+    would collide with a complete head after a gap (link-000001,
+    link-000003) and overwrite it (ADVICE r11)."""
+    import os
+
+    found = sorted(
+        (int(d[5:]), d) for d in os.listdir(publish_dir)
+        if d.startswith("link-") and d[5:].isdigit()
+    )
+    links = [
+        d for _n, d in found
+        if os.path.exists(os.path.join(publish_dir, d, "_manifest.jsonl"))
+    ]
+    return links, (found[-1][0] if found else 0)
+
+
+def _read_link(spark: SparkSession, link_dir: str, schema, id_col: str):
+    """``(ups, dels)`` of one chain link: the upsert images under
+    ``data/`` and the delete ids under ``_deletes/``. The one reader of
+    the link layout (module comment above).
+
+    A side is None when a driver-side listing finds no ``part-*`` file
+    in its dir, or when inference finds no columns (an empty part file).
+    A missing dir raises ``FileNotFoundError`` naming the link and read
+    errors propagate: a link that cannot be read never folds as "no
+    takedowns". ``schema`` is the corpus schema to read the upserts with
+    (the delete ids take its ``id_col`` field); None infers both."""
+    import os
+
+    frames = []
+    for sub, sub_schema in (
+        ("data", schema),
+        ("_deletes", None if schema is None else T.StructType([schema[id_col]])),
+    ):
+        path = os.path.join(link_dir, sub)
+        if not os.path.isdir(path):
+            raise FileNotFoundError(f"chain link {link_dir!r} has no {sub}/ dir")
+        df = None
+        if any(
+            f.startswith("part-") for _r, _d, files in os.walk(path) for f in files
+        ):
+            reader = spark.read if sub_schema is None else spark.read.schema(sub_schema)
+            df = reader.json(path)
+        frames.append(df if df is not None and df.columns else None)
+    return tuple(frames)
+
+
+def _apply_link(cur: DataFrame, ups, dels, id_col: str) -> DataFrame:
+    """Fold one link into ``cur``: drop the rows whose id is in
+    (delete ids ∪ upsert ids) with a broadcast anti-join on the
+    churn-bounded side, then union the upserts cast to ``cur``'s columns
+    (partition columns come back typed, e.g. split=0 as a bigint dir
+    key)."""
+    from functools import reduce
+
+    doomed = [f.select(id_col) for f in (ups, dels) if f is not None]
+    if doomed:
+        ids = reduce(DataFrame.unionByName, doomed).distinct()
+        cur = cur.join(F.broadcast(ids), id_col, "left_anti")
+    if ups is not None:
+        cur = cur.unionByName(ups.select(*[F.col(c).cast(t) for c, t in cur.dtypes]))
+    return cur
 
 
 def _manifest_stats(out_dir: str):
@@ -1533,8 +1586,6 @@ def _manifest_stats(out_dir: str):
     corpus state it proves — so chains verify link-by-link with one code
     path."""
     rows = _read_manifest(out_dir)
-    if not rows:
-        raise ValueError(f"empty manifest in {out_dir}")
     is_delta = any("result_checksum" in r for r in rows)
     keys = (
         ("result_n_rows", "result_n_chars", "result_checksum")
@@ -1689,8 +1740,6 @@ def verify_corpus_delta(spark: SparkSession, base_dir: str, delta_dir: str,
     run :func:`verify_corpus_chain` for the end-to-end proof.)"""
     base_stats, v_base, base_table, _sc = _manifest_stats(base_dir)
     rows = _read_manifest(delta_dir)
-    if not rows:
-        raise ValueError(f"empty manifest in {delta_dir}")
     if rows[0].get("table") != base_table:
         raise ValueError("delta/base manifests pin different tables")
     if int(rows[0]["base_version"]) != v_base:
@@ -1699,20 +1748,12 @@ def verify_corpus_delta(spark: SparkSession, base_dir: str, delta_dir: str,
             f"base manifest pins v{v_base}"
         )
     split_col = rows[0].get("split_col") or None
-    try:
-        data = spark.read.json(f"{delta_dir}/data")
-        got_added = (
-            {} if not data.columns
-            else _delta_stats(data, split_col, id_col, text_col)
-        )
-    except Exception:  # noqa: BLE001 — an empty delta writes no data files
-        got_added = {}
-    try:
-        got_dels = spark.read.json(f"{delta_dir}/_deletes").count()
-    except Exception:  # noqa: BLE001
-        got_dels = 0
+    # no schema: the base may itself be a link, which has no schema record
+    ups, dels = _read_link(spark, delta_dir, None, id_col)
+    got_added = {} if ups is None else _delta_stats(ups, split_col, id_col, text_col)
+    got_dels = 0 if dels is None else dels.count()
     bad: list[str] = []
-    man_dels = int(rows[0]["deleted_ids"]) if rows else 0
+    man_dels = int(rows[0]["deleted_ids"])
     if got_dels != man_dels:
         bad.append(f"_deletes({got_dels}!={man_dels})")
     seen_splits = set()
@@ -1750,36 +1791,12 @@ def materialize_corpus_chain(
     LAST delta manifest's result_* columns — :func:`verify_corpus_chain`
     asserts exactly that."""
     cur = spark.read.json(f"{base_dir}/data")
+    # links are read with the base's inferred schema: the result keeps the
+    # base's columns and order, and no link pays an inference pass
+    schema = cur.schema
     for d in delta_dirs:
-        try:
-            ups = spark.read.json(f"{d}/data")
-            if not ups.columns:
-                ups = None
-        except Exception:  # noqa: BLE001 — delta with no upserts
-            ups = None
-        try:
-            # an empty _deletes dir reads as a ZERO-COLUMN frame — check
-            # before selecting (a bare select would raise and log noise)
-            dels_raw = spark.read.json(f"{d}/_deletes")
-            dels = (
-                dels_raw.select(id_col) if id_col in dels_raw.columns else None
-            )
-        except Exception:  # noqa: BLE001
-            dels = None
-        doomed = None
-        if ups is not None:
-            doomed = ups.select(id_col)
-        if dels is not None:
-            doomed = dels if doomed is None else doomed.unionByName(dels)
-        if doomed is not None:
-            cur = cur.join(F.broadcast(doomed.distinct()), id_col, "left_anti")
-        if ups is not None:
-            # manifest partition columns come back typed (e.g. split=0 as
-            # a bigint dir key) — align on the base's column order/types
-            ups = ups.select(
-                *[F.col(c).cast(dict(cur.dtypes)[c]) for c in cur.columns]
-            )
-            cur = cur.unionByName(ups)
+        ups, dels = _read_link(spark, d, schema, id_col)
+        cur = _apply_link(cur, ups, dels, id_col)
     return cur
 
 
@@ -1828,11 +1845,7 @@ def publish_corpus_delta(
             "base_version": None,
             "store_version": int(store.current_version(corpus_table)),
         }
-    links = sorted(
-        d for d in os.listdir(publish_dir)
-        if d.startswith("link-")
-        and os.path.exists(os.path.join(publish_dir, d, "_manifest.jsonl"))
-    )
+    links, top = _chain_links(publish_dir)
     head = os.path.join(publish_dir, links[-1]) if links else base
     _stats, v_head, head_table, _sc = _manifest_stats(head)
     if head_table != corpus_table:
@@ -1843,17 +1856,7 @@ def publish_corpus_delta(
     v_now = int(store.current_version(corpus_table))
     if v_now == v_head:
         return {"published": None, "base_version": v_head, "store_version": v_now}
-    # next index = max over ALL link-* dirs (manifest-less ones included:
-    # a crashed/partial export dir must still advance the numbering), never
-    # len(links) — a gap in the chain (link-000001, link-000003) would make
-    # the count-derived name collide with the existing complete head and
-    # the export would overwrite it, corrupting the chain (ADVICE r11)
-    taken = [
-        int(d.split("-", 1)[1])
-        for d in os.listdir(publish_dir)
-        if d.startswith("link-") and d.split("-", 1)[1].isdigit()
-    ]
-    new_name = f"link-{(max(taken) if taken else 0) + 1:06d}"
+    new_name = f"link-{top + 1:06d}"
     if os.path.exists(os.path.join(publish_dir, new_name)):
         raise ValueError(
             f"refusing to publish into existing dir {new_name!r} under "
@@ -1915,11 +1918,14 @@ def _stage_rebased_base(
 
     Raises ``ValueError("rebase verification failed ...")`` (tmp removed,
     chain untouched) when the folded totals do not reproduce the head
-    manifest — a tampered link or a lossy staged write both land here.
+    manifest — a tampered link or a lossy staged write both land here. A
+    link missing ``data/`` or ``_deletes/`` raises ``FileNotFoundError``
+    before anything is staged.
     """
     import json as _json
     import os
     import shutil
+    from functools import reduce
 
     from ..session import local_rows_df
     from ..sources.jsonl_source import write_jsonl
@@ -1941,32 +1947,13 @@ def _stage_rebased_base(
             base_schema = T.StructType.fromJson(_json.load(f))
     else:
         base_schema = spark.read.json(data_src).schema
-    id_field = base_schema[id_col]
 
     # -- link frames + affected-id set (churn-bounded) -------------------
-    link_frames: list[tuple] = []
+    link_frames = [_read_link(spark, d, base_schema, id_col) for d in link_dirs]
+    link_ids = [f.select(id_col) for pair in link_frames for f in pair if f is not None]
     aff = None
-    for d in link_dirs:
-        ups = dels = None
-        try:
-            u = spark.read.schema(base_schema).json(f"{d}/data")
-            ups = u if u.columns else None
-        except Exception:  # noqa: BLE001 — delta with no upserts
-            ups = None
-        try:
-            dr = spark.read.schema(
-                T.StructType([id_field])
-            ).json(f"{d}/_deletes")
-            dels = dr.select(id_col) if id_col in dr.columns else None
-        except Exception:  # noqa: BLE001
-            dels = None
-        link_frames.append((ups, dels))
-        for fr in (ups, dels):
-            if fr is not None:
-                ids = fr.select(id_col)
-                aff = ids if aff is None else aff.unionByName(ids)
-    if aff is not None:
-        aff = aff.distinct().localCheckpoint(eager=True)
+    if link_ids:
+        aff = reduce(DataFrame.unionByName, link_ids).distinct().localCheckpoint(eager=True)
 
     # -- per-file base stats + touched detection --------------------------
     # Fast path (r14): the base's ``_filestats.jsonl`` sidecar carries
@@ -1989,7 +1976,6 @@ def _stage_rebased_base(
             split_col=split_col, id_col=id_col, text_col=text_col,
         )
     touched: set[str] = set()
-    carried: set[str] = set()
     if aff is not None and file_rows:
         aff_ids = [
             r[0]
@@ -2008,17 +1994,7 @@ def _stage_rebased_base(
         for r in file_rows:
             if _interval_hit(r["min_id"], r["max_id"]):
                 touched.add(r["file"])
-    totals: dict[str, list[int]] = {}
-    carried_rows = []
-    for r in file_rows:
-        if r["file"] in touched:
-            continue
-        carried.add(r["file"])
-        carried_rows.append(r)
-        t = totals.setdefault(r["split"], [0, 0, 0])
-        t[0] += r["n_rows"]
-        t[1] += r["n_chars"]
-        t[2] = (t[2] + r["checksum"]) % _CHECKSUM_MOD
+    carried_rows = [r for r in file_rows if r["file"] not in touched]
 
     # -- replay links over ONLY the touched files' rows ------------------
     if touched:
@@ -2029,23 +2005,8 @@ def _stage_rebased_base(
         )
     else:
         cur = spark.read.schema(base_schema).json(data_src).limit(0)
-    if "_fingerprint" in cur.columns:
-        cur = cur.drop("_fingerprint")
     for ups, dels in link_frames:
-        doomed = None
-        if ups is not None:
-            doomed = ups.select(id_col)
-        if dels is not None:
-            doomed = dels if doomed is None else doomed.unionByName(dels)
-        if doomed is not None:
-            cur = cur.join(F.broadcast(doomed.distinct()), id_col, "left_anti")
-        if ups is not None:
-            if "_fingerprint" in ups.columns:
-                ups = ups.drop("_fingerprint")
-            ups = ups.select(
-                *[F.col(c).cast(dict(cur.dtypes)[c]) for c in cur.columns]
-            )
-            cur = cur.unionByName(ups)
+        cur = _apply_link(cur, ups, dels, id_col)
 
     # -- stage: write new shards, read THEM back for disk-derived stats --
     staged = os.path.join(tmp, "_staged-new")
@@ -2065,29 +2026,19 @@ def _stage_rebased_base(
         spark, staged, cur.schema,
         split_col=split_col, id_col=id_col, text_col=text_col,
     )
-    for s, (n, ch, cs) in _split_totals(staged_rows).items():
-        t = totals.setdefault(s, [0, 0, 0])
-        t[0] += n
-        t[1] += ch
-        t[2] = (t[2] + cs) % _CHECKSUM_MOD
-
-    got = {s: tuple(v) for s, v in totals.items() if v[0]}
-    bad = [
-        s
-        for s in set(head_stats) | set(got)
-        if head_stats.get(s, (0, 0, 0)) != got.get(s, (0, 0, 0))
-    ]
+    got = _split_totals(carried_rows + staged_rows)
+    bad = _stats_mismatch(head_stats, got)
     if bad:
         shutil.rmtree(tmp)
         raise ValueError(
-            f"rebase verification failed for splits {sorted(bad)}: the folded "
+            f"rebase verification failed for splits {bad}: the folded "
             "chain (carried shards + staged writes, all stats re-derived from "
             "the bytes on disk at their publish) does not reproduce the head "
             "manifest's result stats; chain left untouched"
         )
 
     # -- assemble tmp/data: hardlink carried files, move staged shards ---
-    for rel in sorted(carried):
+    for rel in sorted(r["file"] for r in carried_rows):
         src_path = os.path.join(data_src, rel)
         dst = os.path.join(data_dst, rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
@@ -2240,11 +2191,7 @@ def rebase_corpus_chain(
             f"{publish_dir!r} has no published base snapshot — nothing to "
             "rebase (publish_corpus_delta writes base/ on its first call)"
         )
-    links = sorted(
-        d for d in os.listdir(publish_dir)
-        if d.startswith("link-")
-        and os.path.exists(os.path.join(publish_dir, d, "_manifest.jsonl"))
-    )
+    links, _top = _chain_links(publish_dir)
     if not links:
         _stats, v_base, _t, _sc = _manifest_stats(base)
         return {"rebased": False, "links_folded": 0, "store_version": v_base}
@@ -2364,11 +2311,7 @@ def verify_corpus_chain(
         materialize_corpus_chain(spark, base_dir, delta_dirs, id_col=id_col),
         split_col or None, id_col, text_col,
     )
-    bad = [
-        s
-        for s in set(final_stats) | set(got)
-        if final_stats.get(s, (0, 0, 0)) != got.get(s, (0, 0, 0))
-    ]
+    bad = _stats_mismatch(final_stats, got)
     if bad:
         raise ValueError(f"chain materialization mismatch for splits: {bad}")
     return True

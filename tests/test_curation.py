@@ -679,13 +679,21 @@ def test_delta_snapshot_export_chain(spark, store, tmp_path):
     with pytest.raises(ValueError, match="chain break"):
         C.verify_corpus_delta(spark, str(snap), str(d2))
 
-    # tamper: corrupt the delta1 upsert shard -> link verification fails
+    # tamper: corrupt the delta1 upsert shard -> link verification fails.
+    # With its .crc sidecar left stale the read itself fails loudly (it is
+    # never taken for "no upserts"); with the sidecar gone the forged row
+    # is read and the added_* stats catch it
     import glob as _glob
+    import os as _os
 
     shard = _glob.glob(f"{d1}/data/part-*.json")[0]
     with open(shard, "a") as f:
         f.write('{"doc_id": 999, "text": "forged", "lang": "en", '
                 '"source": "x", "n_chars": 6}\n')
+    with pytest.raises(Exception, match="ChecksumException"):
+        C.verify_corpus_delta(spark, str(snap), str(d1))
+    crc = _os.path.join(_os.path.dirname(shard), f".{_os.path.basename(shard)}.crc")
+    _os.remove(crc)
     with pytest.raises(ValueError, match="added"):
         C.verify_corpus_delta(spark, str(snap), str(d1))
 
@@ -1482,6 +1490,85 @@ def test_rebase_without_sidecars_falls_back(spark, tmp_path):
         for r in spark.read.json(f"{pub}/base/data").select("doc_id").collect()
     )
     assert ids == [i for i in range(200) if i not in range(30, 35)]
+
+
+@pytest.mark.parametrize("missing", ["_deletes", "data"])
+def test_chain_link_missing_dir_raises(spark, tmp_path, missing):
+    """A published link that lost its ``_deletes/`` or ``data/`` dir is
+    broken, not empty: materialize, link verification and rebase each
+    raise ``FileNotFoundError`` naming the link (read as "no takedowns",
+    the taken-down ids 30-34 would come back), and the failed rebase
+    leaves the chain untouched."""
+    import os
+    import shutil
+
+    from incremental_datapipeline_using_snowflake_spark.ops import curation as C
+
+    _store, pub = _mk_sidecar_chain(spark, tmp_path, kill_ids=range(30, 35))
+    base, link = f"{pub}/base", f"{pub}/link-000001"
+    shutil.rmtree(f"{link}/{missing}")
+    match = f"link-000001.*{missing}/"
+    with pytest.raises(FileNotFoundError, match=match):
+        C.materialize_corpus_chain(spark, base, [link]).collect()
+    with pytest.raises(FileNotFoundError, match=match):
+        C.verify_corpus_delta(spark, base, link)
+    with pytest.raises(FileNotFoundError, match=match):
+        C.rebase_corpus_chain(spark, pub, compression=None)
+    assert os.path.isdir(f"{link}/_manifest.jsonl")
+    assert os.path.isdir(f"{base}/_manifest.jsonl")
+    assert not os.path.exists(f"{pub}/_rebase-tmp")
+    assert not os.path.exists(f"{pub}/_rebase-intent.json")
+
+
+def test_partitioned_chain_verifies_materializes_and_rebases(spark, tmp_path):
+    """A ``split_col`` chain with an upsert link and a takedown-only link
+    (whose ``data/`` holds no part file, only ``_SUCCESS``) verifies,
+    materializes to exactly the live rows with the base's columns, and
+    rebases into a base that verifies on its own."""
+    import os
+
+    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
+    from incremental_datapipeline_using_snowflake_spark.ops import curation as C
+
+    schema = DOC_SCHEMA + ", split string"
+    rows = [
+        _mk_doc(i, f"w{i} alpha bravo charlie".split()) + ("train" if i % 3 else "val",)
+        for i in range(9)
+    ]
+    store = TableStore(root=str(tmp_path / "store"), keep_versions=8)
+    store.overwrite(spark.createDataFrame(rows, schema), "p.docs")
+    pub = str(tmp_path / "pub")
+
+    def publish():
+        return C.publish_corpus_delta(
+            spark, store, "p.docs", pub, split_col="split", compression=None
+        )["published"]
+
+    def replace(df):  # each overwrite is a new store version
+        store.overwrite(df.localCheckpoint(eager=True), "p.docs")
+
+    assert publish() == "base"
+    new = spark.createDataFrame([_mk_doc(20, ["new", "doc"]) + ("val",)], schema)
+    replace(store.read(spark, "p.docs").unionByName(new))
+    assert publish() == "link-000001"
+    replace(store.read(spark, "p.docs").filter(~F.col("doc_id").isin(1, 5)))
+    assert publish() == "link-000002"
+    take_data = f"{pub}/link-000002/data"
+    assert not [f for _r, _d, fs in os.walk(take_data) for f in fs if f.startswith("part-")]
+
+    links = [f"{pub}/link-000001", f"{pub}/link-000002"]
+    assert C.verify_corpus_chain(spark, f"{pub}/base", links) is True
+    mat = C.materialize_corpus_chain(spark, f"{pub}/base", links)
+    assert mat.columns == ["doc_id", "lang", "n_chars", "source", "text", "split"]
+    live_ids = sorted(r[0] for r in store.read(spark, "p.docs").select("doc_id").collect())
+    assert live_ids == [0, 2, 3, 4, 6, 7, 8, 20]
+    assert sorted(r["doc_id"] for r in mat.collect()) == live_ids
+
+    res = C.rebase_corpus_chain(spark, pub, compression=None)
+    assert res["rebased"] and res["links_folded"] == 2
+    assert C.verify_corpus_chain(spark, f"{pub}/base", []) is True
+    rebased = C.materialize_corpus_chain(spark, f"{pub}/base", [])
+    assert sorted(r["doc_id"] for r in rebased.collect()) == live_ids
 
 
 # ---------------------------------------------------------------------------

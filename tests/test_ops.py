@@ -180,6 +180,35 @@ def test_connected_components_empty_edges_one_job(spark, next_job_id):
     assert comp.collect() == []
 
 
+def test_ops_has_no_broad_excepts():
+    """No ``except:``, ``except Exception`` or ``except BaseException`` in
+    ``ops/``: a broad handler decides what a failed read means (e.g. an
+    unreadable takedown file read as "no takedowns"), so failures there
+    must propagate. Narrow handlers (``except OSError`` around a hardlink)
+    are fine. Spark-free: it only parses the sources."""
+    import ast
+    import pathlib
+
+    ops_dir = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "incremental_datapipeline_using_snowflake_spark" / "ops"
+    )
+    broad = {"Exception", "BaseException"}
+    found = []
+    for path in sorted(ops_dir.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.ExceptHandler):
+                continue
+            types = node.type.elts if isinstance(node.type, ast.Tuple) else [node.type]
+            names = {
+                t.id if isinstance(t, ast.Name) else getattr(t, "attr", None)
+                for t in types if t is not None
+            }
+            if node.type is None or names & broad:
+                found.append(f"{path.name}:{node.lineno}")
+    assert found == [], found
+
+
 def test_pair_cache_granular_eviction(spark):
     """The family artifacts build shingles/pairs/comp on first demand as
     separate cache entries, so a pairs-only consumer never pays the CC
