@@ -1,4 +1,4 @@
-"""MERGE (upsert) as a DataFrame rewrite.
+"""MERGE (upsert) as a copy-on-write DataFrame rewrite.
 
 The reference's only join-shaped operator is Snowflake ``MERGE`` (SURVEY.md
 §2.3 J1-J3, e.g. ``co2_harmonized_sp/function.py:135-153``): match on a key,
@@ -11,10 +11,18 @@ transactional MERGE, so we decompose it —
 
 — and commit with the store's atomic stage-and-swap.
 
+Copy-on-write at file grain (Snowflake rewrites only the micro-partitions a
+MERGE touches): the source is deduplicated and pinned once, and an
+``Observation`` on the pin yields its key min/max. The driver reads each
+target file's key min/max from its parquet footer (no Spark job); a file
+whose range is disjoint from the source's on some key column cannot hold a
+match, so the merge plan runs over the touched files only and the others
+are hardlinked into the new version unchanged. A night that adds one day
+rewrites the file holding that day, not the history.
+
 Scale notes (100 TB): the incremental source batch is orders of magnitude
 smaller than the target, so the source side is broadcast (no shuffle of the
-target for the anti-join or the inner join; the target is scanned once and
-streamed through two broadcast joins). For a huge source, pass
+touched files for the anti-join or the inner join). For a huge source, pass
 ``broadcast_source=False`` and AQE picks sort-merge with skew handling.
 The rewrite is idempotent on replay: re-merging the same source against the
 merged target yields the identical table (C4 semantics).
@@ -22,10 +30,62 @@ merged target yields the identical table (C4 semantics).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .table_store import TableStore
+
+
+# key types whose parquet min/max order agrees with join equality. Float
+# and double are left out (a join matches NaN = NaN and -0.0 = 0.0, which
+# parquet ordering does not), as are collated strings and every type not
+# listed.
+_PRUNABLE_KEYS = (
+    T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType(), T.DateType(),
+    T.StringType(),
+)
+
+
+def _split_files(
+    store: TableStore,
+    name: str,
+    target: DataFrame,
+    src: DataFrame,
+    keys: list[str],
+    bounds: list[tuple],
+    partition_by: list[str] | None,
+) -> tuple[list[str], list[str]]:
+    """``(touched, untouched)`` data files of ``name``'s current version,
+    relative to its dir. A file is untouched when, on some key column, its
+    footer ``[min, max]`` is disjoint from the source's ``bounds`` — none of
+    its rows can equal a source key. Conservative: a file without min/max
+    for a key column, or a key type outside ``_PRUNABLE_KEYS``, counts as
+    touched on that column. Every file is touched when carried files could
+    not match the rewritten ones: the layout changes, or a source column's
+    type differs from the target's (the union would widen it)."""
+    files = store.file_bounds(store.data_path(name), keys)
+    types = {f.name: f.dataType for f in target.schema.fields}
+    if (partition_by or None) != store.partitioning(name) or any(
+        types.get(f.name, f.dataType) != f.dataType for f in src.schema.fields
+    ):
+        return sorted(files), []
+
+    def disjoint(file_bounds: dict) -> bool:
+        for k, (lo, hi) in zip(keys, bounds):
+            if lo is None:  # no non-NULL source key: NULL never joins
+                return True
+            fb = file_bounds[k]
+            if types[k] in _PRUNABLE_KEYS and fb is not None and (
+                fb[1] < lo or fb[0] > hi
+            ):
+                return True
+        return False
+
+    untouched = {f for f, fb in files.items() if disjoint(fb)}
+    return sorted(set(files) - untouched), sorted(untouched)
 
 
 def merge_upsert(
@@ -39,12 +99,14 @@ def merge_upsert(
     partition_by: list[str] | None = None,
     count_rows: bool = True,
     broadcast_source: bool = True,
-    observe_metrics: dict | None = None,
     prune_partitions: bool = False,
     validate_pruning: bool = True,
     txn=None,
 ) -> dict:
-    """Upsert ``source`` into ``target_table`` on ``keys``.
+    """Upsert ``source`` into ``target_table`` on ``keys``, copy-on-write:
+    only the target files whose key ranges meet the source's are read and
+    rewritten, the rest join the new version as hardlinks (module
+    docstring).
 
     - ``update_cols``: non-key columns taken from the source for matched rows
       (default: every target column present in the source). Mirrors the
@@ -55,10 +117,6 @@ def merge_upsert(
     - ``count_rows``: when False, skip the updated/inserted count jobs (two
       extra actions over the join branches) — the hot path for pipeline
       stages that only need the merge side effect.
-    - ``observe_metrics``: ``{name: aggregate Column}`` collected over the
-      FULL merged table during the write job itself (``Observation`` — no
-      post-merge re-scan); values returned under ``"observed"``. The
-      pipeline's min/max scalar-cache refresh rides the merge this way.
     - ``txn``: a :meth:`TableStore.transaction` handle — the merged table
       is STAGED through it instead of committed immediately, so the merge
       publishes atomically with the caller's other writes (the pipeline
@@ -72,9 +130,8 @@ def merge_upsert(
       proportional to the churned partitions, not the table. Requires
       ``partition_by``; the first partition column must exist in the
       source and must not be updated (a row changing partition would need
-      its destination partition rewritten too); incompatible with
-      ``observe_metrics`` (which promises full-table aggregates) and
-      ``txn`` (partition links commit directly).
+      its destination partition rewritten too); incompatible with ``txn``
+      (partition links commit directly).
     - ``validate_pruning``: enforce the pruned path's precondition that no
       source key already exists in the target under an UNTOUCHED partition
       (such a row would be misclassified as an insert and its old image
@@ -85,38 +142,36 @@ def merge_upsert(
       against the broadcast source keys — no shuffle; pass ``False`` only
       when the caller structurally guarantees partition stability.
 
-    Returns ``{"updated": n, "inserted": n}`` row counts (-1 when skipped),
-    plus ``"observed"`` when requested.
+    Returns ``{"updated": n, "inserted": n}`` row counts (-1 when skipped).
     """
     from pyspark.sql import Observation
 
     sink = txn if txn is not None else store
+    # the source is evaluated ONCE: deduplicated on the keys and pinned;
+    # every branch below plans over the pin, whose Observation carries the
+    # row count and each key column's min/max
+    obs = Observation()
+    src_stats = [F.count(F.lit(1)).alias("n")]
+    for i, k in enumerate(keys):
+        src_stats += [F.min(k).alias(f"lo{i}"), F.max(k).alias(f"hi{i}")]
+    src = (
+        source.dropDuplicates(keys).observe(obs, *src_stats).localCheckpoint(eager=True)
+    )
+    got = obs.get
 
     if not store.exists(target_table):
-        init_cols = insert_cols or source.columns
-        out = source.select(*[F.col(c) for c in init_cols]).dropDuplicates(keys)
-        res: dict = {"updated": 0}
-        if observe_metrics:
-            obs = Observation()
-            out = out.observe(obs, *[c.alias(k) for k, c in observe_metrics.items()])
-            sink.overwrite(out, target_table, partition_by=partition_by)
-            res["observed"] = dict(obs.get)
-            res["inserted"] = -1
-        else:
-            sink.overwrite(out, target_table, partition_by=partition_by)
-            res["inserted"] = out.count() if count_rows else -1
-        return res
+        out = src.select(*(insert_cols or source.columns))
+        sink.overwrite(out, target_table, partition_by=partition_by)
+        return {"updated": 0, "inserted": got["n"] if count_rows else -1}
 
     target = store.read(spark, target_table)
     if prune_partitions:
         if not partition_by:
             raise ValueError("prune_partitions requires partition_by")
-        if observe_metrics or txn is not None:
-            raise ValueError(
-                "prune_partitions is incompatible with observe_metrics/txn"
-            )
+        if txn is not None:
+            raise ValueError("prune_partitions is incompatible with txn")
         pcol = partition_by[0]
-        if pcol not in source.columns:
+        if pcol not in src.columns:
             raise ValueError(f"source lacks partition column {pcol!r}")
         if update_cols and pcol in update_cols:
             raise ValueError(f"partition column {pcol!r} cannot be updated")
@@ -128,7 +183,7 @@ def merge_upsert(
         upd_eff = update_cols or [
             c
             for c in target.columns
-            if c not in keys and c != pcol and c in source.columns
+            if c not in keys and c != pcol and c in src.columns
         ]
         # inserted rows MUST carry the partition column (the default
         # insert set is keys + update set, which usually excludes it; a
@@ -141,7 +196,7 @@ def merge_upsert(
             ins = [pcol, *ins]
         # the touched partition set is a bounded scalar list (days/years of
         # one batch), not a data collect
-        pvals = [r[0] for r in source.select(pcol).distinct().collect()]
+        pvals = [r[0] for r in src.select(pcol).distinct().collect()]
         if any(v is None for v in pvals):
             raise ValueError(
                 f"merge_upsert({target_table}): source has NULL values in "
@@ -155,7 +210,7 @@ def merge_upsert(
             # partition would be misclassified as an insert (the pruned scan
             # can't see its match) and duplicated via the partition links.
             # Key-column-pruned scan + broadcast semi-join, no shuffle.
-            src_keys = F.broadcast(source.select(*keys).dropDuplicates(keys))
+            src_keys = F.broadcast(src.select(*keys))
             # NULL-partition target rows are untouched too (isin is NULL
             # for them, and plain ~isin would drop them from the check)
             n_moved = (
@@ -176,7 +231,7 @@ def merge_upsert(
                 )
         matched, inserted, result = merge_branches(
             pruned,
-            source,
+            src,
             keys,
             update_cols=upd_eff,
             insert_cols=ins,
@@ -191,9 +246,23 @@ def merge_upsert(
         # ('True' vs 'true') or Hive percent-escaped characters (':' '/').
         store.overwrite_partitions(result, target_table, partition_by, None)
         return {"updated": n_upd, "inserted": n_ins}
+    base = store.data_path(target_table)
+    bounds = [(got[f"lo{i}"], got[f"hi{i}"]) for i in range(len(keys))]
+    touched, carried = _split_files(
+        store, target_table, target, src, keys, bounds, partition_by
+    )
+    # no file touched: a zero-row target lets Catalyst drop the joins and
+    # broadcasts, so the write is just the pinned source — one plan
+    touched_rows = (
+        spark.read.schema(target.schema)
+        .option("basePath", base)
+        .parquet(*[os.path.join(base, f) for f in touched])
+        if touched
+        else target.limit(0)
+    )
     matched, inserted, result = merge_branches(
-        target,
-        source,
+        touched_rows,
+        src,
         keys,
         update_cols=update_cols,
         insert_cols=insert_cols,
@@ -201,15 +270,8 @@ def merge_upsert(
     )
     n_upd = matched.count() if count_rows else -1
     n_ins = inserted.count() if count_rows else -1
-    res = {"updated": n_upd, "inserted": n_ins}
-    if observe_metrics:
-        obs = Observation()
-        result = result.observe(obs, *[c.alias(k) for k, c in observe_metrics.items()])
-        sink.overwrite(result, target_table, partition_by=partition_by)
-        res["observed"] = dict(obs.get)
-    else:
-        sink.overwrite(result, target_table, partition_by=partition_by)
-    return res
+    sink.overwrite(result, target_table, partition_by=partition_by, carried=carried)
+    return {"updated": n_upd, "inserted": n_ins}
 
 
 def merge_branches(
@@ -221,19 +283,23 @@ def merge_branches(
     broadcast_source: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The broadcast-hinted merge plan as pure DataFrames:
-    ``(matched, inserted, result)``. The target side is scanned (up to three
-    column-pruned times) but never shuffled and never broadcast.
+    ``(matched, inserted, result)``. ``source`` must hold one row per key
+    (:func:`merge_upsert` passes its deduplicated pin). ``target`` is what
+    the merge rewrites — the touched files, in :func:`merge_upsert` — and
+    is scanned up to three column-pruned times, but never shuffled and
+    never broadcast.
 
     ``broadcast_source=False`` drops every hint (a source batch too big to
     broadcast): AQE then plans shuffle joins keyed on ``keys``, with skew
     splitting if a key is hot.
     """
     target_cols = target.columns
-    src = source.dropDuplicates(keys)
-    upd = update_cols or [c for c in target_cols if c not in keys and c in src.columns]
+    upd = update_cols or [
+        c for c in target_cols if c not in keys and c in source.columns
+    ]
     ins = insert_cols or list(dict.fromkeys(keys + upd))
 
-    bsrc = F.broadcast(src) if broadcast_source else src
+    bsrc = F.broadcast(source) if broadcast_source else source
 
     untouched = target.join(bsrc.select(*keys), on=keys, how="left_anti")
 
@@ -246,20 +312,20 @@ def merge_branches(
         ],
     )
 
-    # Inserted rows = source keys absent from the target. Anti-joining src
+    # Inserted rows = source keys absent from the target. Anti-joining source
     # against the full target keyset would need either a broadcast of the
     # target's keys (billions of rows at scale — driver/executor OOM) or a
     # full shuffle of them (sort-merge). Instead anti-join against the
     # MATCHED keys — computed from the same source-broadcast inner join as
-    # the `matched` branch, so it is ≤|src| rows and broadcastable. The
+    # the `matched` branch, so it is ≤|source| rows and broadcastable. The
     # target is scanned once more (pruned to key columns) but never
     # shuffled or broadcast.
     matched_keys = target.select(*keys).join(bsrc.select(*keys), on=keys, how="inner")
     if broadcast_source:
         matched_keys = F.broadcast(matched_keys)
-    inserted = src.join(matched_keys, on=keys, how="left_anti").select(
+    inserted = source.join(matched_keys, on=keys, how="left_anti").select(
         *[
-            (F.col(c) if c in ins and c in src.columns else F.lit(None)).alias(c)
+            (F.col(c) if c in ins and c in source.columns else F.lit(None)).alias(c)
             for c in target_cols
         ]
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Sequence
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -52,6 +53,44 @@ def _as_nullable(dt: DataType) -> DataType:
     if isinstance(dt, MapType):
         return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
     return dt
+
+
+def _footer_bounds(path: str, cols: list[str]) -> dict[str, tuple | None]:
+    """``{col: (min, max)}`` of one parquet file, folded from its footer's
+    row-group statistics — a driver-side read, no Spark job. A column maps
+    to None when the footer holds no usable min/max for it in some row
+    group (absent column, all NULL, a NaN-bearing float): unknown, never
+    "empty"."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    pos = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    out: dict[str, tuple | None] = {}
+    for c in cols:
+        lo = hi = None
+        for g in range(md.num_row_groups if c in pos else 0):
+            st = md.row_group(g).column(pos[c]).statistics
+            # x != x is true only for NaN, which parquet orders as a value
+            if st is None or not st.has_min_max or st.min != st.min or st.max != st.max:
+                lo = hi = None
+                break
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        out[c] = None if lo is None else (lo, hi)
+    return out
+
+
+def _link_files(src_dir: str, dst_dir: str, rels: Sequence[str]) -> None:
+    """Hardlink each ``src_dir/rel`` to ``dst_dir/rel`` — zero copy, and
+    the link keeps the inode alive after the source version is GC'd; a
+    cross-device store falls back to a copy."""
+    for rel in rels:
+        src, dst = os.path.join(src_dir, rel), os.path.join(dst_dir, rel)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        try:
+            os.link(src, dst)
+        except OSError:
+            shutil.copy2(src, dst)
 
 
 @dataclass
@@ -148,6 +187,19 @@ class TableStore:
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return self._read_dir(spark, self.data_path(name))
+
+    def file_bounds(
+        self, version_dir: str, cols: list[str]
+    ) -> dict[str, dict[str, tuple | None]]:
+        """:func:`_footer_bounds` of every data file of a version dir, keyed
+        by its path relative to the dir. Driver-side footer reads only."""
+        out = {}
+        for root, _dirs, files in os.walk(version_dir):
+            for f in files:
+                if f.endswith(".parquet"):
+                    path = os.path.join(root, f)
+                    out[os.path.relpath(path, version_dir)] = _footer_bounds(path, cols)
+        return out
 
     def describe(self, spark: SparkSession, name: str) -> DataFrame:
         """``DESC TABLE`` parity (reference ``loading_data_sp/function.py:30``):
@@ -306,10 +358,17 @@ class TableStore:
         self._append_pointer_log(name, version)
 
     def _stage_version(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        carried: Sequence[str] = (),
     ) -> tuple[int, int | None]:
         """Write a fully-formed new version directory WITHOUT moving the
-        pointer; returns (new_version, previous_pointer)."""
+        pointer; returns (new_version, previous_pointer). ``carried`` lists
+        data files of the current version (paths relative to its dir) that
+        join the new version unchanged, hardlinked under their own names —
+        a copy-on-write merge writes only what it rewrote."""
         tdir = self.table_dir(name)
         os.makedirs(tdir, exist_ok=True)
         prev = self.current_version(name)
@@ -323,6 +382,8 @@ class TableStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(target)
+        if carried:
+            _link_files(os.path.join(tdir, f"v={prev:06d}"), target, carried)
         self._mark_partitioning(target, partition_by)
         self._record_written_schema(df, target, partition_by)
         return new, prev
@@ -350,10 +411,16 @@ class TableStore:
             self._write_committed_set(name, committed & live)
 
     def overwrite(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        carried: Sequence[str] = (),
     ) -> None:
-        """Full-table replace via stage-and-swap; keeps one previous version."""
-        new, prev = self._stage_version(df, name, partition_by)
+        """Full-table replace via stage-and-swap (``df`` plus the
+        ``carried`` files, see :meth:`_stage_version`); keeps one previous
+        version."""
+        new, prev = self._stage_version(df, name, partition_by, carried)
         self._commit_version(name, new)
         self._gc_versions(name, new, prev)
 
@@ -418,26 +485,15 @@ class TableStore:
                     f"{sorted(stray)} outside replaced={sorted(replaced_set)}"
                 )
         cur_dir = os.path.join(tdir, f"v={prev:06d}")
+        carried = []
         for root, _dirs, files in os.walk(cur_dir):
             rel = os.path.relpath(root, cur_dir)
-            if rel == ".":
-                continue
             # top-level partition component decides replacement (nested
             # partition_by replaces whole subtrees of the first component)
-            top = rel.split(os.sep)[0]
-            if top in replaced_set or rel in replaced_set:
+            if rel == "." or rel.split(os.sep)[0] in replaced_set or rel in replaced_set:
                 continue
-            for fname in files:
-                if not fname.endswith(".parquet"):
-                    continue
-                dst_dir = os.path.join(target, rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                src = os.path.join(root, fname)
-                dst = os.path.join(dst_dir, fname)
-                try:
-                    os.link(src, dst)  # zero-copy share across versions
-                except OSError:
-                    shutil.copy2(src, dst)  # cross-device fallback
+            carried += [os.path.join(rel, f) for f in files if f.endswith(".parquet")]
+        _link_files(cur_dir, target, carried)
         self._record_written_schema(df, target, partition_by)
         self._commit_version(name, new)
         self._gc_versions(name, new, prev)
@@ -872,11 +928,20 @@ class _StagedTransaction:
         self._prev: dict[str, int | None] = {}
 
     def overwrite(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None = None,
+        carried: Sequence[str] = (),
     ) -> None:
-        new, prev = self._store._stage_version(df, name, partition_by)
+        new, prev = self._store._stage_version(df, name, partition_by, carried)
         self.staged.append((name, new))
         self._prev.setdefault(name, prev)
+
+    def staged_dir(self, name: str) -> str:
+        """The version dir this transaction last staged for ``name``."""
+        v = [v for n, v in self.staged if n == name][-1]
+        return os.path.join(self._store.table_dir(name), f"v={v:06d}")
 
     def abort(self) -> None:
         for name, version in self.staged:

@@ -157,6 +157,23 @@ def _stream_high_water(log: Changelog, pending: DataFrame) -> int:
     return -1 if hi is None else int(hi)
 
 
+def _co2_bounds(spark: SparkSession, store: TableStore, version_dir: str) -> tuple:
+    """MIN/MAX(CO2_PPM) of a HARMONIZED version, folded on the driver from
+    its files' footer stats — exact, because every file a merge writes
+    carries fresh stats and carried files keep theirs. A file without
+    usable min/max (a NaN reading, an all-NULL file) falls back to one
+    aggregate over the version."""
+    stats = store.file_bounds(version_dir, ["CO2_PPM"]).values()
+    per_file = [s["CO2_PPM"] for s in stats]
+    if per_file and None not in per_file:
+        return min(lo for lo, _ in per_file), max(hi for _, hi in per_file)
+    return tuple(
+        store._read_dir(spark, version_dir)
+        .agg(F.min("CO2_PPM"), F.max("CO2_PPM"))
+        .first()
+    )
+
+
 def harmonize(spark: SparkSession, store: TableStore, consumer: str = "harmonize") -> str:
     log = Changelog(store, RAW_TABLE, embedded=True)
     pending = log.pending(spark, consumer)
@@ -180,31 +197,18 @@ def harmonize(spark: SparkSession, store: TableStore, consumer: str = "harmonize
         )
     )
 
-    # J1: MERGE on DATE (update all cols / insert). The A2 _CO2_MINMAX
-    # scalar-cache refresh (:81-87) rides the merge write as Observation
-    # metrics — the merged result IS the new harmonized table, so observing
-    # min/max during the write replaces the round-1 full re-read + agg.
-    # HARMONIZED and its scalar cache publish in ONE transaction (staged
+    # J1: MERGE on DATE (update all cols / insert). HARMONIZED and its A2
+    # _CO2_MINMAX scalar cache (:81-87) publish in ONE transaction (staged
     # version dirs + commit journal): a crash between the two writes can
     # no longer leave analytics normalizing against stale bounds.
     from ..session import local_rows_df
 
     with store.transaction("harmonize") as txn:
-        mres = merge_upsert(
-            spark,
-            store,
-            HARMONIZED_TABLE,
-            src,
-            keys=["DATE"],
-            count_rows=False,
-            observe_metrics={
-                "MIN_CO2": F.min("CO2_PPM"),
-                "MAX_CO2": F.max("CO2_PPM"),
-            },
-            txn=txn,
+        merge_upsert(
+            spark, store, HARMONIZED_TABLE, src, keys=["DATE"],
+            count_rows=False, txn=txn,
         )
-        got = mres["observed"]
-        mn, mx = got["MIN_CO2"], got["MAX_CO2"]
+        mn, mx = _co2_bounds(spark, store, txn.staged_dir(HARMONIZED_TABLE))
         minmax = local_rows_df(
             spark,
             [(None if mn is None else float(mn), None if mx is None else float(mx))],

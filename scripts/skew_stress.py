@@ -26,10 +26,11 @@ SHUFFLE.md. Usage::
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from shuffle_metrics import collect_metrics  # noqa: E402
 

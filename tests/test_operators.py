@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import datetime
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from incremental_datapipeline_using_snowflake_spark.operators import (
@@ -1159,3 +1161,180 @@ def test_schema_record_matches_footer_inference(spark, tmp_path, next_job_id):
     legacy = fresh.read(spark, "ns.arrays")
     assert legacy.schema == _inferred_schema(spark, store.data_path("ns.arrays"))
     assert sorted(r["id"] for r in legacy.collect()) == [0, 1, 2]
+
+
+# -- copy-on-write merge -------------------------------------------------
+# A multi-file target: files A, B, C hold the even keys 0-18, 20-38 and
+# 40-58 (disjoint ranges); file D holds the odd keys 1 and 41, so its range
+# overlaps A's and C's. A case may append one more file.
+_COW_FILES = [list(range(0, 20, 2)), list(range(20, 40, 2)),
+              list(range(40, 60, 2)), [1, 41]]
+_COW_KEY_TYPES = {
+    "long": lambda k: k,
+    "date": lambda k: datetime.date(2020, 1, 1) + datetime.timedelta(days=k),
+    "string": lambda k: f"k{k:03d}",
+    "double": float,
+}
+
+
+def _cow_rows(key, ks, tag):
+    return [(None if k is None else key(k), float(-1 if k is None else k), tag(k))
+            for k in ks]
+
+
+def _cow_stage(spark, store, name, schema, files, partition_by=None):
+    """Write ``files`` (row lists) as one data file each (one per partition
+    dir when partitioned); returns {relative path: inode} of the version."""
+    for i, rows in enumerate(files):
+        df = spark.createDataFrame(rows, schema).coalesce(1)
+        if i == 0:
+            store.overwrite(df, name, partition_by=partition_by)
+        else:
+            store.append(df, name, partition_by=partition_by)
+    return _cow_inodes(store, name)
+
+
+def _cow_inodes(store, name):
+    base = store.data_path(name)
+    return {f: os.stat(os.path.join(base, f)).st_ino
+            for f in store.file_bounds(base, [])}
+
+
+def _cow_check(spark, store, name, source, keys, ref_source, ref_upd,
+               inodes_before, n_carried, **kw):
+    """merge_upsert over the multi-file target == upsert_dataframe over the
+    previous version (rows and the parent's full-target counts); exactly
+    ``n_carried`` files join the new version as hardlinks."""
+    from collections import Counter
+
+    from incremental_datapipeline_using_snowflake_spark.operators.merge import (
+        merge_branches,
+    )
+
+    v_before = store.current_version(name)
+    res = merge_upsert(spark, store, name, source, keys=keys, **kw)
+    before = store.read_version(spark, name, v_before)
+    want = upsert_dataframe(before, ref_source, keys, update_cols=ref_upd)
+    assert Counter(map(tuple, store.read(spark, name).collect())) == Counter(
+        map(tuple, want.collect())
+    )
+    matched, inserted, _ = merge_branches(
+        before, source.dropDuplicates(keys), keys,
+        update_cols=kw.get("update_cols"), insert_cols=kw.get("insert_cols"),
+    )
+    assert res == {"updated": matched.count(), "inserted": inserted.count()}
+    after = _cow_inodes(store, name)
+    carried = set(after) & set(inodes_before)
+    assert len(carried) == n_carried, sorted(carried)
+    assert all(after[f] == inodes_before[f] for f in carried)
+
+
+@pytest.mark.parametrize(
+    "key_type, extra_file, src_ks, keys, kw, n_carried",
+    [
+        # updates 42/44 and inserts 59: only C meets the source range
+        ("long", None, [42, 44, 59], ["k"], {}, 3),
+        ("long", None, [100, 101], ["k"], {}, 4),  # insert-only past the max
+        ("long", [42, 42], [42], ["k"], {}, 3),  # key 42 held three times
+        ("long", [None], [None, 44], ["k"], {}, 3),  # NULL keys on both sides
+        ("date", None, [42, 44, 59], ["k"], {}, 3),
+        ("string", None, [42, 44, 59], ["k"], {}, 3),
+        ("long", None, [42, 44, 59], ["k", "tag"], {}, 3),  # composite key
+        ("double", None, [42, 44, 59], ["k"], {}, 0),  # float keys never prune
+        ("long", None, [42, 44, 59], ["k"], {"update_cols": ["v"]}, 3),
+        ("long", None, [42, 44, 59], ["k"],
+         {"update_cols": ["v"], "insert_cols": ["k", "v", "tag"]}, 3),
+        ("long", None, [42, 44, 59], ["k"], {"broadcast_source": False}, 3),
+    ],
+    ids=["update_insert", "insert_past_max", "dup_target_keys", "null_keys",
+         "date", "string", "composite", "double", "update_cols", "insert_cols",
+         "no_broadcast"],
+)
+def test_cow_merge_matches_reference(
+    spark, store, key_type, extra_file, src_ks, keys, kw, n_carried
+):
+    """Copy-on-write merge_upsert equals the pure upsert_dataframe on the
+    same inputs, returns the counts a full-target merge gives, and leaves
+    every untouched file in place (same inode)."""
+    key = _COW_KEY_TYPES[key_type]
+    schema = f"k {key_type}, v double, tag string"
+    files = _COW_FILES + ([extra_file] if extra_file else [])
+    inodes = _cow_stage(
+        spark, store, "ns.cow", schema,
+        [_cow_rows(key, ks, lambda k: f"t{k}") for ks in files],
+    )
+    # 42 keeps its target tag (a composite-key match); 44 and 59 do not
+    source = spark.createDataFrame(
+        [(None if k is None else key(k), 1000.0 + (k or 0),
+          f"t{k}" if k == 42 else f"n{k}") for k in src_ks],
+        schema,
+    )
+    upd = kw.get("update_cols")
+    # update_cols alone inserts keys + update set; with insert_cols the
+    # inserted rows carry every source column, as upsert_dataframe's do
+    ref_source = source.select(*keys, *upd) if upd and "insert_cols" not in kw else source
+    _cow_check(spark, store, "ns.cow", source, keys, ref_source, upd, inodes,
+               n_carried, **kw)
+
+
+def test_cow_merge_partitioned_target(spark, store):
+    """A year-partitioned target: the touched files are read under the
+    version's basePath and the untouched ones, in every partition dir,
+    are carried by inode."""
+    schema = "k long, v double, tag string, p int"
+    files = [[(k, float(k), f"t{k}", k // 20) for k in ks] for ks in _COW_FILES]
+    inodes = _cow_stage(spark, store, "ns.cowp", schema, files, partition_by=["p"])
+    assert len(inodes) == 5  # D splits into p=0 and p=2
+    source = spark.createDataFrame(
+        [(k, 1000.0 + k, f"n{k}", k // 20) for k in (42, 44, 59)], schema
+    )
+    _cow_check(spark, store, "ns.cowp", source, ["k"], source, None, inodes, 4,
+               partition_by=["p"])
+    assert store.partitioning("ns.cowp") == ["p"]
+
+
+def test_cow_merge_transaction_fault_and_gc(spark, tmp_path):
+    """A copy-on-write merge staged in a transaction (the harmonize shape:
+    merge + min/max overwrite) that dies before commit leaves the previous
+    version reading identical rows and no staged dir; committed merges
+    survive the GC and the purge of the versions their carried files came
+    from."""
+    from incremental_datapipeline_using_snowflake_spark.operators.merge import (
+        purge_versions,
+    )
+    from incremental_datapipeline_using_snowflake_spark.session import local_rows_df
+
+    store = TableStore(root=str(tmp_path))
+    name, mm = "ns.cowtx", "ns.cowtx_mm"
+    schema = "k long, v double, tag string"
+    _cow_stage(spark, store, name, schema,
+               [_cow_rows(lambda k: k, ks, lambda k: f"t{k}") for ks in _COW_FILES])
+    rows0 = sorted(store.read(spark, name).collect())
+    v0 = store.current_version(name)
+
+    def merge_txn(ks, crash=False):
+        src = spark.createDataFrame([(k, 1000.0 + k, f"n{k}") for k in ks], schema)
+        with store.transaction("cow") as txn:
+            merge_upsert(spark, store, name, src, keys=["k"], count_rows=False,
+                         txn=txn)
+            # the three carried links sit next to the rewritten file
+            assert len(store.file_bounds(txn.staged_dir(name), [])) >= 4
+            txn.overwrite(local_rows_df(spark, [(1.0, 2.0)], "lo double, hi double"), mm)
+            if crash:
+                raise RuntimeError("crash after staging")
+
+    with pytest.raises(RuntimeError, match="crash after staging"):
+        merge_txn([42, 59], crash=True)
+    assert store.current_version(name) == v0 and not store.exists(mm)
+    assert store._all_version_dirs(name) == [v0]
+    assert sorted(store.read(spark, name).collect()) == rows0
+
+    merge_txn([42, 59])
+    merge_txn([44])  # GCs v0, whose files A, B and D both merges carried
+    assert v0 not in store._all_version_dirs(name)
+    want = {r["k"]: r["v"] for r in rows0} | {42: 1042.0, 59: 1059.0, 44: 1044.0}
+    got = {r["k"]: r["v"] for r in store.read(spark, name).collect()}
+    assert got == want
+    assert purge_versions(store, name)
+    assert store.versions(name) == [store.current_version(name)]
+    assert {r["k"]: r["v"] for r in store.read(spark, name).collect()} == want
