@@ -205,8 +205,11 @@ class TableStore:
         """``DESC TABLE`` parity (reference ``loading_data_sp/function.py:30``):
         one row per column — (col_name, data_type, nullable). Schema comes
         from the version's schema record; no data scan."""
+        from ..session import local_rows_df
+
         fields = self.read(spark, name).schema.fields
-        return spark.createDataFrame(
+        return local_rows_df(
+            spark,
             [(f.name, f.dataType.simpleString(), f.nullable) for f in fields],
             schema="col_name string, data_type string, nullable boolean",
         )

@@ -24,6 +24,17 @@ Counting follows from it: a count that a pin or a write already computes
 rides that job as an ``Observation`` (``df.observe(obs, ...)`` before
 ``localCheckpoint`` or the write); there is no ``.count()`` after a pin,
 which would spend a job re-reading what the pin just wrote.
+
+Width follows bytes, not cores: a pin keeps the partition count of its
+input, so a small batch must be narrowed before the pins that derive from
+it. ``session.byte_sized_partitions`` gives the count AQE would coalesce a
+shuffle of that many bytes to (capped at the current width, so it only
+narrows); ``curate_append`` sizes its batch with it once, from a byte sum
+that rides its guard job, and ``coalesce``s the batch, its embeddings and
+its verdict union to that count, which is narrow: no shuffle, no job.
+Driver-side rows (run records, manifests, meta rows) become a frame through
+``session.local_rows_df``, one slice, never ``spark.createDataFrame(rows)``,
+which makes one slice per core.
 """
 from . import (
     clustering,

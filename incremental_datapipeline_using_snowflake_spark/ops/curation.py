@@ -86,6 +86,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import byte_sized_partitions, local_rows_df
 from .dedup import (
     _band_rows,
     _shingle_docs,
@@ -223,7 +224,7 @@ def bootstrap_corpus(
         corpus_table + "__bloom",
     )
     store.overwrite(
-        spark.createDataFrame([(int(m_bits),)], "m_bits long"),
+        local_rows_df(spark, [(int(m_bits),)], "m_bits long"),
         corpus_table + "__bloom_meta",
     )
     sh = _shingle_docs(docs, text_col, id_col).localCheckpoint(eager=True)
@@ -240,14 +241,14 @@ def bootstrap_corpus(
             corpus_table + "__embsig",
         )
         store.overwrite(
-            spark.createDataFrame(
-                [(int(dim), int(n_tables), int(n_planes))],
+            local_rows_df(
+                spark, [(int(dim), int(n_tables), int(n_planes))],
                 "dim int, n_tables int, n_planes int",
             ),
             corpus_table + "__curation_meta",
         )
     store.overwrite(
-        spark.createDataFrame([], _RUNS_SCHEMA), corpus_table + "__runs"
+        local_rows_df(spark, [], _RUNS_SCHEMA), corpus_table + "__runs"
     )
 
 
@@ -369,8 +370,15 @@ def delete_docs(
     kc = key_col or id_col
     corpus = store.read(spark, corpus_table)
     if isinstance(keys, DataFrame):
-        keys_df = keys.select(F.col(keys.columns[0]).alias("_del_key")).distinct()
-        n_keys = keys_df.count()
+        # pin the distinct keys once: a count and then the semi-join each
+        # evaluated the caller's key lineage; the count rides the pin
+        n_key_obs = Observation()
+        keys_df = (
+            keys.select(F.col(keys.columns[0]).alias("_del_key")).distinct()
+            .observe(n_key_obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n_keys = n_key_obs.get["n"]
         matched = corpus.join(
             F.broadcast(keys_df), F.col(kc) == F.col("_del_key"), "left_semi"
         )
@@ -393,11 +401,11 @@ def delete_docs(
     old_log = (
         store.read(spark, runs_t)
         if store.exists(runs_t)
-        else spark.createDataFrame([], _DELETES_SCHEMA)
+        else local_rows_df(spark, [], _DELETES_SCHEMA)
     )
     log = old_log.unionByName(
-        spark.createDataFrame(
-            [(run_id, int(n_keys), int(n_deleted))], _DELETES_SCHEMA
+        local_rows_df(
+            spark, [(run_id, int(n_keys), int(n_deleted))], _DELETES_SCHEMA
         )
     )
     if n_deleted == 0:
@@ -520,8 +528,8 @@ def rebuild_embsig(
     sigs = _emb_signatures(
         member_vecs, dim, n_tables, n_planes, vec_col, emb_id_col
     )
-    new_meta = spark.createDataFrame(
-        [(int(dim), int(n_tables), int(n_planes))],
+    new_meta = local_rows_df(
+        spark, [(int(dim), int(n_tables), int(n_planes))],
         "dim int, n_tables int, n_planes int",
     )
     with store.transaction(f"reindex-{corpus_table}") as txn:
@@ -827,330 +835,346 @@ def curate_append(
     if "_fingerprint" in batch.columns:
         raise ValueError("curate_append: batch must not carry _fingerprint")
 
-    b = batch.cache()
-    # one batch-bound guard pass: duplicate or NULL ids would double-merge
-    # (merge_upsert keys on id) and double-count verdicts — fail loudly,
-    # mirroring merge_upsert's NULL-partition guard
-    chk = b.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct(F.col(id_col)).alias("nd"),
-        F.sum(F.col(id_col).isNull().cast("long")).alias("nn"),
-    ).collect()[0]
-    if chk["nn"] or chk["n"] != chk["nd"]:
-        raise ValueError(
-            f"curate_append({run_id}): batch ids must be unique and non-NULL "
-            f"(n={chk['n']}, distinct={chk['nd']}, nulls={chk['nn']})"
-        )
+    cached = batch.cache()
+    bsh = None
+    try:
+        # one batch-bound guard pass: duplicate or NULL ids would double-merge
+        # (merge_upsert keys on id) and double-count verdicts — fail loudly,
+        # mirroring merge_upsert's NULL-partition guard. The batch's text
+        # bytes ride the same job and size it: a small batch built with
+        # createDataFrame arrives in one slice per core, and every pin
+        # derived from it by row-local steps would keep that width
+        chk = cached.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.col(id_col)).alias("nd"),
+            F.sum(F.col(id_col).isNull().cast("long")).alias("nn"),
+            F.sum(F.octet_length(F.col(text_col))).alias("nb"),
+        ).collect()[0]
+        if chk["nn"] or chk["n"] != chk["nd"]:
+            raise ValueError(
+                f"curate_append({run_id}): batch ids must be unique and non-NULL "
+                f"(n={chk['n']}, distinct={chk['nd']}, nulls={chk['nn']})"
+            )
+        k = byte_sized_partitions(spark, chk["nb"] or 0, cached.rdd.getNumPartitions())
+        b = cached.coalesce(k)
+        if batch_emb is not None:
+            batch_emb = batch_emb.coalesce(k)
 
-    # -- stage 1: quality gate -------------------------------------------
-    # pin the STAGE FRAME once, not its two filtered branches: pinning
-    # gate_fail and p1 separately executed the Gopher-signal lineage twice
-    # (r07 profile: 1.46s + 0.82s for the same computation); branches over
-    # the pinned frame are free filters
-    gate = (
-        repetition_signals(b, text_col=text_col, id_col=id_col).select(
-            F.col(id_col).alias("id"),
-            F.coalesce(F.col("quality_pass"), F.lit(False)).alias("ok"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    gate_fail = gate.filter(~F.col("ok")).select("id")
-    p1 = gate.filter(F.col("ok")).select("id")
-
-    # -- stage 2: exact dedup (fingerprints) -----------------------------
-    from pyspark.sql import Window as W
-
-    bfp = b.select(
-        F.col(id_col).alias("id"), _fingerprint(text_col).alias("fp")
-    ).join(p1, "id")
-    have_bloom = store.exists(corpus_table + "__bloom")
-    m_bits = None
-    if have_bloom:
-        # Bloom fast path: probe the stored membership sketch (bit_or-fold
-        # the per-run word deltas first — readers see one row per word).
-        # FALSE is definitive (no false negatives), so fresh rows are
-        # marked new with zero corpus access; only probable hits pay the
-        # exact fingerprint semi-join, and when the whole batch is ruled
-        # out the corpus scan is skipped outright. Verdicts are IDENTICAL
-        # to the plain join — the sketch only prunes work.
-        m_bits = int(
-            store.read(spark, corpus_table + "__bloom_meta").collect()[0]["m_bits"]
-        )
-        bloom = (
-            store.read(spark, corpus_table + "__bloom")
-            .groupBy("word")
-            .agg(F.bit_or("bits").alias("bits"))
-        )
-        n_maybe = Observation()
-        probed = (
-            bfp.join(bloom_maybe_member(bfp, bloom, m_bits), "id")
-            .observe(n_maybe, F.sum(F.col("maybe_member").cast("long")).alias("n"))
+        # -- stage 1: quality gate -------------------------------------------
+        # pin the STAGE FRAME once, not its two filtered branches: pinning
+        # gate_fail and p1 separately executed the Gopher-signal lineage twice
+        # (r07 profile: 1.46s + 0.82s for the same computation); branches over
+        # the pinned frame are free filters
+        gate = (
+            repetition_signals(b, text_col=text_col, id_col=id_col).select(
+                F.col(id_col).alias("id"),
+                F.coalesce(F.col("quality_pass"), F.lit(False)).alias("ok"),
+            )
             .localCheckpoint(eager=True)
         )
-        maybe = probed.filter(F.col("maybe_member")).select("id", "fp")
-        if not n_maybe.get["n"]:
-            exact_corpus = maybe.select("id")
-            p2a = probed.select("id", "fp")
+        gate_fail = gate.filter(~F.col("ok")).select("id")
+        p1 = gate.filter(F.col("ok")).select("id")
+
+        # -- stage 2: exact dedup (fingerprints) -----------------------------
+        from pyspark.sql import Window as W
+
+        bfp = b.select(
+            F.col(id_col).alias("id"), _fingerprint(text_col).alias("fp")
+        ).join(p1, "id")
+        have_bloom = store.exists(corpus_table + "__bloom")
+        m_bits = None
+        if have_bloom:
+            # Bloom fast path: probe the stored membership sketch (bit_or-fold
+            # the per-run word deltas first — readers see one row per word).
+            # FALSE is definitive (no false negatives), so fresh rows are
+            # marked new with zero corpus access; only probable hits pay the
+            # exact fingerprint semi-join, and when the whole batch is ruled
+            # out the corpus scan is skipped outright. Verdicts are IDENTICAL
+            # to the plain join — the sketch only prunes work.
+            m_bits = int(
+                store.read(spark, corpus_table + "__bloom_meta").collect()[0]["m_bits"]
+            )
+            bloom = (
+                store.read(spark, corpus_table + "__bloom")
+                .groupBy("word")
+                .agg(F.bit_or("bits").alias("bits"))
+            )
+            n_maybe = Observation()
+            probed = (
+                bfp.join(bloom_maybe_member(bfp, bloom, m_bits), "id")
+                .observe(n_maybe, F.sum(F.col("maybe_member").cast("long")).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            maybe = probed.filter(F.col("maybe_member")).select("id", "fp")
+            if not n_maybe.get["n"]:
+                exact_corpus = maybe.select("id")
+                p2a = probed.select("id", "fp")
+            else:
+                # ONE corpus touchpoint: a single left join against the
+                # (distinct) fingerprint projection serves both branches —
+                # the old left_semi + left_anti pair scanned the corpus twice
+                corpus_fp = store.read(spark, corpus_table).select(
+                    F.col("_fingerprint").alias("fp")
+                ).distinct()
+                marked = (
+                    maybe.join(
+                        corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left"
+                    )
+                    .localCheckpoint(eager=True)
+                )
+                exact_corpus = marked.filter(F.col("_hit")).select("id")
+                p2a = (
+                    probed.filter(~F.col("maybe_member"))
+                    .select("id", "fp")
+                    .unionByName(
+                        marked.filter(F.col("_hit").isNull()).select("id", "fp")
+                    )
+                )
         else:
-            # ONE corpus touchpoint: a single left join against the
-            # (distinct) fingerprint projection serves both branches —
-            # the old left_semi + left_anti pair scanned the corpus twice
+            # pre-r07 corpora without a bootstrapped sketch: plain exact join
             corpus_fp = store.read(spark, corpus_table).select(
                 F.col("_fingerprint").alias("fp")
             ).distinct()
             marked = (
-                maybe.join(
-                    corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left"
-                )
+                bfp.join(corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left")
                 .localCheckpoint(eager=True)
             )
             exact_corpus = marked.filter(F.col("_hit")).select("id")
-            p2a = (
-                probed.filter(~F.col("maybe_member"))
-                .select("id", "fp")
-                .unionByName(
-                    marked.filter(F.col("_hit").isNull()).select("id", "fp")
-                )
-            )
-    else:
-        # pre-r07 corpora without a bootstrapped sketch: plain exact join
-        corpus_fp = store.read(spark, corpus_table).select(
-            F.col("_fingerprint").alias("fp")
-        ).distinct()
-        marked = (
-            bfp.join(corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left")
-            .localCheckpoint(eager=True)
-        )
-        exact_corpus = marked.filter(F.col("_hit")).select("id")
-        p2a = marked.filter(F.col("_hit").isNull()).select("id", "fp")
-    # pin the RANKED frame once; its two branches are free filters
-    wfp = W.partitionBy("fp").orderBy(F.asc("id"))
-    ranked = p2a.withColumn("_rk", F.row_number().over(wfp)).localCheckpoint(eager=True)
-    exact_batch = ranked.filter(F.col("_rk") > 1).select("id")
-    p2 = ranked.filter(F.col("_rk") == 1).select("id")
+            p2a = marked.filter(F.col("_hit").isNull()).select("id", "fp")
+        # pin the RANKED frame once; its two branches are free filters
+        wfp = W.partitionBy("fp").orderBy(F.asc("id"))
+        ranked = p2a.withColumn("_rk", F.row_number().over(wfp)).localCheckpoint(eager=True)
+        exact_batch = ranked.filter(F.col("_rk") > 1).select("id")
+        p2 = ranked.filter(F.col("_rk") == 1).select("id")
 
-    # -- stage 3: textual near-dup (MinHash vs stored bands) -------------
-    bdocs = b.join(p2.withColumnRenamed("id", id_col), id_col)
-    # materialize the batch shingle relation ONCE (it feeds four branches:
-    # corpus verify, batch-internal candidates/verify, and the kept-doc aux
-    # append) — and, as important at scale, give AQE MEASURED size stats
-    # for it: the 16x scale run OOMed when a static under-estimate of this
-    # shingle-array relation picked the broadcast side of the verify join.
-    from pyspark import StorageLevel
+        # -- stage 3: textual near-dup (MinHash vs stored bands) -------------
+        bdocs = b.join(p2.withColumnRenamed("id", id_col), id_col)
+        # materialize the batch shingle relation ONCE (it feeds four branches:
+        # corpus verify, batch-internal candidates/verify, and the kept-doc aux
+        # append) — and, as important at scale, give AQE MEASURED size stats
+        # for it: the 16x scale run OOMed when a static under-estimate of this
+        # shingle-array relation picked the broadcast side of the verify join.
+        from pyspark import StorageLevel
 
-    bsh = _shingle_docs(bdocs, text_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    bsh.count()
-    bbands = _band_rows(_signatures_from_shingles(bsh))
-    cbands = store.read(spark, corpus_table + "__bands")
-    cand_c = (
-        bbands.withColumnRenamed("id", "id_a")
-        .join(cbands.withColumnRenamed("id", "id_b"), ["band", "bh"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # candidate-bounded corpus re-shingle: only band-colliding corpus docs
-    cdocs = store.read(spark, corpus_table).join(
-        cand_c.select(F.col("id_b").alias(id_col)).distinct(), id_col, "left_semi"
-    )
-    csh = _shingle_docs(cdocs, text_col, id_col).localCheckpoint(eager=True)
-    near_c = (
-        cand_c.join(bsh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(csh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-        .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= jaccard_threshold)
-        .select(F.col("id_a").alias("id"))
-        .distinct()
-    )
-    # ONE pinned left join marks the verified corpus hits; both branches
-    # are free filters (stage 2's shape)
-    marked3 = (
-        p2.join(near_c.withColumn("_hit", F.lit(True)), "id", "left")
-        .localCheckpoint(eager=True)
-    )
-    near_corpus = marked3.filter(F.col("_hit")).select("id")
-    p3a = marked3.filter(F.col("_hit").isNull()).select("id")
-    # batch-internal pairs among stage-3 survivors → CC → min-id keep
-    a = bbands.withColumnRenamed("id", "id_a")
-    c = bbands.withColumnRenamed("id", "id_b")
-    cand_b = (
-        a.join(c, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .join(p3a.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
-        .join(p3a.withColumnRenamed("id", "id_b"), "id_b", "left_semi")
-    )
-    pairs_b = (
-        cand_b.join(bsh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(bsh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-        .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= jaccard_threshold)
-        .select("id_a", "id_b")
-    )
-    keep3 = dedup_keep_decisions(
-        p3a.withColumnRenamed("id", id_col), pairs_b, id_col=id_col
-    )
-    near_batch = (
-        keep3.filter(~F.col("keep")).select(F.col(id_col).alias("id"))
-        .localCheckpoint(eager=True)
-    )
-    p3 = (
-        keep3.filter(F.col("keep")).select(F.col(id_col).alias("id"))
-        .localCheckpoint(eager=True)
-    )
-
-    # -- stage 4: semantic near-dup (LSH vs stored signatures) -----------
-    emb_corpus = spark.createDataFrame([], "id long").select(F.col("id"))
-    emb_batch = spark.createDataFrame([], "id long").select(F.col("id"))
-    p4 = p3
-    if batch_emb is not None and store.exists(corpus_table + "__embsig"):
-        # ONE consistent snapshot of (structure meta, signatures): separate
-        # reads could straddle a concurrent rebuild_embsig swap and sign
-        # the batch at one plane count against signatures from another
-        meta, corpus_sigs = _sig_snapshot(spark, store, corpus_table)
-        dim, n_tables, n_planes = meta["dim"], meta["n_tables"], meta["n_planes"]
-        mvec = batch_emb.join(
-            p3.withColumnRenamed("id", emb_id_col), emb_id_col, "left_semi"
+        bsh = _shingle_docs(bdocs, text_col, id_col).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        # pin the batch signature relation: it feeds FOUR consumers (both
-        # sides of pairs_e, hit_c's bflat, and the plans' size stats) —
-        # unpinned, each consumer re-ran the n_tables LSH self-joins
-        bsig = (
-            _emb_signatures(mvec, dim, n_tables, n_planes, vec_col, emb_id_col)
-            .localCheckpoint(eager=True)
-        )
-        bflat = bsig.select(
-            F.col("id").alias("id_a"), F.col("v").alias("va"),
-            F.posexplode("buckets").alias("t", "bucket"),
-        )
-        cflat = corpus_sigs.select(
-            F.col("id").alias("id_b"), F.col("v").alias("vb"),
-            F.posexplode("buckets").alias("t", "bucket"),
-        )
-        # ONE pinned left join marks the cosine-verified corpus hits (a
-        # semi/anti pair re-ran the LSH bucket join + cosine verify twice
-        # — the two heaviest jobs of the r07 profile at 2.2s + 1.9s)
-        hit_c = (
-            bflat.join(cflat, ["t", "bucket"])
+        bsh.count()
+        bbands = _band_rows(_signatures_from_shingles(bsh))
+        cbands = store.read(spark, corpus_table + "__bands")
+        cand_c = (
+            bbands.withColumnRenamed("id", "id_a")
+            .join(cbands.withColumnRenamed("id", "id_b"), ["band", "bh"])
             .filter(F.col("id_a") != F.col("id_b"))
-            .filter(F.round(_cosine(F.col("va"), F.col("vb")), 6) >= cosine_threshold)
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        # candidate-bounded corpus re-shingle: only band-colliding corpus docs
+        cdocs = store.read(spark, corpus_table).join(
+            cand_c.select(F.col("id_b").alias(id_col)).distinct(), id_col, "left_semi"
+        )
+        csh = _shingle_docs(cdocs, text_col, id_col).localCheckpoint(eager=True)
+        near_c = (
+            cand_c.join(bsh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
+            .join(csh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
+            .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= jaccard_threshold)
             .select(F.col("id_a").alias("id"))
             .distinct()
         )
-        marked4 = (
-            p3.join(hit_c.withColumn("_hit", F.lit(True)), "id", "left")
+        # ONE pinned left join marks the verified corpus hits; both branches
+        # are free filters (stage 2's shape)
+        marked3 = (
+            p2.join(near_c.withColumn("_hit", F.lit(True)), "id", "left")
             .localCheckpoint(eager=True)
         )
-        emb_corpus = marked4.filter(F.col("_hit")).select("id")
-        p4a = marked4.filter(F.col("_hit").isNull()).select("id")
-        pairs_e = (
-            bflat.join(
-                bsig.select(
-                    F.col("id").alias("id_b"), F.col("v").alias("vb"),
-                    F.posexplode("buckets").alias("t", "bucket"),
-                ),
-                ["t", "bucket"],
-            )
+        near_corpus = marked3.filter(F.col("_hit")).select("id")
+        p3a = marked3.filter(F.col("_hit").isNull()).select("id")
+        # batch-internal pairs among stage-3 survivors → CC → min-id keep
+        a = bbands.withColumnRenamed("id", "id_a")
+        c = bbands.withColumnRenamed("id", "id_b")
+        cand_b = (
+            a.join(c, ["band", "bh"])
             .filter(F.col("id_a") < F.col("id_b"))
-            .filter(F.round(_cosine(F.col("va"), F.col("vb")), 6) >= cosine_threshold)
             .select("id_a", "id_b")
             .distinct()
-            .join(p4a.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
-            .join(p4a.withColumnRenamed("id", "id_b"), "id_b", "left_semi")
+            .join(p3a.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
+            .join(p3a.withColumnRenamed("id", "id_b"), "id_b", "left_semi")
         )
-        keep4 = dedup_keep_decisions(
-            p4a.withColumnRenamed("id", id_col), pairs_e, id_col=id_col
+        pairs_b = (
+            cand_b.join(bsh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
+            .join(bsh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
+            .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= jaccard_threshold)
+            .select("id_a", "id_b")
         )
-        emb_batch = (
-            keep4.filter(~F.col("keep")).select(F.col(id_col).alias("id"))
+        keep3 = dedup_keep_decisions(
+            p3a.withColumnRenamed("id", id_col), pairs_b, id_col=id_col
+        )
+        near_batch = (
+            keep3.filter(~F.col("keep")).select(F.col(id_col).alias("id"))
             .localCheckpoint(eager=True)
         )
-        p4 = (
-            keep4.filter(F.col("keep")).select(F.col(id_col).alias("id"))
+        p3 = (
+            keep3.filter(F.col("keep")).select(F.col(id_col).alias("id"))
             .localCheckpoint(eager=True)
         )
 
-    # -- verdicts (materialized BEFORE the merge mutates the store; the
-    # per-verdict counts ride the pin's job) -----------------------------
-    n_verdict = Observation()
-    verdicts = (
-        gate_fail.select("id", F.lit("gate_fail").alias("verdict"))
-        .unionByName(exact_corpus.select("id", F.lit("exact_dup_corpus").alias("verdict")))
-        .unionByName(exact_batch.select("id", F.lit("exact_dup_batch").alias("verdict")))
-        .unionByName(near_corpus.select("id", F.lit("near_dup_corpus").alias("verdict")))
-        .unionByName(near_batch.select("id", F.lit("near_dup_batch").alias("verdict")))
-        .unionByName(emb_corpus.select("id", F.lit("embedding_dup_corpus").alias("verdict")))
-        .unionByName(emb_batch.select("id", F.lit("embedding_dup_batch").alias("verdict")))
-        .unionByName(p4.select("id", F.lit("kept").alias("verdict")))
-        .withColumnRenamed("id", id_col)
-        .observe(
-            n_verdict,
-            *[F.sum((F.col("verdict") == v).cast("long")).alias(v) for v in VERDICTS],
-        )
-        .localCheckpoint(eager=True)
-    )
-    counts = {v: n or 0 for v, n in n_verdict.get.items()}
-    kept_ids = verdicts.filter(F.col("verdict") == "kept").select(id_col)
-    kept_docs = b.join(kept_ids, id_col).withColumn(
-        "_fingerprint", _fingerprint(text_col)
-    )
-
-    # -- transactional publish: merged corpus + run record, all-or-none --
-    runs_old = store.read(spark, corpus_table + "__runs")
-    run_row = spark.createDataFrame(
-        [(
-            run_id,
-            sum(counts.values()),
-            counts.get("gate_fail", 0),
-            counts.get("exact_dup_corpus", 0) + counts.get("exact_dup_batch", 0),
-            counts.get("near_dup_corpus", 0) + counts.get("near_dup_batch", 0),
-            counts.get("embedding_dup_corpus", 0)
-            + counts.get("embedding_dup_batch", 0),
-            counts.get("kept", 0),
-        )],
-        _RUNS_SCHEMA,
-    )
-    with store.transaction(f"curate-{run_id}") as txn:
-        merge_upsert(
-            spark, store, corpus_table, kept_docs, keys=[id_col],
-            count_rows=False, txn=txn,
-        )
-        txn.overwrite(runs_old.unionByName(run_row), corpus_table + "__runs")
-
-    # -- aux appends (at-least-once; see module docstring) ---------------
-    if counts.get("kept", 0):
-        if have_bloom:
-            # delta words for the kept docs; readers bit_or-fold by word,
-            # rebuild_bloom compacts periodically
-            store.append(
-                fingerprint_bloom(
-                    kept_docs.select(F.col("_fingerprint").alias("fp")).distinct(),
-                    m_bits,
-                ),
-                corpus_table + "__bloom",
-            )
-        ksh = bsh.join(
-            kept_ids.withColumnRenamed(id_col, "id"), "id", "left_semi"
-        )
-        store.append(_band_rows(_signatures_from_shingles(ksh)),
-                     corpus_table + "__bands")
+        # -- stage 4: semantic near-dup (LSH vs stored signatures) -----------
+        emb_corpus = local_rows_df(spark, [], "id long")
+        emb_batch = local_rows_df(spark, [], "id long")
+        p4 = p3
         if batch_emb is not None and store.exists(corpus_table + "__embsig"):
-            kvec = batch_emb.join(
-                kept_ids.withColumnRenamed(id_col, emb_id_col),
-                emb_id_col, "left_semi",
+            # ONE consistent snapshot of (structure meta, signatures): separate
+            # reads could straddle a concurrent rebuild_embsig swap and sign
+            # the batch at one plane count against signatures from another
+            meta, corpus_sigs = _sig_snapshot(spark, store, corpus_table)
+            dim, n_tables, n_planes = meta["dim"], meta["n_tables"], meta["n_planes"]
+            mvec = batch_emb.join(
+                p3.withColumnRenamed("id", emb_id_col), emb_id_col, "left_semi"
             )
-            store.append(
-                _emb_signatures(kvec, dim, n_tables, n_planes, vec_col, emb_id_col),
-                corpus_table + "__embsig",
+            # pin the batch signature relation: it feeds FOUR consumers (both
+            # sides of pairs_e, hit_c's bflat, and the plans' size stats) —
+            # unpinned, each consumer re-ran the n_tables LSH self-joins
+            bsig = (
+                _emb_signatures(mvec, dim, n_tables, n_planes, vec_col, emb_id_col)
+                .localCheckpoint(eager=True)
             )
-    # release per-run caches: every output above is materialized (store
-    # writes are actions, verdicts are localCheckpointed), and a long-lived
-    # session running many curation batches would otherwise accumulate one
-    # batch cache per run until executor storage starves real work — the
-    # 16x scale session hit exactly that before this unpersist
-    b.unpersist()
-    bsh.unpersist()
+            bflat = bsig.select(
+                F.col("id").alias("id_a"), F.col("v").alias("va"),
+                F.posexplode("buckets").alias("t", "bucket"),
+            )
+            cflat = corpus_sigs.select(
+                F.col("id").alias("id_b"), F.col("v").alias("vb"),
+                F.posexplode("buckets").alias("t", "bucket"),
+            )
+            # ONE pinned left join marks the cosine-verified corpus hits (a
+            # semi/anti pair re-ran the LSH bucket join + cosine verify twice
+            # — the two heaviest jobs of the r07 profile at 2.2s + 1.9s)
+            hit_c = (
+                bflat.join(cflat, ["t", "bucket"])
+                .filter(F.col("id_a") != F.col("id_b"))
+                .filter(F.round(_cosine(F.col("va"), F.col("vb")), 6) >= cosine_threshold)
+                .select(F.col("id_a").alias("id"))
+                .distinct()
+            )
+            marked4 = (
+                p3.join(hit_c.withColumn("_hit", F.lit(True)), "id", "left")
+                .localCheckpoint(eager=True)
+            )
+            emb_corpus = marked4.filter(F.col("_hit")).select("id")
+            p4a = marked4.filter(F.col("_hit").isNull()).select("id")
+            pairs_e = (
+                bflat.join(
+                    bsig.select(
+                        F.col("id").alias("id_b"), F.col("v").alias("vb"),
+                        F.posexplode("buckets").alias("t", "bucket"),
+                    ),
+                    ["t", "bucket"],
+                )
+                .filter(F.col("id_a") < F.col("id_b"))
+                .filter(F.round(_cosine(F.col("va"), F.col("vb")), 6) >= cosine_threshold)
+                .select("id_a", "id_b")
+                .distinct()
+                .join(p4a.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
+                .join(p4a.withColumnRenamed("id", "id_b"), "id_b", "left_semi")
+            )
+            keep4 = dedup_keep_decisions(
+                p4a.withColumnRenamed("id", id_col), pairs_e, id_col=id_col
+            )
+            emb_batch = (
+                keep4.filter(~F.col("keep")).select(F.col(id_col).alias("id"))
+                .localCheckpoint(eager=True)
+            )
+            p4 = (
+                keep4.filter(F.col("keep")).select(F.col(id_col).alias("id"))
+                .localCheckpoint(eager=True)
+            )
+
+        # -- verdicts (materialized BEFORE the merge mutates the store; the
+        # per-verdict counts ride the pin's job). The union of 8 frames
+        # adds up their partitions; coalescing to the batch's k is narrow
+        # (no shuffle, no job) and every reader of the pin runs k tasks --
+        n_verdict = Observation()
+        verdicts = (
+            gate_fail.select("id", F.lit("gate_fail").alias("verdict"))
+            .unionByName(exact_corpus.select("id", F.lit("exact_dup_corpus").alias("verdict")))
+            .unionByName(exact_batch.select("id", F.lit("exact_dup_batch").alias("verdict")))
+            .unionByName(near_corpus.select("id", F.lit("near_dup_corpus").alias("verdict")))
+            .unionByName(near_batch.select("id", F.lit("near_dup_batch").alias("verdict")))
+            .unionByName(emb_corpus.select("id", F.lit("embedding_dup_corpus").alias("verdict")))
+            .unionByName(emb_batch.select("id", F.lit("embedding_dup_batch").alias("verdict")))
+            .unionByName(p4.select("id", F.lit("kept").alias("verdict")))
+            .withColumnRenamed("id", id_col)
+            .coalesce(k)
+            .observe(
+                n_verdict,
+                *[F.sum((F.col("verdict") == v).cast("long")).alias(v) for v in VERDICTS],
+            )
+            .localCheckpoint(eager=True)
+        )
+        counts = {v: n or 0 for v, n in n_verdict.get.items()}
+        kept_ids = verdicts.filter(F.col("verdict") == "kept").select(id_col)
+        kept_docs = b.join(kept_ids, id_col).withColumn(
+            "_fingerprint", _fingerprint(text_col)
+        )
+
+        # -- transactional publish: merged corpus + run record, all-or-none --
+        runs_old = store.read(spark, corpus_table + "__runs")
+        run_row = local_rows_df(
+            spark,
+            [(
+                run_id,
+                sum(counts.values()),
+                counts.get("gate_fail", 0),
+                counts.get("exact_dup_corpus", 0) + counts.get("exact_dup_batch", 0),
+                counts.get("near_dup_corpus", 0) + counts.get("near_dup_batch", 0),
+                counts.get("embedding_dup_corpus", 0)
+                + counts.get("embedding_dup_batch", 0),
+                counts.get("kept", 0),
+            )],
+            _RUNS_SCHEMA,
+        )
+        with store.transaction(f"curate-{run_id}") as txn:
+            merge_upsert(
+                spark, store, corpus_table, kept_docs, keys=[id_col],
+                count_rows=False, txn=txn,
+            )
+            txn.overwrite(runs_old.unionByName(run_row), corpus_table + "__runs")
+
+        # -- aux appends (at-least-once; see module docstring) ---------------
+        if counts.get("kept", 0):
+            if have_bloom:
+                # delta words for the kept docs; readers bit_or-fold by word,
+                # rebuild_bloom compacts periodically
+                store.append(
+                    fingerprint_bloom(
+                        kept_docs.select(F.col("_fingerprint").alias("fp")).distinct(),
+                        m_bits,
+                    ),
+                    corpus_table + "__bloom",
+                )
+            ksh = bsh.join(
+                kept_ids.withColumnRenamed(id_col, "id"), "id", "left_semi"
+            )
+            store.append(_band_rows(_signatures_from_shingles(ksh)),
+                         corpus_table + "__bands")
+            if batch_emb is not None and store.exists(corpus_table + "__embsig"):
+                kvec = batch_emb.join(
+                    kept_ids.withColumnRenamed(id_col, emb_id_col),
+                    emb_id_col, "left_semi",
+                )
+                store.append(
+                    _emb_signatures(kvec, dim, n_tables, n_planes, vec_col, emb_id_col),
+                    corpus_table + "__embsig",
+                )
+    finally:
+        # release per-run caches: every output above is materialized (store
+        # writes are actions, verdicts are localCheckpointed), and a long-lived
+        # session running many curation batches would otherwise accumulate one
+        # batch cache per run until executor storage starves real work — the
+        # 16x scale session hit exactly that before this unpersist
+        cached.unpersist()
+        if bsh is not None:
+            bsh.unpersist()
     # -- maintenance: automatic LSH re-index when the corpus outgrew the
     # frozen plane count (docstring; probe = one narrow count) -----------
     if auto_reindex:
@@ -1340,8 +1364,6 @@ def _write_snapshot_files(
     # split key is a STRING: a numeric split column would otherwise
     # round-trip as a JSON number while the verifier's recomputed key is a
     # string cast — every comparison would mismatch
-    from ..session import local_rows_df
-
     intent = _delta_stats(corpus, split_col, id_col, text_col)
     file_rows = _per_file_stats(
         spark, f"{out_dir}/data", corpus.schema,
@@ -1366,7 +1388,7 @@ def _write_snapshot_files(
             "store_version long, table string, split_col string"
         ),
     )
-    manifest_local.coalesce(1).write.mode("overwrite").json(
+    manifest_local.write.mode("overwrite").json(
         f"{out_dir}/_manifest.jsonl"
     )
     return manifest_local
@@ -1713,7 +1735,9 @@ def export_corpus_delta(
                 "split_col": split_col or "",
             }
         )
-    manifest = spark.createDataFrame(
+    # rows are built in split order and one slice keeps it: no sort job
+    manifest = local_rows_df(
+        spark,
         rows,
         schema=(
             "split string, added_n_rows long, added_n_chars long, "
@@ -1722,9 +1746,9 @@ def export_corpus_delta(
             "result_checksum long, deleted_ids long, base_version long, "
             "store_version long, table string, split_col string"
         ),
-    ).orderBy("split")
+    )
     # manifest LAST — same completion-marker discipline as the full export
-    manifest.coalesce(1).write.mode("overwrite").json(f"{out_dir}/_manifest.jsonl")
+    manifest.write.mode("overwrite").json(f"{out_dir}/_manifest.jsonl")
     return manifest
 
 
@@ -1927,7 +1951,6 @@ def _stage_rebased_base(
     import shutil
     from functools import reduce
 
-    from ..session import local_rows_df
     from ..sources.jsonl_source import write_jsonl
 
     data_src = os.path.join(base, "data")
@@ -2082,7 +2105,7 @@ def _stage_rebased_base(
             "store_version long, table string, split_col string"
         ),
     )
-    man.coalesce(1).write.mode("overwrite").json(f"{tmp}/_manifest.jsonl")
+    man.write.mode("overwrite").json(f"{tmp}/_manifest.jsonl")
 
 
 def rebase_corpus_chain(
@@ -2407,7 +2430,7 @@ def shard_assignments(
         offsets.append((b, acc))
         acc += sums[b]
     offs = F.broadcast(
-        spark.createDataFrame(offsets or [(0, 0)], "_bkt int, _offset long")
+        local_rows_df(spark, offsets or [(0, 0)], "_bkt int, _offset long")
     )
     w = (
         Window.partitionBy("_bkt")

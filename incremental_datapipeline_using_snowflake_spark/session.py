@@ -95,14 +95,40 @@ def get_session(
 def local_rows_df(spark: SparkSession, rows: list, schema: str):
     """Single-partition DataFrame from a handful of driver-side rows.
 
-    ``spark.createDataFrame(rows)`` parallelizes over default parallelism
-    (32 Python-RDD slices here), and a later ``coalesce(1)`` folds those
-    into ONE task that pays a Python-worker roundtrip PER SLICE — ~4 s of
-    pure fixed overhead per action on local[32], measured. Parallelizing
-    with ``numSlices=1`` up front makes every downstream action exactly one
-    roundtrip (~0.3 s). Use for metadata-sized writes (scalar caches, run
-    logs) — never for real data.
+    ``spark.createDataFrame(rows)`` parallelizes over ``defaultParallelism``
+    Python-RDD slices (one per core), so every scan of the frame runs that
+    many tasks, and a later ``coalesce(1)`` folds them into ONE task that
+    pays a Python-worker roundtrip PER SLICE — ~4 s of pure fixed overhead
+    per action on local[32], measured. Parallelizing with ``numSlices=1`` up
+    front makes every downstream action exactly one roundtrip (~0.3 s). Use
+    for metadata-sized frames (run records, manifests, scalar caches) —
+    never for real data.
     """
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema=schema
     )
+
+
+def byte_sized_partitions(spark: SparkSession, n_bytes: int, current: int) -> int:
+    """Partition count for a frame of ``n_bytes`` that now has ``current``
+    partitions: the number AQE itself would coalesce a shuffle of that size
+    to, read from the session's settings, capped at ``current``.
+
+    AQE's rule (``CoalesceShufflePartitions``) targets ``max(minPartitionSize,
+    min(advisoryPartitionSizeInBytes, bytes / n))`` bytes per partition, where
+    ``n`` is ``minPartitionNum`` if set, else ``defaultParallelism`` under
+    ``parallelismFirst`` (the default) and 1 without it. A KB-sized batch
+    gets 1 partition, a batch of many advisory sizes keeps its width. The cap
+    means the result only ever narrows a frame, so ``frame.coalesce(k)`` is
+    a shuffle-free regrouping.
+    """
+    conf = spark.conf
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    advisory = to_bytes(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    floor = to_bytes(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    n = conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum", None)
+    if n is None:
+        first = conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "true"
+        n = spark.sparkContext.defaultParallelism if first else 1
+    target = max(floor, min(advisory, -(-n_bytes // int(n))))
+    return max(1, min(current, -(-n_bytes // target)))

@@ -209,6 +209,27 @@ def test_ops_has_no_broad_excepts():
     assert found == [], found
 
 
+def test_curation_builds_driver_rows_in_one_slice():
+    """``ops/curation.py`` never calls ``createDataFrame``: driver-side
+    rows (run records, manifests, meta rows, offsets) go through
+    ``session.local_rows_df``, one slice, instead of one slice per core.
+    Spark-free: it only parses the source."""
+    import ast
+    import pathlib
+
+    path = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "incremental_datapipeline_using_snowflake_spark" / "ops" / "curation.py"
+    )
+    found = [
+        node.lineno
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "createDataFrame"
+    ]
+    assert found == [], found
+
+
 def test_pair_cache_granular_eviction(spark):
     """The family artifacts build shingles/pairs/comp on first demand as
     separate cache entries, so a pairs-only consumer never pays the CC
