@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .table_store import TableStore
+from .table_store import UNWRITTEN_PARTITIONS, TableStore
 
 
 # key types whose parquet min/max order agrees with join equality. Float
@@ -126,12 +126,11 @@ def merge_upsert(
       source; the target scan is partition-pruned to them, the merge runs
       over ONLY those partitions, and the store links every untouched
       partition into the new version unchanged
-      (:meth:`TableStore.overwrite_partitions`) — merge cost becomes
+      (``carried=UNWRITTEN_PARTITIONS``) — merge cost becomes
       proportional to the churned partitions, not the table. Requires
       ``partition_by``; the first partition column must exist in the
       source and must not be updated (a row changing partition would need
-      its destination partition rewritten too); incompatible with ``txn``
-      (partition links commit directly).
+      its destination partition rewritten too).
     - ``validate_pruning``: enforce the pruned path's precondition that no
       source key already exists in the target under an UNTOUCHED partition
       (such a row would be misclassified as an insert and its old image
@@ -168,8 +167,6 @@ def merge_upsert(
     if prune_partitions:
         if not partition_by:
             raise ValueError("prune_partitions requires partition_by")
-        if txn is not None:
-            raise ValueError("prune_partitions is incompatible with txn")
         pcol = partition_by[0]
         if pcol not in src.columns:
             raise ValueError(f"source lacks partition column {pcol!r}")
@@ -180,7 +177,7 @@ def merge_upsert(
         # exists on both sides): under the path's contract source pcol ==
         # target pcol for matched rows, but if the contract is violated an
         # updated pcol would silently move rows across partition dirs.
-        upd_eff = update_cols or [
+        update_cols = update_cols or [
             c
             for c in target.columns
             if c not in keys and c != pcol and c in src.columns
@@ -189,11 +186,10 @@ def merge_upsert(
         # insert set is keys + update set, which usually excludes it; a
         # NULL partition would land outside every replaced dir and corrupt
         # the link set)
-        ins = insert_cols
-        if ins is None:
-            ins = list(dict.fromkeys(keys + upd_eff))
-        if pcol not in ins:
-            ins = [pcol, *ins]
+        if insert_cols is None:
+            insert_cols = list(dict.fromkeys(keys + update_cols))
+        if pcol not in insert_cols:
+            insert_cols = [pcol, *insert_cols]
         # the touched partition set is a bounded scalar list (days/years of
         # one batch), not a data collect
         pvals = [r[0] for r in src.select(pcol).distinct().collect()]
@@ -204,7 +200,7 @@ def merge_upsert(
                 f"the NULL partition (isin semantics); merge without "
                 f"prune_partitions or filter the NULLs"
             )
-        pruned = target.filter(F.col(pcol).isin(pvals))
+        rows = target.filter(F.col(pcol).isin(pvals))
         if validate_pruning and pcol not in keys:
             # precondition check: a source key living in an UNTOUCHED target
             # partition would be misclassified as an insert (the pruned scan
@@ -229,39 +225,25 @@ def merge_upsert(
                     f"old rows first (validate_pruning=False skips this "
                     f"check when partition stability is guaranteed)"
                 )
-        matched, inserted, result = merge_branches(
-            pruned,
-            src,
-            keys,
-            update_cols=upd_eff,
-            insert_cols=ins,
-            broadcast_source=broadcast_source,
+        # replaced partitions are read off the dirs the write produces
+        carried = UNWRITTEN_PARTITIONS
+    else:
+        base = store.data_path(target_table)
+        bounds = [(got[f"lo{i}"], got[f"hi{i}"]) for i in range(len(keys))]
+        touched, carried = _split_files(
+            store, target_table, target, src, keys, bounds, partition_by
         )
-        n_upd = matched.count() if count_rows else -1
-        n_ins = inserted.count() if count_rows else -1
-        # replaced partition specs are DERIVED from the directory names the
-        # staged write actually produces (overwrite_partitions(replaced=None))
-        # rather than formatted from collected Python values — str(v) does
-        # not reproduce Spark's partition-dir encoding for booleans
-        # ('True' vs 'true') or Hive percent-escaped characters (':' '/').
-        store.overwrite_partitions(result, target_table, partition_by, None)
-        return {"updated": n_upd, "inserted": n_ins}
-    base = store.data_path(target_table)
-    bounds = [(got[f"lo{i}"], got[f"hi{i}"]) for i in range(len(keys))]
-    touched, carried = _split_files(
-        store, target_table, target, src, keys, bounds, partition_by
-    )
-    # no file touched: a zero-row target lets Catalyst drop the joins and
-    # broadcasts, so the write is just the pinned source — one plan
-    touched_rows = (
-        spark.read.schema(target.schema)
-        .option("basePath", base)
-        .parquet(*[os.path.join(base, f) for f in touched])
-        if touched
-        else target.limit(0)
-    )
+        # no file touched: a zero-row target lets Catalyst drop the joins and
+        # broadcasts, so the write is just the pinned source — one plan
+        rows = (
+            spark.read.schema(target.schema)
+            .option("basePath", base)
+            .parquet(*[os.path.join(base, f) for f in touched])
+            if touched
+            else target.limit(0)
+        )
     matched, inserted, result = merge_branches(
-        touched_rows,
+        rows,
         src,
         keys,
         update_cols=update_cols,

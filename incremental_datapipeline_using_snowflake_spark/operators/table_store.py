@@ -39,6 +39,16 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructT
 # per-version schema record; Spark's readers skip ``_``-prefixed files
 SCHEMA_RECORD = "_schema.json"
 
+# ``carried`` selector for a partition overwrite (Delta ``replaceWhere`` /
+# dynamic partition overwrite): the new version carries every data file of
+# the current one whose top-level partition dir the staged write did not
+# produce. The replaced set is read off the written dir names, so it matches
+# Spark's partition-dir encoding exactly (``true``/``false``, Hive
+# percent-escaping of ':' '/' '=', ``__HIVE_DEFAULT_PARTITION__``), and a
+# partition ``df`` holds no rows for survives unchanged. A daily merge then
+# rewrites one day's partition, not the table.
+UNWRITTEN_PARTITIONS = "unwritten-partitions"
+
 
 def _as_nullable(dt: DataType) -> DataType:
     """``dt`` with every field, element and value nullable — the form a
@@ -188,18 +198,26 @@ class TableStore:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return self._read_dir(spark, self.data_path(name))
 
+    @staticmethod
+    def data_files(version_dir: str) -> list[str]:
+        """The ``.parquet`` data files of a version dir, as sorted paths
+        relative to it — a driver-side listing."""
+        return sorted(
+            os.path.relpath(os.path.join(root, f), version_dir)
+            for root, _dirs, files in os.walk(version_dir)
+            for f in files
+            if f.endswith(".parquet")
+        )
+
     def file_bounds(
         self, version_dir: str, cols: list[str]
     ) -> dict[str, dict[str, tuple | None]]:
         """:func:`_footer_bounds` of every data file of a version dir, keyed
         by its path relative to the dir. Driver-side footer reads only."""
-        out = {}
-        for root, _dirs, files in os.walk(version_dir):
-            for f in files:
-                if f.endswith(".parquet"):
-                    path = os.path.join(root, f)
-                    out[os.path.relpath(path, version_dir)] = _footer_bounds(path, cols)
-        return out
+        return {
+            f: _footer_bounds(os.path.join(version_dir, f), cols)
+            for f in self.data_files(version_dir)
+        }
 
     def describe(self, spark: SparkSession, name: str) -> DataFrame:
         """``DESC TABLE`` parity (reference ``loading_data_sp/function.py:30``):
@@ -362,34 +380,64 @@ class TableStore:
 
     def _stage_version(
         self,
-        df: DataFrame,
+        df: DataFrame | None,
         name: str,
         partition_by: list[str] | None = None,
         carried: Sequence[str] = (),
-    ) -> tuple[int, int | None]:
-        """Write a fully-formed new version directory WITHOUT moving the
-        pointer; returns (new_version, previous_pointer). ``carried`` lists
-        data files of the current version (paths relative to its dir) that
-        join the new version unchanged, hardlinked under their own names —
-        a copy-on-write merge writes only what it rewrote."""
+        base: str | None = None,
+        txn: _StagedTransaction | None = None,
+    ) -> None:
+        """The one way a version directory is built. Allocates the next
+        version number, writes ``df`` (None: no new rows), hardlinks the
+        ``carried`` data files of ``base``'s current version (default: this
+        table's) under their own names, records the layout and schema, then
+        commits — or, given ``txn``, hands the staged version to it.
+
+        ``carried`` lists paths relative to the base version's dir (a
+        copy-on-write merge carries the files it did not rewrite), or is
+        :data:`UNWRITTEN_PARTITIONS` (partition overwrite, see there)."""
         tdir = self.table_dir(name)
         os.makedirs(tdir, exist_ok=True)
         prev = self.current_version(name)
         # allocate past every on-disk dir (committed OR orphan-staged), not
         # just the pointer: after a restore() the pointer can sit below a
         # still-retained version, and reusing a number would clobber live
-        # history (or collide with a dying writer's staged dir)
+        # history (or collide with a dead writer's staged dir, e.g. a
+        # crashed clone's links)
         new = max([prev or 0, *self._all_version_dirs(name)]) + 1
         target = os.path.join(tdir, f"v={new:06d}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
+        base_dir = self.data_path(base or name) if self.exists(base or name) else None
+        if df is not None:
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(target)
+        os.makedirs(target, exist_ok=True)
+        if carried == UNWRITTEN_PARTITIONS:
+            # read off the dirs the write produced, so Spark's own
+            # partition-dir encoding decides what is replaced; a file
+            # outside every partition dir is never carried
+            written = {
+                e for e in os.listdir(target)
+                if "=" in e and os.path.isdir(os.path.join(target, e))
+            }
+            carried = [
+                f for f in (self.data_files(base_dir) if base_dir else [])
+                if os.sep in f and f.split(os.sep)[0] not in written
+            ]
         if carried:
-            _link_files(os.path.join(tdir, f"v={prev:06d}"), target, carried)
+            _link_files(base_dir, target, carried)
         self._mark_partitioning(target, partition_by)
-        self._record_written_schema(df, target, partition_by)
-        return new, prev
+        if df is not None:
+            self._record_written_schema(df, target, partition_by)
+        elif (schema := self._schema_record(base_dir)) is not None:
+            self._write_schema_record(target, schema)
+        if txn is not None:
+            txn.staged.append((name, new))
+            txn.prev.setdefault(name, prev)
+        else:
+            self._commit_version(name, new)
+            self._gc_versions(name, new, prev)
 
     def _gc_versions(self, name: str, new: int, prev: int | None) -> None:
         # GC versions beyond the retention window (the previous pointer's
@@ -422,84 +470,9 @@ class TableStore:
     ) -> None:
         """Full-table replace via stage-and-swap (``df`` plus the
         ``carried`` files, see :meth:`_stage_version`); keeps one previous
-        version."""
-        new, prev = self._stage_version(df, name, partition_by, carried)
-        self._commit_version(name, new)
-        self._gc_versions(name, new, prev)
-
-    def overwrite_partitions(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_by: list[str],
-        replaced: list[str] | None,
-    ) -> None:
-        """Partition-scoped overwrite (Delta ``replaceWhere`` / dynamic
-        partition overwrite): a NEW version whose ``replaced`` partition
-        dirs come from ``df`` and whose other partitions are HARDLINKED
-        from the current version — no data movement, no rewrite, and the
-        links keep inodes alive even after the old version dir is GC'd.
-
-        ``replaced`` holds relative partition paths (``"YEAR=2025"``);
-        ``df`` must contain only rows belonging to those partitions (the
-        caller computes the touched set — see merge_upsert's pruned path).
-        ``replaced=None`` is DERIVED mode (Spark's own dynamic-partition-
-        overwrite semantics): the replaced set is read off the directory
-        names the staged write actually produced, so it matches Spark's
-        partition-dir encoding exactly (booleans 'true'/'false', Hive
-        percent-escaping of ':' '/' '=', NULL as
-        ``__HIVE_DEFAULT_PARTITION__``) — formatting collected Python
-        values with str() cannot reproduce these. In derived mode a
-        partition for which ``df`` holds no rows survives unchanged.
-        At 100 TB this is the difference between a daily merge rewriting
-        one day's partition and rewriting the table: cost ∝ churn.
-        Readers keep full snapshot isolation — the pointer flip is atomic
-        and old-version plans still resolve their files.
-        """
-        if not self.exists(name):
-            self.overwrite(df, name, partition_by=partition_by)
-            return
-        tdir = self.table_dir(name)
-        prev = self.current_version(name)
-        new = max([prev or 0, *self._all_version_dirs(name)]) + 1
-        target = os.path.join(tdir, f"v={new:06d}")
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(target)
-        self._mark_partitioning(target, partition_by)
-        written = {
-            e for e in os.listdir(target)
-            if "=" in e and os.path.isdir(os.path.join(target, e))
-        }
-        if replaced is None:
-            replaced_set = written  # derived: replace exactly what was written
-        else:
-            replaced_set = set(replaced)
-            # a row OUTSIDE the replaced set would coexist with that
-            # partition's links — silent duplication; the check is one
-            # listing of the (few) partition dirs just written, not a data
-            # scan
-            stray = {
-                w for w in written
-                if w not in replaced_set and w.split(os.sep)[0] not in replaced_set
-            }
-            if stray:
-                shutil.rmtree(target, ignore_errors=True)
-                raise ValueError(
-                    f"overwrite_partitions({name}): frame contains partitions "
-                    f"{sorted(stray)} outside replaced={sorted(replaced_set)}"
-                )
-        cur_dir = os.path.join(tdir, f"v={prev:06d}")
-        carried = []
-        for root, _dirs, files in os.walk(cur_dir):
-            rel = os.path.relpath(root, cur_dir)
-            # top-level partition component decides replacement (nested
-            # partition_by replaces whole subtrees of the first component)
-            if rel == "." or rel.split(os.sep)[0] in replaced_set or rel in replaced_set:
-                continue
-            carried += [os.path.join(rel, f) for f in files if f.endswith(".parquet")]
-        _link_files(cur_dir, target, carried)
-        self._record_written_schema(df, target, partition_by)
-        self._commit_version(name, new)
-        self._gc_versions(name, new, prev)
+        version. ``carried=UNWRITTEN_PARTITIONS`` makes it a partition
+        overwrite."""
+        self._stage_version(df, name, partition_by, carried)
 
     # -- time travel -------------------------------------------------------
     def _all_version_dirs(self, name: str) -> list[int]:
@@ -574,30 +547,21 @@ class TableStore:
         independently (every later write goes through normal stage-and-swap
         on immutable files — a clone can never see the other's edits).
         Metadata (partition layout marker, schema record, comment) is
-        copied so the clone reads identically to the source."""
+        copied so the clone reads identically to the source. A rerun after
+        a clone that died before its commit stages past the orphan, which
+        the commit's GC then sweeps."""
         if not self.exists(src):
             raise FileNotFoundError(f"clone: source table {src!r} does not exist")
         if self.exists(dst):
             raise ValueError(f"clone: target table {dst!r} already exists")
-        src_data = self.data_path(src)
-        target = os.path.join(self.table_dir(dst), "v=000001")
-        for root, _dirs, files in os.walk(src_data):
-            rel = os.path.relpath(root, src_data)
-            dst_dir = target if rel == "." else os.path.join(target, rel)
-            os.makedirs(dst_dir, exist_ok=True)
-            for fname in files:
-                s, d = os.path.join(root, fname), os.path.join(dst_dir, fname)
-                if fname.endswith(".parquet"):
-                    try:
-                        os.link(s, d)  # zero-copy share
-                    except OSError:
-                        shutil.copy2(s, d)  # cross-device fallback
-                else:
-                    shutil.copy2(s, d)  # tiny markers (_PARTITIONING.json, _schema.json)
         cf = self._comment_file(src)
         if os.path.exists(cf):
+            os.makedirs(self.table_dir(dst), exist_ok=True)
             shutil.copy2(cf, self._comment_file(dst))
-        self._commit_version(dst, 1)
+        self._stage_version(
+            None, dst, self.partitioning(src),
+            self.data_files(self.data_path(src)), base=src,
+        )
 
     def restore(self, name: str, version: int) -> None:
         """Roll the table back to a retained committed version by pointer
@@ -867,12 +831,7 @@ class TableStore:
         from math import ceil
 
         src = self.data_path(name)
-        sizes = [
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(src)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
+        sizes = [os.path.getsize(os.path.join(src, f)) for f in self.data_files(src)]
         n_out = max(1, ceil(sum(sizes) / target_file_bytes))
         # preserve the recorded layout unless the caller overrides it
         partition_by = partition_by or self.partitioning(name)
@@ -882,10 +841,7 @@ class TableStore:
         else:
             df = df.repartition(n_out)
         self.overwrite(df, name, partition_by=partition_by)
-        out = self.data_path(name)
-        files_after = sum(
-            1 for r, _, fs in os.walk(out) for f in fs if f.endswith(".parquet")
-        )
+        files_after = len(self.data_files(self.data_path(name)))
         return {"files_before": len(sizes), "files_after": files_after}
 
     def drop(self, name: str) -> None:
@@ -928,7 +884,8 @@ class _StagedTransaction:
     def __init__(self, store: TableStore):
         self._store = store
         self.staged: list[tuple[str, int]] = []
-        self._prev: dict[str, int | None] = {}
+        # each table's pointer before this transaction's first stage
+        self.prev: dict[str, int | None] = {}
 
     def overwrite(
         self,
@@ -937,9 +894,7 @@ class _StagedTransaction:
         partition_by: list[str] | None = None,
         carried: Sequence[str] = (),
     ) -> None:
-        new, prev = self._store._stage_version(df, name, partition_by, carried)
-        self.staged.append((name, new))
-        self._prev.setdefault(name, prev)
+        self._store._stage_version(df, name, partition_by, carried, txn=self)
 
     def staged_dir(self, name: str) -> str:
         """The version dir this transaction last staged for ``name``."""
@@ -957,4 +912,4 @@ class _StagedTransaction:
     def finish_gc(self, name: str) -> None:
         current = self._store.current_version(name)
         if current is not None:
-            self._store._gc_versions(name, current, self._prev.get(name))
+            self._store._gc_versions(name, current, self.prev.get(name))

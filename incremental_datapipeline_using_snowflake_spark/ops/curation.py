@@ -86,6 +86,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.table_store import _link_files
 from ..session import byte_sized_partitions, local_rows_df
 from .dedup import (
     _band_rows,
@@ -2061,14 +2062,7 @@ def _stage_rebased_base(
         )
 
     # -- assemble tmp/data: hardlink carried files, move staged shards ---
-    for rel in sorted(r["file"] for r in carried_rows):
-        src_path = os.path.join(data_src, rel)
-        dst = os.path.join(data_dst, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        try:
-            os.link(src_path, dst)  # zero-copy share, same inode
-        except OSError:
-            shutil.copy2(src_path, dst)
+    _link_files(data_src, data_dst, sorted(r["file"] for r in carried_rows))
     staged_rel: dict[str, str] = {}
     for root, _dirs, files in os.walk(staged):
         rel = os.path.relpath(root, staged)

@@ -157,17 +157,12 @@ class Orchestrator:
         # rows at or below the committed named offset, so the checkpoint's
         # path-based replay of compacted files merges nothing and the
         # empty-stream gate still reports honestly.
-        import os
-
         from ..operators.changelog import Changelog
 
         log = Changelog(self.store, P.RAW_TABLE, embedded=True)
         if not self.store.exists(log.log_table):
             return None
-        data_dir = self.store.data_path(log.log_table)
-        n_files = sum(
-            1 for r, _, fs in os.walk(data_dir) for f in fs if f.endswith(".parquet")
-        )
+        n_files = len(self.store.data_files(self.store.data_path(log.log_table)))
         if n_files <= self.compact_after_files:
             return None
         # the changelog is embedded in RAW: the rewrite must keep the

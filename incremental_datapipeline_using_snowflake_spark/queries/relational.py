@@ -686,7 +686,8 @@ ORDER BY o_orderkey
 # a year-partitioned orders slice takes an incremental batch touching 1997
 # only, via merge_upsert(prune_partitions=True) — the target scan is
 # partition-pruned to the churned year and every other year's files are
-# hardlinked into the new version unchanged (TableStore.overwrite_partitions).
+# hardlinked into the new version unchanged (TableStore.overwrite with
+# carried=UNWRITTEN_PARTITIONS).
 # Oracle = the same upsert as set algebra. tests pin the inode sharing; this
 # query pins the RESULT through the driver's hash gate.
 # ---------------------------------------------------------------------------

@@ -715,12 +715,15 @@ def test_delete_update_where_and_purge(spark, tmp_path):
 
 
 def test_overwrite_partitions_links_untouched(spark, tmp_path):
-    """Partition-scoped overwrite: replaced partitions come from the new
-    frame, untouched partitions are HARDLINKED from the previous version
-    (same inode — zero copy), and the result reads correctly."""
+    """Partition-scoped overwrite (``carried=UNWRITTEN_PARTITIONS``):
+    replaced partitions come from the new frame, untouched partitions are
+    HARDLINKED from the previous version (same inode — zero copy), and the
+    result reads correctly."""
     import os
 
-    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
+    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
+        UNWRITTEN_PARTITIONS,
+    )
 
     store = TableStore(root=str(tmp_path))
     name = "ns.pover"
@@ -739,7 +742,7 @@ def test_overwrite_partitions_links_untouched(spark, tmp_path):
 
     repl = spark.createDataFrame([(2025, 1, 99.0), (2025, 2, 98.0)],
                                  "year int, k int, v double")
-    store.overwrite_partitions(repl, name, ["year"], ["year=2025"])
+    store.overwrite(repl, name, partition_by=["year"], carried=UNWRITTEN_PARTITIONS)
 
     got = sorted(tuple(r) for r in store.read(spark, name).select("year", "k", "v").collect())
     assert got == [(2024, 1, 10.0), (2024, 2, 20.0), (2025, 1, 99.0), (2025, 2, 98.0)]
@@ -757,11 +760,14 @@ def test_overwrite_partitions_links_untouched(spark, tmp_path):
 def test_merge_upsert_prune_partitions_equivalent(spark, tmp_path):
     """prune_partitions merge == full merge row-for-row, while only the
     churned partition is rewritten (untouched partition files keep their
-    inodes across the new version)."""
+    inodes across the new version). Staged in a transaction, the pruned
+    merge publishes together with another table's overwrite, and a crash
+    inside the block moves neither pointer and leaves no staged dir."""
     import os
 
     from incremental_datapipeline_using_snowflake_spark.operators import TableStore
     from incremental_datapipeline_using_snowflake_spark.operators.merge import merge_upsert
+    from incremental_datapipeline_using_snowflake_spark.session import local_rows_df
 
     rows = [(y, k, float(k + y)) for y in (2023, 2024, 2025) for k in range(50)]
     source_rows = [(2025, k, 1000.0 + k) for k in range(25, 75)]  # updates + inserts
@@ -777,11 +783,12 @@ def test_merge_upsert_prune_partitions_equivalent(spark, tmp_path):
         spark, full_store, "ns.t", source, keys=["year", "k"],
         partition_by=["year"],
     )
-    before_inodes = {
-        f: os.stat(os.path.join(r, f)).st_ino
-        for r, _d, fs in os.walk(os.path.join(pruned_store.data_path("ns.t"), "year=2023"))
-        for f in fs if f.endswith(".parquet")
-    }
+    def inodes(part):
+        pdir = os.path.join(pruned_store.data_path("ns.t"), part)
+        return {f: os.stat(os.path.join(pdir, f)).st_ino
+                for f in TableStore.data_files(pdir)}
+
+    before_inodes = inodes("year=2023")
     res_pruned = merge_upsert(
         spark, pruned_store, "ns.t", source, keys=["year", "k"],
         partition_by=["year"], prune_partitions=True,
@@ -791,14 +798,40 @@ def test_merge_upsert_prune_partitions_equivalent(spark, tmp_path):
     a = sorted(tuple(r) for r in full_store.read(spark, "ns.t").select("year", "k", "v").collect())
     b = sorted(tuple(r) for r in pruned_store.read(spark, "ns.t").select("year", "k", "v").collect())
     assert a == b and len(a) == 175
-    after_inodes = {
-        f: os.stat(os.path.join(r, f)).st_ino
-        for r, _d, fs in os.walk(os.path.join(pruned_store.data_path("ns.t"), "year=2023"))
-        for f in fs if f.endswith(".parquet")
-    }
-    assert after_inodes == before_inodes  # 2023 not rewritten
+    assert inodes("year=2023") == before_inodes  # 2023 not rewritten
 
     import pytest as _pytest
+
+    # the pruned merge inside a transaction, next to a second table's write
+    def mm(x):
+        return local_rows_df(spark, [(x,)], "hi double")
+
+    pruned_store.overwrite(mm(0.0), "ns.mm")
+    src2 = spark.createDataFrame([(2024, 3, 2003.0), (2024, 77, 2077.0)],
+                                 "year int, k int, v double")
+
+    def merge_txn(crash=False):
+        with pruned_store.transaction("pm") as txn:
+            merge_upsert(spark, pruned_store, "ns.t", src2, keys=["year", "k"],
+                         partition_by=["year"], prune_partitions=True, txn=txn)
+            txn.overwrite(mm(2077.0), "ns.mm")
+            if crash:
+                raise RuntimeError("crash after staging")
+
+    ptrs = {t: pruned_store.current_version(t) for t in ("ns.t", "ns.mm")}
+    dirs = {t: pruned_store._all_version_dirs(t) for t in ptrs}
+    untouched = {p: inodes(p) for p in ("year=2023", "year=2025")}
+    with _pytest.raises(RuntimeError, match="crash after staging"):
+        merge_txn(crash=True)
+    assert {t: pruned_store.current_version(t) for t in ptrs} == ptrs
+    assert {t: pruned_store._all_version_dirs(t) for t in ptrs} == dirs
+    merge_txn()
+    assert all(pruned_store.current_version(t) > v for t, v in ptrs.items())
+    assert pruned_store.read(spark, "ns.mm").collect()[0]["hi"] == 2077.0
+    want = {(y, k): v for y, k, v in b} | {(2024, 3): 2003.0, (2024, 77): 2077.0}
+    got = {(r["year"], r["k"]): r["v"] for r in pruned_store.read(spark, "ns.t").collect()}
+    assert got == want
+    assert {p: inodes(p) for p in untouched} == untouched
 
     with _pytest.raises(ValueError, match="requires partition_by"):
         merge_upsert(spark, pruned_store, "ns.t", source, keys=["year", "k"],
@@ -847,11 +880,11 @@ def test_overwrite_partitions_crash_before_commit(spark, tmp_path, monkeypatch):
     before the pointer flip leaves the table untouched (old version still
     served, staged dir invisible) and the next overwrite sweeps the
     orphan."""
-    import os
-
     import pytest as _pytest
 
-    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
+    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
+        UNWRITTEN_PARTITIONS,
+    )
 
     store = TableStore(root=str(tmp_path))
     name = "ns.pcrash"
@@ -866,9 +899,9 @@ def test_overwrite_partitions_crash_before_commit(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(TableStore, "_commit_version", crash)
     with _pytest.raises(RuntimeError, match="died before flip"):
-        store.overwrite_partitions(
+        store.overwrite(
             spark.createDataFrame([(2025, 99.0)], "year int, v double"),
-            name, ["year"], ["year=2025"],
+            name, partition_by=["year"], carried=UNWRITTEN_PARTITIONS,
         )
     monkeypatch.undo()
 
@@ -877,9 +910,9 @@ def test_overwrite_partitions_crash_before_commit(spark, tmp_path, monkeypatch):
     assert got == {2024: 1.0, 2025: 2.0}  # old data intact
     staged = [v for v in store._all_version_dirs(name) if v not in store.versions(name)]
     assert staged  # orphan exists on disk...
-    store.overwrite_partitions(
+    store.overwrite(
         spark.createDataFrame([(2025, 50.0)], "year int, v double"),
-        name, ["year"], ["year=2025"],
+        name, partition_by=["year"], carried=UNWRITTEN_PARTITIONS,
     )
     # ...and is swept by the next successful commit's GC
     assert all(
@@ -937,10 +970,10 @@ def test_merge_prune_partitions_rejects_moved_keys(spark, tmp_path):
 
 def test_merge_prune_partitions_nonplain_partition_values(spark, tmp_path):
     """ADVICE r05: replaced partition specs are derived from the staged
-    directory names (overwrite_partitions derived mode), so partition
+    directory names (``carried=UNWRITTEN_PARTITIONS``), so partition
     values whose str() form differs from Spark's dir encoding — Hive
     percent-escaped characters like ':' (%3A) and '/' (%2F) — merge fine
-    instead of tripping the stray-partition rejection. (Boolean partition
+    and their untouched partitions stay linked. (Boolean partition
     columns can't hit this: Spark's partition discovery reads them back as
     strings, so a boolean-typed source never joins in the first place.)"""
     import os
@@ -1058,6 +1091,41 @@ def test_clone_zero_copy_and_diverge(spark, tmp_path):
     # dropping the source leaves the clone fully readable (shared inodes)
     store.drop("ns.src")
     assert store.read(spark, "ns.dup").count() == 40
+
+
+def test_clone_rerun_after_crash_before_commit(spark, tmp_path, monkeypatch):
+    """A clone that dies before its commit leaves an uncommitted version
+    dir of hardlinks to the source's files. The rerun stages past it
+    instead of linking onto the same inodes, commits, and its GC sweeps
+    the orphan: the clone reads like the source and shares its inodes."""
+    store = TableStore(root=str(tmp_path))
+    df = spark.createDataFrame(
+        [(y, k, float(k)) for y in (2024, 2025) for k in range(5)],
+        "year int, k int, v double",
+    )
+    store.overwrite(df, "ns.src", partition_by=["year"])
+
+    def crash(self, n, v):
+        raise RuntimeError("died before flip")
+
+    monkeypatch.setattr(TableStore, "_commit_version", crash)
+    with pytest.raises(RuntimeError, match="died before flip"):
+        store.clone("ns.src", "ns.dup")
+    monkeypatch.undo()
+    assert not store.exists("ns.dup") and store._all_version_dirs("ns.dup") == [1]
+
+    store.clone("ns.src", "ns.dup")
+    assert store._all_version_dirs("ns.dup") == [store.current_version("ns.dup")]
+    assert sorted(store.read(spark, "ns.dup").collect()) == sorted(
+        store.read(spark, "ns.src").collect()
+    )
+    assert store.partitioning("ns.dup") == ["year"]
+
+    def inodes(name):
+        d = store.data_path(name)
+        return {f: os.stat(os.path.join(d, f)).st_ino for f in store.data_files(d)}
+
+    assert inodes("ns.dup") == inodes("ns.src")
 
 
 def test_timestamp_time_travel(spark, tmp_path):
