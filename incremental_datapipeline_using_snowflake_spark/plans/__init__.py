@@ -1,7 +1,5 @@
 from .pipeline import (
     analytics,
-    analytics_daily,
-    analytics_weekly,
     bootstrap,
     harmonize,
     load_raw,
@@ -13,7 +11,5 @@ __all__ = [
     "load_raw",
     "harmonize",
     "analytics",
-    "analytics_daily",
-    "analytics_weekly",
     "Orchestrator",
 ]

@@ -16,6 +16,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from ..operators.changelog import Changelog
 from ..operators.table_store import TableStore
 from . import pipeline as P
 
@@ -33,9 +34,6 @@ class Orchestrator:
     # Daily appends leave one small file per batch; unchecked, a year of
     # runs makes every pending() scan listing-bound.
     compact_after_files: int = 64
-    # SP3 via churn-proportional recompute (analytics as its own changelog
-    # consumer); falls back to full recompute on first run / bounds moves.
-    incremental_analytics: bool = True
     _history: list[dict] = field(default_factory=list)
     _pending_log: list[dict] = field(default_factory=list)
 
@@ -126,18 +124,23 @@ class Orchestrator:
         results["harmonized"] = msg
         if not ok:
             return results
-        if msg == "No data in stream to process":
+        log = Changelog(self.store, P.RAW_TABLE, embedded=True)
+        # an empty stream skips analytics — unless a run that crashed after
+        # harmonize left analytics behind what harmonize already merged
+        # (both offsets are changelog metadata: no Spark job)
+        if (
+            msg == "No data in stream to process"
+            and log.offset("analytics") >= log.offset("harmonize")
+        ):
             results["analytics"] = "skipped (stream empty)"
             return results
 
-        # works in both modes: the streaming drain mirrors its consumed
-        # high-water mark into the named "harmonize" offset that
-        # incremental analytics caps its window at
-        analytics_fn = (
-            P.analytics_incremental if self.incremental_analytics else P.analytics
-        )
+        # SP3 as its own changelog consumer, churn-proportional with a full
+        # recompute on first run / bounds moves. Works in both modes: the
+        # streaming drain mirrors its consumed high-water mark into the
+        # named "harmonize" offset that analytics caps its window at
         ok, msg = self._run_stage(
-            "co2_analytics_task", lambda: analytics_fn(self.spark, self.store)
+            "co2_analytics_task", lambda: P.analytics_incremental(self.spark, self.store)
         )
         results["analytics"] = msg
 
@@ -157,8 +160,6 @@ class Orchestrator:
         # rows at or below the committed named offset, so the checkpoint's
         # path-based replay of compacted files merges nothing and the
         # empty-stream gate still reports honestly.
-        from ..operators.changelog import Changelog
-
         log = Changelog(self.store, P.RAW_TABLE, embedded=True)
         if not self.store.exists(log.log_table):
             return None

@@ -14,6 +14,9 @@ Layer mapping (reference ``config/dev.yml:9-14``):
 
 from __future__ import annotations
 
+import datetime
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,8 +49,6 @@ def bootstrap(store: TableStore) -> None:
 # reference: udfs_and_spoc/loading_co2_data_sp/loading_data_sp/function.py:8-398
 # ---------------------------------------------------------------------------
 def _watermark_file(store: TableStore) -> str:
-    import os
-
     return os.path.join(store.table_dir(RAW_TABLE), "_WATERMARK")
 
 
@@ -66,9 +67,6 @@ def current_watermark(spark: SparkSession, store: TableStore) -> object | None:
     """
     if not store.exists(RAW_TABLE):
         return None
-    import datetime
-    import os
-
     wf = _watermark_file(store)
     if os.path.exists(wf):
         with open(wf) as f:
@@ -125,8 +123,6 @@ def load_raw(
     # watermark sidecar AFTER rows land: a crash in between re-ingests the
     # batch (dates > stale watermark), and the DATE-keyed merges downstream
     # make that replay idempotent (SURVEY §7.3)
-    import os
-
     wf = _watermark_file(store)
     wm_new = max_d if wm is None else max(wm, max_d)
     tmp = wf + ".tmp"
@@ -174,18 +170,17 @@ def _co2_bounds(spark: SparkSession, store: TableStore, version_dir: str) -> tup
     )
 
 
-def harmonize(spark: SparkSession, store: TableStore, consumer: str = "harmonize") -> str:
-    log = Changelog(store, RAW_TABLE, embedded=True)
-    pending = log.pending(spark, consumer)
-    if pending is None:
-        return "No data in stream to process"  # empty-stream short-circuit (:119-124)
-    hi = _stream_high_water(log, pending)
-    if hi <= log.offset(consumer):
-        return "No data in stream to process"
+def _harmonize_rows(spark: SparkSession, store: TableStore, rows: DataFrame) -> None:
+    """SP2's write, shared by the batch :func:`harmonize` and the streaming
+    drain: project a window of changelog rows to the HARMONIZED schema and
+    MERGE it on DATE (J1), then fold the new version's MIN/MAX into the A2
+    ``_CO2_MINMAX`` scalar cache (reference ``:81-87``). Both writes publish
+    in ONE transaction (staged version dirs + commit journal): a crash
+    between them can never leave HARMONIZED moved with the cache stale."""
+    from ..session import local_rows_df
 
     src = (
-        pending.filter(F.col("_row_id") <= hi)  # later appends wait for the next run
-        .filter(F.col("_action") == "INSERT")  # P8 metadata filter
+        rows.filter(F.col("_action") == "INSERT")  # P8 metadata filter
         .withColumn("DATE", F.make_date("YEAR", "MONTH", "DAY"))  # P2/P3
         .select(
             "DATE",
@@ -196,13 +191,6 @@ def harmonize(spark: SparkSession, store: TableStore, consumer: str = "harmonize
             F.current_timestamp().alias("META_UPDATED_AT"),  # P6 audit column
         )
     )
-
-    # J1: MERGE on DATE (update all cols / insert). HARMONIZED and its A2
-    # _CO2_MINMAX scalar cache (:81-87) publish in ONE transaction (staged
-    # version dirs + commit journal): a crash between the two writes can
-    # no longer leave analytics normalizing against stale bounds.
-    from ..session import local_rows_df
-
     with store.transaction("harmonize") as txn:
         merge_upsert(
             spark, store, HARMONIZED_TABLE, src, keys=["DATE"],
@@ -216,7 +204,18 @@ def harmonize(spark: SparkSession, store: TableStore, consumer: str = "harmonize
         )
         txn.overwrite(minmax, MINMAX_TABLE)
 
-    log.commit(consumer, hi)  # offset advances with the consuming merge
+
+def harmonize(spark: SparkSession, store: TableStore) -> str:
+    log = Changelog(store, RAW_TABLE, embedded=True)
+    pending = log.pending(spark, "harmonize")
+    if pending is None:
+        return "No data in stream to process"  # empty-stream short-circuit (:119-124)
+    hi = _stream_high_water(log, pending)
+    if hi <= log.offset("harmonize"):
+        return "No data in stream to process"
+    # later appends wait for the next run
+    _harmonize_rows(spark, store, pending.filter(F.col("_row_id") <= hi))
+    log.commit("harmonize", hi)  # offset advances with the consuming merge
     return "CO2 data harmonization complete"
 
 
@@ -225,21 +224,6 @@ def harmonize(spark: SparkSession, store: TableStore, consumer: str = "harmonize
 # (date_trunc rollup + kernels) statistics, both MERGEd on their keys.
 # reference: udfs_and_spoc/co2_analytical_sp/co2_analytical_sp/function.py
 # ---------------------------------------------------------------------------
-def _minmax_lits(spark: SparkSession, store: TableStore) -> tuple[float, float]:
-    """Scalar-cache read with the reference's inline-aggregate fallback
-    (``co2_analytical_sp/function.py:95-102,162-175``)."""
-    if store.exists(MINMAX_TABLE):
-        row = store.read(spark, MINMAX_TABLE).first()
-        if row is not None and row["MIN_CO2"] is not None:
-            return float(row["MIN_CO2"]), float(row["MAX_CO2"])
-    row = (
-        store.read(spark, HARMONIZED_TABLE)
-        .agg(F.min("CO2_PPM").alias("mn"), F.max("CO2_PPM").alias("mx"))
-        .first()
-    )
-    return float(row["mn"]), float(row["mx"])
-
-
 def daily_stats_df(harmonized: DataFrame, min_co2: float, max_co2: float) -> DataFrame:
     """W1 lag + U1/U3/U4 kernels -> daily stats projection
     (reference ``co2_analytical_sp/function.py:105-125``).
@@ -296,39 +280,42 @@ def weekly_stats_df(harmonized: DataFrame, min_co2: float, max_co2: float) -> Da
     )
 
 
-def analytics_daily(
+def _recompute(
     spark: SparkSession,
     store: TableStore,
-    harmonized: DataFrame | None = None,
-    minmax: tuple[float, float] | None = None,
-) -> str:
-    harmonized = harmonized if harmonized is not None else store.read(spark, HARMONIZED_TABLE)
-    mn, mx = minmax if minmax is not None else _minmax_lits(spark, store)
-    result = daily_stats_df(harmonized, mn, mx)
-    merge_upsert(  # J2: MERGE on DATE (helper cols excluded by projection)
-        spark, store, DAILY_TABLE, result, keys=["DATE"], count_rows=False
+    bounds: tuple,
+    dates: dict[datetime.date, datetime.date | None] | None = None,
+) -> None:
+    """The one DAILY (J2: MERGE on DATE) and WEEKLY (J3: MERGE on
+    WEEK_START) write, normalized against HARMONIZED's CO2 ``bounds``.
+
+    ``dates=None`` recomputes every row. Otherwise ``dates`` maps each date
+    to recompute to its predecessor in the series (None for the first
+    date) — the lag input its daily row needs — and the weekly rollup
+    recomputes just their ISO weeks (ISO Monday = d - weekday; there is no
+    cross-week lag). Every filter is an IN-list literal, pushed into the
+    parquet scans with no broadcast exchange to materialize."""
+    mn, mx = bounds
+    harmonized = store.read(spark, HARMONIZED_TABLE)
+    daily_rows = weekly_rows = harmonized
+    if dates is not None:
+        need = set(dates) | {p for p in dates.values() if p is not None}
+        daily_rows = harmonized.filter(F.col("DATE").isin(sorted(need)))
+        weeks = {d - datetime.timedelta(days=d.weekday()) for d in dates}
+        weekly_rows = harmonized.filter(
+            F.date_trunc("week", F.col("DATE")).cast("date").isin(sorted(weeks))
+        )
+    daily = daily_stats_df(daily_rows, mn, mx)
+    if dates is not None:  # the predecessor rows are lag input only
+        daily = daily.filter(F.col("DATE").isin(sorted(dates)))
+    merge_upsert(spark, store, DAILY_TABLE, daily, keys=["DATE"], count_rows=False)
+    merge_upsert(
+        spark, store, WEEKLY_TABLE, weekly_stats_df(weekly_rows, mn, mx),
+        keys=["WEEK_START"], count_rows=False,
     )
-    return "Daily analytics complete"
 
 
-def analytics_weekly(
-    spark: SparkSession,
-    store: TableStore,
-    harmonized: DataFrame | None = None,
-    minmax: tuple[float, float] | None = None,
-) -> str:
-    harmonized = harmonized if harmonized is not None else store.read(spark, HARMONIZED_TABLE)
-    mn, mx = minmax if minmax is not None else _minmax_lits(spark, store)
-    result = weekly_stats_df(harmonized, mn, mx)
-    merge_upsert(  # J3: MERGE on WEEK_START
-        spark, store, WEEKLY_TABLE, result, keys=["WEEK_START"], count_rows=False
-    )
-    return "Weekly analytics complete"
-
-
-def analytics_incremental(
-    spark: SparkSession, store: TableStore, consumer: str = "analytics"
-) -> str:
+def analytics_incremental(spark: SparkSession, store: TableStore) -> str:
     """SP3 with churn-proportional recompute — the incremental form the
     repo is named for.
 
@@ -350,11 +337,8 @@ def analytics_incremental(
     Offset semantics match harmonize: commit after the merges land;
     replay is idempotent because every merge keys on its date key.
     """
-    import json as _json
-    import os
-
     log = Changelog(store, RAW_TABLE, embedded=True)
-    pending = log.pending(spark, consumer)
+    pending = log.pending(spark, "analytics")
     if pending is None:
         return "No data in stream to process"
     # never run ahead of harmonize: rows it has not merged yet are not in
@@ -363,118 +347,59 @@ def analytics_incremental(
     h_off = log.offset("harmonize")
     pending = pending.filter(F.col("_row_id") <= h_off)
     hi = min(_stream_high_water(log, pending), h_off)
-    if hi <= log.offset(consumer):
+    if hi <= log.offset("analytics"):
         return "No data in stream to process"
 
+    # the bounds harmonize's transaction wrote to _CO2_MINMAX, re-folded
+    # from the same footers (no Spark job); _BOUNDS records the bounds the
+    # stored stats were last normalized against
+    bounds = _co2_bounds(spark, store, store.data_path(HARMONIZED_TABLE))
     bounds_file = os.path.join(store.table_dir(DAILY_TABLE), "_BOUNDS")
-
-    def _commit_bounds(mn: float, mx: float) -> None:
-        tmp = bounds_file + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump([mn, mx], f)
-        os.replace(tmp, bounds_file)
-
-    mn, mx = _minmax_lits(spark, store)
-    if not (store.exists(DAILY_TABLE) and store.exists(WEEKLY_TABLE)):
-        out = analytics(spark, store)
-        _commit_bounds(mn, mx)
-        log.commit(consumer, hi)
-        return f"{out} (full: first run)"
-
-    # NORMALIZED_* columns depend on the GLOBAL bounds: if this batch
-    # moved them since the last analytics pass, every stored row's
-    # normalized value is stale — only a full recompute is correct
-    # (the reference recomputes fully every run for this reason).
     prev = None
     if os.path.exists(bounds_file):
         with open(bounds_file) as f:
-            prev = tuple(_json.load(f))
-    if prev != (mn, mx):
-        out = analytics(spark, store)
-        _commit_bounds(mn, mx)
-        log.commit(consumer, hi)
-        return f"{out} (full: bounds moved)"
+            prev = tuple(json.load(f))
+    if not (store.exists(DAILY_TABLE) and store.exists(WEEKLY_TABLE)):
+        out = f"{analytics(spark, store)} (full: first run)"
+    elif prev != bounds:
+        # NORMALIZED_* columns depend on the GLOBAL bounds: this batch
+        # moved them, so every stored row's normalized value is stale
+        out = f"{analytics(spark, store)} (full: bounds moved)"
+    else:
+        affected = pending.filter(F.col("_action") == "INSERT").select(
+            F.make_date("YEAR", "MONTH", "DAY").alias("_a")
+        ).distinct()
+        # DATE-only neighbor pass: global order over the daily series (one
+        # narrow column; the series is one row per date by construction).
+        # Recompute a date if IT changed or its PREDECESSOR changed (its
+        # lag inputs moved). One job collects the (churn-sized) date pairs
+        # to the driver. A giant backfill (>5000 dates) would belong on the
+        # full path anyway, and bounds-moves already route it there in
+        # practice.
+        ndf = store.read(spark, HARMONIZED_TABLE).select(
+            "DATE", F.lag("DATE", 1).over(W.orderBy("DATE")).alias("_prev")
+        )
+        pairs = ndf.join(
+            F.broadcast(affected),
+            (F.col("DATE") == F.col("_a")) | (F.col("_prev") == F.col("_a")),
+            "left_semi",
+        ).collect()
+        _recompute(spark, store, bounds, {r["DATE"]: r["_prev"] for r in pairs})
+        out = "Daily analytics complete; Weekly analytics complete (incremental)"
 
-    batch = pending.filter(F.col("_action") == "INSERT").select(
-        F.make_date("YEAR", "MONTH", "DAY").alias("DATE")
-    )
-    harmonized = store.read(spark, HARMONIZED_TABLE)
-    affected = batch.select("DATE").distinct()
-    # DATE-only neighbor pass: global order over the daily series (one
-    # narrow column; the series is one row per date by construction).
-    # Recompute a date if IT changed or its PREDECESSOR changed (its
-    # lag inputs moved); each recompute date's predecessor row is
-    # pulled as lag input. One job collects the (churn-sized) date
-    # lists to the driver so every downstream filter is an IN-list
-    # literal — pushed into the parquet scans, with no broadcast
-    # exchanges to materialize. A giant backfill (>5000 dates) would
-    # belong on the full path anyway and bounds-moves already route it
-    # there in practice.
-    dates = harmonized.select("DATE")
-    w = W.orderBy("DATE")
-    ndf = dates.select("DATE", F.lag("DATE", 1).over(w).alias("_prev"))
-    aset = F.broadcast(affected.withColumnRenamed("DATE", "_a"))
-    pairs = ndf.join(
-        aset,
-        (F.col("DATE") == F.col("_a")) | (F.col("_prev") == F.col("_a")),
-        "left_semi",
-    ).collect()
-    recompute_dates = [r["DATE"] for r in pairs]
-    need_dates = sorted(
-        {r["DATE"] for r in pairs} | {r["_prev"] for r in pairs if r["_prev"]}
-    )
-    rows = harmonized.filter(F.col("DATE").isin(need_dates))
-    stats = daily_stats_df(rows, mn, mx).filter(
-        F.col("DATE").isin(recompute_dates)
-    )
-    merge_upsert(
-        spark, store, DAILY_TABLE, stats, keys=["DATE"], count_rows=False
-    )
-
-    # weekly: recompute only the touched ISO weeks (no cross-week lag).
-    # Week set derives driver-side from the already-collected recompute
-    # dates (ISO Monday = d - weekday); recompute ⊇ affected, and
-    # re-deriving an untouched week is an idempotent no-op.
-    import datetime as _dt
-
-    weeks = sorted(
-        {d - _dt.timedelta(days=d.weekday()) for d in recompute_dates}
-    )
-    wrows = harmonized.filter(
-        F.date_trunc("week", F.col("DATE")).cast("date").isin(weeks)
-    )
-    wstats = weekly_stats_df(wrows, mn, mx)
-    merge_upsert(
-        spark, store, WEEKLY_TABLE, wstats, keys=["WEEK_START"], count_rows=False
-    )
-    _commit_bounds(mn, mx)
-    log.commit(consumer, hi)
-    return "Daily analytics complete; Weekly analytics complete (incremental)"
+    tmp = bounds_file + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(list(bounds), f)
+    os.replace(tmp, bounds_file)
+    log.commit("analytics", hi)
+    return out
 
 
 def analytics(spark: SparkSession, store: TableStore) -> str:
-    """SP3 whole: daily + weekly (reference ``function.py:227-255``).
-
-    The harmonized scan and the min/max scalar cache are resolved once and
-    shared by both stages (the reference reads ``_CO2_MINMAX`` once per SP
-    call for the same reason, ``co2_analytical_sp/function.py:95-102``).
-    The two merges write INDEPENDENT tables off the same cached input, so
-    they run concurrently — two driver threads submitting to the shared
-    scheduler (the same overlap a cluster gets from concurrent jobs; the
-    reference runs them serially only because one Snowflake session does).
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    harmonized = store.read(spark, HARMONIZED_TABLE).cache()
-    # materialize the cache once up front: both threads would otherwise
-    # race to compute it and duplicate the scan
-    harmonized.count()
-    minmax = _minmax_lits(spark, store)
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fd = pool.submit(analytics_daily, spark, store, harmonized, minmax)
-            fw = pool.submit(analytics_weekly, spark, store, harmonized, minmax)
-            d, wk = fd.result(), fw.result()
-    finally:
-        harmonized.unpersist()
-    return f"{d}; {wk}"
+    """SP3 whole: daily + weekly over every date (reference
+    ``function.py:227-255``), normalized against HARMONIZED's min/max —
+    folded from the footers of the version harmonize wrote, the same value
+    its transaction staged into ``_CO2_MINMAX`` (the reference reads that
+    cache once per SP call, ``co2_analytical_sp/function.py:95-102``)."""
+    _recompute(spark, store, _co2_bounds(spark, store, store.data_path(HARMONIZED_TABLE)))
+    return "Daily analytics complete; Weekly analytics complete"

@@ -32,8 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.changelog import Changelog
-from ..operators.merge import merge_upsert
+from ..operators.merge import merge_upsert  # noqa: F401 — perfbench's tracer wraps this name
 from ..operators.table_store import TableStore
+from ..plans.pipeline import RAW_TABLE, _harmonize_rows
 
 
 def changelog_stream(
@@ -90,13 +91,12 @@ def stream_harmonize(
     spark: SparkSession,
     store: TableStore,
     checkpoint_dir: str,
-    raw_table: str = "raw_co2.co2_data",
-    harmonized_table: str = "harmonized_co2.harmonized_co2",
     max_files_per_trigger: int | None = None,
 ) -> str:
     """SP2 (``co2_harmonized_sp/function.py:171-192``) as a streaming drain:
-    every pending changelog batch is projected to the harmonized schema and
-    MERGEd on DATE. The checkpoint replaces the named consumer offset.
+    every pending changelog batch goes through the batch path's harmonize
+    step — MERGE on DATE and the ``_CO2_MINMAX`` refresh in one
+    transaction. The checkpoint replaces the named consumer offset.
 
     Compaction-safe: the file source tracks consumed FILES by path, so a
     compaction rewrite makes every (already-consumed) row look new to the
@@ -105,13 +105,13 @@ def stream_harmonize(
     merges, and a drain that consumed only replays reports an empty
     stream instead of bumping every row's audit column.
     """
-    log = Changelog(store, raw_table, embedded=True)
+    log = Changelog(store, RAW_TABLE, embedded=True)
     if not store.exists(log.log_table):
         return "No data in stream to process"
     stream = changelog_stream(
         spark,
         store,
-        raw_table,
+        RAW_TABLE,
         max_files_per_trigger=max_files_per_trigger,
         embedded=True,
     )
@@ -140,18 +140,7 @@ def stream_harmonize(
         n, hi = fresh.agg(F.count(F.lit(1)), F.max("_row_id")).first()
         if not n:
             return
-        src = (
-            fresh.withColumn("DATE", F.make_date("YEAR", "MONTH", "DAY"))
-            .select(
-                "DATE",
-                "YEAR",
-                "MONTH",
-                "DAY",
-                "CO2_PPM",
-                F.current_timestamp().alias("META_UPDATED_AT"),
-            )
-        )
-        merge_upsert(spark, store, harmonized_table, src, keys=["DATE"])
+        _harmonize_rows(spark, store, fresh)
         merged_rows += int(n)
         running_hi = max(running_hi, int(hi))
 
@@ -166,17 +155,4 @@ def stream_harmonize(
         # zero micro-batches, or batches that carried only replayed
         # (post-compaction) rows — either way nothing new was merged
         return "No data in stream to process"
-
-    # A2 parity with the batch path (plans/pipeline.py harmonize) and the
-    # reference's CTAS _CO2_MINMAX (co2_harmonized_sp/function.py:81-87):
-    # refresh the scalar min/max cache after the drain, otherwise analytics'
-    # NORMALIZED_CO2 would normalize against a cache left stale by an
-    # earlier run.
-    from ..plans.pipeline import MINMAX_TABLE
-
-    harmonized = store.read(spark, harmonized_table)
-    minmax = harmonized.agg(
-        F.min("CO2_PPM").alias("MIN_CO2"), F.max("CO2_PPM").alias("MAX_CO2")
-    )
-    store.overwrite(minmax, MINMAX_TABLE)
     return f"CO2 data harmonization complete ({n} micro-batch(es))"

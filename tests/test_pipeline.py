@@ -366,7 +366,7 @@ def test_harmonize_gate_scans_while_append_in_flight(spark, store, monkeypatch, 
 # Spark jobs one orchestrator run may start, by new days in the feed
 # (measured on pyspark 4.1.2; the previous engine started 42 and 8). The
 # check allows 1 more: asynchronous broadcast jobs vary by one.
-NIGHT_JOB_BUDGET = {1: 23, 0: 4}
+NIGHT_JOB_BUDGET = {1: 22, 0: 4}
 
 
 def test_orchestrator_run_job_budget(spark, store, next_job_id):

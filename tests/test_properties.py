@@ -6,8 +6,10 @@ against a dict-model oracle, plus the idempotency and key-uniqueness laws.
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from incremental_datapipeline_using_snowflake_spark.operators.merge import upsert_dataframe
@@ -501,3 +503,150 @@ def test_bloom_no_false_negatives_law(sp, members, probes):
            for r in bloom_maybe_member(batch, bloom, m).collect()}
     for i in range(len(members)):
         assert got[i] is True
+
+
+# ---------------------------------------------------------------------------
+# CO2 night property: random sequences of nights — gaps, late rows at or
+# before the watermark, duplicate days, no-op nights, days that move the
+# min/max bounds, and crashes between the stages followed by a replay —
+# leave DAILY and WEEKLY equal to a from-scratch full ``analytics`` over
+# RAW's ingested rows, after every night, in batch and streaming mode.
+# ---------------------------------------------------------------------------
+CO2_BASE = datetime.date(2024, 12, 20)  # ISO weeks straddle the YEAR partitions
+
+co2_night = st.fixed_dictionaries({
+    "new": st.integers(min_value=0, max_value=3),  # 0 = a no-op night
+    "gap": st.integers(min_value=0, max_value=3),  # days skipped before them
+    "late": st.booleans(),  # a revised reading at or before the watermark
+    "dup": st.booleans(),  # the first new day listed twice
+    "move": st.sampled_from([None, "min", "max"]),  # the last new day's value
+    "crash": st.sampled_from([None, "load_raw", "harmonize", "analytics"]),
+})
+
+
+def _co2_feeds(nights: list[dict]) -> list[str]:
+    """The cumulative feed document each night delivers: a 10-day base on
+    the first night, then each night's drawn days. Readings are multiples
+    of 0.25, so every weekly sum is exact in any summation order."""
+    lines, vals, feeds, last = ["# CO2 property feed"], [], [], None
+    for i, n in enumerate(nights):
+        start = CO2_BASE if last is None else last + datetime.timedelta(days=1 + n["gap"])
+        days = [start + datetime.timedelta(days=j) for j in range(n["new"] + 10 * (i == 0))]
+        if n["late"] and last is not None:
+            lines.append(_co2_line(last - datetime.timedelta(days=1), 399.0))
+        for j, d in enumerate(days):
+            v = 400 + 0.25 * (d.toordinal() % 7)
+            if n["move"] and j == len(days) - 1 and vals:
+                v = max(vals) + 0.5 if n["move"] == "max" else min(vals) - 0.5
+            vals.append(v)
+            lines += [_co2_line(d, v)] * (1 + (n["dup"] and j == 0))
+        last = days[-1] if days else last
+        feeds.append("\n".join(lines) + "\n")
+    return feeds
+
+
+def _co2_line(d, v: float) -> str:
+    return f"{d.year} {d.month} {d.day} {d.year + d.timetuple().tm_yday / 366:.3f} {v:.2f}"
+
+
+def _co2_stats(spark, store) -> tuple | None:
+    from incremental_datapipeline_using_snowflake_spark.plans import pipeline as P
+
+    if not store.exists(P.DAILY_TABLE):
+        return None
+    return tuple(
+        sorted(tuple(r) for r in store.read(spark, t).drop("META_UPDATED_AT").collect())
+        for t in (P.DAILY_TABLE, P.WEEKLY_TABLE)
+    )
+
+
+def _co2_night(orch, feed: str, crash: str | None) -> None:
+    """One scheduled run; a crash night raises at the named point (after
+    ``load_raw``, after the harmonize drain, or inside analytics between
+    its DAILY and WEEKLY merges) and the schedule replays the run."""
+    from unittest import mock
+
+    from incremental_datapipeline_using_snowflake_spark.plans import pipeline as P
+    from incremental_datapipeline_using_snowflake_spark.streaming import incremental
+
+    def then_crash(real):
+        def fn(*args, **kwargs):
+            real(*args, **kwargs)
+            raise RuntimeError("injected crash")
+        return fn
+
+    def crash_on_weekly(spark, store, table, *args, **kwargs):
+        if table == P.WEEKLY_TABLE:
+            raise RuntimeError("injected crash")
+        return real_merge(spark, store, table, *args, **kwargs)
+
+    real_merge = P.merge_upsert
+    patch = {
+        "load_raw": lambda: mock.patch.object(P, "load_raw", then_crash(P.load_raw)),
+        "harmonize": lambda: (
+            mock.patch.object(
+                incremental, "stream_harmonize", then_crash(incremental.stream_harmonize))
+            if orch.streaming_harmonize
+            else mock.patch.object(P, "harmonize", then_crash(P.harmonize))
+        ),
+        "analytics": lambda: mock.patch.object(P, "merge_upsert", crash_on_weekly),
+    }.get(crash)
+    if patch is not None:
+        with patch():
+            orch.run(feed_text=feed)
+    seen = len(orch.task_history())
+    res = orch.run(feed_text=feed)
+    assert all(h["status"] == "SUCCEEDED" for h in orch.task_history()[seen:]), res
+
+
+@example(nights=[
+    {"new": 3, "gap": 0, "late": False, "dup": True, "move": None, "crash": "harmonize"},
+    {"new": 2, "gap": 2, "late": True, "dup": False, "move": None, "crash": "analytics"},
+    {"new": 0, "gap": 0, "late": True, "dup": False, "move": None, "crash": None},
+    {"new": 1, "gap": 1, "late": False, "dup": True, "move": "max", "crash": "load_raw"},
+])
+@settings(max_examples=2, derandomize=True, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(nights=st.lists(co2_night, min_size=1, max_size=4))
+def test_co2_nights_fold_to_full_analytics(sp, tmp_path_factory, nights):
+    from pyspark.sql import functions as F
+
+    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
+    from incremental_datapipeline_using_snowflake_spark.plans import Orchestrator, bootstrap
+    from incremental_datapipeline_using_snowflake_spark.plans import pipeline as P
+
+    root = tmp_path_factory.mktemp("co2")
+    refs: dict = {}
+
+    def reference(store) -> tuple | None:
+        """A from-scratch full ``analytics`` in a fresh store whose
+        HARMONIZED holds exactly the rows RAW ingested."""
+        if not store.exists(P.RAW_TABLE):
+            return None
+        rows = frozenset(
+            tuple(r) for r in store.read(sp, P.RAW_TABLE)
+            .select(F.make_date("YEAR", "MONTH", "DAY").alias("DATE"), "CO2_PPM")
+            .distinct().collect()
+        )
+        assert len({d for d, _ in rows}) == len(rows)  # one reading per day
+        if rows not in refs:
+            ref = TableStore(root=str(root / f"ref{len(refs)}"))
+            ref.overwrite(
+                sp.createDataFrame(sorted(rows), "DATE date, CO2_PPM double"),
+                P.HARMONIZED_TABLE,
+            )
+            P.analytics(sp, ref)
+            refs[rows] = _co2_stats(sp, ref)
+        return refs[rows]
+
+    feeds = _co2_feeds(nights)
+    for mode in ("batch", "streaming"):
+        store = TableStore(root=str(root / mode))
+        bootstrap(store)
+        orch = Orchestrator(
+            sp, store, streaming_harmonize=mode == "streaming",
+            checkpoint_dir=str(root / "ckpt"),
+        )
+        for night, feed in zip(nights, feeds):
+            _co2_night(orch, feed, night["crash"])
+            assert _co2_stats(sp, store) == reference(store), (mode, night)

@@ -61,6 +61,49 @@ def test_stream_harmonize_incremental(spark, store, tmp_path):
     assert store.read(spark, "harmonized_co2.harmonized_co2").count() == 5
 
 
+def test_stream_harmonize_cache_failure_keeps_harmonized_whole(
+    spark, store, tmp_path, monkeypatch
+):
+    """The drain's HARMONIZED merge and its _CO2_MINMAX refresh publish
+    together: when the cache write raises during a drain that has new
+    rows, neither HARMONIZED's version pointer nor the cache row moves,
+    and a clean rerun merges the rows and refreshes the cache."""
+    import pytest
+
+    from incremental_datapipeline_using_snowflake_spark.operators import table_store
+    from incremental_datapipeline_using_snowflake_spark.plans.pipeline import (
+        HARMONIZED_TABLE,
+        MINMAX_TABLE,
+    )
+
+    ckpt = str(tmp_path / "ckpt")
+    bootstrap(store)
+    load_raw(spark, store, feed_text=FEED_V1)
+    assert "complete" in stream_harmonize(spark, store, ckpt)
+    version = store.current_version(HARMONIZED_TABLE)
+    load_raw(spark, store, feed_text=FEED_V2)
+
+    def refusing(real):
+        def overwrite(self, df, name, *args, **kwargs):
+            if name == MINMAX_TABLE:
+                raise OSError("min/max cache write failed")
+            return real(self, df, name, *args, **kwargs)
+
+        return overwrite
+
+    for cls in (table_store.TableStore, table_store._StagedTransaction):
+        monkeypatch.setattr(cls, "overwrite", refusing(cls.overwrite))
+    with pytest.raises(Exception, match="min/max cache write failed"):
+        stream_harmonize(spark, store, ckpt)
+    monkeypatch.undo()
+
+    assert store.current_version(HARMONIZED_TABLE) == version
+    assert tuple(store.read(spark, MINMAX_TABLE).first()) == (418.50, 418.75)
+    assert "complete" in stream_harmonize(spark, store, ckpt)
+    assert store.read(spark, HARMONIZED_TABLE).count() == 5
+    assert tuple(store.read(spark, MINMAX_TABLE).first()) == (418.50, 419.25)
+
+
 def test_orchestrator_streaming_mode(spark, store, tmp_path):
     """The full DAG with SP2 as a streaming drain: incremental runs,
     empty-feed run skips analytics via the drain's zero-batch gate."""
