@@ -30,8 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .table_store import TableStore
-
+from .table_store import TableStore, write_atomic
 
 
 @dataclass
@@ -64,10 +63,7 @@ class Changelog:
     def _write_meta(self, meta: dict) -> None:
         p = self._meta_path()
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, p)
+        write_atomic(p, json.dumps(meta))
 
     # -- producer ----------------------------------------------------------
     def append(

@@ -50,6 +50,17 @@ SCHEMA_RECORD = "_schema.json"
 UNWRITTEN_PARTITIONS = "unwritten-partitions"
 
 
+def write_atomic(path: str, text: str) -> None:
+    """Replace the small file ``path`` with ``text`` whole or not at all:
+    readers see the old content or the new, never a torn write. The
+    rename is the commit point (no fsync: a crash may lose the newest
+    write, never half of it)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
 def _as_nullable(dt: DataType) -> DataType:
     """``dt`` with every field, element and value nullable — the form a
     parquet read reports whatever the written frame declared."""
@@ -168,10 +179,7 @@ class TableStore:
 
     def _write_schema_record(self, version_dir: str, schema: StructType) -> None:
         rec = os.path.join(version_dir, SCHEMA_RECORD)
-        tmp = rec + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(_as_nullable(schema).jsonValue(), f)
-        os.replace(tmp, rec)
+        write_atomic(rec, json.dumps(_as_nullable(schema).jsonValue()))
 
     def _record_written_schema(
         self, df: DataFrame, version_dir: str, partition_by: list[str] | None
@@ -276,11 +284,7 @@ class TableStore:
         """``COMMENT ON TABLE`` parity (reference ``raw_co2_data.py:103-105``)."""
         if not self.exists(name):
             raise FileNotFoundError(f"table {name!r} does not exist in {self.root}")
-        cf = self._comment_file(name)
-        tmp = cf + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(comment)
-        os.replace(tmp, cf)
+        write_atomic(self._comment_file(name), comment)
 
     def get_comment(self, name: str) -> str | None:
         cf = self._comment_file(name)
@@ -325,11 +329,7 @@ class TableStore:
         return set(self._all_version_dirs(name))
 
     def _write_committed_set(self, name: str, versions: set[int]) -> None:
-        cf = self._commits_file(name)
-        tmp = cf + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(sorted(versions), f)
-        os.replace(tmp, cf)
+        write_atomic(self._commits_file(name), json.dumps(sorted(versions)))
 
     def _pointer_log_file(self, name: str) -> str:
         return os.path.join(self.table_dir(name), "_POINTER_LOG")
@@ -353,11 +353,7 @@ class TableStore:
 
         log = self._pointer_log(name)
         log.append((time.time(), version))
-        lf = self._pointer_log_file(name)
-        tmp = lf + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(log, f)
-        os.replace(tmp, lf)
+        write_atomic(self._pointer_log_file(name), json.dumps(log))
 
     def _commit_version(self, name: str, version: int) -> None:
         # Mark committed BEFORE the pointer flip: a crash between the two
@@ -368,11 +364,7 @@ class TableStore:
         committed = self._committed_set(name)
         if version not in committed:
             self._write_committed_set(name, committed | {version})
-        vf = self._version_file(name)
-        tmp = vf + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, vf)  # atomic pointer flip
+        write_atomic(self._version_file(name), str(version))  # atomic pointer flip
         # record the flip time AFTER the flip: a crash between them loses
         # only the newest timestamp entry (timestamp reads then resolve to
         # the previous flip — conservative, never wrong data)
@@ -723,10 +715,7 @@ class TableStore:
         td = self._txn_dir()
         os.makedirs(td, exist_ok=True)
         jp = os.path.join(td, f"{txn_id}-{max(v for _, v in txn.staged):06d}.json")
-        tmp = jp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(dict(txn.staged), f)
-        os.replace(tmp, jp)  # <- commit point
+        write_atomic(jp, json.dumps(dict(txn.staged)))  # <- commit point
         # flip every pointer before any GC: gc sweeps dirs above the
         # committed high-water mark as orphans, so a same-table second
         # staged version must be committed before the first one's gc runs

@@ -86,7 +86,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.table_store import _link_files
+from ..operators.table_store import _link_files, write_atomic
 from ..session import byte_sized_partitions, local_rows_df
 from .dedup import (
     _band_rows,
@@ -2236,14 +2236,9 @@ def rebase_corpus_chain(
     # COMMIT POINT: the intent marker (written atomically via rename)
     # records the full swap plan; from here on a crash is completed —
     # never reverted — by the recovery block at the top of this function
-    marker_tmp = intent + ".writing"
-    with open(marker_tmp, "w") as fh:
-        json.dump(
-            {"links": links, "retired": retired_name,
-             "store_version": int(v_head)},
-            fh,
-        )
-    os.replace(marker_tmp, intent)
+    write_atomic(intent, json.dumps(
+        {"links": links, "retired": retired_name, "store_version": int(v_head)}
+    ))
     # drop links from discovery: a publisher restarting against the old
     # base must not chain a delta off a link the new base has already
     # folded (the manifest is a Spark-written DIRECTORY of part files)

@@ -26,8 +26,10 @@ from pyspark.sql import Window as W
 from ..functions.kernels import normalize_value, pct_change, volatility
 from ..operators.changelog import Changelog
 from ..operators.merge import merge_upsert
-from ..operators.table_store import TableStore
-from ..sources.noaa_feed import fetch_feed, parse_feed_text
+from ..operators.table_store import TableStore, write_atomic
+from ..session import local_rows_df
+from ..sources.noaa_feed import RAW_SCHEMA, fetch_feed, parse_feed_rows
+from ..sources.noaa_feed import parse_feed_text  # noqa: F401 (perfbench traces it here by name)
 
 RAW_TABLE = "raw_co2.co2_data"
 HARMONIZED_TABLE = "harmonized_co2.harmonized_co2"
@@ -57,7 +59,7 @@ def current_watermark(spark: SparkSession, store: TableStore) -> object | None:
     (reference ``loading_data_sp/function.py:41-51``).
 
     Fast path: ``load_raw`` records the batch max date in a ``_WATERMARK``
-    sidecar as part of the count job it already runs, so the steady-state
+    sidecar, folded on the driver from the rows it loads, so the steady-state
     read is a driver-side file — zero Spark jobs (the table-stats pattern:
     Delta/Iceberg answer MAX over a partition key from metadata the same
     way). Fallback for stores not written through ``load_raw``: RAW is
@@ -94,43 +96,32 @@ def load_raw(
     """Fetch feed -> parse -> keep rows strictly newer than the watermark ->
     append to RAW + record changelog INSERTs (C4 semantics: late/duplicate
     rows for dates <= watermark are dropped at ingest; downstream merges are
-    idempotent on the DATE key anyway)."""
+    idempotent on the DATE key anyway).
+
+    The reference's S1-S4 run in-process (``loading_data_sp/function.py:
+    108-178``), and so do these: the feed is already a driver-side
+    document, so it is parsed and filtered here and only the new rows
+    cross into Spark. A night with nothing new starts no Spark job."""
     text = feed_text if feed_text is not None else fetch_feed(fetcher=fetcher)
-    parsed = parse_feed_text(spark, text)
-
     wm = current_watermark(spark, store)
-    if wm is not None:
-        parsed = parsed.filter(F.make_date("YEAR", "MONTH", "DAY") > F.lit(wm))
-
-    parsed = parsed.cache()
-    # one job yields both the empty-batch gate AND the new watermark (the
-    # same scan that round 3 spent on a bare count)
-    n, max_d = parsed.agg(
-        F.count(F.lit(1)), F.max(F.make_date("YEAR", "MONTH", "DAY"))
-    ).first()
-    if n == 0:
-        parsed.unpersist()
+    dated = ((datetime.date(*r[:3]), r) for r in parse_feed_rows(text))
+    new = [(d, r) for d, r in dated if wm is None or d > wm]
+    if not new:
         return "No new data to load"
 
     # ONE physical append lands both RAW and its change record: the
     # changelog is embedded in the year-partitioned RAW table (S6 partition
     # pruning intact — YEAR stays the layout key; the stream offset is the
-    # _row_id column, pruned by row-group stats). Round 3 paid two full
-    # write jobs per ingest batch for the same bytes.
+    # _row_id column, pruned by row-group stats).
     Changelog(store, RAW_TABLE, embedded=True).append(
-        parsed, action="INSERT", partition_by=["YEAR"]
+        local_rows_df(spark, [r for _, r in new], RAW_SCHEMA),
+        action="INSERT", partition_by=["YEAR"],
     )
     # watermark sidecar AFTER rows land: a crash in between re-ingests the
     # batch (dates > stale watermark), and the DATE-keyed merges downstream
     # make that replay idempotent (SURVEY §7.3)
-    wf = _watermark_file(store)
-    wm_new = max_d if wm is None else max(wm, max_d)
-    tmp = wf + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(wm_new.isoformat())
-    os.replace(tmp, wf)
-    parsed.unpersist()
-    return f"Loaded {n} new rows"
+    write_atomic(_watermark_file(store), max(d for d, _ in new).isoformat())
+    return f"Loaded {len(new)} new rows"
 
 
 # ---------------------------------------------------------------------------
@@ -177,8 +168,6 @@ def _harmonize_rows(spark: SparkSession, store: TableStore, rows: DataFrame) -> 
     ``_CO2_MINMAX`` scalar cache (reference ``:81-87``). Both writes publish
     in ONE transaction (staged version dirs + commit journal): a crash
     between them can never leave HARMONIZED moved with the cache stale."""
-    from ..session import local_rows_df
-
     src = (
         rows.filter(F.col("_action") == "INSERT")  # P8 metadata filter
         .withColumn("DATE", F.make_date("YEAR", "MONTH", "DAY"))  # P2/P3
@@ -387,10 +376,7 @@ def analytics_incremental(spark: SparkSession, store: TableStore) -> str:
         _recompute(spark, store, bounds, {r["DATE"]: r["_prev"] for r in pairs})
         out = "Daily analytics complete; Weekly analytics complete (incremental)"
 
-    tmp = bounds_file + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(list(bounds), f)
-    os.replace(tmp, bounds_file)
+    write_atomic(bounds_file, json.dumps(list(bounds)))
     log.commit("analytics", hi)
     return out
 

@@ -1,5 +1,5 @@
-from .noaa_feed import parse_feed_text, fetch_feed
-from .csv_source import read_co2_csv, CO2_CSV_SCHEMA
+from .noaa_feed import RAW_SCHEMA, fetch_feed, parse_feed_text
+from .csv_source import read_co2_csv
 from .jsonl_source import (
     DOCUMENTS_JSONL_SCHEMA,
     quarantine_split,
@@ -8,10 +8,10 @@ from .jsonl_source import (
 )
 
 __all__ = [
+    "RAW_SCHEMA",
     "parse_feed_text",
     "fetch_feed",
     "read_co2_csv",
-    "CO2_CSV_SCHEMA",
     "DOCUMENTS_JSONL_SCHEMA",
     "read_jsonl",
     "write_jsonl",

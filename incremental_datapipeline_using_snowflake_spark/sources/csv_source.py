@@ -14,17 +14,8 @@ files at listing time.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-CO2_CSV_SCHEMA = T.StructType(
-    [
-        T.StructField("YEAR", T.IntegerType()),
-        T.StructField("MONTH", T.IntegerType()),
-        T.StructField("DAY", T.IntegerType()),
-        T.StructField("DECIMAL_DATE", T.DoubleType()),
-        T.StructField("CO2_PPM", T.DoubleType()),
-    ]
-)
+from .noaa_feed import RAW_SCHEMA
 
 
 def write_co2_csv(
@@ -60,7 +51,7 @@ def read_co2_csv(
 ) -> DataFrame:
     """Read staged CO2 CSVs with the reference's tolerance semantics."""
     reader = (
-        spark.read.schema(CO2_CSV_SCHEMA)
+        spark.read.schema(RAW_SCHEMA)
         .option("header", True)                      # SKIP_HEADER = 1
         .option("quote", '"')                        # FIELD_OPTIONALLY_ENCLOSED_BY
         .option("nullValue", "NULL")                 # NULL_IF ('' is null by default)

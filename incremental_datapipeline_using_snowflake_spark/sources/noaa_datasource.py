@@ -1,25 +1,30 @@
 """Spark 4 Python Data Source API form of the NOAA feed reader.
 
 The reference ingests the feed imperatively inside a stored procedure
-(S1-S3); `sources/noaa_feed.py` re-expresses that as DataFrame parsing.
-This module additionally exposes the SAME parser through the modern
-`pyspark.sql.datasource` API, so the feed is a first-class format:
+(S1-S3); `sources/noaa_feed.py` holds its one parser. This module exposes
+that parser's line form through the modern `pyspark.sql.datasource` API,
+so landed feed files are a first-class format:
 
     spark.dataSource.register(NoaaFeedDataSource)
-    spark.read.format("noaa_feed").option("path", p).load()
+    spark.read.format("noaa_feed").option("path", p).load()   # file or dir
     spark.read.format("noaa_feed").option("numPartitions", 8).load()
 
-Semantics parity: blank/``#`` lines skipped, whitespace-split, >= 5
-fields, tolerant typed coercion (bad numerics -> NULL) — pinned equal to
-``parse_feed_text`` by ``tests/test_datasource.py``.
+Every line goes through ``noaa_feed.parse_line`` (S2/S4), so the rows are
+those of ``parse_feed_text`` on a well-formed feed — pinned by
+``tests/test_datasource.py``. The S3 regex fallback is a whole-document
+policy of ``parse_feed_rows``, not a per-line format rule, and is not
+applied here.
 
 Scale shape: ``numPartitions`` line-striding (partition i parses lines
-``i::n``). Each task re-reads the (small) feed file and touches only its
-stride — the right trade for a feed measured in tens of KB; a TB-scale
-text format would carry byte-range splits in its InputPartitions instead.
+``i::n`` of every document). Each task re-reads the (small) feed files
+and touches only its stride — the right trade for a feed measured in tens
+of KB; a TB-scale text format would carry byte-range splits in its
+InputPartitions instead.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -28,40 +33,11 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-FEED_SCHEMA = (
-    "YEAR int, MONTH int, DAY int, DECIMAL_DATE double, CO2_PPM double"
-)
+from .noaa_feed import RAW_SCHEMA, parse_line
 
 
-def _to_int(s: str) -> int | None:
-    try:
-        return int(s)
-    except (TypeError, ValueError):
-        return None
-
-
-def _to_float(s: str) -> float | None:
-    try:
-        return float(s)
-    except (TypeError, ValueError):
-        return None
-
-
-def parse_feed_line(line: str) -> tuple | None:
-    """Pure-Python twin of the S2 line parser + S4 tolerant coercion."""
-    line = line.strip()
-    if not line or line.startswith("#"):
-        return None
-    parts = line.split()
-    if len(parts) < 5:
-        return None
-    return (
-        _to_int(parts[0]),
-        _to_int(parts[1]),
-        _to_int(parts[2]),
-        _to_float(parts[3]),
-        _to_float(parts[4]),
-    )
+def _parsed(lines: list[str]):
+    return (r for ln in lines if (r := parse_line(ln)) is not None)
 
 
 class _StridePartition(InputPartition):
@@ -81,16 +57,27 @@ class NoaaFeedReader(DataSourceReader):
     def partitions(self):
         return [_StridePartition(i, self.n) for i in range(self.n)]
 
-    def read(self, partition: _StridePartition):
+    def _documents(self) -> list[str]:
         if self.text is not None:
-            lines = self.text.splitlines()
-        else:
-            with open(self.path, encoding="utf-8") as f:
-                lines = f.read().splitlines()
-        for i in range(partition.index, len(lines), partition.stride):
-            row = parse_feed_line(lines[i])
-            if row is not None:
-                yield row
+            return [self.text]
+        if not os.path.isdir(self.path):
+            paths = [self.path]
+        else:  # a landing directory: its files in name order, skipping
+            # hidden ones (``_SUCCESS``, ``.crc``) as Spark's file sources do
+            paths = [
+                p for e in sorted(os.listdir(self.path))
+                if not e.startswith(("_", "."))
+                and os.path.isfile(p := os.path.join(self.path, e))
+            ]
+        docs = []
+        for p in paths:
+            with open(p, encoding="utf-8") as f:
+                docs.append(f.read())
+        return docs
+
+    def read(self, partition: _StridePartition):
+        for doc in self._documents():
+            yield from _parsed(doc.splitlines()[partition.index :: partition.stride])
 
 
 class NoaaFeedStreamReader(SimpleDataSourceStreamReader):
@@ -118,21 +105,12 @@ class NoaaFeedStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict):
         lines = self._lines()
-        end = {"line": len(lines)}
-        rows = [
-            r
-            for ln in lines[start["line"] :]
-            if (r := parse_feed_line(ln)) is not None
-        ]
-        return iter(rows), end
+        # a list iterator: Spark caches the batch by copy.copy(iterator),
+        # which a generator cannot take
+        return iter(list(_parsed(lines[start["line"] :]))), {"line": len(lines)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        lines = self._lines()
-        return iter(
-            r
-            for ln in lines[start["line"] : end["line"]]
-            if (r := parse_feed_line(ln)) is not None
-        )
+        return _parsed(self._lines()[start["line"] : end["line"]])
 
 
 class NoaaFeedDataSource(DataSource):
@@ -141,7 +119,7 @@ class NoaaFeedDataSource(DataSource):
         return "noaa_feed"
 
     def schema(self) -> str:
-        return FEED_SCHEMA
+        return RAW_SCHEMA
 
     def reader(self, schema) -> NoaaFeedReader:
         return NoaaFeedReader(self.options)

@@ -1,36 +1,51 @@
-"""NOAA daily-CO2 text-feed ingestion, Spark-side.
+"""NOAA daily-CO2 text-feed ingestion: the one parser of the feed format.
 
-The reference fetches the feed over HTTP (driver-side) and parses it with
-pandas inside a stored procedure (``loading_data_sp/function.py:60-185``,
-SURVEY.md §2.1 S1-S4). Here the parse is a **distributed DataFrame job**:
+The reference fetches the feed over HTTP and parses it in-process inside
+its stored procedure (``loading_data_sp/function.py:60-185``, SURVEY.md
+§2.1 S1-S4). The feed is one small document already on the driver, so the
+parse runs there too, in plain Python, and only the rows a caller keeps
+ever reach Spark:
 
-- comment-aware whitespace parsing (S2): drop ``#`` lines and blanks, split on
-  runs of whitespace, keep the first 5 fields;
-- regex-extraction fallback (S3): if the line parse yields < 10 rows, re-scan
-  with the reference's tuple regex
+- comment-aware whitespace parsing (S2): drop ``#`` lines and blanks, split
+  with ``str.split()``, keep the first 5 fields;
+- regex-extraction fallback (S3): if the line parse yields < 10 rows,
+  re-scan with the reference's tuple regex
   ``(\\d{4})\\s+(\\d{1,2})\\s+(\\d{1,2})\\s+(\\d{4}\\.\\d+)\\s+(\\d+\\.\\d+)``;
-- tolerant typed coercion (S4): ANSI-off ``cast`` coerces bad values to NULL,
-  matching ``pd.to_numeric(errors="coerce")``.
+- tolerant typed coercion (S4): a bad value becomes NULL, as
+  ``pd.to_numeric(errors="coerce")`` makes it in the reference, with the
+  results of Spark's non-ANSI ``CAST`` on ASCII tokens (pinned by
+  ``tests/test_datasource.py``).
 
-The HTTP GET itself stays a driver-side utility behind an injectable
-interface so tests use canned fixtures (reference fixture:
-``tests/test_loading_co2_data_sp.py:28-33``). At real scale the fetch step
-lands files in an object-store landing zone and this parser reads them with
-``spark.read.text`` — identical plan.
+The HTTP GET stays behind an injectable interface so tests use canned
+fixtures (reference fixture: ``tests/test_loading_co2_data_sp.py:28-33``).
+Landed feed files read through ``format("noaa_feed")``
+(``sources/noaa_datasource.py``), which calls the same line parser.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import datetime
+import re
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..session import local_rows_df
 
 FEED_URL = "https://gml.noaa.gov/webdata/ccgg/trends/co2/co2_daily_mlo.txt"
 
-_ROW_RE = r"(\d{4})\s+(\d{1,2})\s+(\d{1,2})\s+(\d{4}\.\d+)\s+(\d+\.\d+)"
+# The RAW layer's columns, shared by every CO2 source (feed, data source, CSV).
+RAW_SCHEMA = "YEAR int, MONTH int, DAY int, DECIMAL_DATE double, CO2_PPM double"
 
-RAW_COLUMNS = ["YEAR", "MONTH", "DAY", "DECIMAL_DATE", "CO2_PPM"]
+# re.ASCII: Java's \d and \s, which the reference regex was written for,
+# match ASCII only
+_ROW_RE = re.compile(
+    r"(\d{4})\s+(\d{1,2})\s+(\d{1,2})\s+(\d{4}\.\d+)\s+(\d+\.\d+)", re.ASCII
+)
+# Spark's string -> int cast: a sign, digits and a fractional part that is
+# checked and truncated ("2025.0" -> 2025, ".5" -> 0, "+" -> NULL)
+_INT_RE = re.compile(r"([+-]?)(\d*)(\.\d*)?", re.ASCII)
+_INT_MIN, _INT_MAX = -(2**31), 2**31 - 1
 
 
 def fetch_feed(url: str = FEED_URL, fetcher: Callable[[str], str] | None = None) -> str:
@@ -43,72 +58,64 @@ def fetch_feed(url: str = FEED_URL, fetcher: Callable[[str], str] | None = None)
         return resp.read().decode("utf-8", errors="replace")
 
 
-def _typed(df: DataFrame) -> DataFrame:
-    """S4: tolerant coercion — bad values -> NULL (ANSI off)."""
-    return df.select(
-        F.col("f0").cast("int").alias("YEAR"),
-        F.col("f1").cast("int").alias("MONTH"),
-        F.col("f2").cast("int").alias("DAY"),
-        F.col("f3").cast("double").alias("DECIMAL_DATE"),
-        F.col("f4").cast("double").alias("CO2_PPM"),
-    ).filter(F.col("YEAR").isNotNull() & F.col("MONTH").isNotNull() & F.col("DAY").isNotNull())
+def to_int(tok: str) -> int | None:
+    """S4 integer coercion; NULL outside int32, as the cast makes it."""
+    m = _INT_RE.fullmatch(tok)
+    if m is None or not (m.group(2) or m.group(3)):
+        return None
+    v = int(m.group(1) + (m.group(2) or "0"))
+    return v if _INT_MIN <= v <= _INT_MAX else None
 
 
-def parse_feed_lines(lines: DataFrame) -> DataFrame:
-    """S2 on a one-column (``value: string``) DataFrame of feed lines."""
-    cleaned = (
-        lines.select(F.trim(F.col("value")).alias("value"))
-        .filter((F.col("value") != "") & ~F.col("value").startswith("#"))
-        .select(F.split(F.regexp_replace("value", r"\s+", " "), " ").alias("parts"))
-        .filter(F.size("parts") >= 5)
-        .select(*[F.element_at("parts", i + 1).alias(f"f{i}") for i in range(5)])
-    )
-    return _typed(cleaned)
+def to_float(tok: str) -> float | None:
+    """S4 double coercion. ``float()`` agrees with Java's parse on ASCII
+    decimal, exponent, ``NaN`` and ``Infinity`` tokens; it also reads
+    ``_`` digit separators and non-ASCII digits, which the cast does not.
+    Java's ``d``/``f`` suffixes (``1d``) stay NULL, as in the reference."""
+    if "_" in tok or not tok.isascii():
+        return None
+    try:
+        return float(tok)
+    except ValueError:
+        return None
 
 
-def parse_feed_regex(lines: DataFrame) -> DataFrame:
-    """S3 fallback: regex tuple extraction per line."""
-    hit = lines.filter(F.col("value").rlike(_ROW_RE))
-    return _typed(
-        hit.select(
-            *[F.regexp_extract("value", _ROW_RE, g + 1).alias(f"f{g}") for g in range(5)]
-        )
-    )
+def _row(fields: Sequence[str]) -> tuple | None:
+    """Typed RAW row from 5 tokens, or None when YEAR/MONTH/DAY do not
+    coerce to a calendar date."""
+    y, m, d = (to_int(t) for t in fields[:3])
+    try:
+        datetime.date(y, m, d)
+    except (TypeError, ValueError):
+        return None
+    return y, m, d, to_float(fields[3]), to_float(fields[4])
+
+
+def parse_line(line: str) -> tuple | None:
+    """S2 + S4 on one feed line: a typed row, or None for a comment, a
+    blank, a short line or a line whose date does not coerce."""
+    parts = line.strip().split()
+    if len(parts) < 5 or parts[0].startswith("#"):
+        return None
+    return _row(parts)
+
+
+def parse_feed_rows(text: str) -> list[tuple]:
+    """Parse a full feed document into RAW rows (YEAR..CO2_PPM), in feed
+    order. Falls back to regex extraction when the line parser yields < 10
+    rows and the regex finds more, mirroring
+    ``loading_data_sp/function.py:124-145``."""
+    lines = text.splitlines()
+    rows = [r for ln in lines if (r := parse_line(ln)) is not None]
+    if len(rows) < 10:
+        hits = [m.groups() for ln in lines if (m := _ROW_RE.search(ln))]
+        regex_rows = [r for g in hits if (r := _row(g)) is not None]
+        if len(regex_rows) > len(rows):
+            return regex_rows
+    return rows
 
 
 def parse_feed_text(spark: SparkSession, text: str) -> DataFrame:
-    """Parse a full feed document into the RAW schema (YEAR..CO2_PPM).
-
-    Falls back to regex extraction when the line parser yields < 10 rows,
-    mirroring ``loading_data_sp/function.py:124-145``.
-    """
-    # One slice from the start: the feed is a single driver-side document
-    # (~18k rows for 50 years of daily data) — spreading it over default
-    # parallelism multiplies task-launch and small-file commit overhead, and
-    # coalesce(1) after the fact would serialize 32 Python-worker roundtrips
-    # into one task. The at-scale path (parse_feed_path over landed files)
-    # keeps natural partitioning.
-    rdd = spark.sparkContext.parallelize([(ln,) for ln in text.splitlines()], 1)
-    lines = spark.createDataFrame(rdd, schema="value string")
-    parsed = parse_feed_lines(lines)
-    # Fallback gate decided driver-side: the feed IS a local document, so a
-    # quick Python scan for whitespace-format lines (>=5 tokens, numeric
-    # year) replaces the two Spark count() probe jobs the gate cost before.
-    # Approximate is fine — it only chooses WHICH Spark parse runs; the
-    # parses themselves stay distributed and exact.
-    n_ws = 0
-    for ln in text.splitlines():
-        t = ln.split()
-        if len(t) >= 5 and not ln.lstrip().startswith("#") and t[0].isdigit():
-            n_ws += 1
-            if n_ws >= 10:
-                return parsed
-    fallback = parse_feed_regex(lines)
-    if fallback.count() > parsed.count():
-        return fallback
-    return parsed
-
-
-def parse_feed_path(spark: SparkSession, path: str) -> DataFrame:
-    """Same parse over landed feed files (the at-scale path)."""
-    return parse_feed_lines(spark.read.text(path))
+    """A feed document as a RAW-schema DataFrame (one slice: the rows are
+    a driver-side list)."""
+    return local_rows_df(spark, parse_feed_rows(text), RAW_SCHEMA)

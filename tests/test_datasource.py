@@ -1,6 +1,7 @@
 """Spark 4 Python Data Source API: the noaa_feed format must parse
-identically to the DataFrame-based parser (S2/S4 parity) and distribute
-across partitions losslessly."""
+identically to ``parse_feed_text`` and ``load_raw`` (S2/S4 parity) and
+distribute across partitions losslessly; the one parser's coercion must
+match Spark's non-ANSI CAST."""
 
 from __future__ import annotations
 
@@ -12,10 +13,19 @@ FEED = """# NOAA-style comment header
 2022 1 3 2022.007 bad_value
 short line
 2022 1 4 2022.010 418.02
+\t2022 1 5 2022.013 418.20
+x 1 2 2025.003 418.6
 """
 
+RAW_COLS = ["YEAR", "MONTH", "DAY", "DECIMAL_DATE", "CO2_PPM"]
 
-def test_noaa_datasource_matches_dataframe_parser(spark, tmp_path):
+
+def test_noaa_datasource_matches_dataframe_parser(spark, store, tmp_path):
+    """The data source, ``parse_feed_text`` and a first ``load_raw`` give
+    the same rows: a tab-indented line is data, and a line whose YEAR
+    does not coerce is dropped, in all three."""
+    from incremental_datapipeline_using_snowflake_spark.plans import bootstrap, load_raw
+    from incremental_datapipeline_using_snowflake_spark.plans.pipeline import RAW_TABLE
     from incremental_datapipeline_using_snowflake_spark.sources.noaa_datasource import (
         NoaaFeedDataSource,
     )
@@ -27,27 +37,104 @@ def test_noaa_datasource_matches_dataframe_parser(spark, tmp_path):
     p = tmp_path / "feed.txt"
     p.write_text(FEED)
 
-    via_ds = sorted(
-        map(tuple, spark.read.format("noaa_feed").option("path", str(p)).load().collect())
-    )
-    via_df = sorted(map(tuple, parse_feed_text(spark, FEED).collect()))
-    assert via_ds == via_df
-    assert len(via_ds) == 4
+    def rows(df):  # NULL-safe order
+        return sorted(map(tuple, df.collect()), key=str)
+
+    via_ds = rows(spark.read.format("noaa_feed").option("path", str(p)).load())
+    via_df = rows(parse_feed_text(spark, FEED))
+    bootstrap(store)
+    load_raw(spark, store, feed_text=FEED)
+    via_load = rows(store.read(spark, RAW_TABLE).select(*RAW_COLS))
+    assert via_ds == via_df == via_load
+    assert len(via_ds) == 5
+    assert (2022, 1, 5, 2022.013, 418.20) in via_ds
     # tolerant coercion: bad_value -> NULL, row kept
     assert any(r[4] is None for r in via_ds)
 
     # striding across 3 partitions is lossless and order-insensitive
-    via_3 = sorted(
-        map(
-            tuple,
-            spark.read.format("noaa_feed")
-            .option("path", str(p))
-            .option("numPartitions", 3)
-            .load()
-            .collect(),
-        )
+    via_3 = rows(
+        spark.read.format("noaa_feed").option("path", str(p)).option("numPartitions", 3).load()
     )
     assert via_3 == via_ds
+
+
+def test_feed_coercion_matches_spark_cast(spark):
+    """S4 parity: the parser's integer and double coercion equal Spark's
+    non-ANSI ``CAST(tok AS INT)`` / ``CAST(tok AS DOUBLE)`` — the results
+    the package produced while it parsed in Spark — over derandomized
+    tokens from the numeric alphabet plus fixed edge cases. The one
+    deliberate difference: Java's ``d``/``f`` suffixes, which the cast
+    reads (``1d`` -> 1.0), coerce to NULL, as ``pd.to_numeric(errors=
+    "coerce")`` makes them in the reference."""
+    import math
+    import random
+
+    from incremental_datapipeline_using_snowflake_spark.session import local_rows_df
+    from incremental_datapipeline_using_snowflake_spark.sources.noaa_feed import (
+        to_float,
+        to_int,
+    )
+
+    rng = random.Random(20251)
+    toks = {
+        "".join(rng.choice("0123456789+-.eE") for _ in range(rng.randint(1, 8)))
+        for _ in range(500)
+    }
+    toks |= {"2025.0", "418.50", ".5", "5.", "2147483648", "-2147483648",
+             "NaN", "Infinity", "-Infinity", "bad_value", "1e5", "1.5e-3"}
+    suffixed = ["1d", "2.5f", "3D", "4F"]
+    rows = (
+        local_rows_df(spark, [(t,) for t in sorted(toks) + suffixed], "tok string")
+        .selectExpr("tok", "CAST(tok AS INT) AS i", "CAST(tok AS DOUBLE) AS d")
+        .collect()
+    )
+
+    def same(a, b):
+        return a == b or (a is not None and b is not None and math.isnan(a) and math.isnan(b))
+
+    bad = [
+        (tok, i, d, to_int(tok), to_float(tok))
+        for tok, i, d in rows
+        if to_int(tok) != i or not same(to_float(tok), None if tok in suffixed else d)
+    ]
+    assert not bad, bad
+    assert all(d is not None for tok, _, d in rows if tok in suffixed)
+    # the draw reaches both sides of each cast
+    assert sum(i is not None for _, i, _ in rows) > 20
+    assert sum(d is not None for _, _, d in rows) > 20
+
+
+def test_feed_parser_is_one_python_parser():
+    """Tripwire: the data source defines no coercion of its own, and the
+    feed parser builds no Spark expression. Spark-free: it only parses the
+    sources."""
+    import ast
+    import pathlib
+
+    src = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "incremental_datapipeline_using_snowflake_spark" / "sources"
+    )
+    ds = ast.parse((src / "noaa_datasource.py").read_text())
+    defs = {n.name for n in ds.body if isinstance(n, ast.FunctionDef)}
+    assert defs <= {"_parsed"}, defs
+    calls = {
+        n.func.id for n in ast.walk(ds)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    }
+    assert "float" not in calls
+    feed = ast.parse((src / "noaa_feed.py").read_text())
+    imported = {
+        (n.module, a.name) for n in ast.walk(feed) if isinstance(n, ast.ImportFrom)
+        for a in n.names
+    } | {
+        (a.name, None) for n in ast.walk(feed) if isinstance(n, ast.Import)
+        for a in n.names
+    }
+    assert not {
+        m for m in imported
+        if m[0] == "pyspark.sql.functions" or m == ("pyspark.sql", "functions")
+    }, imported
 
 
 def test_noaa_datasource_text_option(spark):
@@ -57,8 +144,8 @@ def test_noaa_datasource_text_option(spark):
 
     spark.dataSource.register(NoaaFeedDataSource)
     out = spark.read.format("noaa_feed").option("text", FEED).load()
-    assert out.count() == 4
-    assert out.columns == ["YEAR", "MONTH", "DAY", "DECIMAL_DATE", "CO2_PPM"]
+    assert out.count() == 5
+    assert out.columns == RAW_COLS
 
 
 def test_noaa_datasource_streaming_incremental(spark, tmp_path):
@@ -89,7 +176,7 @@ def test_noaa_datasource_streaming_incremental(spark, tmp_path):
         q.awaitTermination(120)
         return sum(got)
 
-    assert drain() == 4
+    assert drain() == 5
     # append one more reading; only the delta arrives in the next drain
     with open(p, "a", encoding="utf-8") as f:
         f.write("2022 1 5 2022.012 418.55\n")

@@ -209,11 +209,9 @@ def test_ops_has_no_broad_excepts():
     assert found == [], found
 
 
-def test_package_has_one_hardlink_loop():
-    """The package calls ``os.link`` exactly once, inside
-    ``table_store._link_files``: every version build, clone and chain
-    rebase shares files through that one helper and its copy fallback.
-    Spark-free: it only parses the sources."""
+def _os_call_sites(attr: str) -> list[tuple[str, str | None]]:
+    """(file, innermost enclosing function) of every ``os.<attr>(...)``
+    call in the package, read off its parsed sources."""
     import ast
     import pathlib
 
@@ -235,10 +233,27 @@ def test_package_has_one_hardlink_loop():
             (path.name, owner.get(node))
             for node in ast.walk(tree)
             if isinstance(node, ast.Call)
-            and getattr(node.func, "attr", None) == "link"
+            and getattr(node.func, "attr", None) == attr
             and getattr(getattr(node.func, "value", None), "id", None) == "os"
         ]
+    return found
+
+
+def test_package_has_one_hardlink_loop():
+    """The package calls ``os.link`` exactly once, inside
+    ``table_store._link_files``: every version build, clone and chain
+    rebase shares files through that one helper and its copy fallback.
+    Spark-free: it only parses the sources."""
+    found = _os_call_sites("link")
     assert found == [("table_store.py", "_link_files")], found
+
+
+def test_package_has_one_atomic_small_file_write():
+    """Every small metadata file (pointers, journals, offsets, sidecars)
+    is replaced through ``table_store.write_atomic``: the package calls
+    ``os.replace`` exactly once. Spark-free."""
+    found = _os_call_sites("replace")
+    assert found == [("table_store.py", "write_atomic")], found
 
 
 def test_curation_builds_driver_rows_in_one_slice():

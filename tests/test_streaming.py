@@ -143,20 +143,27 @@ def test_orchestrator_streaming_mode(spark, store, tmp_path):
     assert any("files_before" in r.get("maintenance", "") for r in (r1, r2, r3))
 
 
-def test_parse_feed_path_landing_zone(spark, tmp_path):
+def test_noaa_datasource_landing_zone(spark, tmp_path):
     """S1 at-scale path: feed files landed in an object-store directory,
-    parsed with the same distributed plan as the in-memory parse."""
+    read through ``format("noaa_feed")`` with the same line parser as the
+    in-memory parse."""
+    from incremental_datapipeline_using_snowflake_spark.sources.noaa_datasource import (
+        NoaaFeedDataSource,
+    )
     from incremental_datapipeline_using_snowflake_spark.sources.noaa_feed import (
-        parse_feed_path,
         parse_feed_text,
     )
 
+    spark.dataSource.register(NoaaFeedDataSource)
     landing = tmp_path / "landing"
     landing.mkdir()
     (landing / "feed1.txt").write_text(FEED_V1)
     (landing / "feed2.txt").write_text("2025 1 4 2025.008 419.10\n")
+    # hidden files a writer leaves behind are skipped, as Spark's file sources do
+    (landing / ".feed1.txt.crc").write_bytes(b"crc\x00\xff")
+    (landing / "_SUCCESS").write_text("2025 1 9 2025.022 419.30\n")
 
-    got = parse_feed_path(spark, str(landing))
+    got = spark.read.format("noaa_feed").option("path", str(landing)).load()
     assert got.count() == 4
     mem = parse_feed_text(spark, FEED_V1)
     assert sorted(r["CO2_PPM"] for r in got.collect() if r["DAY"] <= 3) == sorted(
