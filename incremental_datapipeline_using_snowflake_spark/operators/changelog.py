@@ -7,9 +7,11 @@ columns ``METADATA$ACTION`` / ``METADATA$ROW_ID``
 transactionally with the consuming MERGE.
 
 Engine design:
-- every ingested batch is appended to ``<table>__changelog`` with engine
-  metadata columns ``_action`` ('INSERT' | 'DELETE') and ``_row_id``
-  (monotonically increasing across batches);
+- the changelog rides on the table it records, as a Snowflake stream ON a
+  table does: every ingested batch is appended to the table itself with
+  engine metadata columns ``_action`` ('INSERT') and ``_row_id``
+  (monotonically increasing across batches), so one physical append lands
+  both the data and its change record;
 - ``_row_id`` = persisted base + ``monotonically_increasing_id()`` — unique
   and batch-monotonic WITHOUT a global sort (a ``row_number`` over a global
   window would single-partition 100 TB; mii is per-partition parallel). Ids
@@ -36,26 +38,17 @@ from .table_store import TableStore, write_atomic
 @dataclass
 class Changelog:
     store: TableStore
-    table: str  # base table name, e.g. "raw_co2.co2_data"
-    # embedded=True folds the changelog INTO the base table: one physical
-    # append lands both the data and its change record (the metadata
-    # columns ride along), exactly like a Snowflake stream ON a table is
-    # zero-copy over the table's own versions. Halves the pipeline's
-    # ingest write jobs; valid for append-only tables (INSERT actions
-    # only — a DELETE marker row would masquerade as data to base-table
-    # readers, so embedded mode rejects it).
-    embedded: bool = False
-
-    @property
-    def log_table(self) -> str:
-        return self.table if self.embedded else f"{self.table}__changelog"
+    table: str  # the table it records, e.g. "raw_co2.co2_data"
 
     def _meta_path(self) -> str:
-        return os.path.join(self.store.table_dir(self.log_table), "_META.json")
+        return os.path.join(self.store.table_dir(self.table), "_META.json")
 
     def _read_meta(self) -> dict:
+        """Row-id base and consumer offsets. A table without its
+        ``_META.json`` raises ``FileNotFoundError``: defaults would re-mint
+        landed row ids and rewind every consumer."""
         p = self._meta_path()
-        if not os.path.exists(p):
+        if not os.path.exists(p) and not self.store.exists(self.table):
             return {"next_base": 0, "offsets": {}}
         with open(p) as f:
             return json.load(f)
@@ -66,13 +59,8 @@ class Changelog:
         write_atomic(p, json.dumps(meta))
 
     # -- producer ----------------------------------------------------------
-    def append(
-        self,
-        df: DataFrame,
-        action: str = "INSERT",
-        partition_by: list[str] | None = None,
-    ) -> int:
-        """Record a change batch; returns the number of rows logged.
+    def append(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
+        """Append ``df`` with its change record; returns the number of rows.
 
         Id allocation is exact, not span-based: a fixed per-batch span over
         ``monotonically_increasing_id`` (round 1 used ``1 << 40``) breaks as
@@ -96,20 +84,14 @@ class Changelog:
         once — downstream merges key on natural keys and are idempotent
         (SURVEY.md §7.3), the same replay contract as commit-after-merge.
         """
-        if self.embedded and action != "INSERT":
-            raise ValueError(
-                "embedded changelog is INSERT-only (a DELETE marker row in "
-                "the base table would read as data); use a standalone "
-                "changelog for delete-bearing tables"
-            )
         spark = df.sparkSession
         meta = self._read_meta()
         base = int(meta["next_base"])
-        if meta.get("in_flight") is not None and self.store.exists(self.log_table):
+        if meta.get("in_flight") is not None and self.store.exists(self.table):
             # previous append crashed after (possibly) landing rows: recover
             # the true high-water mark (>= pushes down -> row-group pruning)
             crashed = (
-                self.store.read(spark, self.log_table)
+                self.store.read(spark, self.table)
                 .filter(F.col("_row_id") >= int(meta["in_flight"]))
                 .agg(F.max("_row_id"))
                 .first()[0]
@@ -118,7 +100,7 @@ class Changelog:
                 base = max(base, int(crashed) + 1)
         meta["in_flight"] = base
         self._write_meta(meta)  # intent marker durable before rows land
-        batch = df.withColumn("_action", F.lit(action)).withColumn(
+        batch = df.withColumn("_action", F.lit("INSERT")).withColumn(
             "_row_id", F.lit(base) + F.monotonically_increasing_id()
         )
         # Collect count + max id DURING the write job (Observation metrics
@@ -131,7 +113,7 @@ class Changelog:
         batch = batch.observe(
             obs, F.count(F.lit(1)).alias("n"), F.max("_row_id").alias("max_id")
         )
-        self.store.append(batch, self.log_table, partition_by=partition_by)
+        self.store.append(batch, self.table, partition_by=partition_by)
         got = obs.get
         n, max_id = got["n"], got["max_id"]
         meta["next_base"] = int(max_id) + 1 if max_id is not None else base
@@ -147,47 +129,35 @@ class Changelog:
         pushes down to the scan (min/max row-group skipping prunes already-
         consumed batches — the at-scale analogue of stream offset seek).
         """
-        if not self.store.exists(self.log_table):
+        if not self.store.exists(self.table):
             return None  # no changes ever recorded
         off = self.offset(consumer)
-        return self.store.read(spark, self.log_table).filter(F.col("_row_id") > off)
+        return self.store.read(spark, self.table).filter(F.col("_row_id") > off)
 
     def offset(self, consumer: str) -> int:
         """The consumer's committed high-water ``_row_id`` (-1 before its
         first commit)."""
         return int(self._read_meta()["offsets"].get(consumer, -1))
 
-    def high_water(self) -> int | None:
-        """The highest ``_row_id`` any append landed (-1 before the first),
-        from metadata alone — ``next_base`` advances from the max id each
-        append observed on its own write job. ``None`` when metadata cannot
-        vouch for it: an append is in flight (a crashed one may have landed
-        rows past ``next_base``) or no append ever wrote metadata; callers
-        then scan."""
-        if not os.path.exists(self._meta_path()):
-            return None
+    def high_water(self, pending: DataFrame) -> int:
+        """The ``_row_id`` a consumer of ``pending`` commits up to (-1 when
+        nothing landed). ``SYSTEM$STREAM_HAS_DATA`` is a metadata check in
+        the reference (``orchestrate_tasks.sql.j2:38``), and so is this:
+        ``next_base`` advances from the max id each append observed on its
+        own write job, so the gate costs no Spark job. Only while an append
+        is in flight — a crashed one may have landed rows past the recorded
+        mark — does it scan ``pending``."""
         meta = self._read_meta()
-        if meta.get("in_flight") is not None:
-            return None
-        return int(meta["next_base"]) - 1
+        if meta.get("in_flight") is None:
+            return int(meta["next_base"]) - 1
+        hi = pending.agg(F.max("_row_id")).first()[0]
+        return -1 if hi is None else int(hi)
 
     def has_data(self, spark: SparkSession, consumer: str = "default") -> bool:
-        """``SYSTEM$STREAM_HAS_DATA`` equivalent (reference
-        ``orchestrate_tasks.sql.j2:38``) — gate for downstream stages.
-        A metadata check, like the reference's; it probes the log only
-        when :meth:`high_water` cannot vouch for the mark."""
-        hi = self.high_water()
-        if hi is not None:
-            return hi > self.offset(consumer)
+        """``SYSTEM$STREAM_HAS_DATA`` equivalent — the gate for downstream
+        stages, by :meth:`high_water`."""
         p = self.pending(spark, consumer)
-        return p is not None and bool(p.limit(1).count())
-
-    def max_pending_id(self, spark: SparkSession, consumer: str = "default") -> int | None:
-        p = self.pending(spark, consumer)
-        if p is None:
-            return None
-        row = p.agg(F.max("_row_id").alias("m")).first()
-        return None if row["m"] is None else int(row["m"])
+        return p is not None and self.high_water(p) > self.offset(consumer)
 
     def commit(self, consumer: str, up_to_row_id: int) -> None:
         """Advance the consumer offset (call after the downstream merge)."""

@@ -412,8 +412,8 @@ def delete_where(
     One scan: the survivor set is staged through the store's atomic
     overwrite, and the deleted-row count rides an ``Observation`` on the
     same pass — no second count job. Time travel still sees the pre-delete
-    version until GC; call :func:`purge_versions` after a privacy-motivated
-    delete so retained history cannot resurrect the rows.
+    version until GC; call :meth:`TableStore.purge_versions` after a
+    privacy-motivated delete so retained history cannot resurrect the rows.
     """
     from pyspark.sql import Observation
 
@@ -474,25 +474,3 @@ def update_where(
     )
     n = obs.get["n_updated"]
     return int(n) if n is not None else 0
-
-
-def purge_versions(store: TableStore, name: str) -> list[int]:
-    """Erase all RETAINED HISTORY of a table, keeping only the current
-    version — the right-to-be-forgotten companion to :func:`delete_where`
-    (a privacy delete is incomplete while time travel / RESTORE can
-    resurrect the rows). Returns the purged version numbers."""
-    import os
-    import shutil
-
-    current = store.current_version(name)
-    purged = []
-    for v in store.versions(name):
-        if v != current:
-            shutil.rmtree(
-                os.path.join(store.table_dir(name), f"v={v:06d}"),
-                ignore_errors=True,
-            )
-            purged.append(v)
-    live = set(store._all_version_dirs(name))
-    store._write_committed_set(name, store._committed_set(name) & live)
-    return purged

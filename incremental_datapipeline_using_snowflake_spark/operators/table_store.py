@@ -167,14 +167,10 @@ class TableStore:
     # That holds for any reader: a fresh process, ``restore()``, time
     # travel. A drifting ``append(merge_schema=True)`` rewrites the record
     # before its rows land, so files with older footers read the added
-    # columns as NULL. Only versions written before records existed infer,
-    # merging every footer (a bare read samples one and could drop an
-    # evolved column).
-    def _schema_record(self, version_dir: str) -> StructType | None:
-        rec = os.path.join(version_dir, SCHEMA_RECORD)
-        if not os.path.exists(rec):
-            return None
-        with open(rec) as f:
+    # columns as NULL. A version dir without its record raises
+    # ``FileNotFoundError`` naming it.
+    def _schema_record(self, version_dir: str) -> StructType:
+        with open(os.path.join(version_dir, SCHEMA_RECORD)) as f:
             return StructType.fromJson(json.load(f))
 
     def _write_schema_record(self, version_dir: str, schema: StructType) -> None:
@@ -198,10 +194,7 @@ class TableStore:
         self._write_schema_record(version_dir, schema)
 
     def _read_dir(self, spark: SparkSession, version_dir: str) -> DataFrame:
-        schema = self._schema_record(version_dir)
-        if schema is not None:
-            return spark.read.schema(schema).parquet(version_dir)
-        return spark.read.option("mergeSchema", "true").parquet(version_dir)
+        return spark.read.schema(self._schema_record(version_dir)).parquet(version_dir)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return self._read_dir(spark, self.data_path(name))
@@ -241,9 +234,6 @@ class TableStore:
         )
 
     # -- partition layout ---------------------------------------------------
-    def _partitioning_file(self, name: str) -> str:
-        return os.path.join(self.table_dir(name), "_PARTITIONING")
-
     def partitioning(self, name: str) -> list[str] | None:
         """The partition columns the current version was written with.
         Lets rewrite-shaped operators (DML, compaction) preserve the
@@ -253,21 +243,13 @@ class TableStore:
         version is staged), so it becomes visible atomically with the
         pointer flip — a table-level sidecar could go stale across a
         crash between write and flip and silently re-layout the next DML
-        rewrite. The table-level ``_PARTITIONING`` file remains as a
-        legacy fallback for stores written before r05."""
+        rewrite. A version without it raises ``FileNotFoundError``."""
         try:
             marker = os.path.join(self.data_path(name), "_PARTITIONING.json")
         except FileNotFoundError:
             return None
-        if os.path.exists(marker):
-            with open(marker) as f:
-                return json.load(f) or None
-        pf = self._partitioning_file(name)
-        if not os.path.exists(pf):
-            return None
-        with open(pf) as f:
-            cols = json.load(f)
-        return cols or None
+        with open(marker) as f:
+            return json.load(f) or None
 
     def _mark_partitioning(self, version_dir: str, partition_by: list[str] | None) -> None:
         """Drop the layout marker into a STAGED version dir (call after the
@@ -306,27 +288,15 @@ class TableStore:
         :meth:`read_version` or resurrected by :meth:`restore`, even when
         a later commit allocates past them (a plain high-water mark would
         legitimize such gap orphans). GC prunes the set alongside the
-        dirs, so it stays ~keep_versions entries.
-
-        Stores created before the file existed fall back to "every on-disk
-        ``v=`` dir is committed". A "dirs at or below the pointer"
-        heuristic looks safer (it excludes would-be orphans above the
-        pointer) but makes restore() destructive: after restore() parks
-        the pointer below newer committed versions, the next write would
-        snapshot a committed set EXCLUDING them into ``_COMMITS`` and GC
-        would then delete retained history — breaking the documented
-        "restore is itself reversible" guarantee. A legacy store cannot
-        distinguish a rolled-back-over commit from a crashed writer's
-        orphan, and preserving real history wins; the one-time cost is
-        that a pre-``_COMMITS`` orphan (if any) becomes readable history.
+        dirs, so it stays ~keep_versions entries. A table whose pointer
+        exists without ``_COMMITS`` raises ``FileNotFoundError``: its
+        history cannot be told from a dead writer's orphans.
         """
         cf = self._commits_file(name)
-        if os.path.exists(cf):
-            with open(cf) as f:
-                return set(json.load(f))
-        if self.current_version(name) is None:
-            return set()
-        return set(self._all_version_dirs(name))
+        if not os.path.exists(cf) and self.current_version(name) is None:
+            return set()  # nothing committed yet
+        with open(cf) as f:
+            return set(json.load(f))
 
     def _write_committed_set(self, name: str, versions: set[int]) -> None:
         write_atomic(self._commits_file(name), json.dumps(sorted(versions)))
@@ -422,8 +392,8 @@ class TableStore:
         self._mark_partitioning(target, partition_by)
         if df is not None:
             self._record_written_schema(df, target, partition_by)
-        elif (schema := self._schema_record(base_dir)) is not None:
-            self._write_schema_record(target, schema)
+        else:
+            self._write_schema_record(target, self._schema_record(base_dir))
         if txn is not None:
             txn.staged.append((name, new))
             txn.prev.setdefault(name, prev)
@@ -564,6 +534,21 @@ class TableStore:
                 f"{name} v{version} not retained (have {self.versions(name)})"
             )
         self._commit_version(name, version)
+
+    def purge_versions(self, name: str) -> list[int]:
+        """Erase every version dir but the current one — retained history
+        and the staged dirs of writers that died before their commit
+        point alike — the right-to-be-forgotten companion to
+        :func:`~.merge.delete_where`: a privacy delete is incomplete while
+        time travel, RESTORE or an orphan's files still hold the rows.
+        Returns the removed version numbers."""
+        self.data_path(name)  # a missing table raises
+        current = self.current_version(name)
+        purged = [v for v in self._all_version_dirs(name) if v != current]
+        for v in purged:
+            shutil.rmtree(os.path.join(self.table_dir(name), f"v={v:06d}"))
+        self._write_committed_set(name, {current})
+        return purged
 
     def table_changes(
         self,
@@ -737,10 +722,11 @@ class TableStore:
         ``merge_schema=True`` tolerates additive drift (the reference
         handles upstream drift by re-deploying objects,
         ``scripts/deployment_files/check_and_fix_udf.py``; Delta's
-        analogue is ``mergeSchema``): columns new in ``df`` are added to
-        the table schema (older files read back as NULL there), columns
-        missing from ``df`` are written as NULL. A same-name column whose
-        type changed raises — silent type coercion corrupts at scale.
+        analogue is schema merging on write): columns new in ``df`` are
+        added to the table schema (older files read back as NULL there),
+        columns missing from ``df`` are written as NULL. A same-name
+        column whose type changed raises — silent type coercion corrupts
+        at scale.
         Without the flag, any schema difference raises.
         """
         if not self.exists(name):

@@ -426,28 +426,25 @@ def delete_docs(
         txn.overwrite(
             new_corpus.observe(n_after, F.count(F.lit(1)).alias("n")), corpus_table
         )
-        if store.exists(corpus_table + "__bands"):
-            txn.overwrite(
-                _purge(store.read(spark, corpus_table + "__bands"), "id"),
-                corpus_table + "__bands",
-            )
+        txn.overwrite(
+            _purge(store.read(spark, corpus_table + "__bands"), "id"),
+            corpus_table + "__bands",
+        )
         if store.exists(corpus_table + "__embsig"):
             txn.overwrite(
                 _purge(store.read(spark, corpus_table + "__embsig"), "id"),
                 corpus_table + "__embsig",
             )
-        if store.exists(corpus_table + "__bloom"):
-            m_bits = int(
-                store.read(spark, corpus_table + "__bloom_meta")
-                .collect()[0]["m_bits"]
-            )
-            txn.overwrite(
-                fingerprint_bloom(
-                    new_corpus.select(F.col("_fingerprint").alias("fp")).distinct(),
-                    m_bits,
-                ),
-                corpus_table + "__bloom",
-            )
+        m_bits = int(
+            store.read(spark, corpus_table + "__bloom_meta").collect()[0]["m_bits"]
+        )
+        txn.overwrite(
+            fingerprint_bloom(
+                new_corpus.select(F.col("_fingerprint").alias("fp")).distinct(),
+                m_bits,
+            ),
+            corpus_table + "__bloom",
+        )
         txn.overwrite(log, runs_t)
     return {"n_keys": int(n_keys), "n_deleted": int(n_deleted),
             "n_corpus_after": int(n_after.get["n"])}
@@ -618,12 +615,11 @@ def curation_status(
         # own arithmetic, surfaced for operators
         out["expected_bucket_pop"] = round(n_sig / 2 ** int(meta["n_planes"]), 1)
         out["reindex_plane_drift"] = auto_n_planes(n_sig) - int(meta["n_planes"])
-    if store.exists(corpus_table + "__bloom"):
-        bloom = store.read(spark, corpus_table + "__bloom")
-        n_rows = bloom.count()
-        n_words = bloom.select("word").distinct().count()
-        # >1 row per word = appended per-run deltas awaiting compaction
-        out["bloom_delta_rows"] = int(n_rows - n_words)
+    bloom = store.read(spark, corpus_table + "__bloom")
+    n_rows = bloom.count()
+    n_words = bloom.select("word").distinct().count()
+    # >1 row per word = appended per-run deltas awaiting compaction
+    out["bloom_delta_rows"] = int(n_rows - n_words)
     return out
 
 
@@ -758,11 +754,7 @@ def stream_curate(
             jaccard_threshold=jaccard_threshold,
         )
         if verdict_table is not None:
-            out = verdicts.withColumn("run_id", F.lit(run_id))
-            if store.exists(verdict_table):
-                store.append(out, verdict_table)
-            else:
-                store.overwrite(out, verdict_table)
+            store.append(verdicts.withColumn("run_id", F.lit(run_id)), verdict_table)
 
     return (
         stream_df.writeStream.foreachBatch(_sink)
@@ -882,66 +874,52 @@ def curate_append(
         bfp = b.select(
             F.col(id_col).alias("id"), _fingerprint(text_col).alias("fp")
         ).join(p1, "id")
-        have_bloom = store.exists(corpus_table + "__bloom")
-        m_bits = None
-        if have_bloom:
-            # Bloom fast path: probe the stored membership sketch (bit_or-fold
-            # the per-run word deltas first — readers see one row per word).
-            # FALSE is definitive (no false negatives), so fresh rows are
-            # marked new with zero corpus access; only probable hits pay the
-            # exact fingerprint semi-join, and when the whole batch is ruled
-            # out the corpus scan is skipped outright. Verdicts are IDENTICAL
-            # to the plain join — the sketch only prunes work.
-            m_bits = int(
-                store.read(spark, corpus_table + "__bloom_meta").collect()[0]["m_bits"]
-            )
-            bloom = (
-                store.read(spark, corpus_table + "__bloom")
-                .groupBy("word")
-                .agg(F.bit_or("bits").alias("bits"))
-            )
-            n_maybe = Observation()
-            probed = (
-                bfp.join(bloom_maybe_member(bfp, bloom, m_bits), "id")
-                .observe(n_maybe, F.sum(F.col("maybe_member").cast("long")).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            maybe = probed.filter(F.col("maybe_member")).select("id", "fp")
-            if not n_maybe.get["n"]:
-                exact_corpus = maybe.select("id")
-                p2a = probed.select("id", "fp")
-            else:
-                # ONE corpus touchpoint: a single left join against the
-                # (distinct) fingerprint projection serves both branches —
-                # the old left_semi + left_anti pair scanned the corpus twice
-                corpus_fp = store.read(spark, corpus_table).select(
-                    F.col("_fingerprint").alias("fp")
-                ).distinct()
-                marked = (
-                    maybe.join(
-                        corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left"
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                exact_corpus = marked.filter(F.col("_hit")).select("id")
-                p2a = (
-                    probed.filter(~F.col("maybe_member"))
-                    .select("id", "fp")
-                    .unionByName(
-                        marked.filter(F.col("_hit").isNull()).select("id", "fp")
-                    )
-                )
+        # Bloom probe: test the stored membership sketch (bit_or-fold
+        # the per-run word deltas first — readers see one row per word).
+        # FALSE is definitive (no false negatives), so fresh rows are
+        # marked new with zero corpus access; only probable hits pay the
+        # exact fingerprint semi-join, and when the whole batch is ruled
+        # out the corpus scan is skipped outright. Verdicts are IDENTICAL
+        # to the plain join — the sketch only prunes work.
+        m_bits = int(
+            store.read(spark, corpus_table + "__bloom_meta").collect()[0]["m_bits"]
+        )
+        bloom = (
+            store.read(spark, corpus_table + "__bloom")
+            .groupBy("word")
+            .agg(F.bit_or("bits").alias("bits"))
+        )
+        n_maybe = Observation()
+        probed = (
+            bfp.join(bloom_maybe_member(bfp, bloom, m_bits), "id")
+            .observe(n_maybe, F.sum(F.col("maybe_member").cast("long")).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        maybe = probed.filter(F.col("maybe_member")).select("id", "fp")
+        if not n_maybe.get["n"]:
+            exact_corpus = maybe.select("id")
+            p2a = probed.select("id", "fp")
         else:
-            # pre-r07 corpora without a bootstrapped sketch: plain exact join
+            # ONE corpus touchpoint: a single left join against the
+            # (distinct) fingerprint projection serves both branches —
+            # the old left_semi + left_anti pair scanned the corpus twice
             corpus_fp = store.read(spark, corpus_table).select(
                 F.col("_fingerprint").alias("fp")
             ).distinct()
             marked = (
-                bfp.join(corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left")
+                maybe.join(
+                    corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left"
+                )
                 .localCheckpoint(eager=True)
             )
             exact_corpus = marked.filter(F.col("_hit")).select("id")
-            p2a = marked.filter(F.col("_hit").isNull()).select("id", "fp")
+            p2a = (
+                probed.filter(~F.col("maybe_member"))
+                .select("id", "fp")
+                .unionByName(
+                    marked.filter(F.col("_hit").isNull()).select("id", "fp")
+                )
+            )
         # pin the RANKED frame once; its two branches are free filters
         wfp = W.partitionBy("fp").orderBy(F.asc("id"))
         ranked = p2a.withColumn("_rk", F.row_number().over(wfp)).localCheckpoint(eager=True)
@@ -1143,16 +1121,15 @@ def curate_append(
 
         # -- aux appends (at-least-once; see module docstring) ---------------
         if counts.get("kept", 0):
-            if have_bloom:
-                # delta words for the kept docs; readers bit_or-fold by word,
-                # rebuild_bloom compacts periodically
-                store.append(
-                    fingerprint_bloom(
-                        kept_docs.select(F.col("_fingerprint").alias("fp")).distinct(),
-                        m_bits,
-                    ),
-                    corpus_table + "__bloom",
-                )
+            # delta words for the kept docs; readers bit_or-fold by word,
+            # rebuild_bloom compacts periodically
+            store.append(
+                fingerprint_bloom(
+                    kept_docs.select(F.col("_fingerprint").alias("fp")).distinct(),
+                    m_bits,
+                ),
+                corpus_table + "__bloom",
+            )
             ksh = bsh.join(
                 kept_ids.withColumnRenamed(id_col, "id"), "id", "left_semi"
             )
@@ -1402,18 +1379,11 @@ def verify_corpus_snapshot(spark: SparkSession, out_dir: str,
     checksums from the shipped JSONL shards and compare. Returns True when
     every split matches; raises with the failing splits otherwise."""
     man_rows = _read_manifest(out_dir)
-    # str() on the manifest key: pre-r08 manifests from numeric split
-    # columns carry JSON numbers, the recomputed side is always a string
-    man = {str(r["split"]): (r.get("n_rows"), r.get("content_checksum"))
+    man = {r["split"]: (r.get("n_rows"), r.get("content_checksum"))
            for r in man_rows}
     # the export records WHICH column it partitioned by ('' = none) — group
-    # verification by that same column; pre-r08 manifests lack the field,
-    # so fall back to the old single-'all' heuristic
-    split_col = (
-        man_rows[0].get("split_col")
-        if any("split_col" in r for r in man_rows)
-        else ("" if set(man) == {"all"} else "split")
-    )
+    # verification by that same column
+    split_col = _manifest_split_col(out_dir, man_rows)
     # plain read: partition discovery recovers the <split_col>=<v> dirs when
     # the export was partitioned (recursiveFileLookup would disable it)
     data = spark.read.json(f"{out_dir}/data")
@@ -1620,8 +1590,16 @@ def _manifest_stats(out_dir: str):
         stats,
         int(rows[0]["store_version"]),
         rows[0].get("table"),
-        rows[0].get("split_col", ""),
+        _manifest_split_col(out_dir, rows),
     )
+
+
+def _manifest_split_col(out_dir: str, rows: list[dict]) -> str:
+    """The column a manifest's export partitioned by ('' = none); a
+    manifest without the field raises ``ValueError`` naming it."""
+    if "split_col" not in rows[0]:
+        raise ValueError(f"manifest in {out_dir} has no 'split_col' field")
+    return rows[0]["split_col"]
 
 
 def export_corpus_delta(
@@ -1772,7 +1750,7 @@ def verify_corpus_delta(spark: SparkSession, base_dir: str, delta_dir: str,
             f"chain break: delta bases on v{rows[0]['base_version']}, "
             f"base manifest pins v{v_base}"
         )
-    split_col = rows[0].get("split_col") or None
+    split_col = _manifest_split_col(delta_dir, rows) or None
     # no schema: the base may itself be a link, which has no schema record
     ups, dels = _read_link(spark, delta_dir, None, id_col)
     got_added = {} if ups is None else _delta_stats(ups, split_col, id_col, text_col)
@@ -1917,8 +1895,7 @@ def _stage_rebased_base(
       derived from the bytes on disk then) gives per-file (rows, chars,
       checksum mod 2^61, id interval) rows with ZERO base reads; a shard
       is "touched" when its id interval may contain an affected id (any
-      link's upsert ∪ delete ids — churn-bounded). Pre-r14 bases without
-      the sidecar fall back to one full base pass deriving the same rows;
+      link's upsert ∪ delete ids — churn-bounded);
     - UNTOUCHED shards are HARDLINKED into ``tmp/data`` — no rewrite, no
       re-read: immutable published files whose stats were disk-derived
       and loss-checked when they were published;
@@ -1944,7 +1921,8 @@ def _stage_rebased_base(
     Raises ``ValueError("rebase verification failed ...")`` (tmp removed,
     chain untouched) when the folded totals do not reproduce the head
     manifest — a tampered link or a lossy staged write both land here. A
-    link missing ``data/`` or ``_deletes/`` raises ``FileNotFoundError``
+    base missing its ``_schema.json`` or ``_filestats.jsonl`` sidecar, or
+    a link missing ``data/`` or ``_deletes/``, raises ``FileNotFoundError``
     before anything is staged.
     """
     import json as _json
@@ -1958,19 +1936,17 @@ def _stage_rebased_base(
     data_dst = os.path.join(tmp, "data")
 
     # The corpus schema comes from the base's ``_schema.json`` sidecar
-    # when present (written at publish since r14 — zero corpus reads);
-    # pre-r14 bases pay one inference parse. Every JSON read in this
-    # function (links, touched subset, staged read-back) then reuses it
+    # (written at publish — zero corpus reads). Every JSON read in this
+    # function (links, touched subset, staged read-back) reuses it
     # explicitly — JSON schema inference is a full text pass per read, so
     # per-link inference jobs scale with chain length for pure driver
     # overhead (guide §5/§6). Reusing the base schema is also the correct
     # projection: the fold only ever carries base columns.
-    schema_path = os.path.join(base, "_schema.json")
-    if os.path.exists(schema_path):
-        with open(schema_path) as f:
-            base_schema = T.StructType.fromJson(_json.load(f))
-    else:
-        base_schema = spark.read.json(data_src).schema
+    with open(os.path.join(base, "_schema.json")) as f:
+        base_schema = T.StructType.fromJson(_json.load(f))
+    # the per-file stats sidecar, read before anything is staged
+    with open(os.path.join(base, "_filestats.jsonl")) as f:
+        file_rows = [_json.loads(ln) for ln in f if ln.strip()]
 
     # -- link frames + affected-id set (churn-bounded) -------------------
     link_frames = [_read_link(spark, d, base_schema, id_col) for d in link_dirs]
@@ -1979,26 +1955,16 @@ def _stage_rebased_base(
     if link_ids:
         aff = reduce(DataFrame.unionByName, link_ids).distinct().localCheckpoint(eager=True)
 
-    # -- per-file base stats + touched detection --------------------------
-    # Fast path (r14): the base's ``_filestats.jsonl`` sidecar carries
-    # per-shard disk-derived stats + id intervals, so touched-file
-    # detection is an interval probe over the affected-id set and carried
-    # shards contribute their stats WITHOUT a byte of the base being read
-    # — the rebase's base-side cost is ∝ churn. The interval test is a
+    # -- touched detection -------------------------------------------------
+    # The base's ``_filestats.jsonl`` sidecar carries per-shard
+    # disk-derived stats + id intervals, so touched-file detection is an
+    # interval probe over the affected-id set and carried shards
+    # contribute their stats WITHOUT a byte of the base being read — the
+    # rebase's base-side cost is ∝ churn. The interval test is a
     # conservative superset (a shard whose [min_id, max_id] excludes every
     # affected id cannot contain one; NULL bounds — non-numeric ids —
     # always replay), and replaying extra files is exact: the fold only
-    # removes affected ids. Fallback for pre-r14 bases: one full base
-    # pass derives the same per-file rows from disk.
-    stats_path = os.path.join(base, "_filestats.jsonl")
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            file_rows = [_json.loads(ln) for ln in f if ln.strip()]
-    else:
-        file_rows = _per_file_stats(
-            spark, data_src, base_schema,
-            split_col=split_col, id_col=id_col, text_col=text_col,
-        )
+    # removes affected ids.
     touched: set[str] = set()
     if aff is not None and file_rows:
         aff_ids = [

@@ -1795,29 +1795,20 @@ def stream_ingest_ivf(
             ).alias("h"),
         ).collect()[0]
         fingerprint = f"{fp['n']}:{fp['h']}"
-        if store.exists(marker_table):
-            mdf = store.read(spark, marker_table)
-            # legacy (r06) markers carried batch_id only — they cannot be
-            # attributed to a stream, so they never suppress an append.
-            # Probe with a filtered limit(1), NOT a whole-table collect:
-            # the marker table grows with lifetime batch count, and a
-            # long-lived ingest stream must pay O(1) rows per batch here
-            if "fingerprint" in mdf.columns and not mdf.filter(
-                F.col("fingerprint") == F.lit(fingerprint)
-            ).limit(1).isEmpty():
-                return
+        # Probe with a filtered limit(1), NOT a whole-table collect: the
+        # marker table grows with lifetime batch count, and a long-lived
+        # ingest stream must pay O(1) rows per batch here
+        if store.exists(marker_table) and not store.read(spark, marker_table).filter(
+            F.col("fingerprint") == F.lit(fingerprint)
+        ).limit(1).isEmpty():
+            return
         append_to_ivf_index(spark, store, bdf, name, vec_col, id_col)
-        marker = spark.createDataFrame(
-            [(fingerprint, batch_id)], "fingerprint string, batch_id long"
+        store.append(
+            spark.createDataFrame(
+                [(fingerprint, batch_id)], "fingerprint string, batch_id long"
+            ),
+            marker_table,
         )
-        if store.exists(marker_table) and "fingerprint" in store.read(
-            spark, marker_table
-        ).columns:
-            store.append(marker, marker_table)
-        else:
-            # fresh table, or a legacy batch_id-only marker table — legacy
-            # rows can't suppress anything, so migrate by overwrite
-            store.overwrite(marker, marker_table)
 
     return (
         stream_df.writeStream.foreachBatch(_sink)

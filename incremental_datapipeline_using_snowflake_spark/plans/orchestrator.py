@@ -37,6 +37,11 @@ class Orchestrator:
     _history: list[dict] = field(default_factory=list)
     _pending_log: list[dict] = field(default_factory=list)
 
+    def __post_init__(self) -> None:
+        # checked before any run, so a misconfigured DAG loads nothing
+        if self.streaming_harmonize and not self.checkpoint_dir:
+            raise ValueError("streaming_harmonize requires checkpoint_dir")
+
     def suspend(self) -> None:
         self.suspended = True
 
@@ -108,8 +113,6 @@ class Orchestrator:
             # itself is the gate — an empty backlog runs zero micro-batches.
             from ..streaming.incremental import stream_harmonize
 
-            if not self.checkpoint_dir:
-                raise ValueError("streaming_harmonize requires checkpoint_dir")
             ok, msg = self._run_stage(
                 "co2_harmonized_task",
                 lambda: stream_harmonize(self.spark, self.store, self.checkpoint_dir),
@@ -124,7 +127,7 @@ class Orchestrator:
         results["harmonized"] = msg
         if not ok:
             return results
-        log = Changelog(self.store, P.RAW_TABLE, embedded=True)
+        log = Changelog(self.store, P.RAW_TABLE)
         # an empty stream skips analytics — unless a run that crashed after
         # harmonize left analytics behind what harmonize already merged
         # (both offsets are changelog metadata: no Spark job)
@@ -160,13 +163,12 @@ class Orchestrator:
         # rows at or below the committed named offset, so the checkpoint's
         # path-based replay of compacted files merges nothing and the
         # empty-stream gate still reports honestly.
-        log = Changelog(self.store, P.RAW_TABLE, embedded=True)
-        if not self.store.exists(log.log_table):
+        if not self.store.exists(P.RAW_TABLE):
             return None
-        n_files = len(self.store.data_files(self.store.data_path(log.log_table)))
+        n_files = len(self.store.data_files(self.store.data_path(P.RAW_TABLE)))
         if n_files <= self.compact_after_files:
             return None
-        # the changelog is embedded in RAW: the rewrite must keep the
+        # the changelog rides on RAW: the rewrite must keep the
         # year-partitioned layout (watermark pruning) while range-sorting
         # _row_id within it (offset-seek pruning)
         ok, msg = self._run_stage(
@@ -174,7 +176,7 @@ class Orchestrator:
             lambda: str(
                 self.store.compact(
                     self.spark,
-                    log.log_table,
+                    P.RAW_TABLE,
                     sort_by=["_row_id"],
                     partition_by=["YEAR"],
                 )

@@ -5,7 +5,7 @@ RAW -> (changelog) -> HARMONIZED -> ANALYTICS, each stage a plain function
 over DataFrames; the orchestrator sequences them with stream-gating.
 
 Layer mapping (reference ``config/dev.yml:9-14``):
-    RAW_CO2.CO2_DATA            -> raw_co2.co2_data            (+__changelog)
+    RAW_CO2.CO2_DATA            -> raw_co2.co2_data            (+ its changelog)
     HARMONIZED_CO2.HARMONIZED_CO2 -> harmonized_co2.harmonized_co2
     ANALYTICS_CO2.DAILY_CO2_STATS -> analytics_co2.daily_co2_stats
     ANALYTICS_CO2.WEEKLY_CO2_STATS -> analytics_co2.weekly_co2_stats
@@ -110,12 +110,11 @@ def load_raw(
         return "No new data to load"
 
     # ONE physical append lands both RAW and its change record: the
-    # changelog is embedded in the year-partitioned RAW table (S6 partition
+    # changelog rides on the year-partitioned RAW table (S6 partition
     # pruning intact — YEAR stays the layout key; the stream offset is the
     # _row_id column, pruned by row-group stats).
-    Changelog(store, RAW_TABLE, embedded=True).append(
-        local_rows_df(spark, [r for _, r in new], RAW_SCHEMA),
-        action="INSERT", partition_by=["YEAR"],
+    Changelog(store, RAW_TABLE).append(
+        local_rows_df(spark, [r for _, r in new], RAW_SCHEMA), partition_by=["YEAR"],
     )
     # watermark sidecar AFTER rows land: a crash in between re-ingests the
     # batch (dates > stale watermark), and the DATE-keyed merges downstream
@@ -129,21 +128,6 @@ def load_raw(
 # the min/max scalar cache.
 # reference: udfs_and_spoc/co2_harmonized_sp/co2_harmonized_sp/function.py
 # ---------------------------------------------------------------------------
-def _stream_high_water(log: Changelog, pending: DataFrame) -> int:
-    """The ``_row_id`` a consumer of ``pending`` commits up to.
-
-    ``SYSTEM$STREAM_HAS_DATA`` is a metadata check in the reference
-    (``orchestrate_tasks.sql.j2:38``), and so is this: the changelog
-    metadata records the high-water id of every landed append, so the gate
-    costs no Spark job. Only while an append is in flight — a crash may
-    have landed rows past the recorded mark — does it scan ``pending``
-    (-1 when that finds nothing)."""
-    hi = log.high_water()
-    if hi is None:
-        hi = pending.agg(F.max("_row_id")).first()[0]
-    return -1 if hi is None else int(hi)
-
-
 def _co2_bounds(spark: SparkSession, store: TableStore, version_dir: str) -> tuple:
     """MIN/MAX(CO2_PPM) of a HARMONIZED version, folded on the driver from
     its files' footer stats — exact, because every file a merge writes
@@ -195,11 +179,11 @@ def _harmonize_rows(spark: SparkSession, store: TableStore, rows: DataFrame) -> 
 
 
 def harmonize(spark: SparkSession, store: TableStore) -> str:
-    log = Changelog(store, RAW_TABLE, embedded=True)
+    log = Changelog(store, RAW_TABLE)
     pending = log.pending(spark, "harmonize")
     if pending is None:
         return "No data in stream to process"  # empty-stream short-circuit (:119-124)
-    hi = _stream_high_water(log, pending)
+    hi = log.high_water(pending)
     if hi <= log.offset("harmonize"):
         return "No data in stream to process"
     # later appends wait for the next run
@@ -326,7 +310,7 @@ def analytics_incremental(spark: SparkSession, store: TableStore) -> str:
     Offset semantics match harmonize: commit after the merges land;
     replay is idempotent because every merge keys on its date key.
     """
-    log = Changelog(store, RAW_TABLE, embedded=True)
+    log = Changelog(store, RAW_TABLE)
     pending = log.pending(spark, "analytics")
     if pending is None:
         return "No data in stream to process"
@@ -335,7 +319,7 @@ def analytics_incremental(spark: SparkSession, store: TableStore) -> str:
     # harmonize's offset is a landed row id, so the gate needs no scan.
     h_off = log.offset("harmonize")
     pending = pending.filter(F.col("_row_id") <= h_off)
-    hi = min(_stream_high_water(log, pending), h_off)
+    hi = min(log.high_water(pending), h_off)
     if hi <= log.offset("analytics"):
         return "No data in stream to process"
 

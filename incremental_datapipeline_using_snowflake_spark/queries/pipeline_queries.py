@@ -468,7 +468,7 @@ ORDER BY o_orderkey, _action
 # a DELETE (drop F-status orders with key % 4 == 0) then an UPDATE (+5% on
 # urgent orders over 300k), each an atomic single-scan rewrite with
 # Observation-carried affected-row counts. Oracle = the same two statements
-# as set algebra over the base data. Privacy purge (purge_versions) is
+# as set algebra over the base data. Privacy purge (TableStore.purge_versions) is
 # exercised in tests (side-effecting, not hashable).
 # ---------------------------------------------------------------------------
 def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:

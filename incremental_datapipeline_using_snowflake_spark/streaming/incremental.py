@@ -1,10 +1,11 @@
 """Structured Streaming form of the CDC stream (SURVEY.md §2.7 C1-C2).
 
 The batch path (``operators/changelog.py``) emulates a Snowflake stream with
-a changelog table + named offsets. This module is the *idiomatic Spark*
-alternative: a file-source ``readStream`` over the changelog directory, where
-the streaming checkpoint IS the stream offset — Spark tracks which parquet
-files each query has consumed, exactly-once per micro-batch, for free.
+a changelog riding on its table + named offsets. This module is the
+*idiomatic Spark* alternative: a file-source ``readStream`` over the table's
+directory, where the streaming checkpoint IS the stream offset — Spark
+tracks which parquet files each query has consumed, exactly-once per
+micro-batch, for free.
 
 Reference semantics reproduced:
 - ``CREATE STREAM ... ON TABLE CO2_DATA`` + consume-and-advance
@@ -42,23 +43,18 @@ def changelog_stream(
     store: TableStore,
     table: str,
     max_files_per_trigger: int | None = None,
-    embedded: bool = False,
 ) -> DataFrame:
-    """``readStream`` over the changelog — the stream-as-DataFrame.
-    ``embedded=True`` streams the base table itself (the pipeline's
-    single-write ingest layout); partition columns (YEAR) resolve from the
+    """``readStream`` over a table and the changelog that rides on it —
+    the stream-as-DataFrame; partition columns (YEAR) resolve from the
     directory names exactly as in batch.
 
-    The file source requires an explicit schema; we take it from a one-off
-    batch read of the same directory (cheap: footer metadata only).
+    The file source requires an explicit schema; it is the current
+    version's schema record (no Spark job).
     """
-    log = Changelog(store, table, embedded=embedded)
-    path = store.data_path(log.log_table)
-    schema = store.read(spark, log.log_table).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(store.read(spark, table).schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)
+    return reader.parquet(store.data_path(table))
 
 
 def run_available_now(
@@ -105,15 +101,11 @@ def stream_harmonize(
     merges, and a drain that consumed only replays reports an empty
     stream instead of bumping every row's audit column.
     """
-    log = Changelog(store, RAW_TABLE, embedded=True)
-    if not store.exists(log.log_table):
+    log = Changelog(store, RAW_TABLE)
+    if not store.exists(RAW_TABLE):
         return "No data in stream to process"
     stream = changelog_stream(
-        spark,
-        store,
-        RAW_TABLE,
-        max_files_per_trigger=max_files_per_trigger,
-        embedded=True,
+        spark, store, RAW_TABLE, max_files_per_trigger=max_files_per_trigger
     )
     merged_rows = 0
     # The committed offset is read ONCE, before the drain, and every

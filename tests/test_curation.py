@@ -217,17 +217,14 @@ def test_repair_aux_backfills_missing_bands(spark, store):
     assert C.repair_aux(spark, store, "cur.docs") == 0  # converged
 
 def test_curate_append_bloom_fast_path_parity_and_maintenance(spark, store):
-    """Verdicts with the Bloom sketch are identical to the plain exact
-    join (no false negatives), the sketch is maintained per run (a later
-    replay sees run-1's kept doc as exact_dup_corpus THROUGH the sketch),
-    and dropping the sketch falls back to the pre-r07 plain-join path."""
+    """Verdicts through the Bloom sketch are the exact ones (no false
+    negatives: the corpus dup is still found), and the sketch is
+    maintained per run (a later replay sees run-1's kept doc as
+    exact_dup_corpus THROUGH the sketch)."""
     from incremental_datapipeline_using_snowflake_spark.ops import curation as C
 
     rows, base = _corpus_rows()
-    corpus = spark.createDataFrame(rows, DOC_SCHEMA)
-    C.bootstrap_corpus(spark, store, corpus, "cur.a")
-    C.bootstrap_corpus(spark, store, corpus, "cur.b")
-    store.drop("cur.b__bloom")  # simulate a pre-r07 corpus
+    C.bootstrap_corpus(spark, store, spark.createDataFrame(rows, DOC_SCHEMA), "cur.a")
 
     batch = spark.createDataFrame(
         [
@@ -238,9 +235,7 @@ def test_curate_append_bloom_fast_path_parity_and_maintenance(spark, store):
     )
     va = {r["doc_id"]: r["verdict"]
           for r in C.curate_append(spark, store, batch, "cur.a", "r1").collect()}
-    vb = {r["doc_id"]: r["verdict"]
-          for r in C.curate_append(spark, store, batch, "cur.b", "r1").collect()}
-    assert va == vb == {100: "kept", 101: "exact_dup_corpus"}
+    assert va == {100: "kept", 101: "exact_dup_corpus"}
 
     # maintenance: kept doc 100's fingerprint words were appended as a
     # delta (row count grew), and a replay routes through the sketch
@@ -1544,29 +1539,6 @@ def test_rebase_reuses_untouched_shards(spark, tmp_path):
     assert ids == [i for i in range(200) if i not in range(30, 35)]
 
 
-def test_rebase_without_sidecars_falls_back(spark, tmp_path):
-    """A pre-r14 base (no _filestats/_schema sidecars) must still rebase
-    — one full-pass stats derivation — and come out UPGRADED with fresh
-    sidecars for the next rebase."""
-    import os
-
-    from incremental_datapipeline_using_snowflake_spark.ops import curation as C
-
-    _store, pub = _mk_sidecar_chain(spark, tmp_path, kill_ids=range(30, 35))
-    os.remove(f"{pub}/base/_filestats.jsonl")
-    os.remove(f"{pub}/base/_schema.json")
-    res = C.rebase_corpus_chain(spark, pub, compression=None)
-    assert res["rebased"] and res["links_folded"] == 1
-    assert os.path.exists(f"{pub}/base/_filestats.jsonl")
-    assert os.path.exists(f"{pub}/base/_schema.json")
-    assert C.verify_corpus_snapshot(spark, f"{pub}/base") is True
-    ids = sorted(
-        r[0]
-        for r in spark.read.json(f"{pub}/base/data").select("doc_id").collect()
-    )
-    assert ids == [i for i in range(200) if i not in range(30, 35)]
-
-
 @pytest.mark.parametrize("missing", ["_deletes", "data"])
 def test_chain_link_missing_dir_raises(spark, tmp_path, missing):
     """A published link that lost its ``_deletes/`` or ``data/`` dir is
@@ -1593,6 +1565,88 @@ def test_chain_link_missing_dir_raises(spark, tmp_path, missing):
     assert os.path.isdir(f"{base}/_manifest.jsonl")
     assert not os.path.exists(f"{pub}/_rebase-tmp")
     assert not os.path.exists(f"{pub}/_rebase-intent.json")
+
+
+_METADATA_FAULTS = {
+    # case: (the error the next reader raises, the name it must carry)
+    "version/_schema.json": (FileNotFoundError, "_schema.json"),
+    "version/_PARTITIONING.json": (FileNotFoundError, "_PARTITIONING.json"),
+    "table/_COMMITS": (FileNotFoundError, "_COMMITS"),
+    "changelog/_META.json": (FileNotFoundError, "_META.json"),
+    "base/_schema.json": (FileNotFoundError, "base/_schema.json"),
+    "base/_filestats.jsonl": (FileNotFoundError, "_filestats.jsonl"),
+    "manifest/split_col": (ValueError, "split_col"),
+    "corpus/__bloom": (FileNotFoundError, "sc.docs__bloom"),
+}
+
+
+@pytest.mark.parametrize("case", list(_METADATA_FAULTS))
+def test_missing_metadata_raises_named_error(spark, tmp_path, case):
+    """Missing-file fault matrix over the on-disk formats a release
+    touches: the store's per-version and per-table metadata, the
+    changelog's ``_META.json``, the published base's sidecars and manifest,
+    and the corpus's Bloom sketch. Every current writer produces each of
+    them, so a missing one is damage: the next reader raises a named error
+    that names it — never a fallback that reads the data another way —
+    and the failed call leaves every file as it was."""
+    import glob
+    import json
+    import os
+    from functools import partial
+
+    from incremental_datapipeline_using_snowflake_spark.operators import Changelog
+    from incremental_datapipeline_using_snowflake_spark.ops import curation as C
+    from incremental_datapipeline_using_snowflake_spark.session import local_rows_df
+
+    store, pub = _mk_sidecar_chain(spark, tmp_path, kill_ids=range(30, 35))
+    t, base = "sc.docs", f"{pub}/base"
+    vdir = store.data_path(t)
+    if case == "version/_schema.json":
+        os.remove(f"{vdir}/_schema.json")
+        read = partial(store.read, spark, t)
+    elif case == "version/_PARTITIONING.json":
+        os.remove(f"{vdir}/_PARTITIONING.json")
+        read = partial(store.compact, spark, t)
+    elif case == "table/_COMMITS":
+        os.remove(store._commits_file(t))
+        read = partial(store.restore, t, store.current_version(t))
+    elif case == "changelog/_META.json":
+        log = Changelog(store, "sc.log")
+        log.append(local_rows_df(spark, [(1,)], "k long"))
+        os.remove(log._meta_path())
+        read = partial(log.has_data, spark, "c")
+    elif case.startswith("base/"):
+        os.remove(f"{pub}/{case}")
+        read = partial(C.rebase_corpus_chain, spark, pub, compression=None)
+    elif case == "manifest/split_col":
+        for part in glob.glob(f"{base}/_manifest.jsonl/part-*"):
+            with open(part) as f:
+                rows = [json.loads(ln) for ln in f if ln.strip()]
+            with open(part, "w") as f:
+                f.writelines(
+                    json.dumps({k: v for k, v in r.items() if k != "split_col"}) + "\n"
+                    for r in rows
+                )
+        read = partial(C.verify_corpus_snapshot, spark, base)
+    else:
+        store.drop(f"{t}__bloom")
+        batch = spark.createDataFrame(
+            [_mk_doc(900, "one two three four five six seven eight nine ten eleven twelve".split())],
+            DOC_SCHEMA,
+        )
+        read = partial(C.curate_append, spark, store, batch, t, "r-fault")
+
+    def files():
+        return sorted(
+            os.path.relpath(os.path.join(r, f), tmp_path)
+            for r, _d, fs in os.walk(tmp_path) for f in fs
+        )
+
+    before = files()
+    err, name = _METADATA_FAULTS[case]
+    with pytest.raises(err, match=name):
+        read()
+    assert files() == before
 
 
 def test_partitioned_chain_verifies_materializes_and_rebases(spark, tmp_path):

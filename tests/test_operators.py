@@ -115,7 +115,8 @@ def test_changelog_append_consume_commit(spark, store):
     ids = [r["_row_id"] for r in pend.orderBy("_row_id").collect()]
     assert ids == sorted(ids) and len(set(ids)) == 3
 
-    hi = log.max_pending_id(spark, "c1")
+    hi = log.high_water(pend)
+    assert hi == ids[-1]
     log.commit("c1", hi)
     assert not log.has_data(spark, "c1")
 
@@ -164,6 +165,20 @@ def test_changelog_append_crash_guard(spark, store):
     assert len(ids) == 5 and len(set(ids)) == 5
 
 
+def test_changelog_lost_meta_raises(spark, store):
+    """A changelog that lost its ``_META.json`` no longer knows which row
+    ids it minted or where its consumers stand: the next append raises
+    naming the file and lands no row (defaults would re-mint a stored
+    ``_row_id`` and rewind every consumer offset to -1)."""
+    log = Changelog(store, "ns.lost")
+    assert log.append(_df(spark, [(1,), (2,), (3,)], "id long")) == 3
+    log.commit("c", log.high_water(log.pending(spark, "c")))
+    os.remove(log._meta_path())
+    with pytest.raises(FileNotFoundError, match="_META.json"):
+        log.append(_df(spark, [(4,)], "id long"))
+    assert sorted(r["id"] for r in store.read(spark, "ns.lost").collect()) == [1, 2, 3]
+
+
 def test_compact_changelog_preserves_offsets(spark, store):
     """S12-adjacent maintenance: many micro-batch appends -> many small
     files; compaction must shrink the file count without disturbing ids,
@@ -177,7 +192,7 @@ def test_compact_changelog_preserves_offsets(spark, store):
     )
     log.commit("c", first_ids[14])
 
-    stats = store.compact(spark, log.log_table, sort_by=["_row_id"])
+    stats = store.compact(spark, log.table, sort_by=["_row_id"])
     assert stats["files_before"] >= 6
     assert stats["files_after"] < stats["files_before"]
 
@@ -677,7 +692,6 @@ def test_delete_update_where_and_purge(spark, tmp_path):
     from incremental_datapipeline_using_snowflake_spark.operators import TableStore
     from incremental_datapipeline_using_snowflake_spark.operators.merge import (
         delete_where,
-        purge_versions,
         update_where,
     )
 
@@ -705,13 +719,39 @@ def test_delete_update_where_and_purge(spark, tmp_path):
 
     # history still holds the deleted rows -> purge erases it
     assert len(store.versions(name)) == 3
-    purged = purge_versions(store, name)
+    purged = store.purge_versions(name)
     assert purged == [1, 2]
     assert store.versions(name) == [store.current_version(name)]
     with _pytest.raises(FileNotFoundError):
         store.read_version(spark, name, 1)
     # table itself is intact after the purge
     assert store.read(spark, name).count() == 2
+
+
+def test_purge_versions_removes_orphan_staged_dirs(spark, tmp_path, monkeypatch):
+    """A writer that dies before its commit point leaves a staged dir no
+    reader serves but whose files still hold its rows: a privacy purge
+    removes it along with the retained history, leaving only the current
+    version on disk."""
+    store = TableStore(root=str(tmp_path), keep_versions=4)
+    name = "ns.rtbf"
+    for k in (1, 2):
+        store.overwrite(_df(spark, [(k,)], "k long"), name)
+
+    def crash(self, n, v):
+        raise RuntimeError("died before flip")
+
+    monkeypatch.setattr(TableStore, "_commit_version", crash)
+    with pytest.raises(RuntimeError, match="died before flip"):
+        store.overwrite(_df(spark, [(3,)], "k long"), name)
+    monkeypatch.undo()
+    current = store.current_version(name)
+    orphans = [v for v in store._all_version_dirs(name) if v not in store.versions(name)]
+    assert len(orphans) == 1
+
+    assert store.purge_versions(name) == sorted([current - 1, *orphans])
+    assert store._all_version_dirs(name) == store.versions(name) == [current]
+    assert [r["k"] for r in store.read(spark, name).collect()] == [2]
 
 
 def test_overwrite_partitions_links_untouched(spark, tmp_path):
@@ -1014,32 +1054,6 @@ def test_merge_prune_partitions_nonplain_partition_values(spark, tmp_path):
     assert after == before  # untouched escaped partition linked, not rewritten
 
 
-def test_legacy_store_restore_not_destructive(spark, tmp_path):
-    """ADVICE r05: for stores created before the _COMMITS journal existed,
-    restore() followed by the next write must NOT let GC delete the newer
-    committed versions that were rolled back over ('restore is itself
-    reversible')."""
-    import os
-
-    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
-
-    store = TableStore(root=str(tmp_path), keep_versions=4)
-    name = "ns.legacy"
-    for i in (1, 2, 3):
-        store.overwrite(
-            spark.createDataFrame([(i,)], "v int"), name
-        )
-    assert store.versions(name) == [1, 2, 3]
-    # simulate a pre-_COMMITS store
-    os.remove(store._commits_file(name))
-    store.restore(name, 1)
-    assert store.current_version(name) == 1
-    # the next write used to snapshot {v <= pointer} and GC v2/v3 as orphans
-    store.overwrite(spark.createDataFrame([(4,)], "v int"), name)
-    assert {2, 3} <= set(store.versions(name))
-    assert store.read_version(spark, name, 3).collect()[0][0] == 3
-
-
 def test_clone_zero_copy_and_diverge(spark, tmp_path):
     """CREATE TABLE ... CLONE parity (r06): the clone hardlinks the source's
     current version (shared inodes, no data movement), copies metadata
@@ -1175,10 +1189,6 @@ def test_schema_record_matches_footer_inference(spark, tmp_path, next_job_id):
     footers reports: partition columns last, every field, array element
     and struct member nullable. Reads then plan from the record, so a
     fresh store, time travel and restore() start no Spark job."""
-    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
-        SCHEMA_RECORD,
-    )
-
     store = TableStore(root=str(tmp_path), keep_versions=4)
     part = spark.createDataFrame(
         [(1, 2020, 1.5), (2, 2021, None)], "id long, YEAR int, v double"
@@ -1223,12 +1233,6 @@ def test_schema_record_matches_footer_inference(spark, tmp_path, next_job_id):
     fresh.read(spark, "ns.arrays")
     fresh.read_version(spark, "ns.part", v_evolved)
     assert next_job_id() == j0
-
-    # a version written before records existed still reads, by inference
-    os.remove(os.path.join(store.data_path("ns.arrays"), SCHEMA_RECORD))
-    legacy = fresh.read(spark, "ns.arrays")
-    assert legacy.schema == _inferred_schema(spark, store.data_path("ns.arrays"))
-    assert sorted(r["id"] for r in legacy.collect()) == [0, 1, 2]
 
 
 # -- copy-on-write merge -------------------------------------------------
@@ -1367,9 +1371,6 @@ def test_cow_merge_transaction_fault_and_gc(spark, tmp_path):
     version reading identical rows and no staged dir; committed merges
     survive the GC and the purge of the versions their carried files came
     from."""
-    from incremental_datapipeline_using_snowflake_spark.operators.merge import (
-        purge_versions,
-    )
     from incremental_datapipeline_using_snowflake_spark.session import local_rows_df
 
     store = TableStore(root=str(tmp_path))
@@ -1403,6 +1404,6 @@ def test_cow_merge_transaction_fault_and_gc(spark, tmp_path):
     want = {r["k"]: r["v"] for r in rows0} | {42: 1042.0, 59: 1059.0, 44: 1044.0}
     got = {r["k"]: r["v"] for r in store.read(spark, name).collect()}
     assert got == want
-    assert purge_versions(store, name)
+    assert store.purge_versions(name)
     assert store.versions(name) == [store.current_version(name)]
     assert {r["k"]: r["v"] for r in store.read(spark, name).collect()} == want

@@ -123,7 +123,7 @@ def test_harmonize_idempotent_replay(spark, store):
         (r["DATE"], r["CO2_PPM"]) for r in store.read(spark, P.HARMONIZED_TABLE).collect()
     )
     # simulate lost offset commit: reset consumer offset and re-run
-    log = Changelog(store, P.RAW_TABLE, embedded=True)
+    log = Changelog(store, P.RAW_TABLE)
     meta = log._read_meta()
     meta["offsets"]["harmonize"] = -1
     log._write_meta(meta)
@@ -188,7 +188,7 @@ def test_minmax_fold_matches_full_aggregate(spark, store):
     for feed in (FEED_V1, FEED_V2):
         load_raw(spark, store, feed_text=feed)
         harmonize(spark, store)
-    log = Changelog(store, P.RAW_TABLE, embedded=True)
+    log = Changelog(store, P.RAW_TABLE)
     jan15 = parse_feed_text(spark, FEED_V2).filter(F.col("DAY") == 15)
 
     def harmonize_row(co2):
@@ -332,7 +332,7 @@ def test_harmonize_gate_scans_while_append_in_flight(spark, store, monkeypatch, 
     bootstrap(store)
     orch = Orchestrator(spark, store)
     orch.run(feed_text=FEED_V1)
-    log = Changelog(store, P.RAW_TABLE, embedded=True)
+    log = Changelog(store, P.RAW_TABLE)
     stale = log._read_meta()
 
     real_write = Changelog._write_meta
@@ -350,7 +350,10 @@ def test_harmonize_gate_scans_while_append_in_flight(spark, store, monkeypatch, 
     monkeypatch.undo()
     meta = log._read_meta()
     assert meta["next_base"] == stale["next_base"] and meta["in_flight"] is not None
-    assert log.high_water() is None
+    # the metadata mark is stale; the gate finds the landed rows by a scan
+    landed = store.read(spark, P.RAW_TABLE).agg(F.max("_row_id")).first()[0]
+    assert landed >= meta["next_base"]
+    assert log.high_water(log.pending(spark, "harmonize")) == landed
 
     assert harmonize(spark, store) == "CO2 data harmonization complete"
     assert store.read(spark, P.HARMONIZED_TABLE).count() == 14
@@ -358,7 +361,7 @@ def test_harmonize_gate_scans_while_append_in_flight(spark, store, monkeypatch, 
     # the next append recovers the mark and commits clean metadata (the
     # stale watermark re-ingests the two days; the DATE merge absorbs them)
     orch.run(feed_text=FEED_V2)
-    assert log.high_water() is not None
+    assert log._read_meta()["in_flight"] is None
     assert store.read(spark, P.HARMONIZED_TABLE).count() == 14
 
     jobs = []

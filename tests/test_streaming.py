@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from incremental_datapipeline_using_snowflake_spark.operators import Changelog
 from incremental_datapipeline_using_snowflake_spark.plans import bootstrap, load_raw
 from incremental_datapipeline_using_snowflake_spark.streaming import (
+    changelog_stream,
     session_stats_batch,
     session_window_streaming,
     stream_harmonize,
@@ -102,6 +103,20 @@ def test_stream_harmonize_cache_failure_keeps_harmonized_whole(
     assert "complete" in stream_harmonize(spark, store, ckpt)
     assert store.read(spark, HARMONIZED_TABLE).count() == 5
     assert tuple(store.read(spark, MINMAX_TABLE).first()) == (418.50, 419.25)
+
+
+def test_streaming_orchestrator_without_checkpoint_raises_before_loading(spark, store):
+    """A streaming orchestrator without a checkpoint dir cannot harmonize:
+    it raises when built, before any run has appended to RAW."""
+    import pytest
+
+    from incremental_datapipeline_using_snowflake_spark.plans import Orchestrator, bootstrap
+    from incremental_datapipeline_using_snowflake_spark.plans.pipeline import RAW_TABLE
+
+    bootstrap(store)
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        Orchestrator(spark, store, streaming_harmonize=True).run(feed_text=FEED_V1)
+    assert not store.exists(RAW_TABLE)
 
 
 def test_orchestrator_streaming_mode(spark, store, tmp_path):
@@ -327,20 +342,15 @@ def test_changelog_stream_bounded_backfill(spark, tmp_path):
     micro-batch on a production restart. All rows still arrive exactly
     once across the (now multiple) batches."""
     from incremental_datapipeline_using_snowflake_spark.operators import TableStore
-    from incremental_datapipeline_using_snowflake_spark.operators.changelog import Changelog
     from incremental_datapipeline_using_snowflake_spark.session import local_rows_df
 
     store = TableStore(root=str(tmp_path / "wh"))
     store.create_namespace("ns")
     log = Changelog(store, "ns.t")
     for i in range(4):  # 4 separate appends -> >= 4 files
-        log.append(local_rows_df(spark, [(i, f"r{i}")], "k long, v string"), action="INSERT")
+        log.append(local_rows_df(spark, [(i, f"r{i}")], "k long, v string"))
 
-    src = (
-        spark.readStream.schema(store.read(spark, log.log_table).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(store.data_path(log.log_table))
-    )
+    src = changelog_stream(spark, store, "ns.t", max_files_per_trigger=1)
     batches = []
     q = (
         src.writeStream.foreachBatch(
@@ -377,9 +387,9 @@ def test_stream_harmonize_bounded_batches_offset_safe(spark, store, tmp_path):
     assert harm.count() == 5  # all 5 distinct dates merged, none dropped
     assert harm.select("DATE").distinct().count() == 5
     # named offset mirrors the true consumed high-water mark
-    log = Changelog(store, "raw_co2.co2_data", embedded=True)
+    log = Changelog(store, "raw_co2.co2_data")
     committed = int(log._read_meta()["offsets"].get("harmonize", -1))
-    hi = store.read(spark, log.log_table).agg(F.max("_row_id")).first()[0]
+    hi = store.read(spark, log.table).agg(F.max("_row_id")).first()[0]
     assert committed == int(hi)
     # nothing pending afterwards
     assert stream_harmonize(spark, store, ckpt) == "No data in stream to process"
