@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import pin
 from .table_store import UNWRITTEN_PARTITIONS, TableStore
 
 
@@ -154,7 +155,7 @@ def merge_upsert(
     for i, k in enumerate(keys):
         src_stats += [F.min(k).alias(f"lo{i}"), F.max(k).alias(f"hi{i}")]
     src = (
-        source.dropDuplicates(keys).observe(obs, *src_stats).localCheckpoint(eager=True)
+        pin(source.dropDuplicates(keys).observe(obs, *src_stats))
     )
     got = obs.get
 

@@ -87,7 +87,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.table_store import _link_files, write_atomic
-from ..session import byte_sized_partitions, local_rows_df
+from ..session import byte_sized_partitions, local_rows_df, pin
 from .dedup import (
     _band_rows,
     _shingle_docs,
@@ -228,7 +228,7 @@ def bootstrap_corpus(
         local_rows_df(spark, [(int(m_bits),)], "m_bits long"),
         corpus_table + "__bloom_meta",
     )
-    sh = _shingle_docs(docs, text_col, id_col).localCheckpoint(eager=True)
+    sh = pin(_shingle_docs(docs, text_col, id_col))
     store.overwrite(
         _band_rows(_signatures_from_shingles(sh)), corpus_table + "__bands"
     )
@@ -273,7 +273,7 @@ def repair_aux(spark: SparkSession, store, corpus_table: str,
     missing = corpus.join(have, id_col, "left_anti")
     n = missing.count()
     if n:
-        sh = _shingle_docs(missing, text_col, id_col).localCheckpoint(eager=True)
+        sh = pin(_shingle_docs(missing, text_col, id_col))
         store.append(
             _band_rows(_signatures_from_shingles(sh)), corpus_table + "__bands"
         )
@@ -374,10 +374,9 @@ def delete_docs(
         # pin the distinct keys once: a count and then the semi-join each
         # evaluated the caller's key lineage; the count rides the pin
         n_key_obs = Observation()
-        keys_df = (
+        keys_df = pin(
             keys.select(F.col(keys.columns[0]).alias("_del_key")).distinct()
             .observe(n_key_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_keys = n_key_obs.get["n"]
         matched = corpus.join(
@@ -391,10 +390,9 @@ def delete_docs(
     # anti-joins this same small relation (ids only, broadcastable); its
     # size rides the pin's job
     n_doomed = Observation()
-    doomed = (
+    doomed = pin(
         matched.select(F.col(id_col).alias("_del_id")).distinct()
         .observe(n_doomed, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     n_deleted = n_doomed.get["n"]
 
@@ -511,16 +509,15 @@ def rebuild_embsig(
     corpus_ids = store.read(spark, corpus_table).select(
         F.col(id_col).alias(emb_id_col)
     )
-    # materialize the member relation ONCE: it feeds the auto-sizing count
-    # plus the fused all-tables signature pass — unmaterialized, each
-    # consumer would re-run the corpus semi-join (the multi-consumer pin
-    # discipline of curate_append's shingle relation)
-    from pyspark import StorageLevel
-
-    member_vecs = emb.join(corpus_ids, emb_id_col, "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
+    # pin the member relation ONCE, its count riding the pin's job: the
+    # fused all-tables signature pass reads it after the auto-sizing count —
+    # unpinned, it would re-run the corpus semi-join
+    n_obs = Observation()
+    member_vecs = pin(
+        emb.join(corpus_ids, emb_id_col, "left_semi")
+        .observe(n_obs, F.count(F.lit(1)).alias("n"))
     )
-    n_signed = member_vecs.count()
+    n_signed = n_obs.get["n"]
     if n_planes is None:
         n_planes = auto_n_planes(n_signed)
     sigs = _emb_signatures(
@@ -533,7 +530,6 @@ def rebuild_embsig(
     with store.transaction(f"reindex-{corpus_table}") as txn:
         txn.overwrite(sigs, corpus_table + "__embsig")
         txn.overwrite(new_meta, corpus_table + "__curation_meta")
-    member_vecs.unpersist()
     return {"n_planes": int(n_planes), "n_tables": int(n_tables),
             "n_signed": int(n_signed)}
 
@@ -829,7 +825,6 @@ def curate_append(
         raise ValueError("curate_append: batch must not carry _fingerprint")
 
     cached = batch.cache()
-    bsh = None
     try:
         # one batch-bound guard pass: duplicate or NULL ids would double-merge
         # (merge_upsert keys on id) and double-count verdicts — fail loudly,
@@ -858,12 +853,11 @@ def curate_append(
         # gate_fail and p1 separately executed the Gopher-signal lineage twice
         # (r07 profile: 1.46s + 0.82s for the same computation); branches over
         # the pinned frame are free filters
-        gate = (
+        gate = pin(
             repetition_signals(b, text_col=text_col, id_col=id_col).select(
                 F.col(id_col).alias("id"),
                 F.coalesce(F.col("quality_pass"), F.lit(False)).alias("ok"),
             )
-            .localCheckpoint(eager=True)
         )
         gate_fail = gate.filter(~F.col("ok")).select("id")
         p1 = gate.filter(F.col("ok")).select("id")
@@ -890,10 +884,9 @@ def curate_append(
             .agg(F.bit_or("bits").alias("bits"))
         )
         n_maybe = Observation()
-        probed = (
+        probed = pin(
             bfp.join(bloom_maybe_member(bfp, bloom, m_bits), "id")
             .observe(n_maybe, F.sum(F.col("maybe_member").cast("long")).alias("n"))
-            .localCheckpoint(eager=True)
         )
         maybe = probed.filter(F.col("maybe_member")).select("id", "fp")
         if not n_maybe.get["n"]:
@@ -906,12 +899,7 @@ def curate_append(
             corpus_fp = store.read(spark, corpus_table).select(
                 F.col("_fingerprint").alias("fp")
             ).distinct()
-            marked = (
-                maybe.join(
-                    corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left"
-                )
-                .localCheckpoint(eager=True)
-            )
+            marked = pin(maybe.join(corpus_fp.withColumn("_hit", F.lit(True)), "fp", "left"))
             exact_corpus = marked.filter(F.col("_hit")).select("id")
             p2a = (
                 probed.filter(~F.col("maybe_member"))
@@ -922,26 +910,23 @@ def curate_append(
             )
         # pin the RANKED frame once; its two branches are free filters
         wfp = W.partitionBy("fp").orderBy(F.asc("id"))
-        ranked = p2a.withColumn("_rk", F.row_number().over(wfp)).localCheckpoint(eager=True)
+        ranked = pin(p2a.withColumn("_rk", F.row_number().over(wfp)))
         exact_batch = ranked.filter(F.col("_rk") > 1).select("id")
         p2 = ranked.filter(F.col("_rk") == 1).select("id")
 
         # -- stage 3: textual near-dup (MinHash vs stored bands) -------------
         bdocs = b.join(p2.withColumnRenamed("id", id_col), id_col)
-        # materialize the batch shingle relation ONCE (it feeds four branches:
-        # corpus verify, batch-internal candidates/verify, and the kept-doc aux
-        # append) — and, as important at scale, give AQE MEASURED size stats
-        # for it: the 16x scale run OOMed when a static under-estimate of this
-        # shingle-array relation picked the broadcast side of the verify join.
-        from pyspark import StorageLevel
-
-        bsh = _shingle_docs(bdocs, text_col, id_col).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        bsh.count()
-        bbands = _band_rows(_signatures_from_shingles(bsh))
+        # pin the batch shingle relation, its bands and the corpus band
+        # candidates ONCE: each feeds several branches (corpus verify,
+        # batch-internal candidates/verify, the kept docs' aux rows). A pin
+        # carries its stored bytes as its size, so the verify join picks its
+        # broadcast side from a measured size, not from a static
+        # under-estimate of the shingle arrays (the 16x scale run OOMed on
+        # exactly that)
+        bsh = pin(_shingle_docs(bdocs, text_col, id_col))
+        bbands = pin(_band_rows(_signatures_from_shingles(bsh)))
         cbands = store.read(spark, corpus_table + "__bands")
-        cand_c = (
+        cand_c = pin(
             bbands.withColumnRenamed("id", "id_a")
             .join(cbands.withColumnRenamed("id", "id_b"), ["band", "bh"])
             .filter(F.col("id_a") != F.col("id_b"))
@@ -952,7 +937,7 @@ def curate_append(
         cdocs = store.read(spark, corpus_table).join(
             cand_c.select(F.col("id_b").alias(id_col)).distinct(), id_col, "left_semi"
         )
-        csh = _shingle_docs(cdocs, text_col, id_col).localCheckpoint(eager=True)
+        csh = pin(_shingle_docs(cdocs, text_col, id_col))
         near_c = (
             cand_c.join(bsh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
             .join(csh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
@@ -962,10 +947,7 @@ def curate_append(
         )
         # ONE pinned left join marks the verified corpus hits; both branches
         # are free filters (stage 2's shape)
-        marked3 = (
-            p2.join(near_c.withColumn("_hit", F.lit(True)), "id", "left")
-            .localCheckpoint(eager=True)
-        )
+        marked3 = pin(p2.join(near_c.withColumn("_hit", F.lit(True)), "id", "left"))
         near_corpus = marked3.filter(F.col("_hit")).select("id")
         p3a = marked3.filter(F.col("_hit").isNull()).select("id")
         # batch-internal pairs among stage-3 survivors → CC → min-id keep
@@ -985,22 +967,19 @@ def curate_append(
             .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= jaccard_threshold)
             .select("id_a", "id_b")
         )
-        keep3 = dedup_keep_decisions(
-            p3a.withColumnRenamed("id", id_col), pairs_b, id_col=id_col
+        # pin the decisions once; both branches are free filters
+        keep3 = pin(
+            dedup_keep_decisions(p3a.withColumnRenamed("id", id_col), pairs_b, id_col=id_col)
+            .select(F.col(id_col).alias("id"), "keep")
         )
-        near_batch = (
-            keep3.filter(~F.col("keep")).select(F.col(id_col).alias("id"))
-            .localCheckpoint(eager=True)
-        )
-        p3 = (
-            keep3.filter(F.col("keep")).select(F.col(id_col).alias("id"))
-            .localCheckpoint(eager=True)
-        )
+        near_batch = keep3.filter(~F.col("keep")).select("id")
+        p3 = keep3.filter(F.col("keep")).select("id")
 
         # -- stage 4: semantic near-dup (LSH vs stored signatures) -----------
         emb_corpus = local_rows_df(spark, [], "id long")
         emb_batch = local_rows_df(spark, [], "id long")
         p4 = p3
+        bsig = None
         if batch_emb is not None and store.exists(corpus_table + "__embsig"):
             # ONE consistent snapshot of (structure meta, signatures): separate
             # reads could straddle a concurrent rebuild_embsig swap and sign
@@ -1013,10 +992,7 @@ def curate_append(
             # pin the batch signature relation: it feeds FOUR consumers (both
             # sides of pairs_e, hit_c's bflat, and the plans' size stats) —
             # unpinned, each consumer re-ran the n_tables LSH self-joins
-            bsig = (
-                _emb_signatures(mvec, dim, n_tables, n_planes, vec_col, emb_id_col)
-                .localCheckpoint(eager=True)
-            )
+            bsig = pin(_emb_signatures(mvec, dim, n_tables, n_planes, vec_col, emb_id_col))
             bflat = bsig.select(
                 F.col("id").alias("id_a"), F.col("v").alias("va"),
                 F.posexplode("buckets").alias("t", "bucket"),
@@ -1035,10 +1011,7 @@ def curate_append(
                 .select(F.col("id_a").alias("id"))
                 .distinct()
             )
-            marked4 = (
-                p3.join(hit_c.withColumn("_hit", F.lit(True)), "id", "left")
-                .localCheckpoint(eager=True)
-            )
+            marked4 = pin(p3.join(hit_c.withColumn("_hit", F.lit(True)), "id", "left"))
             emb_corpus = marked4.filter(F.col("_hit")).select("id")
             p4a = marked4.filter(F.col("_hit").isNull()).select("id")
             pairs_e = (
@@ -1056,24 +1029,19 @@ def curate_append(
                 .join(p4a.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
                 .join(p4a.withColumnRenamed("id", "id_b"), "id_b", "left_semi")
             )
-            keep4 = dedup_keep_decisions(
-                p4a.withColumnRenamed("id", id_col), pairs_e, id_col=id_col
+            keep4 = pin(
+                dedup_keep_decisions(p4a.withColumnRenamed("id", id_col), pairs_e, id_col=id_col)
+                .select(F.col(id_col).alias("id"), "keep")
             )
-            emb_batch = (
-                keep4.filter(~F.col("keep")).select(F.col(id_col).alias("id"))
-                .localCheckpoint(eager=True)
-            )
-            p4 = (
-                keep4.filter(F.col("keep")).select(F.col(id_col).alias("id"))
-                .localCheckpoint(eager=True)
-            )
+            emb_batch = keep4.filter(~F.col("keep")).select("id")
+            p4 = keep4.filter(F.col("keep")).select("id")
 
         # -- verdicts (materialized BEFORE the merge mutates the store; the
         # per-verdict counts ride the pin's job). The union of 8 frames
         # adds up their partitions; coalescing to the batch's k is narrow
         # (no shuffle, no job) and every reader of the pin runs k tasks --
         n_verdict = Observation()
-        verdicts = (
+        verdicts = pin(
             gate_fail.select("id", F.lit("gate_fail").alias("verdict"))
             .unionByName(exact_corpus.select("id", F.lit("exact_dup_corpus").alias("verdict")))
             .unionByName(exact_batch.select("id", F.lit("exact_dup_batch").alias("verdict")))
@@ -1088,7 +1056,6 @@ def curate_append(
                 n_verdict,
                 *[F.sum((F.col("verdict") == v).cast("long")).alias(v) for v in VERDICTS],
             )
-            .localCheckpoint(eager=True)
         )
         counts = {v: n or 0 for v, n in n_verdict.get.items()}
         kept_ids = verdicts.filter(F.col("verdict") == "kept").select(id_col)
@@ -1130,20 +1097,12 @@ def curate_append(
                 ),
                 corpus_table + "__bloom",
             )
-            ksh = bsh.join(
-                kept_ids.withColumnRenamed(id_col, "id"), "id", "left_semi"
-            )
-            store.append(_band_rows(_signatures_from_shingles(ksh)),
-                         corpus_table + "__bands")
-            if batch_emb is not None and store.exists(corpus_table + "__embsig"):
-                kvec = batch_emb.join(
-                    kept_ids.withColumnRenamed(id_col, emb_id_col),
-                    emb_id_col, "left_semi",
-                )
-                store.append(
-                    _emb_signatures(kvec, dim, n_tables, n_planes, vec_col, emb_id_col),
-                    corpus_table + "__embsig",
-                )
+            # the kept docs' aux rows are rows of the batch pins (band rows and
+            # signatures are per document, and kept ⊆ p3)
+            kept = kept_ids.withColumnRenamed(id_col, "id")
+            store.append(bbands.join(kept, "id", "left_semi"), corpus_table + "__bands")
+            if bsig is not None:
+                store.append(bsig.join(kept, "id", "left_semi"), corpus_table + "__embsig")
     finally:
         # release per-run caches: every output above is materialized (store
         # writes are actions, verdicts are localCheckpointed), and a long-lived
@@ -1151,8 +1110,6 @@ def curate_append(
         # batch cache per run until executor storage starves real work — the
         # 16x scale session hit exactly that before this unpersist
         cached.unpersist()
-        if bsh is not None:
-            bsh.unpersist()
     # -- maintenance: automatic LSH re-index when the corpus outgrew the
     # frozen plane count (docstring; probe = one narrow count) -----------
     if auto_reindex:
@@ -1643,7 +1600,7 @@ def export_corpus_delta(
         changes = changes.drop("_fingerprint")
     # churn-bounded and consumed four times (two exports, two stat
     # aggregations): pin once
-    changes = changes.localCheckpoint(eager=True)
+    changes = pin(changes)
     upserts = changes.filter(
         F.col("_action").isin("INSERT", "UPDATE_AFTER")
     ).drop("_action", "_version")
@@ -1953,7 +1910,7 @@ def _stage_rebased_base(
     link_ids = [f.select(id_col) for pair in link_frames for f in pair if f is not None]
     aff = None
     if link_ids:
-        aff = reduce(DataFrame.unionByName, link_ids).distinct().localCheckpoint(eager=True)
+        aff = pin(reduce(DataFrame.unionByName, link_ids).distinct())
 
     # -- touched detection -------------------------------------------------
     # The base's ``_filestats.jsonl`` sidecar carries per-shard

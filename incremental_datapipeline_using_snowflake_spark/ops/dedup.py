@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.util import md5_long
+from ..session import pin
 from .text import words_col
 
 NORM = lambda t: F.regexp_replace(F.lower(F.trim(t)), r"\s+", " ")  # noqa: E731
@@ -102,10 +103,10 @@ def _words_docs(
 ) -> DataFrame:
     """``(id, _w)`` with the word split pinned ONCE — the passage family's
     shared base relation (r13 opt)."""
-    return df.select(
+    return pin(df.select(
         F.col(id_col).alias(id_alias or id_col),
         words_col(F.col(text_col)).alias("_w"),
-    ).localCheckpoint(eager=True)
+    ))
 
 
 def _verified_pairs(cand: DataFrame, docs: DataFrame, threshold: float) -> DataFrame:
@@ -217,7 +218,7 @@ def ngram_jaccard_pairs(
     docs = (
         shingled
         if shingled is not None
-        else _shingle_docs(df, text_col, id_col).localCheckpoint(eager=True)
+        else pin(_shingle_docs(df, text_col, id_col))
     )
     anchor_cand = ngram_anchor_candidates(docs, anchor_mod, max_anchor_df)
     if candidates == "anchor":
@@ -306,7 +307,7 @@ def minhash_dedup_pairs(
     docs = (
         shingled
         if shingled is not None
-        else _shingle_docs(df, text_col, id_col).localCheckpoint(eager=True)
+        else pin(_shingle_docs(df, text_col, id_col))
     )
     cand = minhash_band_pairs(_signatures_from_shingles(docs))
     return _verified_pairs(cand, docs, threshold)
@@ -814,8 +815,8 @@ def incremental_minhash_pairs(
     Output: (id_a, id_b, jaccard, is_corpus_pair) where ``is_corpus_pair``
     marks batch-vs-corpus pairs (vs batch-internal).
     """
-    nd = _shingle_docs(new_docs, text_col, id_col).localCheckpoint(eager=True)
-    cd = _shingle_docs(corpus, text_col, id_col).localCheckpoint(eager=True)
+    nd = pin(_shingle_docs(new_docs, text_col, id_col))
+    cd = pin(_shingle_docs(corpus, text_col, id_col))
     nb = _band_rows(_signatures_from_shingles(nd)).withColumn("_new", F.lit(True))
     cb = _band_rows(_signatures_from_shingles(cd)).withColumn("_new", F.lit(False))
     allb = nb.unionByName(cb)
@@ -1503,7 +1504,7 @@ def winnow_dedup_pairs(
     to surviving pairs only (AQE broadcasts the candidate side).
     """
     cand = winnow_candidate_pairs(df, text_col, id_col, k, w)
-    docs = _shingle_docs(df, text_col, id_col).localCheckpoint(eager=True)
+    docs = pin(_shingle_docs(df, text_col, id_col))
     return _verified_pairs(cand, docs, threshold)
 
 
@@ -1528,7 +1529,7 @@ def winnow_candidate_pairs(
     # fold ONCE instead of twice — localCheckpoint (not cache) so the
     # materialization is released with the job, not parked in executor
     # storage for the session (bench reps call this repeatedly)
-    fps = fps.localCheckpoint(eager=True)
+    fps = pin(fps)
     return (
         fps.alias("a")
         .join(
@@ -1623,7 +1624,7 @@ def simhash_hamming_pairs(
     # both join sides reference the signature fold (60 whens per token):
     # materialize it once, not twice — localCheckpoint so repeated calls
     # in one session don't accumulate unreleasable executor storage
-    banks = banks.localCheckpoint(eager=True)
+    banks = pin(banks)
     cand = (
         banks.alias("a")
         .join(

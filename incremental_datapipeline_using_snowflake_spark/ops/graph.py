@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 MAX_CC_ITERS = 50
 
 
@@ -60,15 +62,22 @@ def connected_components(
     """
     from pyspark.sql import Observation
 
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
-    # the edge count rides the pin's own job
-    obs = Observation()
-    sym = sym.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    n_edges = obs.get["n"]
-    if n_edges == 0:
-        # no edges, no nodes: skip the labels pin and the loop
-        return sym.select(F.col("src").alias("id"), F.col("dst").alias("comp"))
+    # pin the edge list once (symmetrizing reads it twice); each count rides
+    # its pin's own job
+    n_e, n_sym = Observation(), Observation()
+    e = pin(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .observe(n_e, F.count(F.lit(1)).alias("n"))
+    )
+    if n_e.get["n"] == 0:
+        # no edges, no nodes: skip symmetrizing, the labels pin and the loop
+        return e.select(F.col("src").alias("id"), F.col("dst").alias("comp"))
+    sym = pin(
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .observe(n_sym, F.count(F.lit(1)).alias("n"))
+    )
+    n_edges = n_sym.get["n"]
 
     # Scale-adaptive loop partitioning (r14, guide §2.1/§2.2): every
     # iteration runs 3 tiny shuffles over the SAME frames, and the
@@ -91,7 +100,7 @@ def connected_components(
         labels = sym.select(F.col("src").alias("id")).distinct().select(
             "id", F.col("id").alias("comp")
         )
-        labels = labels.localCheckpoint(eager=True)
+        labels = pin(labels)
         return _cc_loop(sym, labels, max_iters)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_p)
@@ -158,12 +167,11 @@ def pagerank(
     by 85e12 regardless of node count.
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    e = e.localCheckpoint(eager=True)
-    nodes = (
+    e = pin(e)
+    nodes = pin(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     base = (PR_DAMP_DEN - PR_DAMP_NUM) * PR_SCALE // (PR_DAMP_DEN * n)

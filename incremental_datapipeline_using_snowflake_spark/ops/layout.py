@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 MORTON_BITS = 16  # 2 x 16 interleaved bits -> 32-bit key; plenty per-file
 
 
@@ -76,7 +78,7 @@ def distributed_ntile(
     parted = df.repartitionByRange(*cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    parted = parted.localCheckpoint(eager=True)
+    parted = pin(parted)
     sizes = {
         r["_pid"]: r["c"]
         for r in parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from .text import words_col
 
 from ..queries.util import ORACLE_MD5_LONG, md5_long, seg_words_sql
+from ..session import pin
 
 N_BUCKETS = 10_000  # split resolution: 0.01% granularity
 
@@ -520,7 +521,7 @@ def dsir_select(
     # corpus. Pinned eagerly so the two consumers share the computed rows;
     # the relation is (id, feature, c) — collapsed, not the token explode.
     raw_feats = dsir_ngram_features(raw, text_col, id_col, n_features)
-    raw_feats = raw_feats.localCheckpoint(eager=True)
+    raw_feats = pin(raw_feats)
     ratios = dsir_log_ratios(
         target, raw, text_col, id_col, n_features, raw_features=raw_feats
     )

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 N_PLANES = 8
 
 
@@ -381,7 +383,7 @@ def ivf_topk(
     space is (corpus / n_cells) × n_probe per query instead of |corpus|."""
     cents, assigned = ivf_assignments(corpus, n_cells, vec_col, id_col)
     # referenced twice (probe list + candidate side): pin once
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(assigned)
 
     q = assigned.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv")
@@ -483,7 +485,7 @@ def semantic_dedup_keep(
     """
     _, assigned = ivf_assignments(corpus, n_cells, vec_col, id_col)
     # one assignment pass shared by both pair sides
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(assigned)
 
     a = assigned.withColumnsRenamed({"id": "id_a", "v": "va"})
     b = assigned.withColumnsRenamed({"id": "id_b", "v": "vb"})
@@ -566,7 +568,7 @@ def semantic_dedup_keep_lsh(
             for t in range(n_tables)
         ],
     ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    sigs = sigs.localCheckpoint(eager=True)
+    sigs = pin(sigs)
     pair_parts = [
         _bucket_pair_scores(sigs, f"b{t}", directed=False)
         .filter(F.round(F.col("cosine_raw"), 6) >= threshold)
@@ -619,7 +621,7 @@ def knn_graph(
     # norms precomputed per vector (one fold per pair at scoring instead
     # of three — same doubles, the division tree is unchanged)
     assigned = assigned.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(assigned)
 
     a = assigned.withColumnsRenamed({"id": "src_id", "v": "va", "nrm": "na"})
     b = assigned.withColumnsRenamed({"id": "nbr_id", "v": "vb", "nrm": "nb"})
@@ -682,7 +684,7 @@ def knn_graph_ivf2(
         n_cells2 = n_cells2 or side
     _, a1 = ivf_assignments(corpus, n_cells1, vec_col, id_col)
     a1 = a1.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    a1 = a1.localCheckpoint(eager=True)
+    a1 = pin(a1)
 
     # level-2 seeds: the n_cells2 lowest-id members of EACH coarse cell
     wseed = W.partitionBy("cell").orderBy("id")
@@ -712,7 +714,7 @@ def knn_graph_ivf2(
         .select("id", "subcell")
     )
     assigned = best.join(a1, "id").select("id", "v", "nrm", "cell", "subcell")
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(assigned)
 
     a = assigned.withColumnsRenamed({"id": "src_id", "v": "va", "nrm": "na"})
     b = assigned.withColumnsRenamed({"id": "nbr_id", "v": "vb", "nrm": "nb"})
@@ -890,7 +892,7 @@ def knn_graph_lsh(
             for t in range(n_tables)
         ],
     ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    sigs = sigs.localCheckpoint(eager=True)
+    sigs = pin(sigs)
     # per-bucket Arrow kernel (guide §4.2) replaces the in-bucket self-join
     # + interpreted per-pair HOF fold: same bucket-keyed exchange, vectors
     # cross it ONCE (the join shipped both sides), scoring vectorized;
@@ -1004,7 +1006,7 @@ def pq_topk(
     """
     sub = dim // n_sub
     cb, enc = pq_encode(corpus, dim, n_sub, n_codes, vec_col, id_col)
-    enc = enc.localCheckpoint(eager=True)
+    enc = pin(enc)
 
     xq = F.transform(
         F.col(vec_col), lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("long")
@@ -1057,9 +1059,9 @@ def ivfpq_topk(
     replays the full composition.
     """
     cents, assigned = ivf_assignments(corpus, n_cells, vec_col, id_col)
-    assigned = assigned.select("id", "v", "cell").localCheckpoint(eager=True)
+    assigned = pin(assigned.select("id", "v", "cell"))
     cb, enc = pq_encode(corpus, dim, n_sub, n_codes, vec_col, id_col)
-    enc = enc.localCheckpoint(eager=True)
+    enc = pin(enc)
 
     # n_probe nearest cells per query (same ranking as ivf_topk)
     q = assigned.filter(F.col("id").isin(query_ids)).select(
@@ -1288,7 +1290,7 @@ def ivf_sq8_topk(
     :func:`sq8_topk` within the probed cells."""
     stats = sq8_stats(corpus, vec_col)
     cents, assigned = ivf_assignments(corpus, n_cells, vec_col, id_col)
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(assigned)
 
     q = assigned.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv")
@@ -1451,15 +1453,14 @@ def query_ivf_index(
         (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("_sim"),
     )
     wq = W.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("cell"))
-    probes = (
+    # pin the BOUNDED probe list (≤ n_probe × |queries| rows) once: it
+    # feeds the probe-cell collect plus one broadcast per scoring stage (two
+    # in the sq8 path), and each unpinned execution re-ran the
+    # query×centroid ranking (r14, guide §1.2)
+    probes = pin(
         qprobe.withColumn("_rk", F.row_number().over(wq))
         .filter(F.col("_rk") <= n_probe)
         .select("query_id", "qv", "cell")
-        # pin the BOUNDED probe list (≤ n_probe × |queries| rows) once:
-        # it feeds the probe-cell collect plus one broadcast per scoring
-        # stage (two in the sq8 path), and each unpinned execution re-ran
-        # the query×centroid ranking (r14, guide §1.2)
-        .localCheckpoint(eager=True)
     )
     probe_cells = [r[0] for r in probes.select("cell").distinct().collect()]
     asg = store.read(spark, f"{name}.assignments")
@@ -1996,7 +1997,7 @@ def mine_hard_negatives_ivf(
     split = _positives_splitter(positive_ids, id_col)
     cents, assigned = ivf_assignments(emb, n_cells, vec_col, id_col)
     # two consumers (anchor probe side + candidate side): pin once
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(assigned)
     anchors, cand_src = split(assigned, "id")
     q = anchors.select(
         F.col("id").alias("query_id"), F.col("v").alias("qv")

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.util import md5_long
+from ..session import pin
 
 # BPE-ish tokenizer regex: letter runs, digit runs, single punctuation marks.
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
@@ -505,7 +506,7 @@ def gopher_char_signals(
         wl.alias("_wl"),
         total.alias("_total"),
     )
-    base = base.localCheckpoint(eager=True)
+    base = pin(base)
 
     def window_lens(n: int) -> Column:
         # char length of the n-word window starting at each position
@@ -1036,7 +1037,7 @@ def score_char_lid(
 
     # two consumers (per-lang totals + the scoring join): pin the tiny
     # dense model once instead of re-running the training aggregation
-    model = model.localCheckpoint(eager=True)
+    model = pin(model)
     tot = model.groupBy("lang").agg(F.sum("c").alias("tot"))
     # NOTE (r13 opt): collapse-before-hash was A/B-tested here too and
     # REJECTED — per-doc distinct grams only collapse ~2x (142k distinct

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def run_crawl_pipeline(
     spark: SparkSession,
@@ -70,9 +72,9 @@ def run_crawl_pipeline(
     # extraction expressions over the (rare) malformed rows compute
     # garbage that the filter drops; doc_id/text values for clean rows
     # are expression-identical to the old two-pass shape.
-    parsed = warc_html_to_documents(
-        raw, main_content=main_content, keep_cols=("parse_error",)
-    ).localCheckpoint(eager=True)
+    parsed = pin(
+        warc_html_to_documents(raw, main_content=main_content, keep_cols=("parse_error",))
+    )
     n_quarantined = parsed.filter(F.col("parse_error").isNotNull()).count()
     docs = parsed.filter(F.col("parse_error").isNull()).drop("parse_error")
     n_docs = docs.count()
@@ -89,10 +91,12 @@ def run_crawl_pipeline(
         # re-ran the hashed char-ngram scoring for every downstream
         # consumer — the unknown-count action, the CCNet bucket pass, and
         # the curation batch cache fill (r14, guide §1.2)
-        routed = X.route_lid_unknown(
-            X.score_char_lid(docs, lid_model, id_col=id_col, margin=True, **skw),
-            **kw,
-        ).select(id_col, "lid_lang").localCheckpoint(eager=True)
+        routed = pin(
+            X.route_lid_unknown(
+                X.score_char_lid(docs, lid_model, id_col=id_col, margin=True, **skw),
+                **kw,
+            ).select(id_col, "lid_lang")
+        )
         labeled = docs.drop("lang").join(routed, id_col)
         n_unknown = n_docs - labeled.filter(
             F.col("lid_lang") != "unknown"
@@ -107,9 +111,7 @@ def run_crawl_pipeline(
         # same pin for the narrow (id, bucket) relation — its perplexity
         # scoring otherwise re-ran for the tail-count action AND the
         # curation batch fill
-        buckets = X.ccnet_buckets(docs, id_col=id_col).select(
-            id_col, "bucket"
-        ).localCheckpoint(eager=True)
+        buckets = pin(X.ccnet_buckets(docs, id_col=id_col).select(id_col, "bucket"))
         gated = docs.join(buckets, id_col).filter(F.col("bucket") != "tail")
         kept = gated.drop("bucket")
         n_before = n_docs - n_unknown

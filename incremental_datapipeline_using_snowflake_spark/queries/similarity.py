@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..ops import multimodal as M
 from ..ops import similarity as S
 from ..ops.dedup import embedding_near_pairs_lsh
+from ..session import pin
 from .artifacts import artifact
 from .util import ORACLE_MD5_LONG, load
 
@@ -351,7 +352,7 @@ def dedup_emblsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("embedding"),
         )
     ).filter((F.col("vec_id") % 100000) % mod == 0)
-    corpus = corpus.localCheckpoint(eager=True)
+    corpus = pin(corpus)
     truth = D.embedding_near_pairs(corpus, threshold=0.999).select("id_a", "id_b")
     cand = D.embedding_lsh_candidate_pairs(corpus, dim=EMB_DIM)
     return _referee_counts(truth, cand, "bucket")

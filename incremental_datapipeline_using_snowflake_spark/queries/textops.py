@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..ops import dedup as D
 from ..ops import text as X
 from ..ops.text import LANG_PRIORITY, STOPWORDS
+from ..session import pin
 from .artifacts import artifact, spill
 from .util import ORACLE_MD5_LONG, load, md5_long, seg_words_sql
 
@@ -2711,7 +2712,7 @@ def _eval_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = load(spark, sf_dir, "documents").count()
     mod = max(10, n_docs // 50)
     corpus = corpus_df(spark, sf_dir).filter((F.col("doc_id") % 100000) % mod == 0)
-    return corpus.localCheckpoint(eager=True)
+    return pin(corpus)
 
 
 def _referee_counts(truth: DataFrame, cand: DataFrame, suffix: str) -> DataFrame:
@@ -3585,7 +3586,7 @@ def fertility_by_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluated the md5-per-word CJK render (3 renders -> 1; noop A/B
     # in OPTIMIZATION_r13.md). Values identical — the render is
     # deterministic row-local projection.
-    uni = (
+    uni = pin(
         docs.select("doc_id", "text", F.lit("latin").alias("script"))
         .unionByName(
             docs.select(
@@ -3594,7 +3595,6 @@ def fertility_by_script(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("cjk").alias("script"),
             )
         )
-        .localCheckpoint(eager=True)
     )
     m = [
         (r["lhs"], r["rhs"])

@@ -15,7 +15,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from functools import lru_cache
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -107,6 +109,109 @@ def local_rows_df(spark: SparkSession, rows: list, schema: str):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema=schema
     )
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` once and give the planner its measured size.
+
+    Runs ``df.localCheckpoint(eager=True)``, reads the bytes the pin's
+    blocks hold (memory plus disk), and returns the pin with those bytes as
+    its plan statistics. No job runs. The planner then decides each join on
+    the pin as it decides any other: by the size estimate against
+    ``spark.sql.autoBroadcastJoinThreshold`` at planning time, and by
+    runtime sizes under AQE. When not every block can be found the pin
+    keeps the plan's estimate.
+
+    Why: a checkpoint keeps the *plan's* size estimate, and Catalyst
+    estimates an inner join as the product of its children, so a 26-row
+    frame pinned after a few joins claimed 1e68 bytes. Every join on such a
+    pin was planned as a SortMergeJoin; AQE ran each side's shuffle as its
+    own job and only then switched to a broadcast. The stored size is
+    SizeEstimator's figure for deserialized rows, at or above the real
+    size (20000 rows of 20-long arrays stored 5 MB where the plan said
+    240 KB), so a pin is not broadcast on an under-estimate. Frames derived
+    from a pin are estimated from it by Catalyst's usual rules, as frames
+    read from the store are: an explode keeps its input's size estimate.
+
+    Tried and rejected: a broadcast hint on every pin that fits the
+    threshold (the hint rides through projections, aggregates and
+    explodes to the next join, and AQE never demotes a hinted broadcast);
+    ``coalesce(1)`` before every pin (no fewer jobs than sized pins
+    alone); and ``persist`` plus a ``noop`` write as the pin (plans are no
+    longer truncated; the release built a 2 GB plan string and failed).
+    """
+    spark = df.sparkSession
+    pinned = df.localCheckpoint(eager=True)
+    plan = pinned._jdf.queryExecution().analyzed()  # the pin's LogicalRDD
+    stored = _stored_bytes(spark, plan.rdd())
+    if stored is None:
+        return pinned
+    jvm, jss = spark._jvm, spark._jsparkSession
+    sized = plan.copy(
+        plan.output(), plan.rdd(), plan.outputPartitioning(),
+        plan.outputOrdering(), plan.isStreaming(), plan.stream(), jss,
+        jvm.scala.Some(_size_statistics(jvm, stored)),
+        jvm.scala.Some(plan.constraints()),
+    )
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, sized), spark)
+
+
+def _stored_bytes(spark: SparkSession, rdd) -> int | None:
+    """Bytes held by the blocks of a pin's ``rdd``, or None when a block is
+    missing.
+
+    Asked of the block manager master, to which every block is reported
+    before its task ends, one block per partition (about 0.75 ms a
+    partition on 4 cores). Not the app status store: its listener runs
+    asynchronously, so right after the pin its entry can still be missing
+    or short of partitions, and reading it would size a pin by how busy
+    the listener bus is.
+    """
+    sc = spark.sparkContext._jsc.sc()
+    storage = spark._jvm.org.apache.spark.storage
+    statuses = sc.env().blockManager().master().getStorageStatus()
+    rdd_id, total = rdd.id(), 0
+    for i in range(rdd.getNumPartitions()):
+        block = storage.RDDBlockId(rdd_id, i)
+        for status in statuses:
+            found = status.getBlock(block)
+            if found.isDefined():
+                found = found.get()
+                total += found.memSize() + found.diskSize()
+                break
+        else:
+            return None
+    return total
+
+
+@lru_cache(maxsize=1)
+def _statistics_maker(jvm):
+    """A method handle building ``Statistics(sizeInBytes=BigInt(n))`` from a
+    long, plus its constant arguments. The BigInt is made inside the JVM:
+    py4j turns any returned ``scala.math.BigInt`` into a Python int."""
+    handles = jvm.java.lang.invoke.MethodHandles
+    lookup = handles.publicLookup()
+    big = jvm.java.lang.Class.forName("scala.math.BigInt")
+    stats = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.plans.logical.Statistics"
+    )
+    to_big = lookup.findStatic(
+        big, "apply",
+        jvm.java.lang.invoke.MethodType.methodType(big, jvm.java.lang.Long.TYPE),
+    )
+    make = handles.collectArguments(
+        lookup.unreflectConstructor(stats.getConstructors()[0]), 0, to_big
+    )
+    no_columns = getattr(
+        getattr(jvm.org.apache.spark.sql.catalyst.expressions, "AttributeMap$"), "MODULE$"
+    ).empty()
+    return make, jvm.scala.Option.empty(), no_columns
+
+
+def _size_statistics(jvm, n_bytes: int):
+    """``Statistics(sizeInBytes=n_bytes)``: no row count, no column stats."""
+    make, no_rows, no_columns = _statistics_maker(jvm)
+    return make.invokeWithArguments([n_bytes, no_rows, no_columns, False])
 
 
 def byte_sized_partitions(spark: SparkSession, n_bytes: int, current: int) -> int:

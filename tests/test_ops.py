@@ -209,9 +209,9 @@ def test_ops_has_no_broad_excepts():
     assert found == [], found
 
 
-def _os_call_sites(attr: str) -> list[tuple[str, str | None]]:
-    """(file, innermost enclosing function) of every ``os.<attr>(...)``
-    call in the package, read off its parsed sources."""
+def _call_sites(attr: str) -> list[tuple[str, str | None, object]]:
+    """(file, innermost enclosing function, call node) of every
+    ``<x>.<attr>(...)`` call in the package, read off its parsed sources."""
     import ast
     import pathlib
 
@@ -230,13 +230,20 @@ def _os_call_sites(attr: str) -> list[tuple[str, str | None]]:
             for n in ast.walk(fn)
         }
         found += [
-            (path.name, owner.get(node))
+            (path.name, owner.get(node), node)
             for node in ast.walk(tree)
-            if isinstance(node, ast.Call)
-            and getattr(node.func, "attr", None) == attr
-            and getattr(getattr(node.func, "value", None), "id", None) == "os"
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == attr
         ]
     return found
+
+
+def _os_call_sites(attr: str) -> list[tuple[str, str | None]]:
+    """(file, innermost enclosing function) of every ``os.<attr>(...)``
+    call in the package."""
+    return [
+        (name, fn) for name, fn, node in _call_sites(attr)
+        if getattr(node.func.value, "id", None) == "os"
+    ]
 
 
 def test_package_has_one_hardlink_loop():
@@ -246,6 +253,101 @@ def test_package_has_one_hardlink_loop():
     Spark-free: it only parses the sources."""
     found = _os_call_sites("link")
     assert found == [("table_store.py", "_link_files")], found
+
+
+def _overestimated_pin_input(spark, n: int):
+    """``n`` rows behind three joins: Catalyst estimates each join as the
+    product of its sides, so the plan claims far more than the broadcast
+    threshold for a frame of a few hundred bytes."""
+    f = spark.range(n)
+    for i in range(3):
+        f = f.join(spark.range(n).withColumnRenamed("id", f"k{i}"), F.col("id") == F.col(f"k{i}"))
+    return f.select("id", (F.col("id") * 2).alias(f"v{n}"))
+
+
+def _initial_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_join_of_small_pins_plans_a_broadcast(spark):
+    """A pin carries its measured size: a join of two small pins is a
+    BroadcastHashJoin in the initial plan, with no SortMergeJoin and no
+    hash shuffle, although each pin's plan estimate is over the threshold.
+    The threshold still decides: at 1 byte the same join is a
+    SortMergeJoin."""
+    from incremental_datapipeline_using_snowflake_spark.session import pin
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = int(spark.conf.get(key))
+    raw = _overestimated_pin_input(spark, 26).localCheckpoint(eager=True)
+    assert raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > threshold
+    a, b = pin(_overestimated_pin_input(spark, 26)), pin(_overestimated_pin_input(spark, 20))
+    joined = a.join(b, "id")
+    plan = _initial_plan(joined)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert sorted(r["id"] for r in joined.collect()) == list(range(20))
+    try:
+        spark.conf.set(key, "1")
+        plan = _initial_plan(a.join(b, "id"))
+        assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan
+    finally:
+        spark.conf.set(key, str(threshold))
+
+
+def test_pin_carries_stored_bytes_as_statistics(spark):
+    """The pin is a bare ``LogicalRDD`` (no broadcast hint) whose size
+    estimate is the bytes its blocks hold, not the plan's estimate."""
+    from incremental_datapipeline_using_snowflake_spark import session
+
+    p = session.pin(_overestimated_pin_input(spark, 26))
+    plan = p._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "LogicalRDD"
+    size = p._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert size == session._stored_bytes(spark, plan.rdd()) > 0
+    assert p.count() == 26
+
+
+def test_exploded_pin_is_sized_at_the_join(spark):
+    """The threshold decides at each join, not at the pin. A pin that fits
+    the threshold joins as a broadcast; the same pin exploded into wider
+    rows is estimated over the threshold, and its join plans no
+    broadcast."""
+    from incremental_datapipeline_using_snowflake_spark.session import pin
+
+    small = pin(spark.range(200).select(
+        "id", F.array(*[F.col("id") * 10 + i for i in range(10)]).alias("arr")
+    ))
+    big = pin(spark.range(5000).select(F.col("id").alias("x"), (F.col("id") * 3).alias("y")))
+    exploded = small.select("id", F.posexplode("arr").alias("t", "x")).withColumn(
+        "tag", F.concat(F.lit("t"), F.col("t").cast("string"))
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    size = small._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    try:
+        spark.conf.set(key, str(size))
+        plan = _initial_plan(small.join(big, F.col("id") == F.col("x")))
+        assert "BroadcastHashJoin" in plan, plan
+        joined = exploded.join(big, "x")
+        plan = _initial_plan(joined)
+        assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan
+        assert joined.count() == 2000
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_every_eager_pin_goes_through_session_pin():
+    """No ``.localCheckpoint(eager=True)`` in the package outside
+    ``session.pin``: every eager pin carries its measured size. Spark-free:
+    it only parses the sources."""
+    found = [
+        (name, fn) for name, fn, node in _call_sites("localCheckpoint")
+        if any(k.arg == "eager" and getattr(k.value, "value", None) is True
+               for k in node.keywords)
+    ]
+    assert found == [("session.py", "pin")], found
 
 
 def test_package_has_one_atomic_small_file_write():
