@@ -14,11 +14,14 @@ transactional MERGE, so we decompose it —
 Copy-on-write at file grain (Snowflake rewrites only the micro-partitions a
 MERGE touches): the source is deduplicated and pinned once, and an
 ``Observation`` on the pin yields its key min/max. The driver reads each
-target file's key min/max from its parquet footer (no Spark job); a file
-whose range is disjoint from the source's on some key column cannot hold a
-match, so the merge plan runs over the touched files only and the others
-are hardlinked into the new version unchanged. A night that adds one day
-rewrites the file holding that day, not the history.
+target file's key min/max (no Spark job): from its parquet footer, or, for a
+partition column, from the file's ``col=v`` directory
+(:meth:`TableStore.file_bounds`). A file whose range is disjoint from the
+source's on some key column cannot hold a match, so the merge plan runs over
+the touched files only and the others are hardlinked into the new version
+unchanged. A night that adds one day rewrites the file holding that day, not
+the history; a partitioned target keyed on its partition column rewrites
+only the partitions the source names.
 
 Scale notes (100 TB): the incremental source batch is orders of magnitude
 smaller than the target, so the source side is broadcast (no shuffle of the
@@ -32,12 +35,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import pin
-from .table_store import UNWRITTEN_PARTITIONS, TableStore
+from .table_store import TableStore
 
 
 # key types whose parquet min/max order agrees with join equality. Float
@@ -57,21 +60,20 @@ def _split_files(
     src: DataFrame,
     keys: list[str],
     bounds: list[tuple],
-    partition_by: list[str] | None,
 ) -> tuple[list[str], list[str]]:
     """``(touched, untouched)`` data files of ``name``'s current version,
     relative to its dir. A file is untouched when, on some key column, its
-    footer ``[min, max]`` is disjoint from the source's ``bounds`` — none of
-    its rows can equal a source key. Conservative: a file without min/max
-    for a key column, or a key type outside ``_PRUNABLE_KEYS``, counts as
-    touched on that column. Every file is touched when carried files could
-    not match the rewritten ones: the layout changes, or a source column's
-    type differs from the target's (the union would widen it)."""
+    ``[min, max]`` (:meth:`TableStore.file_bounds`: footer stats, or the
+    partition value of a partition column) is disjoint from the source's
+    ``bounds`` — none of its rows can equal a source key. Conservative: a
+    file without min/max for a key column, or a key type outside
+    ``_PRUNABLE_KEYS``, counts as touched on that column. Every file is
+    touched when a source column's type differs from the target's (the
+    union would widen it, and carried files could not match the rewritten
+    ones)."""
     files = store.file_bounds(store.data_path(name), keys)
     types = {f.name: f.dataType for f in target.schema.fields}
-    if (partition_by or None) != store.partitioning(name) or any(
-        types.get(f.name, f.dataType) != f.dataType for f in src.schema.fields
-    ):
+    if any(types.get(f.name, f.dataType) != f.dataType for f in src.schema.fields):
         return sorted(files), []
 
     def disjoint(file_bounds: dict) -> bool:
@@ -98,10 +100,7 @@ def merge_upsert(
     update_cols: list[str] | None = None,
     insert_cols: list[str] | None = None,
     partition_by: list[str] | None = None,
-    count_rows: bool = True,
     broadcast_source: bool = True,
-    prune_partitions: bool = False,
-    validate_pruning: bool = True,
     txn=None,
 ) -> dict:
     """Upsert ``source`` into ``target_table`` on ``keys``, copy-on-write:
@@ -112,41 +111,25 @@ def merge_upsert(
     - ``update_cols``: non-key columns taken from the source for matched rows
       (default: every target column present in the source). Mirrors the
       reference's update dict that excludes helper columns
-      (``co2_analytical_sp/function.py:127-141``).
+      (``co2_analytical_sp/function.py:127-141``). A matched row whose
+      partition column is updated moves to its new partition.
     - ``insert_cols``: columns populated for inserted rows (default: same as
       update set + keys); target columns absent from the source become NULL.
-    - ``count_rows``: when False, skip the updated/inserted count jobs (two
-      extra actions over the join branches) — the hot path for pipeline
-      stages that only need the merge side effect.
+    - ``partition_by``: the layout of a new target. An existing target keeps
+      its recorded layout, which an explicit value must restate
+      (:meth:`TableStore.write_layout`). Put the partition column in
+      ``keys`` to prune by partition: a key match then implies the same
+      partition, so only the partitions the source names are rewritten.
     - ``txn``: a :meth:`TableStore.transaction` handle — the merged table
       is STAGED through it instead of committed immediately, so the merge
       publishes atomically with the caller's other writes (the pipeline
       pairs HARMONIZED with its min/max scalar cache this way).
-    - ``prune_partitions``: the 100 TB merge path for partitioned targets.
-      The touched first-level partition values are read off the (small)
-      source; the target scan is partition-pruned to them, the merge runs
-      over ONLY those partitions, and the store links every untouched
-      partition into the new version unchanged
-      (``carried=UNWRITTEN_PARTITIONS``) — merge cost becomes
-      proportional to the churned partitions, not the table. Requires
-      ``partition_by``; the first partition column must exist in the
-      source and must not be updated (a row changing partition would need
-      its destination partition rewritten too).
-    - ``validate_pruning``: enforce the pruned path's precondition that no
-      source key already exists in the target under an UNTOUCHED partition
-      (such a row would be misclassified as an insert and its old image
-      would survive via the linked untouched partition — silent duplicate
-      keys). Skipped automatically when the partition column is part of
-      ``keys`` (a key match then implies the same partition). The check is
-      one key-column-pruned scan of the untouched partitions semi-joined
-      against the broadcast source keys — no shuffle; pass ``False`` only
-      when the caller structurally guarantees partition stability.
 
-    Returns ``{"updated": n, "inserted": n}`` row counts (-1 when skipped).
+    Returns ``{"updated": n, "inserted": n}`` row counts, observed on the
+    write's matched and inserted branches (no extra job).
     """
-    from pyspark.sql import Observation
-
     sink = txn if txn is not None else store
+    partition_by = store.write_layout(target_table, partition_by)
     # the source is evaluated ONCE: deduplicated on the keys and pinned;
     # every branch below plans over the pin, whose Observation carries the
     # row count and each key column's min/max
@@ -154,96 +137,33 @@ def merge_upsert(
     src_stats = [F.count(F.lit(1)).alias("n")]
     for i, k in enumerate(keys):
         src_stats += [F.min(k).alias(f"lo{i}"), F.max(k).alias(f"hi{i}")]
-    src = (
-        pin(source.dropDuplicates(keys).observe(obs, *src_stats))
-    )
+    src = pin(source.dropDuplicates(keys).observe(obs, *src_stats))
     got = obs.get
+    # the write's plan and its observations belong to one session, the
+    # source's: an Observation completes only when a query of the session
+    # it was made in runs, and a streaming micro-batch's frames live in a
+    # session of their own
+    spark = src.sparkSession
 
     if not store.exists(target_table):
         out = src.select(*(insert_cols or source.columns))
         sink.overwrite(out, target_table, partition_by=partition_by)
-        return {"updated": 0, "inserted": got["n"] if count_rows else -1}
+        return {"updated": 0, "inserted": got["n"]}
 
     target = store.read(spark, target_table)
-    if prune_partitions:
-        if not partition_by:
-            raise ValueError("prune_partitions requires partition_by")
-        pcol = partition_by[0]
-        if pcol not in src.columns:
-            raise ValueError(f"source lacks partition column {pcol!r}")
-        if update_cols and pcol in update_cols:
-            raise ValueError(f"partition column {pcol!r} cannot be updated")
-        # the partition column must never enter the update set — even the
-        # DEFAULT one (update_cols=None would otherwise include it since it
-        # exists on both sides): under the path's contract source pcol ==
-        # target pcol for matched rows, but if the contract is violated an
-        # updated pcol would silently move rows across partition dirs.
-        update_cols = update_cols or [
-            c
-            for c in target.columns
-            if c not in keys and c != pcol and c in src.columns
-        ]
-        # inserted rows MUST carry the partition column (the default
-        # insert set is keys + update set, which usually excludes it; a
-        # NULL partition would land outside every replaced dir and corrupt
-        # the link set)
-        if insert_cols is None:
-            insert_cols = list(dict.fromkeys(keys + update_cols))
-        if pcol not in insert_cols:
-            insert_cols = [pcol, *insert_cols]
-        # the touched partition set is a bounded scalar list (days/years of
-        # one batch), not a data collect
-        pvals = [r[0] for r in src.select(pcol).distinct().collect()]
-        if any(v is None for v in pvals):
-            raise ValueError(
-                f"merge_upsert({target_table}): source has NULL values in "
-                f"partition column {pcol!r} — the pruned scan cannot match "
-                f"the NULL partition (isin semantics); merge without "
-                f"prune_partitions or filter the NULLs"
-            )
-        rows = target.filter(F.col(pcol).isin(pvals))
-        if validate_pruning and pcol not in keys:
-            # precondition check: a source key living in an UNTOUCHED target
-            # partition would be misclassified as an insert (the pruned scan
-            # can't see its match) and duplicated via the partition links.
-            # Key-column-pruned scan + broadcast semi-join, no shuffle.
-            src_keys = F.broadcast(src.select(*keys))
-            # NULL-partition target rows are untouched too (isin is NULL
-            # for them, and plain ~isin would drop them from the check)
-            n_moved = (
-                target.filter(~F.coalesce(F.col(pcol).isin(pvals), F.lit(False)))
-                .select(*keys)
-                .join(src_keys, on=keys, how="left_semi")
-                .count()
-            )
-            if n_moved:
-                raise ValueError(
-                    f"merge_upsert({target_table}): {n_moved} source key(s) "
-                    f"already exist in the target under partitions outside "
-                    f"the touched set {sorted(map(str, pvals))[:10]} — a "
-                    f"row's partition value may not change under "
-                    f"prune_partitions; merge without pruning or delete the "
-                    f"old rows first (validate_pruning=False skips this "
-                    f"check when partition stability is guaranteed)"
-                )
-        # replaced partitions are read off the dirs the write produces
-        carried = UNWRITTEN_PARTITIONS
-    else:
-        base = store.data_path(target_table)
-        bounds = [(got[f"lo{i}"], got[f"hi{i}"]) for i in range(len(keys))]
-        touched, carried = _split_files(
-            store, target_table, target, src, keys, bounds, partition_by
-        )
-        # no file touched: a zero-row target lets Catalyst drop the joins and
-        # broadcasts, so the write is just the pinned source — one plan
-        rows = (
-            spark.read.schema(target.schema)
-            .option("basePath", base)
-            .parquet(*[os.path.join(base, f) for f in touched])
-            if touched
-            else target.limit(0)
-        )
-    matched, inserted, result = merge_branches(
+    base = store.data_path(target_table)
+    bounds = [(got[f"lo{i}"], got[f"hi{i}"]) for i in range(len(keys))]
+    touched, carried = _split_files(store, target_table, target, src, keys, bounds)
+    # no file touched: a zero-row target lets Catalyst drop the joins and
+    # broadcasts, so the write is just the pinned source — one plan
+    rows = (
+        spark.read.schema(target.schema)
+        .option("basePath", base)
+        .parquet(*[os.path.join(base, f) for f in touched])
+        if touched
+        else target.limit(0)
+    )
+    untouched, matched, inserted = merge_branches(
         rows,
         src,
         keys,
@@ -251,10 +171,12 @@ def merge_upsert(
         insert_cols=insert_cols,
         broadcast_source=broadcast_source,
     )
-    n_upd = matched.count() if count_rows else -1
-    n_ins = inserted.count() if count_rows else -1
+    n_upd, n_ins = Observation(), Observation()
+    result = untouched.unionByName(
+        matched.observe(n_upd, F.count(F.lit(1)).alias("n"))
+    ).unionByName(inserted.observe(n_ins, F.count(F.lit(1)).alias("n")))
     sink.overwrite(result, target_table, partition_by=partition_by, carried=carried)
-    return {"updated": n_upd, "inserted": n_ins}
+    return {"updated": n_upd.get["n"], "inserted": n_ins.get["n"]}
 
 
 def merge_branches(
@@ -266,7 +188,8 @@ def merge_branches(
     broadcast_source: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The broadcast-hinted merge plan as pure DataFrames:
-    ``(matched, inserted, result)``. ``source`` must hold one row per key
+    ``(untouched, matched, inserted)``, each in ``target``'s column order;
+    their union is the merged table. ``source`` must hold one row per key
     (:func:`merge_upsert` passes its deduplicated pin). ``target`` is what
     the merge rewrites — the touched files, in :func:`merge_upsert` — and
     is scanned up to three column-pruned times, but never shuffled and
@@ -313,10 +236,7 @@ def merge_branches(
         ]
     )
 
-    result = untouched.select(*target_cols).unionByName(
-        matched.select(*target_cols)
-    ).unionByName(inserted)
-    return matched, inserted, result
+    return untouched.select(*target_cols), matched.select(*target_cols), inserted
 
 
 def apply_changes(
@@ -416,8 +336,6 @@ def delete_where(
     version until GC; call :meth:`TableStore.purge_versions` after a
     privacy-motivated delete so retained history cannot resurrect the rows.
     """
-    from pyspark.sql import Observation
-
     # three-valued logic: DELETE removes only rows where the predicate is
     # TRUE — NULL-valued predicates keep their rows (SQL semantics)
     cond = F.expr(condition) if isinstance(condition, str) else condition
@@ -451,8 +369,6 @@ def update_where(
     byte-identical. Same single-scan Observation counting and atomic
     commit as :func:`delete_where`.
     """
-    from pyspark.sql import Observation
-
     cond = F.expr(condition) if isinstance(condition, str) else condition
     cond = F.coalesce(cond, F.lit(False))  # NULL predicate -> row untouched
     df = store.read(spark, name)

@@ -18,15 +18,17 @@ Single-writer-per-table semantics; at cluster scale the same protocol works
 on any object store with atomic pointer writes (or swap in Delta/Iceberg).
 
 Appends write additional parquet files *into* the current version directory
-(standard Spark append); partitioned tables use Hive-style ``COL=value``
-subdirectories so partition pruning applies (reference's year-foldered
-layout, SURVEY.md §2.1 S6).
+(standard Spark append), in the table's recorded layout; partitioned tables
+use Hive-style ``COL=value`` subdirectories so partition pruning applies
+(reference's year-foldered layout, SURVEY.md §2.1 S6).
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
+import re
 import shutil
 from collections.abc import Sequence
 from contextlib import contextmanager
@@ -34,20 +36,31 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType, ByteType, DataType, DateType, IntegerType, LongType, MapType,
+    ShortType, StringType, StructField, StructType,
+)
 
 # per-version schema record; Spark's readers skip ``_``-prefixed files
 SCHEMA_RECORD = "_schema.json"
 
-# ``carried`` selector for a partition overwrite (Delta ``replaceWhere`` /
-# dynamic partition overwrite): the new version carries every data file of
-# the current one whose top-level partition dir the staged write did not
-# produce. The replaced set is read off the written dir names, so it matches
-# Spark's partition-dir encoding exactly (``true``/``false``, Hive
-# percent-escaping of ':' '/' '=', ``__HIVE_DEFAULT_PARTITION__``), and a
-# partition ``df`` holds no rows for survives unchanged. A daily merge then
-# rewrites one day's partition, not the table.
-UNWRITTEN_PARTITIONS = "unwritten-partitions"
+
+def _unescape(name: str) -> str:
+    """Hive's partition-path unescape, as Spark applies it: each ``%XX``
+    becomes the character with hex code XX."""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), name)
+
+
+# the directory value Spark writes for a NULL partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+# how a partition dir's ``col=v`` text reads back as the value a parquet
+# footer of that column type would report; other types (and collated
+# strings) are left unknown
+_PARTITION_VALUE = {
+    ByteType(): int, ShortType(): int, IntegerType(): int, LongType(): int,
+    DateType(): datetime.date.fromisoformat, StringType(): _unescape,
+}
 
 
 def write_atomic(path: str, text: str) -> None:
@@ -213,12 +226,40 @@ class TableStore:
     def file_bounds(
         self, version_dir: str, cols: list[str]
     ) -> dict[str, dict[str, tuple | None]]:
-        """:func:`_footer_bounds` of every data file of a version dir, keyed
-        by its path relative to the dir. Driver-side footer reads only."""
-        return {
-            f: _footer_bounds(os.path.join(version_dir, f), cols)
-            for f in self.data_files(version_dir)
-        }
+        """``{col: (min, max) | None}`` of every data file of a version dir,
+        keyed by its path relative to the dir; driver-side reads only.
+
+        A data column folds the file's footer stats (:func:`_footer_bounds`).
+        A recorded partition column is ``(v, v)``, where ``v`` is the file's
+        ``col=v`` directory value read as the type the version's schema
+        record gives the column (byte, short, int, long, date, or a
+        Hive-unescaped string). ``__HIVE_DEFAULT_PARTITION__`` (NULL) and
+        every other type are unknown (None)."""
+        part = [c for c in self._partition_record(version_dir) if c in cols]
+        types = (
+            {f.name: f.dataType for f in self._schema_record(version_dir).fields}
+            if part else {}
+        )
+        parse = {c: _PARTITION_VALUE.get(types[c]) for c in part}
+        data_cols = [c for c in cols if c not in parse]
+        out = {}
+        for rel in self.data_files(version_dir):
+            bounds = (
+                _footer_bounds(os.path.join(version_dir, rel), data_cols)
+                if data_cols else {}
+            )
+            dirs = {
+                _unescape(k): v
+                for k, _, v in (d.partition("=") for d in rel.split(os.sep)[:-1])
+            }
+            for c, read in parse.items():
+                raw = dirs.get(c, _NULL_PARTITION)
+                if read is None or raw == _NULL_PARTITION:
+                    bounds[c] = None
+                else:
+                    bounds[c] = (read(raw), read(raw))
+            out[rel] = {c: bounds[c] for c in cols}
+        return out
 
     def describe(self, spark: SparkSession, name: str) -> DataFrame:
         """``DESC TABLE`` parity (reference ``loading_data_sp/function.py:30``):
@@ -244,12 +285,29 @@ class TableStore:
         pointer flip — a table-level sidecar could go stale across a
         crash between write and flip and silently re-layout the next DML
         rewrite. A version without it raises ``FileNotFoundError``."""
-        try:
-            marker = os.path.join(self.data_path(name), "_PARTITIONING.json")
-        except FileNotFoundError:
+        if not self.exists(name):
             return None
-        with open(marker) as f:
-            return json.load(f) or None
+        return self._partition_record(self.data_path(name)) or None
+
+    @staticmethod
+    def _partition_record(version_dir: str) -> list[str]:
+        with open(os.path.join(version_dir, "_PARTITIONING.json")) as f:
+            return json.load(f)
+
+    def write_layout(self, name: str, partition_by: list[str] | None) -> list[str] | None:
+        """The partition columns a write that adds rows to ``name`` uses:
+        the recorded layout of an existing table, which an explicit
+        ``partition_by`` must restate (``ValueError`` otherwise, before
+        any file is written); ``partition_by`` for a new table."""
+        if not self.exists(name):
+            return partition_by or None
+        recorded = self.partitioning(name)
+        if partition_by and list(partition_by) != recorded:
+            raise ValueError(
+                f"{name!r} is partitioned by {recorded}, not {list(partition_by)}: "
+                f"a write that keeps its rows cannot change the layout"
+            )
+        return recorded
 
     def _mark_partitioning(self, version_dir: str, partition_by: list[str] | None) -> None:
         """Drop the layout marker into a STAGED version dir (call after the
@@ -356,8 +414,7 @@ class TableStore:
         commits — or, given ``txn``, hands the staged version to it.
 
         ``carried`` lists paths relative to the base version's dir (a
-        copy-on-write merge carries the files it did not rewrite), or is
-        :data:`UNWRITTEN_PARTITIONS` (partition overwrite, see there)."""
+        copy-on-write merge carries the files it did not rewrite)."""
         tdir = self.table_dir(name)
         os.makedirs(tdir, exist_ok=True)
         prev = self.current_version(name)
@@ -375,18 +432,6 @@ class TableStore:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(target)
         os.makedirs(target, exist_ok=True)
-        if carried == UNWRITTEN_PARTITIONS:
-            # read off the dirs the write produced, so Spark's own
-            # partition-dir encoding decides what is replaced; a file
-            # outside every partition dir is never carried
-            written = {
-                e for e in os.listdir(target)
-                if "=" in e and os.path.isdir(os.path.join(target, e))
-            }
-            carried = [
-                f for f in (self.data_files(base_dir) if base_dir else [])
-                if os.sep in f and f.split(os.sep)[0] not in written
-            ]
         if carried:
             _link_files(base_dir, target, carried)
         self._mark_partitioning(target, partition_by)
@@ -432,8 +477,7 @@ class TableStore:
     ) -> None:
         """Full-table replace via stage-and-swap (``df`` plus the
         ``carried`` files, see :meth:`_stage_version`); keeps one previous
-        version. ``carried=UNWRITTEN_PARTITIONS`` makes it a partition
-        overwrite."""
+        version."""
         self._stage_version(df, name, partition_by, carried)
 
     # -- time travel -------------------------------------------------------
@@ -728,7 +772,13 @@ class TableStore:
         column whose type changed raises — silent type coercion corrupts
         at scale.
         Without the flag, any schema difference raises.
+
+        The rows land in the table's recorded partition layout
+        (:meth:`write_layout`): an append without ``partition_by`` into a
+        partitioned table is not written outside its partition dirs,
+        where reads would skip it.
         """
+        partition_by = self.write_layout(name, partition_by)
         if not self.exists(name):
             self.overwrite(df, name, partition_by=partition_by)
             return

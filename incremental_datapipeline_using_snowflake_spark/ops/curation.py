@@ -1080,10 +1080,7 @@ def curate_append(
             _RUNS_SCHEMA,
         )
         with store.transaction(f"curate-{run_id}") as txn:
-            merge_upsert(
-                spark, store, corpus_table, kept_docs, keys=[id_col],
-                count_rows=False, txn=txn,
-            )
+            merge_upsert(spark, store, corpus_table, kept_docs, keys=[id_col], txn=txn)
             txn.overwrite(runs_old.unionByName(run_row), corpus_table + "__runs")
 
         # -- aux appends (at-least-once; see module docstring) ---------------
@@ -1312,21 +1309,29 @@ def _write_snapshot_files(
             "write caught at publish time; the store still holds the data"
         )
     _write_base_sidecars(out_dir, corpus.schema, file_rows)
-    manifest_local = local_rows_df(
-        spark,
-        [
-            (s, n, ch, cs, int(version), corpus_table, split_col or "")
-            for s, (n, ch, cs) in sorted(intent.items())
-        ],
-        schema=(
-            "split string, n_rows long, n_chars long, content_checksum long, "
-            "store_version long, table string, split_col string"
-        ),
-    )
-    manifest_local.write.mode("overwrite").json(
-        f"{out_dir}/_manifest.jsonl"
-    )
-    return manifest_local
+    rows = _snapshot_manifest_rows(intent, version, corpus_table, split_col)
+    _write_manifest(out_dir, rows)
+    return local_rows_df(spark, rows, _SNAPSHOT_MANIFEST_SCHEMA)
+
+
+# the full snapshot's manifest: one row per split, in split order
+_SNAPSHOT_MANIFEST_SCHEMA = (
+    "split string, n_rows long, n_chars long, content_checksum long, "
+    "store_version long, table string, split_col string"
+)
+
+
+def _snapshot_manifest_rows(
+    totals: dict, version: int, corpus_table: str, split_col: str | None
+) -> list[dict]:
+    return [
+        {
+            "split": s, "n_rows": n, "n_chars": ch, "content_checksum": cs,
+            "store_version": int(version), "table": corpus_table,
+            "split_col": split_col or "",
+        }
+        for s, (n, ch, cs) in sorted(totals.items())
+    ]
 
 
 def verify_corpus_snapshot(spark: SparkSession, out_dir: str,
@@ -1427,10 +1432,10 @@ def _delta_stats(df: DataFrame, split_col: str | None, id_col: str,
 def _read_manifest(out_dir: str) -> list[dict]:
     """The rows of ``<out_dir>/_manifest.jsonl``, parsed on the driver.
 
-    The manifest is a Spark JSON write of a few lines — one object per
-    line in its ``part-*`` files, with null fields omitted (so a row lacks
-    a key where a Spark read would give NULL). Reading it with ``json``
-    spares the job ``spark.read.json`` spends inferring a schema; the
+    The manifest is a few JSON lines (:func:`_write_manifest`) — one
+    object per line in its ``part-*`` files, with null fields omitted (so
+    a row lacks a key where a Spark read would give NULL). Reading it with
+    ``json`` spares the job ``spark.read.json`` spends inferring a schema; the
     chain already requires a local publish dir (sidecars are read with
     ``open()``, rebase hard-links shards). A missing manifest raises
     ``FileNotFoundError``, one with no rows ``ValueError``."""
@@ -1448,6 +1453,33 @@ def _read_manifest(out_dir: str) -> list[dict]:
     if not rows:
         raise ValueError(f"empty manifest in {out_dir}")
     return rows
+
+
+def _write_manifest(out_dir: str, rows: list[dict]) -> None:
+    """Write ``rows`` as ``<out_dir>/_manifest.jsonl``, whole or not at all.
+
+    The lines are the ones Spark's JSON writer produced for the same rows:
+    one compact object per row, keys in row order, null fields omitted.
+    They go to a ``part-00000.json`` in a staging dir, and renaming that
+    dir to ``_manifest.jsonl`` is the completion marker: a write that dies
+    leaves no manifest, so the link stays out of the chain
+    (:func:`_chain_links`) and the next publish takes the following link
+    number. A driver-side write; no Spark job."""
+    import json
+    import os
+    import shutil
+
+    final = os.path.join(out_dir, "_manifest.jsonl")
+    staging = final + ".staging"
+    shutil.rmtree(staging, ignore_errors=True)
+    os.makedirs(staging)
+    with open(os.path.join(staging, "part-00000.json"), "w") as f:
+        for r in rows:
+            kept = {k: v for k, v in r.items() if v is not None}
+            f.write(json.dumps(kept, separators=(",", ":"), ensure_ascii=False) + "\n")
+    if os.path.exists(final):
+        shutil.rmtree(final)
+    os.rename(staging, final)
 
 
 def _stats_mismatch(want: dict, got: dict) -> list[str]:
@@ -1671,8 +1703,10 @@ def export_corpus_delta(
                 "split_col": split_col or "",
             }
         )
+    # manifest LAST — same completion-marker discipline as the full export
+    _write_manifest(out_dir, rows)
     # rows are built in split order and one slice keeps it: no sort job
-    manifest = local_rows_df(
+    return local_rows_df(
         spark,
         rows,
         schema=(
@@ -1683,9 +1717,6 @@ def export_corpus_delta(
             "store_version long, table string, split_col string"
         ),
     )
-    # manifest LAST — same completion-marker discipline as the full export
-    manifest.write.mode("overwrite").json(f"{out_dir}/_manifest.jsonl")
-    return manifest
 
 
 def verify_corpus_delta(spark: SparkSession, base_dir: str, delta_dir: str,
@@ -2011,18 +2042,9 @@ def _stage_rebased_base(
         for r in staged_rows
     ]
     _write_base_sidecars(tmp, cur.schema, new_file_rows)
-    man = local_rows_df(
-        spark,
-        [
-            (s, v[0], v[1], v[2], int(version), corpus_table, split_col or "")
-            for s, v in sorted(got.items())
-        ],
-        schema=(
-            "split string, n_rows long, n_chars long, content_checksum long, "
-            "store_version long, table string, split_col string"
-        ),
+    _write_manifest(
+        tmp, _snapshot_manifest_rows(got, version, corpus_table, split_col)
     )
-    man.write.mode("overwrite").json(f"{tmp}/_manifest.jsonl")
 
 
 def rebase_corpus_chain(
@@ -2164,7 +2186,7 @@ def rebase_corpus_chain(
     ))
     # drop links from discovery: a publisher restarting against the old
     # base must not chain a delta off a link the new base has already
-    # folded (the manifest is a Spark-written DIRECTORY of part files)
+    # folded (the manifest is a DIRECTORY of part files)
     for d in link_dirs:
         shutil.rmtree(os.path.join(d, "_manifest.jsonl"))
     if os.path.exists(retired):

@@ -75,9 +75,9 @@ def current_watermark(spark: SparkSession, store: TableStore) -> object | None:
             return datetime.date.fromisoformat(f.read().strip())
 
     years = [
-        int(e.split("=", 1)[1])
-        for e in os.listdir(store.data_path(RAW_TABLE))
-        if e.startswith("YEAR=")
+        b["YEAR"][1]
+        for b in store.file_bounds(store.data_path(RAW_TABLE), ["YEAR"]).values()
+        if b["YEAR"] is not None
     ]
     raw = store.read(spark, RAW_TABLE)
     if years:
@@ -165,10 +165,7 @@ def _harmonize_rows(spark: SparkSession, store: TableStore, rows: DataFrame) -> 
         )
     )
     with store.transaction("harmonize") as txn:
-        merge_upsert(
-            spark, store, HARMONIZED_TABLE, src, keys=["DATE"],
-            count_rows=False, txn=txn,
-        )
+        merge_upsert(spark, store, HARMONIZED_TABLE, src, keys=["DATE"], txn=txn)
         mn, mx = _co2_bounds(spark, store, txn.staged_dir(HARMONIZED_TABLE))
         minmax = local_rows_df(
             spark,
@@ -281,10 +278,10 @@ def _recompute(
     daily = daily_stats_df(daily_rows, mn, mx)
     if dates is not None:  # the predecessor rows are lag input only
         daily = daily.filter(F.col("DATE").isin(sorted(dates)))
-    merge_upsert(spark, store, DAILY_TABLE, daily, keys=["DATE"], count_rows=False)
+    merge_upsert(spark, store, DAILY_TABLE, daily, keys=["DATE"])
     merge_upsert(
         spark, store, WEEKLY_TABLE, weekly_stats_df(weekly_rows, mn, mx),
-        keys=["WEEK_START"], count_rows=False,
+        keys=["WEEK_START"],
     )
 
 

@@ -684,10 +684,10 @@ ORDER BY o_orderkey
 # ---------------------------------------------------------------------------
 # merge_pruned_partitions — the 100 TB merge path through the REAL store:
 # a year-partitioned orders slice takes an incremental batch touching 1997
-# only, via merge_upsert(prune_partitions=True) — the target scan is
-# partition-pruned to the churned year and every other year's files are
-# hardlinked into the new version unchanged (TableStore.overwrite with
-# carried=UNWRITTEN_PARTITIONS).
+# only. merge_upsert keys on (o_year, o_orderkey), so each file's o_year
+# directory is a key bound: only 1997's files meet the source and are
+# rewritten, and every other year's files are hardlinked into the new
+# version unchanged (the copy-on-write merge's carried list).
 # Oracle = the same upsert as set algebra. tests pin the inode sharing; this
 # query pins the RESULT through the driver's hash gate.
 # ---------------------------------------------------------------------------
@@ -718,8 +718,8 @@ def merge_pruned_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merge_upsert(
             spark, store, "pm.orders_part", source,
-            keys=["o_orderkey"], update_cols=["o_totalprice", "o_orderstatus"],
-            partition_by=["o_year"], prune_partitions=True, count_rows=False,
+            keys=["o_year", "o_orderkey"],
+            update_cols=["o_totalprice", "o_orderstatus"],
         )
         return store
 

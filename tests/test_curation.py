@@ -1649,6 +1649,47 @@ def test_missing_metadata_raises_named_error(spark, tmp_path, case):
     assert files() == before
 
 
+def test_crashed_manifest_write_leaves_link_incomplete(spark, tmp_path, monkeypatch):
+    """Fault injection: a link's manifest write that dies part-way (a full
+    disk) leaves no ``_manifest.jsonl``, so the link is not part of the
+    chain. The next publish takes the following link number, the chain
+    verifies, and a rebase folds it."""
+    import builtins
+    import os
+
+    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
+    from incremental_datapipeline_using_snowflake_spark.ops import curation as C
+
+    store = TableStore(root=str(tmp_path / "store"), keep_versions=8)
+    rows, _base = _corpus_rows()
+    C.bootstrap_corpus(spark, store, spark.createDataFrame(rows, DOC_SCHEMA), "cur.docs")
+    pub = str(tmp_path / "pub")
+    C.publish_corpus_delta(spark, store, "cur.docs", pub, compression=None)
+    C.delete_docs(spark, store, "cur.docs", [0])
+
+    real_open = builtins.open
+
+    def torn_open(path, mode="r", *args, **kwargs):
+        f = real_open(path, mode, *args, **kwargs)
+        if "w" in mode and "_manifest" in str(path):
+            f.write('{"split":"al')
+            f.close()
+            raise OSError(28, "No space left on device")
+        return f
+
+    monkeypatch.setattr(builtins, "open", torn_open)
+    with pytest.raises(OSError, match="No space left"):
+        C.publish_corpus_delta(spark, store, "cur.docs", pub, compression=None)
+    monkeypatch.undo()
+    assert not os.path.exists(f"{pub}/link-000001/_manifest.jsonl")
+    assert C._chain_links(pub) == ([], 1)
+
+    link = C.publish_corpus_delta(spark, store, "cur.docs", pub, compression=None)
+    assert link["published"] == "link-000002"
+    assert C.verify_corpus_chain(spark, f"{pub}/base", [f"{pub}/link-000002"])
+    assert C.rebase_corpus_chain(spark, pub, compression=None)["links_folded"] == 1
+
+
 def test_partitioned_chain_verifies_materializes_and_rebases(spark, tmp_path):
     """A ``split_col`` chain with an upsert link and a takedown-only link
     (whose ``data/`` holds no part file, only ``_SUCCESS``) verifies,
@@ -1864,11 +1905,11 @@ def test_training_shard_append_lifecycle(spark, tmp_path):
         )
 
 
-# Spark jobs of one small release (measured on pyspark 4.1.2: 89; the
+# Spark jobs of one small release (measured on pyspark 4.1.2: 88; the
 # previous engine started 170, then 121, then 113 before pins carried their
-# measured size). The check allows 1 more: asynchronous broadcast jobs vary
-# by one.
-RELEASE_JOB_BUDGET = 89
+# measured size, then 89 before publish manifests were written on the
+# driver). The check allows 1 more: asynchronous broadcast jobs vary by one.
+RELEASE_JOB_BUDGET = 88
 
 
 def test_release_job_budget(spark, tmp_path, next_job_id):

@@ -41,6 +41,31 @@ def test_table_store_append_and_partitioning(spark, store):
     assert got.filter(F.col("YEAR") == 2021).count() == 1
 
 
+def test_writes_keep_the_recorded_partition_layout(spark, store):
+    """An append or merge without ``partition_by`` into a partitioned table
+    lands its rows in partition dirs, so reads see them; an explicit,
+    different layout raises before any file is written."""
+    schema = "YEAR int, v double"
+    store.overwrite(_df(spark, [(2020, 1.0), (2021, 2.0)], schema), "ns.lay",
+                    partition_by=["YEAR"])
+    store.append(_df(spark, [(2022, 3.0)], schema), "ns.lay")
+    merge_upsert(spark, store, "ns.lay", _df(spark, [(2023, 4.0)], schema), keys=["YEAR"])
+    got = sorted(tuple(r) for r in store.read(spark, "ns.lay").select("YEAR", "v").collect())
+    assert got == [(2020, 1.0), (2021, 2.0), (2022, 3.0), (2023, 4.0)]
+    files = TableStore.data_files(store.data_path("ns.lay"))
+    assert all(f.startswith("YEAR=") for f in files)
+
+    for write in (
+        lambda df: store.append(df, "ns.lay", partition_by=["v"]),
+        lambda df: merge_upsert(spark, store, "ns.lay", df, keys=["YEAR"],
+                                partition_by=["v"]),
+    ):
+        with pytest.raises(ValueError, match="partitioned by"):
+            write(_df(spark, [(2024, 5.0)], schema))
+    assert TableStore.data_files(store.data_path("ns.lay")) == files
+    assert store.partitioning("ns.lay") == ["YEAR"]
+
+
 def test_table_store_describe_and_comment(spark, store):
     """DESC TABLE / COMMENT ON TABLE parity (reference
     loading_data_sp/function.py:30, raw_co2_data.py:103-105)."""
@@ -525,11 +550,8 @@ def test_merge_upsert_shuffle_join_path(spark, store):
     )
     store.overwrite(target, name_a)
     store.overwrite(target, name_b)
-    merge_upsert(spark, store, name_a, source, keys=["k"], count_rows=False)
-    merge_upsert(
-        spark, store, name_b, source, keys=["k"], count_rows=False,
-        broadcast_source=False,
-    )
+    merge_upsert(spark, store, name_a, source, keys=["k"])
+    merge_upsert(spark, store, name_b, source, keys=["k"], broadcast_source=False)
     a = sorted(tuple(r) for r in store.read(spark, name_a).collect())
     b = sorted(tuple(r) for r in store.read(spark, name_b).collect())
     assert a == b
@@ -755,58 +777,48 @@ def test_purge_versions_removes_orphan_staged_dirs(spark, tmp_path, monkeypatch)
 
 
 def test_overwrite_partitions_links_untouched(spark, tmp_path):
-    """Partition-scoped overwrite (``carried=UNWRITTEN_PARTITIONS``):
-    replaced partitions come from the new frame, untouched partitions are
-    HARDLINKED from the previous version (same inode — zero copy), and the
-    result reads correctly."""
-    import os
-
-    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
-        UNWRITTEN_PARTITIONS,
-    )
-
+    """A partition overwrite is an overwrite whose carried list names the
+    files of every other partition, read off ``file_bounds``' partition
+    values: replaced partitions come from the new frame, untouched
+    partitions are HARDLINKED from the previous version (same inode —
+    zero copy), and the result reads correctly."""
     store = TableStore(root=str(tmp_path))
     name = "ns.pover"
     base = spark.createDataFrame(
         [(2024, 1, 10.0), (2024, 2, 20.0), (2025, 1, 30.0)],
         "year int, k int, v double",
-    )
+    ).coalesce(1)  # one file per partition
     store.overwrite(base, name, partition_by=["year"])
     v1_dir = store.data_path(name)
-    v1_inodes = {
-        f: os.stat(os.path.join(r, f)).st_ino
-        for r, _d, fs in os.walk(os.path.join(v1_dir, "year=2024"))
-        for f in fs
-        if f.endswith(".parquet")
+    bounds = store.file_bounds(v1_dir, ["year", "k"])
+    assert sorted(b["year"] for b in bounds.values()) == [(2024, 2024), (2025, 2025)]
+    assert {b["year"]: b["k"] for b in bounds.values()} == {
+        (2024, 2024): (1, 2), (2025, 2025): (1, 1),
     }
+    v1_inodes = _cow_inodes(store, name)
 
     repl = spark.createDataFrame([(2025, 1, 99.0), (2025, 2, 98.0)],
                                  "year int, k int, v double")
-    store.overwrite(repl, name, partition_by=["year"], carried=UNWRITTEN_PARTITIONS)
+    kept = [f for f, b in bounds.items() if b["year"] != (2025, 2025)]
+    store.overwrite(repl, name, partition_by=["year"], carried=kept)
 
     got = sorted(tuple(r) for r in store.read(spark, name).select("year", "k", "v").collect())
     assert got == [(2024, 1, 10.0), (2024, 2, 20.0), (2025, 1, 99.0), (2025, 2, 98.0)]
-    v2_dir = store.data_path(name)
-    assert v2_dir != v1_dir
-    v2_inodes = {
-        f: os.stat(os.path.join(r, f)).st_ino
-        for r, _d, fs in os.walk(os.path.join(v2_dir, "year=2024"))
-        for f in fs
-        if f.endswith(".parquet")
-    }
-    assert v2_inodes == v1_inodes  # untouched partition shared by inode
+    assert store.data_path(name) != v1_dir
+    v2_inodes = _cow_inodes(store, name)
+    # untouched partition shared by inode
+    assert {f: v2_inodes[f] for f in kept} == {f: v1_inodes[f] for f in kept}
+    assert all(f.startswith("year=2025") for f in set(v2_inodes) - set(kept))
 
 
 def test_merge_upsert_prune_partitions_equivalent(spark, tmp_path):
-    """prune_partitions merge == full merge row-for-row, while only the
-    churned partition is rewritten (untouched partition files keep their
-    inodes across the new version). Staged in a transaction, the pruned
-    merge publishes together with another table's overwrite, and a crash
-    inside the block moves neither pointer and leaves no staged dir."""
-    import os
-
-    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
-    from incremental_datapipeline_using_snowflake_spark.operators.merge import merge_upsert
+    """A merge keyed on the partition column (year, k) prunes by partition
+    value: it equals the same merge into an unpartitioned table row for
+    row, while only the churned partition is rewritten (untouched
+    partition files keep their inodes across the new version). Staged in
+    a transaction, it publishes together with another table's overwrite,
+    and a crash inside the block moves neither pointer and leaves no
+    staged dir."""
     from incremental_datapipeline_using_snowflake_spark.session import local_rows_df
 
     rows = [(y, k, float(k + y)) for y in (2023, 2024, 2025) for k in range(50)]
@@ -816,33 +828,28 @@ def test_merge_upsert_prune_partitions_equivalent(spark, tmp_path):
     pruned_store = TableStore(root=str(tmp_path / "pruned"))
     target = spark.createDataFrame(rows, "year int, k int, v double")
     source = spark.createDataFrame(source_rows, "year int, k int, v double")
-    for st in (full_store, pruned_store):
-        st.overwrite(target, "ns.t", partition_by=["year"])
+    full_store.overwrite(target, "ns.t")
+    pruned_store.overwrite(target, "ns.t", partition_by=["year"])
 
-    res_full = merge_upsert(
-        spark, full_store, "ns.t", source, keys=["year", "k"],
-        partition_by=["year"],
-    )
+    res_full = merge_upsert(spark, full_store, "ns.t", source, keys=["year", "k"])
+
     def inodes(part):
         pdir = os.path.join(pruned_store.data_path("ns.t"), part)
         return {f: os.stat(os.path.join(pdir, f)).st_ino
                 for f in TableStore.data_files(pdir)}
 
     before_inodes = inodes("year=2023")
-    res_pruned = merge_upsert(
-        spark, pruned_store, "ns.t", source, keys=["year", "k"],
-        partition_by=["year"], prune_partitions=True,
-    )
+    res_pruned = merge_upsert(spark, pruned_store, "ns.t", source, keys=["year", "k"])
     assert (res_full["updated"], res_full["inserted"]) == (25, 25)
     assert (res_pruned["updated"], res_pruned["inserted"]) == (25, 25)
     a = sorted(tuple(r) for r in full_store.read(spark, "ns.t").select("year", "k", "v").collect())
     b = sorted(tuple(r) for r in pruned_store.read(spark, "ns.t").select("year", "k", "v").collect())
     assert a == b and len(a) == 175
     assert inodes("year=2023") == before_inodes  # 2023 not rewritten
+    assert pruned_store.partitioning("ns.t") == ["year"]
 
-    import pytest as _pytest
-
-    # the pruned merge inside a transaction, next to a second table's write
+    # the partition-keyed merge inside a transaction, next to a second
+    # table's write
     def mm(x):
         return local_rows_df(spark, [(x,)], "hi double")
 
@@ -852,8 +859,7 @@ def test_merge_upsert_prune_partitions_equivalent(spark, tmp_path):
 
     def merge_txn(crash=False):
         with pruned_store.transaction("pm") as txn:
-            merge_upsert(spark, pruned_store, "ns.t", src2, keys=["year", "k"],
-                         partition_by=["year"], prune_partitions=True, txn=txn)
+            merge_upsert(spark, pruned_store, "ns.t", src2, keys=["year", "k"], txn=txn)
             txn.overwrite(mm(2077.0), "ns.mm")
             if crash:
                 raise RuntimeError("crash after staging")
@@ -861,7 +867,7 @@ def test_merge_upsert_prune_partitions_equivalent(spark, tmp_path):
     ptrs = {t: pruned_store.current_version(t) for t in ("ns.t", "ns.mm")}
     dirs = {t: pruned_store._all_version_dirs(t) for t in ptrs}
     untouched = {p: inodes(p) for p in ("year=2023", "year=2025")}
-    with _pytest.raises(RuntimeError, match="crash after staging"):
+    with pytest.raises(RuntimeError, match="crash after staging"):
         merge_txn(crash=True)
     assert {t: pruned_store.current_version(t) for t in ptrs} == ptrs
     assert {t: pruned_store._all_version_dirs(t) for t in ptrs} == dirs
@@ -872,14 +878,6 @@ def test_merge_upsert_prune_partitions_equivalent(spark, tmp_path):
     got = {(r["year"], r["k"]): r["v"] for r in pruned_store.read(spark, "ns.t").collect()}
     assert got == want
     assert {p: inodes(p) for p in untouched} == untouched
-
-    with _pytest.raises(ValueError, match="requires partition_by"):
-        merge_upsert(spark, pruned_store, "ns.t", source, keys=["year", "k"],
-                     prune_partitions=True)
-    with _pytest.raises(ValueError, match="cannot be updated"):
-        merge_upsert(spark, pruned_store, "ns.t", source, keys=["k"],
-                     partition_by=["year"], update_cols=["year", "v"],
-                     prune_partitions=True)
 
 
 def test_partition_layout_recorded_and_preserved(spark, tmp_path):
@@ -916,142 +914,46 @@ def test_partition_layout_recorded_and_preserved(spark, tmp_path):
 
 
 def test_overwrite_partitions_crash_before_commit(spark, tmp_path, monkeypatch):
-    """Crash injection: dying after the partition links are built but
-    before the pointer flip leaves the table untouched (old version still
-    served, staged dir invisible) and the next overwrite sweeps the
-    orphan."""
-    import pytest as _pytest
-
-    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
-        UNWRITTEN_PARTITIONS,
-    )
-
+    """Crash injection: a partition-keyed merge that dies after its
+    carried partition files are linked but before the pointer flip leaves
+    the table untouched (old version still served, staged dir invisible)
+    and the next merge sweeps the orphan."""
     store = TableStore(root=str(tmp_path))
     name = "ns.pcrash"
+    schema = "year int, v double"
     store.overwrite(
-        spark.createDataFrame([(2024, 1.0), (2025, 2.0)], "year int, v double"),
+        spark.createDataFrame([(2024, 1.0), (2025, 2.0)], schema),
         name, partition_by=["year"],
     )
     v_before = store.current_version(name)
+    kept = _cow_inodes(store, name)
 
     def crash(self, n, v):
         raise RuntimeError("died before flip")
 
     monkeypatch.setattr(TableStore, "_commit_version", crash)
-    with _pytest.raises(RuntimeError, match="died before flip"):
-        store.overwrite(
-            spark.createDataFrame([(2025, 99.0)], "year int, v double"),
-            name, partition_by=["year"], carried=UNWRITTEN_PARTITIONS,
-        )
+    with pytest.raises(RuntimeError, match="died before flip"):
+        merge_upsert(spark, store, name, spark.createDataFrame([(2025, 99.0)], schema),
+                     keys=["year"])
     monkeypatch.undo()
 
     assert store.current_version(name) == v_before
     got = {r["year"]: r["v"] for r in store.read(spark, name).collect()}
     assert got == {2024: 1.0, 2025: 2.0}  # old data intact
     staged = [v for v in store._all_version_dirs(name) if v not in store.versions(name)]
-    assert staged  # orphan exists on disk...
-    store.overwrite(
-        spark.createDataFrame([(2025, 50.0)], "year int, v double"),
-        name, partition_by=["year"], carried=UNWRITTEN_PARTITIONS,
-    )
+    assert len(staged) == 1  # the orphan exists on disk, with the carried link
+    orphan = os.path.join(store.table_dir(name), f"v={staged[0]:06d}")
+    linked = {f: os.stat(os.path.join(orphan, f)).st_ino
+              for f in TableStore.data_files(orphan) if f.startswith("year=2024")}
+    assert linked and all(kept[f] == ino for f, ino in linked.items())
+    merge_upsert(spark, store, name, spark.createDataFrame([(2025, 50.0)], schema),
+                 keys=["year"])
     # ...and is swept by the next successful commit's GC
     assert all(
         v in store.versions(name) for v in store._all_version_dirs(name)
     )
     got = {r["year"]: r["v"] for r in store.read(spark, name).collect()}
     assert got == {2024: 1.0, 2025: 50.0}
-
-
-def test_merge_prune_partitions_rejects_moved_keys(spark, tmp_path):
-    """ADVICE r05: a source key that already exists in the target under an
-    UNTOUCHED partition would be misclassified as an insert by the pruned
-    scan and its old image would survive via the hardlinked partition —
-    silent duplicate keys. The pruned path now validates the partition-
-    stability precondition (key-pruned scan + broadcast semi-join) and
-    refuses; validate_pruning=False opts out for structurally-safe callers."""
-    import pytest as _pytest
-
-    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
-    from incremental_datapipeline_using_snowflake_spark.operators.merge import merge_upsert
-
-    store = TableStore(root=str(tmp_path))
-    target = spark.createDataFrame(
-        [(2023, 1, 1.0), (2024, 2, 2.0)], "year int, k int, v double"
-    )
-    store.overwrite(target, "ns.t", partition_by=["year"])
-    # key k=1 lives under year=2023; the source claims it under year=2025
-    moved = spark.createDataFrame([(2025, 1, 9.0)], "year int, k int, v double")
-    with _pytest.raises(ValueError, match="outside the touched set"):
-        merge_upsert(
-            spark, store, "ns.t", moved, keys=["k"],
-            partition_by=["year"], prune_partitions=True,
-        )
-    # partition column inside the key set -> a key match implies the same
-    # partition; no validation scan needed and the merge proceeds
-    ok = spark.createDataFrame([(2025, 3, 3.0)], "year int, k int, v double")
-    merge_upsert(
-        spark, store, "ns.t", ok, keys=["year", "k"],
-        partition_by=["year"], prune_partitions=True,
-    )
-    assert store.read(spark, "ns.t").count() == 3
-    # opting out runs the (unsafe) merge without the guard
-    merge_upsert(
-        spark, store, "ns.t", moved, keys=["k"],
-        partition_by=["year"], prune_partitions=True, validate_pruning=False,
-    )
-    # NULL partition values in the source are rejected up front
-    null_src = spark.createDataFrame([(None, 7, 7.0)], "year int, k int, v double")
-    with _pytest.raises(ValueError, match="NULL values in partition column"):
-        merge_upsert(
-            spark, store, "ns.t", null_src, keys=["year", "k"],
-            partition_by=["year"], prune_partitions=True,
-        )
-
-
-def test_merge_prune_partitions_nonplain_partition_values(spark, tmp_path):
-    """ADVICE r05: replaced partition specs are derived from the staged
-    directory names (``carried=UNWRITTEN_PARTITIONS``), so partition
-    values whose str() form differs from Spark's dir encoding — Hive
-    percent-escaped characters like ':' (%3A) and '/' (%2F) — merge fine
-    and their untouched partitions stay linked. (Boolean partition
-    columns can't hit this: Spark's partition discovery reads them back as
-    strings, so a boolean-typed source never joins in the first place.)"""
-    import os
-
-    from incremental_datapipeline_using_snowflake_spark.operators import TableStore
-    from incremental_datapipeline_using_snowflake_spark.operators.merge import merge_upsert
-
-    store = TableStore(root=str(tmp_path))
-    t = spark.createDataFrame(
-        [("a:b", 1, 1.0), ("c/d", 2, 2.0)], "grp string, k int, v double"
-    )
-    store.overwrite(t, "ns.e", partition_by=["grp"])
-    # the escaped dir names are what's on disk — str(v) would never match
-    dirs = {e for e in os.listdir(store.data_path("ns.e")) if e.startswith("grp=")}
-    assert dirs == {"grp=a%3Ab", "grp=c%2Fd"}
-    before = {
-        f: os.stat(os.path.join(r, f)).st_ino
-        for r, _d, fs in os.walk(os.path.join(store.data_path("ns.e"), "grp=c%2Fd"))
-        for f in fs if f.endswith(".parquet")
-    }
-    s = spark.createDataFrame(
-        [("a:b", 1, 5.0), ("a:b", 3, 3.0)], "grp string, k int, v double"
-    )
-    res = merge_upsert(
-        spark, store, "ns.e", s, keys=["grp", "k"],
-        partition_by=["grp"], prune_partitions=True,
-    )
-    assert (res["updated"], res["inserted"]) == (1, 1)
-    got = sorted(
-        tuple(r) for r in store.read(spark, "ns.e").select("grp", "k", "v").collect()
-    )
-    assert got == [("a:b", 1, 5.0), ("a:b", 3, 3.0), ("c/d", 2, 2.0)]
-    after = {
-        f: os.stat(os.path.join(r, f)).st_ino
-        for r, _d, fs in os.walk(os.path.join(store.data_path("ns.e"), "grp=c%2Fd"))
-        for f in fs if f.endswith(".parquet")
-    }
-    assert after == before  # untouched escaped partition linked, not rewritten
 
 
 def test_clone_zero_copy_and_diverge(spark, tmp_path):
@@ -1247,6 +1149,13 @@ _COW_KEY_TYPES = {
     "string": lambda k: f"k{k:03d}",
     "double": float,
 }
+# a partitioned case puts key k under partition value k // 20 (A, B and C
+# one partition each; D splits in two) and every source row under C's
+_COW_PART_TYPES = {
+    "int": lambda g: g,
+    "date": lambda g: datetime.date(2021, 1, 1) + datetime.timedelta(days=g),
+    "string": ["a:b", "c/d", "e=f"].__getitem__,  # Hive-escaped in dir names
+}
 
 
 def _cow_rows(key, ks, tag):
@@ -1290,7 +1199,7 @@ def _cow_check(spark, store, name, source, keys, ref_source, ref_upd,
     assert Counter(map(tuple, store.read(spark, name).collect())) == Counter(
         map(tuple, want.collect())
     )
-    matched, inserted, _ = merge_branches(
+    _, matched, inserted = merge_branches(
         before, source.dropDuplicates(keys), keys,
         update_cols=kw.get("update_cols"), insert_cols=kw.get("insert_cols"),
     )
@@ -1302,51 +1211,66 @@ def _cow_check(spark, store, name, source, keys, ref_source, ref_upd,
 
 
 @pytest.mark.parametrize(
-    "key_type, extra_file, src_ks, keys, kw, n_carried",
+    "key_type, extra_file, src_ks, keys, kw, n_carried, part",
     [
         # updates 42/44 and inserts 59: only C meets the source range
-        ("long", None, [42, 44, 59], ["k"], {}, 3),
-        ("long", None, [100, 101], ["k"], {}, 4),  # insert-only past the max
-        ("long", [42, 42], [42], ["k"], {}, 3),  # key 42 held three times
-        ("long", [None], [None, 44], ["k"], {}, 3),  # NULL keys on both sides
-        ("date", None, [42, 44, 59], ["k"], {}, 3),
-        ("string", None, [42, 44, 59], ["k"], {}, 3),
-        ("long", None, [42, 44, 59], ["k", "tag"], {}, 3),  # composite key
-        ("double", None, [42, 44, 59], ["k"], {}, 0),  # float keys never prune
-        ("long", None, [42, 44, 59], ["k"], {"update_cols": ["v"]}, 3),
+        ("long", None, [42, 44, 59], ["k"], {}, 3, None),
+        ("long", None, [100, 101], ["k"], {}, 4, None),  # insert-only past the max
+        ("long", [42, 42], [42], ["k"], {}, 3, None),  # key 42 held three times
+        ("long", [None], [None, 44], ["k"], {}, 3, None),  # NULL keys on both sides
+        ("date", None, [42, 44, 59], ["k"], {}, 3, None),
+        ("string", None, [42, 44, 59], ["k"], {}, 3, None),
+        ("long", None, [42, 44, 59], ["k", "tag"], {}, 3, None),  # composite key
+        ("double", None, [42, 44, 59], ["k"], {}, 0, None),  # float keys never prune
+        ("long", None, [42, 44, 59], ["k"], {"update_cols": ["v"]}, 3, None),
         ("long", None, [42, 44, 59], ["k"],
-         {"update_cols": ["v"], "insert_cols": ["k", "v", "tag"]}, 3),
-        ("long", None, [42, 44, 59], ["k"], {"broadcast_source": False}, 3),
+         {"update_cols": ["v"], "insert_cols": ["k", "v", "tag"]}, 3, None),
+        ("long", None, [42, 44, 59], ["k"], {"broadcast_source": False}, 3, None),
+        # the source's k range meets every file but D's p=0 half; its one
+        # partition value prunes A, B and that half
+        ("long", None, [4, 44, 59], ["p", "k"], {}, 3, "int"),
+        ("long", None, [4, 44, 59], ["p", "k"], {}, 3, "date"),
+        ("long", None, [4, 44, 59], ["p", "k"], {}, 3, "string"),
+        # p out of keys: key 4 matches A's row and moves it to C's partition
+        ("long", None, [4, 44, 59], ["k"], {}, 1, "int"),
     ],
     ids=["update_insert", "insert_past_max", "dup_target_keys", "null_keys",
          "date", "string", "composite", "double", "update_cols", "insert_cols",
-         "no_broadcast"],
+         "no_broadcast", "int_partition", "date_partition",
+         "escaped_string_partition", "moved_key"],
 )
 def test_cow_merge_matches_reference(
-    spark, store, key_type, extra_file, src_ks, keys, kw, n_carried
+    spark, store, key_type, extra_file, src_ks, keys, kw, n_carried, part
 ):
     """Copy-on-write merge_upsert equals the pure upsert_dataframe on the
     same inputs, returns the counts a full-target merge gives, and leaves
-    every untouched file in place (same inode)."""
+    every untouched file in place (same inode). A partitioned target keeps
+    its recorded layout and prunes on a partition column in ``keys`` by
+    the files' partition values."""
     key = _COW_KEY_TYPES[key_type]
     schema = f"k {key_type}, v double, tag string"
-    files = _COW_FILES + ([extra_file] if extra_file else [])
-    inodes = _cow_stage(
-        spark, store, "ns.cow", schema,
-        [_cow_rows(key, ks, lambda k: f"t{k}") for ks in files],
-    )
+    files = [_cow_rows(key, ks, lambda k: f"t{k}") for ks in _COW_FILES]
+    files += [_cow_rows(key, extra_file, lambda k: f"t{k}")] if extra_file else []
     # 42 keeps its target tag (a composite-key match); 44 and 59 do not
-    source = spark.createDataFrame(
-        [(None if k is None else key(k), 1000.0 + (k or 0),
-          f"t{k}" if k == 42 else f"n{k}") for k in src_ks],
-        schema,
-    )
+    src_rows = [(None if k is None else key(k), 1000.0 + (k or 0),
+                 f"t{k}" if k == 42 else f"n{k}") for k in src_ks]
+    if part:
+        pv = _COW_PART_TYPES[part]
+        schema += f", p {part}"
+        files = [[(*r, pv(int(r[1]) // 20)) for r in rows] for rows in files]  # r[1] = k
+        src_rows = [(*r, pv(2)) for r in src_rows]
+    inodes = _cow_stage(spark, store, "ns.cow", schema, files,
+                        partition_by=["p"] if part else None)
+    if part == "string":
+        assert {f.split(os.sep)[0] for f in inodes} == {"p=a%3Ab", "p=c%2Fd", "p=e%3Df"}
+    source = spark.createDataFrame(src_rows, schema)
     upd = kw.get("update_cols")
     # update_cols alone inserts keys + update set; with insert_cols the
     # inserted rows carry every source column, as upsert_dataframe's do
     ref_source = source.select(*keys, *upd) if upd and "insert_cols" not in kw else source
     _cow_check(spark, store, "ns.cow", source, keys, ref_source, upd, inodes,
                n_carried, **kw)
+    assert store.partitioning("ns.cow") == (["p"] if part else None)
 
 
 def test_cow_merge_partitioned_target(spark, store):
@@ -1384,8 +1308,7 @@ def test_cow_merge_transaction_fault_and_gc(spark, tmp_path):
     def merge_txn(ks, crash=False):
         src = spark.createDataFrame([(k, 1000.0 + k, f"n{k}") for k in ks], schema)
         with store.transaction("cow") as txn:
-            merge_upsert(spark, store, name, src, keys=["k"], count_rows=False,
-                         txn=txn)
+            merge_upsert(spark, store, name, src, keys=["k"], txn=txn)
             # the three carried links sit next to the rewritten file
             assert len(store.file_bounds(txn.staged_dir(name), [])) >= 4
             txn.overwrite(local_rows_df(spark, [(1.0, 2.0)], "lo double, hi double"), mm)

@@ -70,7 +70,7 @@ def test_merge_upsert_broadcasts_source(spark, store):
     )
     store.overwrite(target, "ns.big")
     src = spark.range(0, 10).select(F.col("id").alias("k"), F.lit(9.9).alias("v"))
-    merge_upsert(spark, store, "ns.big", src, keys=["k"], count_rows=False)
+    merge_upsert(spark, store, "ns.big", src, keys=["k"])
 
     from incremental_datapipeline_using_snowflake_spark.operators.merge import upsert_dataframe
 
@@ -114,7 +114,10 @@ def test_merge_never_broadcasts_or_shuffles_target(spark, store):
     src = spark.createDataFrame(
         [(5, 9.9), (10_500, 1.1)], schema="k long, v double"
     )
-    _, _, result = merge_branches(store.read(spark, "ns.audit_big"), src, keys=["k"])
+    untouched, matched, inserted = merge_branches(
+        store.read(spark, "ns.audit_big"), src, keys=["k"]
+    )
+    result = untouched.unionByName(matched).unionByName(inserted)
     plan = result._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
