@@ -21,6 +21,14 @@ Appends write additional parquet files *into* the current version directory
 (standard Spark append), in the table's recorded layout; partitioned tables
 use Hive-style ``COL=value`` subdirectories so partition pruning applies
 (reference's year-foldered layout, SURVEY.md §2.1 S6).
+
+Rows the driver already holds (run logs, scalar caches, run records) are
+written without Spark: a write whose input is :class:`DriverRows` lands one
+parquet file through pyarrow, and :meth:`TableStore.read_rows` /
+:meth:`TableStore.row_count` read such tables and stored row counts from
+the files and their footers (the reference's ``TASK_HISTORY`` and
+``_CO2_MINMAX`` reads use no warehouse compute either). The files are
+ordinary parquet, so Spark, SQL and time travel read them unchanged.
 """
 
 from __future__ import annotations
@@ -34,11 +42,11 @@ from collections.abc import Sequence
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, ByteType, DataType, DateType, IntegerType, LongType, MapType,
-    ShortType, StringType, StructField, StructType,
+    ShortType, StringType, StructField, StructType, _parse_datatype_string,
 )
 
 # per-version schema record; Spark's readers skip ``_``-prefixed files
@@ -63,14 +71,17 @@ _PARTITION_VALUE = {
 }
 
 
-def write_atomic(path: str, text: str) -> None:
-    """Replace the small file ``path`` with ``text`` whole or not at all:
+def write_atomic(path: str, data: str | bytes) -> None:
+    """Replace the small file ``path`` with ``data`` whole or not at all:
     readers see the old content or the new, never a torn write. The
-    rename is the commit point (no fsync: a crash may lose the newest
-    write, never half of it)."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(text)
+    bytes go to a dot-prefixed temp name in the same dir, which every
+    reader skips (Spark ignores ``.``-prefixed files; the store lists
+    ``.parquet`` names), and the rename is the commit point (no fsync: a
+    crash may lose the newest write, never half of it)."""
+    head, tail = os.path.split(path)
+    tmp = os.path.join(head, f".{tail}.tmp")
+    with open(tmp, "wb" if isinstance(data, bytes) else "w") as f:
+        f.write(data)
     os.replace(tmp, path)
 
 
@@ -112,6 +123,68 @@ def _footer_bounds(path: str, cols: list[str]) -> dict[str, tuple | None]:
             hi = st.max if hi is None else max(hi, st.max)
         out[c] = None if lo is None else (lo, hi)
     return out
+
+
+@dataclass(frozen=True)
+class DriverRows:
+    """Rows the driver already holds and the schema they are stored
+    under: the store's second kind of write input, next to a DataFrame.
+    Built by :func:`driver_rows`."""
+
+    rows: list
+    schema: StructType
+    codec: str  # the session's parquet codec, in pyarrow's spelling
+
+
+# Spark's parquet codec names that pyarrow spells differently (pyarrow's
+# "lz4" is the raw LZ4 block format Spark calls lz4_raw)
+_ARROW_CODEC = {"none": "none", "uncompressed": "none", "lz4_raw": "lz4"}
+
+
+def driver_rows(spark: SparkSession, rows: list, schema: str | StructType) -> DriverRows:
+    """``rows`` (tuples in ``schema``'s column order) for a driver-side
+    store write; the codec is the session's
+    ``spark.sql.parquet.compression.codec``, as a Spark write's would be."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    codec = spark.conf.get("spark.sql.parquet.compression.codec").lower()
+    return DriverRows(list(rows), schema, _ARROW_CODEC.get(codec, codec))
+
+
+def _write_rows(
+    data: DriverRows, version_dir: str, partition_by: list[str] | None
+) -> None:
+    """``data`` as ONE new parquet file in ``version_dir``, written on the
+    driver with pyarrow. The file is built in memory (metadata-sized rows)
+    and lands through :func:`write_atomic`, so it appears whole or not at
+    all. Every column is OPTIONAL, as in a Spark-written file, so footer
+    inference reports the record :meth:`TableStore._write_schema_record`
+    keeps. One file has no partition dirs: a partitioned layout raises
+    ``ValueError`` before anything is written."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if partition_by:
+        raise ValueError(f"driver rows land as one file, not in partitions {partition_by}")
+    schema = to_arrow_schema(_as_nullable(data.schema))
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in data.rows], f.type) for i, f in enumerate(schema)],
+        schema=schema,
+    )
+    buf = pa.BufferOutputStream()
+    # a handful of rows: dictionary pages and the embedded arrow schema
+    # (the version's schema record is the store's) would only add bytes
+    pq.write_table(
+        table, buf, compression=data.codec, use_dictionary=False, store_schema=False
+    )
+    os.makedirs(version_dir, exist_ok=True)
+    write_atomic(
+        os.path.join(version_dir, f"part-{uuid.uuid4().hex}.parquet"),
+        buf.getvalue().to_pybytes(),
+    )
 
 
 def _link_files(src_dir: str, dst_dir: str, rels: Sequence[str]) -> None:
@@ -211,6 +284,42 @@ class TableStore:
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return self._read_dir(spark, self.data_path(name))
+
+    def read_rows(self, name: str, version: int | None = None) -> list[Row]:
+        """The rows of an unpartitioned table's current (or a retained
+        ``version``'s) files as ``Row``s in its recorded column order, read
+        on the driver with pyarrow — no Spark job. For metadata-sized
+        tables; a column a file lacks (schema drift) reads as None, and a
+        partitioned table raises ``ValueError``."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        vdir = self.data_path(name) if version is None else self.version_path(name, version)
+        if self._partition_record(vdir):
+            raise ValueError(f"read_rows({name!r}): a partitioned table is read through Spark")
+        schema = to_arrow_schema(self._schema_record(vdir))
+        make = Row(*schema.names)
+        out = []
+        for rel in self.data_files(vdir):
+            t = pq.read_table(os.path.join(vdir, rel))
+            cols = [
+                t.column(f.name).cast(f.type) if f.name in t.column_names
+                else pa.nulls(t.num_rows, f.type)
+                for f in schema
+            ]
+            out += [make(*r) for r in zip(*(c.to_pylist() for c in cols))]
+        return out
+
+    def row_count(self, version_dir: str) -> int:
+        """Rows in a version dir, summed from its files' footers
+        (``num_rows``) on the driver — no Spark job."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(os.path.join(version_dir, rel)).num_rows
+            for rel in self.data_files(version_dir)
+        )
 
     @staticmethod
     def data_files(version_dir: str) -> list[str]:
@@ -400,7 +509,7 @@ class TableStore:
 
     def _stage_version(
         self,
-        df: DataFrame | None,
+        df: DataFrame | DriverRows | None,
         name: str,
         partition_by: list[str] | None = None,
         carried: Sequence[str] = (),
@@ -413,8 +522,12 @@ class TableStore:
         table's) under their own names, records the layout and schema, then
         commits — or, given ``txn``, hands the staged version to it.
 
-        ``carried`` lists paths relative to the base version's dir (a
-        copy-on-write merge carries the files it did not rewrite)."""
+        ``df`` is a DataFrame (a Spark write) or :class:`DriverRows`, which
+        land as one parquet file written on the driver (no Spark job; an
+        unpartitioned layout only). ``carried`` lists paths relative to the
+        base version's dir (a copy-on-write merge carries the files it did
+        not rewrite; an append-only log carries all of them)."""
+        local = isinstance(df, DriverRows)
         tdir = self.table_dir(name)
         os.makedirs(tdir, exist_ok=True)
         prev = self.current_version(name)
@@ -426,7 +539,9 @@ class TableStore:
         new = max([prev or 0, *self._all_version_dirs(name)]) + 1
         target = os.path.join(tdir, f"v={new:06d}")
         base_dir = self.data_path(base or name) if self.exists(base or name) else None
-        if df is not None:
+        if local:
+            _write_rows(df, target, partition_by)
+        elif df is not None:
             writer = df.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
@@ -435,7 +550,9 @@ class TableStore:
         if carried:
             _link_files(base_dir, target, carried)
         self._mark_partitioning(target, partition_by)
-        if df is not None:
+        if local:
+            self._write_schema_record(target, df.schema)
+        elif df is not None:
             self._record_written_schema(df, target, partition_by)
         else:
             self._write_schema_record(target, self._schema_record(base_dir))
@@ -470,7 +587,7 @@ class TableStore:
 
     def overwrite(
         self,
-        df: DataFrame,
+        df: DataFrame | DriverRows,
         name: str,
         partition_by: list[str] | None = None,
         carried: Sequence[str] = (),
@@ -509,13 +626,18 @@ class TableStore:
         `VERSION AS OF` analogue). Raises ``FileNotFoundError`` for GC'd or
         never-committed versions. Plans from the version's schema record,
         like :meth:`read`."""
+        return self._read_dir(spark, self.version_path(name, version))
+
+    def version_path(self, name: str, version: int) -> str:
+        """The dir of a retained committed version; ``FileNotFoundError``
+        for a GC'd or never-committed one."""
         path = os.path.join(self.table_dir(name), f"v={version:06d}")
         if version not in self.versions(name) or not os.path.isdir(path):
             raise FileNotFoundError(
                 f"{name} v{version} not retained (have {self.versions(name)}; "
                 f"raise keep_versions for deeper history)"
             )
-        return self._read_dir(spark, path)
+        return path
 
     def version_at_timestamp(self, name: str, ts: float) -> int:
         """The version that was CURRENT (pointer-served) at wall time
@@ -756,12 +878,14 @@ class TableStore:
 
     def append(
         self,
-        df: DataFrame,
+        df: DataFrame | DriverRows,
         name: str,
         partition_by: list[str] | None = None,
         merge_schema: bool = False,
     ) -> None:
-        """Append ``df``'s rows into the current version.
+        """Append ``df``'s rows into the current version. :class:`DriverRows`
+        land as one parquet file written on the driver (no Spark job) and
+        must carry the stored schema.
 
         ``merge_schema=True`` tolerates additive drift (the reference
         handles upstream drift by re-deploying objects,
@@ -783,6 +907,10 @@ class TableStore:
             self.overwrite(df, name, partition_by=partition_by)
             return
         path = self.data_path(name)
+        if isinstance(df, DriverRows):
+            self._check_rows_schema(name, df)
+            _write_rows(df, path, partition_by)
+            return
         stored = self._read_dir(df.sparkSession, path).schema
         by_name = {f.name: f for f in stored.fields}
         drift = [f for f in df.schema.fields if f.name not in by_name]
@@ -827,6 +955,16 @@ class TableStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
+
+    def _check_rows_schema(self, name: str, rows: DriverRows) -> None:
+        """Driver rows evolve no schema: ``ValueError`` unless theirs is
+        the one ``name``'s current version records."""
+        stored = self._schema_record(self.data_path(name))
+        if _as_nullable(rows.schema) != stored:
+            raise ValueError(
+                f"append to {name!r}: {rows.schema.simpleString()} is not the "
+                f"stored {stored.simpleString()}"
+            )
 
     def compact(
         self,
@@ -914,12 +1052,24 @@ class _StagedTransaction:
 
     def overwrite(
         self,
-        df: DataFrame,
+        df: DataFrame | DriverRows,
         name: str,
         partition_by: list[str] | None = None,
         carried: Sequence[str] = (),
     ) -> None:
         self._store._stage_version(df, name, partition_by, carried, txn=self)
+
+    def append(self, rows: DriverRows, name: str) -> None:
+        """Stage a version of ``name`` that carries every file of its
+        current version (none for a new table) plus one new file of
+        ``rows``: an append-only log's write inside a transaction, which
+        rewrites no old row."""
+        store = self._store
+        carried = []
+        if store.exists(name):
+            store._check_rows_schema(name, rows)
+            carried = store.data_files(store.data_path(name))
+        store._stage_version(rows, name, store.write_layout(name, None), carried, txn=self)
 
     def staged_dir(self, name: str) -> str:
         """The version dir this transaction last staged for ``name``."""

@@ -37,9 +37,13 @@ shuffle of that many bytes to (capped at the current width, so it only
 narrows); ``curate_append`` sizes its batch with it once, from a byte sum
 that rides its guard job, and ``coalesce``s the batch, its embeddings and
 its verdict union to that count, which is narrow: no shuffle, no job.
-Driver-side rows (run records, manifests, meta rows) become a frame through
-``session.local_rows_df``, one slice, never ``spark.createDataFrame(rows)``,
-which makes one slice per core.
+Driver-side rows that a store table keeps (run records, meta rows) are
+written on the driver: ``table_store.driver_rows`` given to the store's
+``append``/``overwrite``/``txn.append``, one pyarrow file, no job; reads
+of them use ``read_rows`` and ``row_count`` (footers). Driver-side rows
+that Spark computes on (manifest frames, join inputs) become a frame
+through ``session.local_rows_df``, one slice, never
+``spark.createDataFrame(rows)``, which makes one slice per core.
 """
 from . import (
     clustering,

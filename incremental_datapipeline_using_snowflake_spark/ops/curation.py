@@ -86,7 +86,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.table_store import _link_files, write_atomic
+from ..operators.table_store import _link_files, driver_rows, write_atomic
 from ..session import byte_sized_partitions, local_rows_df, pin
 from .dedup import (
     _band_rows,
@@ -119,6 +119,8 @@ _RUNS_SCHEMA = (
 
 _DELETES_SCHEMA = "run_id string, n_keys long, n_deleted long"
 
+_META_SCHEMA = "dim int, n_tables int, n_planes int"
+
 
 def _sig_snapshot(spark: SparkSession, store, corpus_table: str):
     """Resolve ``__curation_meta`` + ``__embsig`` as ONE consistent
@@ -132,8 +134,10 @@ def _sig_snapshot(spark: SparkSession, store, corpus_table: str):
     :func:`rebuild_embsig`'s docstring; ``curation_status`` detects and
     :func:`rebuild_embsig` repairs a mismatch either way.)
 
-    Returns ``(meta_row, sig_df)`` with ``sig_df`` pinned to the
-    snapshot's version directory.
+    Returns ``(meta_row, sig_df, n_sig)``: ``sig_df`` is pinned to the
+    snapshot's version directory, and the meta row and the signature count
+    are read on the driver (the meta file and that dir's footers; no Spark
+    job).
     """
     meta_t = corpus_table + "__curation_meta"
     sig_t = corpus_table + "__embsig"
@@ -145,8 +149,9 @@ def _sig_snapshot(spark: SparkSession, store, corpus_table: str):
             and store.current_version(sig_t) == vs
         ):
             return (
-                store.read_version(spark, meta_t, vm).collect()[0],
+                store.read_rows(meta_t, vm)[0],
                 store.read_version(spark, sig_t, vs),
+                store.row_count(store.version_path(sig_t, vs)),
             )
     raise RuntimeError(
         f"_sig_snapshot({corpus_table}): meta/signature pointers kept moving "
@@ -225,7 +230,7 @@ def bootstrap_corpus(
         corpus_table + "__bloom",
     )
     store.overwrite(
-        local_rows_df(spark, [(int(m_bits),)], "m_bits long"),
+        driver_rows(spark, [(int(m_bits),)], "m_bits long"),
         corpus_table + "__bloom_meta",
     )
     sh = pin(_shingle_docs(docs, text_col, id_col))
@@ -242,15 +247,12 @@ def bootstrap_corpus(
             corpus_table + "__embsig",
         )
         store.overwrite(
-            local_rows_df(
-                spark, [(int(dim), int(n_tables), int(n_planes))],
-                "dim int, n_tables int, n_planes int",
+            driver_rows(
+                spark, [(int(dim), int(n_tables), int(n_planes))], _META_SCHEMA
             ),
             corpus_table + "__curation_meta",
         )
-    store.overwrite(
-        local_rows_df(spark, [], _RUNS_SCHEMA), corpus_table + "__runs"
-    )
+    store.overwrite(driver_rows(spark, [], _RUNS_SCHEMA), corpus_table + "__runs")
 
 
 def repair_aux(spark: SparkSession, store, corpus_table: str,
@@ -278,7 +280,7 @@ def repair_aux(spark: SparkSession, store, corpus_table: str,
             _band_rows(_signatures_from_shingles(sh)), corpus_table + "__bands"
         )
     if emb is not None and store.exists(corpus_table + "__embsig"):
-        meta = store.read(spark, corpus_table + "__curation_meta").collect()[0]
+        meta = store.read_rows(corpus_table + "__curation_meta")[0]
         have_sig = store.read(spark, corpus_table + "__embsig").select(
             F.col("id").alias(emb_id_col)
         ).distinct()
@@ -310,9 +312,7 @@ def rebuild_bloom(spark: SparkSession, store, corpus_table: str) -> int:
     delta compaction, collapsing the per-run appended word deltas that
     readers otherwise ``bit_or``-fold back into one row per word. Returns
     the sketch width in bits."""
-    m_bits = int(
-        store.read(spark, corpus_table + "__bloom_meta").collect()[0]["m_bits"]
-    )
+    m_bits = int(store.read_rows(corpus_table + "__bloom_meta")[0]["m_bits"])
     fps = store.read(spark, corpus_table).select(
         F.col("_fingerprint").alias("fp")
     ).distinct()
@@ -396,22 +396,15 @@ def delete_docs(
     )
     n_deleted = n_doomed.get["n"]
 
+    # the run record is one new file in the append-only log; old records
+    # are carried, never rewritten
     runs_t = corpus_table + "__deletes"
-    old_log = (
-        store.read(spark, runs_t)
-        if store.exists(runs_t)
-        else local_rows_df(spark, [], _DELETES_SCHEMA)
-    )
-    log = old_log.unionByName(
-        local_rows_df(
-            spark, [(run_id, int(n_keys), int(n_deleted))], _DELETES_SCHEMA
-        )
-    )
+    log_row = driver_rows(spark, [(run_id, int(n_keys), int(n_deleted))], _DELETES_SCHEMA)
     if n_deleted == 0:
         # idempotent replay fast path: nothing matched, record and return
-        store.overwrite(log, runs_t)
+        store.append(log_row, runs_t)
         return {"n_keys": int(n_keys), "n_deleted": 0,
-                "n_corpus_after": int(corpus.count())}
+                "n_corpus_after": store.row_count(store.data_path(corpus_table))}
 
     def _purge(df: DataFrame, col: str) -> DataFrame:
         return df.join(
@@ -433,9 +426,7 @@ def delete_docs(
                 _purge(store.read(spark, corpus_table + "__embsig"), "id"),
                 corpus_table + "__embsig",
             )
-        m_bits = int(
-            store.read(spark, corpus_table + "__bloom_meta").collect()[0]["m_bits"]
-        )
+        m_bits = int(store.read_rows(corpus_table + "__bloom_meta")[0]["m_bits"])
         txn.overwrite(
             fingerprint_bloom(
                 new_corpus.select(F.col("_fingerprint").alias("fp")).distinct(),
@@ -443,7 +434,7 @@ def delete_docs(
             ),
             corpus_table + "__bloom",
         )
-        txn.overwrite(log, runs_t)
+        txn.append(log_row, runs_t)
     return {"n_keys": int(n_keys), "n_deleted": int(n_deleted),
             "n_corpus_after": int(n_after.get["n"])}
 
@@ -502,7 +493,7 @@ def rebuild_embsig(
     contract as :func:`repair_aux`). Returns ``{"n_planes", "n_tables",
     "n_signed"}``.
     """
-    meta = store.read(spark, corpus_table + "__curation_meta").collect()[0]
+    meta = store.read_rows(corpus_table + "__curation_meta")[0]
     dim = meta["dim"]
     if n_tables is None:
         n_tables = int(meta["n_tables"])
@@ -523,9 +514,8 @@ def rebuild_embsig(
     sigs = _emb_signatures(
         member_vecs, dim, n_tables, n_planes, vec_col, emb_id_col
     )
-    new_meta = local_rows_df(
-        spark, [(int(dim), int(n_tables), int(n_planes))],
-        "dim int, n_tables int, n_planes int",
+    new_meta = driver_rows(
+        spark, [(int(dim), int(n_tables), int(n_planes))], _META_SCHEMA
     )
     with store.transaction(f"reindex-{corpus_table}") as txn:
         txn.overwrite(sigs, corpus_table + "__embsig")
@@ -551,15 +541,14 @@ def maybe_reindex_embsig(
 
     Needs NO caller-held embeddings: the stored ``__embsig`` table carries
     every corpus vector (the single-copy ``v`` column), so the rebuild
-    re-signs from the store itself — one narrow signature-table scan for
-    the count check (a metadata-cheap probe per run), one full pass only
-    when the trigger fires. Returns :func:`rebuild_embsig`'s info dict
-    when it fired, else ``None``.
+    re-signs from the store itself. The per-run probe reads the meta row
+    and the signature count from files and footers on the driver (no
+    Spark job); one full pass runs only when the trigger fires. Returns
+    :func:`rebuild_embsig`'s info dict when it fired, else ``None``.
     """
     if not store.exists(corpus_table + "__embsig"):
         return None
-    meta, sigs = _sig_snapshot(spark, store, corpus_table)
-    n_sig = sigs.count()
+    meta, sigs, n_sig = _sig_snapshot(spark, store, corpus_table)
     if auto_n_planes(n_sig) - int(meta["n_planes"]) < plane_drift:
         return None
     return rebuild_embsig(
@@ -587,7 +576,7 @@ def curation_status(
     delta row-groups readers are folding (the :func:`rebuild_bloom`
     trigger), and the run count. Narrow-column scans only."""
     corpus_ids = store.read(spark, corpus_table).select(F.col(id_col))
-    n_corpus = corpus_ids.count()
+    n_corpus = store.row_count(store.data_path(corpus_table))
     have_bands = store.read(spark, corpus_table + "__bands").select(
         F.col("id").alias(id_col)
     ).distinct()
@@ -595,15 +584,14 @@ def curation_status(
     out = {
         "n_corpus": int(n_corpus),
         "n_missing_bands": int(n_missing_bands),
-        "n_runs": int(store.read(spark, corpus_table + "__runs").count()),
+        "n_runs": store.row_count(store.data_path(corpus_table + "__runs")),
     }
     if store.exists(corpus_table + "__deletes"):
-        out["n_delete_runs"] = int(
-            store.read(spark, corpus_table + "__deletes").count()
+        out["n_delete_runs"] = store.row_count(
+            store.data_path(corpus_table + "__deletes")
         )
     if store.exists(corpus_table + "__embsig"):
-        meta, sigs = _sig_snapshot(spark, store, corpus_table)
-        n_sig = int(sigs.count())
+        meta, _sigs, n_sig = _sig_snapshot(spark, store, corpus_table)
         out["n_signatures"] = n_sig
         out["n_planes"] = int(meta["n_planes"])
         # expected LSH bucket population at the frozen structure vs what
@@ -612,7 +600,7 @@ def curation_status(
         out["expected_bucket_pop"] = round(n_sig / 2 ** int(meta["n_planes"]), 1)
         out["reindex_plane_drift"] = auto_n_planes(n_sig) - int(meta["n_planes"])
     bloom = store.read(spark, corpus_table + "__bloom")
-    n_rows = bloom.count()
+    n_rows = store.row_count(store.data_path(corpus_table + "__bloom"))
     n_words = bloom.select("word").distinct().count()
     # >1 row per word = appended per-run deltas awaiting compaction
     out["bloom_delta_rows"] = int(n_rows - n_words)
@@ -703,12 +691,8 @@ def stream_curate(
             F.sum(F.xxhash64(*fp_cols)).alias("h"),
         ).collect()[0]
         run_id = f"{run_prefix}-{fp['n']}:{fp['h']}"
-        already = (
-            store.read(spark, corpus_table + "__runs")
-            .filter(F.col("run_id") == run_id)
-            .limit(1)
-        )
-        if not already.isEmpty():
+        # the idempotency probes read the run logs on the driver
+        if any(r["run_id"] == run_id for r in store.read_rows(corpus_table + "__runs")):
             return
         docs_all = bdf
         if has_actions:
@@ -718,12 +702,8 @@ def stream_curate(
             if not dels.isEmpty():
                 del_run = f"{run_id}-del"
                 del_t = corpus_table + "__deletes"
-                done = (
-                    store.exists(del_t)
-                    and not store.read(spark, del_t)
-                    .filter(F.col("run_id") == del_run)
-                    .limit(1)
-                    .isEmpty()
+                done = store.exists(del_t) and any(
+                    r["run_id"] == del_run for r in store.read_rows(del_t)
                 )
                 if not done:
                     delete_docs(
@@ -875,9 +855,7 @@ def curate_append(
         # exact fingerprint semi-join, and when the whole batch is ruled
         # out the corpus scan is skipped outright. Verdicts are IDENTICAL
         # to the plain join — the sketch only prunes work.
-        m_bits = int(
-            store.read(spark, corpus_table + "__bloom_meta").collect()[0]["m_bits"]
-        )
+        m_bits = int(store.read_rows(corpus_table + "__bloom_meta")[0]["m_bits"])
         bloom = (
             store.read(spark, corpus_table + "__bloom")
             .groupBy("word")
@@ -984,7 +962,7 @@ def curate_append(
             # ONE consistent snapshot of (structure meta, signatures): separate
             # reads could straddle a concurrent rebuild_embsig swap and sign
             # the batch at one plane count against signatures from another
-            meta, corpus_sigs = _sig_snapshot(spark, store, corpus_table)
+            meta, corpus_sigs, _n = _sig_snapshot(spark, store, corpus_table)
             dim, n_tables, n_planes = meta["dim"], meta["n_tables"], meta["n_planes"]
             mvec = batch_emb.join(
                 p3.withColumnRenamed("id", emb_id_col), emb_id_col, "left_semi"
@@ -1064,8 +1042,7 @@ def curate_append(
         )
 
         # -- transactional publish: merged corpus + run record, all-or-none --
-        runs_old = store.read(spark, corpus_table + "__runs")
-        run_row = local_rows_df(
+        run_row = driver_rows(
             spark,
             [(
                 run_id,
@@ -1081,7 +1058,8 @@ def curate_append(
         )
         with store.transaction(f"curate-{run_id}") as txn:
             merge_upsert(spark, store, corpus_table, kept_docs, keys=[id_col], txn=txn)
-            txn.overwrite(runs_old.unionByName(run_row), corpus_table + "__runs")
+            # one new file in the append-only run log; old records are carried
+            txn.append(run_row, corpus_table + "__runs")
 
         # -- aux appends (at-least-once; see module docstring) ---------------
         if counts.get("kept", 0):
@@ -1108,7 +1086,7 @@ def curate_append(
         # 16x scale session hit exactly that before this unpersist
         cached.unpersist()
     # -- maintenance: automatic LSH re-index when the corpus outgrew the
-    # frozen plane count (docstring; probe = one narrow count) -----------
+    # frozen plane count (docstring; the probe reads footers, no job) -----
     if auto_reindex:
         maybe_reindex_embsig(
             spark, store, corpus_table,
@@ -2193,8 +2171,12 @@ def rebase_corpus_chain(
         shutil.rmtree(retired)
     os.rename(base, retired)
     os.rename(tmp, base)
-    for d in link_dirs:
-        shutil.rmtree(d)
+    # no link dir is in the chain now: the folded ones lost their
+    # manifests above, and a manifest-less one is a crashed publish's
+    # leftover (one writer per chain: no publish is in flight here)
+    for d in os.listdir(publish_dir):
+        if d.startswith("link-"):
+            shutil.rmtree(os.path.join(publish_dir, d))
     shutil.rmtree(retired)
     os.remove(intent)
     return {

@@ -17,10 +17,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from ..operators.changelog import Changelog
-from ..operators.table_store import TableStore
+from ..operators.table_store import TableStore, driver_rows
 from . import pipeline as P
 
 RUN_LOG_TABLE = "analytics_co2._run_log"
+RUN_LOG_SCHEMA = "stage string, status string, message string, seconds double, run_at string"
 
 
 @dataclass
@@ -60,22 +61,17 @@ class Orchestrator:
         self._pending_log.append(rec)
 
     def _flush_log(self) -> None:
-        """Persist buffered stage records in ONE append per DAG run — a
-        1-row Spark write job per stage (round 1) tripled the fixed job
-        overhead of every run for pure metadata."""
+        """Persist buffered stage records as ONE parquet file per DAG run,
+        written on the driver: the log is metadata, like the reference's
+        ``TASK_HISTORY``, so logging a run starts no Spark job (a night
+        that loads nothing starts none at all)."""
         if not self._pending_log:
             return
-        from ..session import local_rows_df
-
-        df = local_rows_df(  # one slice from the start — never 32 write tasks
-            self.spark,
-            [
-                (r["stage"], r["status"], r["message"], r["seconds"], r["run_at"])
-                for r in self._pending_log
-            ],
-            schema="stage string, status string, message string, seconds double, run_at string",
-        )
-        self.store.append(df, RUN_LOG_TABLE)
+        rows = [
+            (r["stage"], r["status"], r["message"], r["seconds"], r["run_at"])
+            for r in self._pending_log
+        ]
+        self.store.append(driver_rows(self.spark, rows, RUN_LOG_SCHEMA), RUN_LOG_TABLE)
         self._pending_log = []
 
     def _run_stage(self, name: str, fn: Callable[[], str]) -> tuple[bool, str]:

@@ -103,8 +103,10 @@ def local_rows_df(spark: SparkSession, rows: list, schema: str):
     pays a Python-worker roundtrip PER SLICE — ~4 s of pure fixed overhead
     per action on local[32], measured. Parallelizing with ``numSlices=1`` up
     front makes every downstream action exactly one roundtrip (~0.3 s). Use
-    for metadata-sized frames (run records, manifests, scalar caches) —
-    never for real data.
+    for metadata-sized frames that Spark computes on (a join or union
+    input, a manifest frame handed to a caller) — never for real data.
+    Rows bound for an unpartitioned store table skip Spark altogether:
+    ``TableStore`` writes ``table_store.driver_rows`` on the driver.
     """
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema=schema

@@ -1136,6 +1136,133 @@ def test_schema_record_matches_footer_inference(spark, tmp_path, next_job_id):
     fresh.read_version(spark, "ns.part", v_evolved)
     assert next_job_id() == j0
 
+    # a driver-written version records what inference over its pyarrow
+    # footers reports, which is the record a Spark write of the same rows
+    # keeps
+    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
+        driver_rows,
+    )
+    from incremental_datapipeline_using_snowflake_spark.session import local_rows_df
+
+    ddl = "k long, n int, v double, ok boolean, d date, tags array<long>, s string"
+    rows = [(1, 2, 0.5, True, datetime.date(2024, 1, 2), [1, None], "x")]
+    store.overwrite(driver_rows(spark, rows, ddl), "ns.driver")
+    store.overwrite(local_rows_df(spark, rows, ddl), "ns.spark")
+    assert store.read(spark, "ns.driver").schema == _inferred_schema(
+        spark, store.data_path("ns.driver")
+    )
+    assert store._schema_record(store.data_path("ns.driver")) == store._schema_record(
+        store.data_path("ns.spark")
+    )
+
+
+_LOG_DDL = "run_id string, n long, secs double"
+
+
+def test_driver_rows_write_and_read_start_no_job(spark, tmp_path, next_job_id):
+    """Driver rows written by overwrite and append land as parquet files
+    that Spark reads back exactly; ``read_rows`` reads the same rows on
+    the driver; no write or driver read starts a Spark job."""
+    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
+        driver_rows,
+    )
+
+    store = TableStore(root=str(tmp_path))
+    first = [("r1", 3, 0.25), ("r2", None, None)]
+    j0 = next_job_id()
+    store.overwrite(driver_rows(spark, first, _LOG_DDL), "ns.log")
+    store.append(driver_rows(spark, [("r3", 5, 1.0)], _LOG_DDL), "ns.log")
+    store.append(driver_rows(spark, [], _LOG_DDL), "ns.log")
+    got = store.read_rows("ns.log")
+    n = store.row_count(store.data_path("ns.log"))
+    assert next_job_id() == j0
+    want = sorted([*first, ("r3", 5, 1.0)], key=str)
+    assert sorted(map(tuple, got), key=str) == want and n == 3
+    assert sorted(map(tuple, store.read(spark, "ns.log").collect()), key=str) == want
+    assert len(store.data_files(store.data_path("ns.log"))) == 3
+    with pytest.raises(ValueError, match="is not the stored"):
+        store.append(driver_rows(spark, [("r4",)], "run_id string"), "ns.log")
+    with pytest.raises(ValueError, match="one file"):
+        store.overwrite(driver_rows(spark, first, _LOG_DDL), "ns.p", partition_by=["n"])
+    assert not store.exists("ns.p")
+
+
+def test_row_count_matches_spark_count(spark, tmp_path):
+    """``row_count`` (footer ``num_rows``) equals Spark's ``count()`` over
+    an appended version, a copy-on-write merged one and a transaction's
+    carried-plus-one-file version."""
+    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
+        driver_rows,
+    )
+
+    store = TableStore(root=str(tmp_path))
+
+    def same(name):
+        assert store.row_count(store.data_path(name)) == store.read(spark, name).count()
+
+    schema = "k long, v double"
+    store.overwrite(
+        spark.range(40).selectExpr("id AS k", "CAST(id AS double) AS v").repartition(3), "ns.t"
+    )
+    store.append(_df(spark, [(100, 1.0), (101, 2.0)], schema), "ns.t")
+    same("ns.t")
+    merge_upsert(spark, store, "ns.t", _df(spark, [(5, 9.0), (200, 1.0)], schema), keys=["k"])
+    same("ns.t")
+    assert store.row_count(store.data_path("ns.t")) == 43
+    store.overwrite(driver_rows(spark, [("a", 1, 1.0)], _LOG_DDL), "ns.log")
+    for i in range(3):
+        with store.transaction("log") as txn:
+            txn.append(driver_rows(spark, [(f"b{i}", i, 0.0)], _LOG_DDL), "ns.log")
+        same("ns.log")
+    # every carried file is a hardlink of the previous version's
+    assert store.row_count(store.data_path("ns.log")) == 4
+    assert len(store.data_files(store.data_path("ns.log"))) == 4
+
+
+def test_driver_write_fault_leaves_nothing_visible(spark, tmp_path, monkeypatch):
+    """Fault injection: a driver write that raises before its rename
+    leaves no visible file and no row (the temp file is dot-prefixed,
+    which every reader skips), and the next append lands; an aborted
+    transaction discards the version it staged from driver rows."""
+    from incremental_datapipeline_using_snowflake_spark.operators import table_store
+    from incremental_datapipeline_using_snowflake_spark.operators.table_store import (
+        driver_rows,
+    )
+
+    store = TableStore(root=str(tmp_path))
+    store.overwrite(driver_rows(spark, [("a", 1, 1.0)], _LOG_DDL), "ns.log")
+    vdir = store.data_path("ns.log")
+    files0 = store.data_files(vdir)
+
+    real_replace = os.replace
+
+    def dies_before_rename(src, dst):
+        if dst.endswith(".parquet"):
+            raise OSError(28, "No space left on device")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(table_store.os, "replace", dies_before_rename)
+    with pytest.raises(OSError, match="No space left"):
+        store.append(driver_rows(spark, [("b", 2, 2.0)], _LOG_DDL), "ns.log")
+    monkeypatch.undo()
+    assert store.data_files(vdir) == files0
+    assert [r.run_id for r in store.read_rows("ns.log")] == ["a"]
+    assert [r.run_id for r in store.read(spark, "ns.log").collect()] == ["a"]
+
+    store.append(driver_rows(spark, [("c", 3, 3.0)], _LOG_DDL), "ns.log")
+    assert sorted(r.run_id for r in store.read(spark, "ns.log").collect()) == ["a", "c"]
+
+    v = store.current_version("ns.log")
+    with pytest.raises(RuntimeError, match="abort"):
+        with store.transaction("log") as txn:
+            txn.append(driver_rows(spark, [("d", 4, 4.0)], _LOG_DDL), "ns.log")
+            txn.overwrite(driver_rows(spark, [(1,)], "m_bits long"), "ns.meta")
+            raise RuntimeError("abort after staging")
+    assert store.current_version("ns.log") == v
+    assert store._all_version_dirs("ns.log") == [v]
+    assert not store.exists("ns.meta") and store._all_version_dirs("ns.meta") == []
+    assert sorted(r.run_id for r in store.read_rows("ns.log")) == ["a", "c"]
+
 
 # -- copy-on-write merge -------------------------------------------------
 # A multi-file target: files A, B, C hold the even keys 0-18, 20-38 and

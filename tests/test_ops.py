@@ -350,6 +350,61 @@ def test_every_eager_pin_goes_through_session_pin():
     assert found == [("session.py", "pin")], found
 
 
+def _local_rows_writes(pkg) -> list[tuple[str, int]]:
+    """(file, line) of every ``.append``/``.overwrite`` call under ``pkg``
+    that is handed a ``local_rows_df`` frame — an argument holding the call
+    itself, or a name its function bound to an expression holding the call
+    — without a ``partition_by=`` keyword. Names are not followed
+    further: a name bound to a frame computed from such a name (the
+    verdict union over an empty ``local_rows_df`` frame) is Spark's work,
+    not driver rows."""
+    import ast
+
+    def has_local(node, tainted) -> bool:
+        return any(
+            (isinstance(n, ast.Call) and getattr(n.func, "id", None) == "local_rows_df")
+            or (isinstance(n, ast.Name) and n.id in tainted)
+            for n in ast.walk(node)
+        )
+
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            tainted: set[str] = set()
+            for n in ast.walk(fn):
+                if isinstance(n, ast.Assign) and has_local(n.value, set()):
+                    tainted |= {t.id for t in n.targets if isinstance(t, ast.Name)}
+            found += [
+                (path.name, n.lineno)
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call)
+                and getattr(n.func, "attr", None) in ("append", "overwrite")
+                and not any(k.arg == "partition_by" for k in n.keywords)
+                and any(has_local(a, tainted) for a in [*n.args, *n.keywords])
+            ]
+    return sorted(set(found))
+
+
+def test_no_local_rows_frame_reaches_a_store_write():
+    """A ``local_rows_df`` frame never reaches a store or transaction
+    ``append``/``overwrite`` in the package: rows the driver holds are
+    written by the store itself (``table_store.driver_rows``), one
+    pyarrow file and no Spark job. A partitioned write (``partition_by=``,
+    the RAW feed append) is exempt: one driver-written file has no
+    partition dirs. Spark-free: it only parses the sources."""
+    import pathlib
+
+    pkg = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "incremental_datapipeline_using_snowflake_spark"
+    )
+    found = _local_rows_writes(pkg)
+    assert found == [], found
+
+
 def test_package_has_one_atomic_small_file_write():
     """Every small metadata file (pointers, journals, offsets, sidecars)
     is replaced through ``table_store.write_atomic``: the package calls
